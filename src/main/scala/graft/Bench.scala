@@ -12,22 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // single-node tuning: Kryo cuts task/closure serialization; shuffle
-      // compression is pure CPU overhead when there is no network hop (a
-      // real cluster keeps compression ON — this is local-mode-only).
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-    // ad-hoc conf experiments: SPARK_GRAFT_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
+    val builder = LocalSession.builder()
     // SPARK_GRAFT_FRESH=1: fresh-session-per-query mode. The default
     // suite shares one session across all 175 queries, and multi-second
     // queries late in the order have measured up to ~1.5× above their

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query timing probe:
   * `SPARK_GRAFT_PROBE=llm_dedup_clusters SPARK_GRAFT_PROBE_N=5 sbt "runMain graft.Probe"`
   * prints one line per run plus the median — for isolating one query's
@@ -12,14 +10,7 @@ object Probe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val name = sys.env.getOrElse("SPARK_GRAFT_PROBE", "q1_agg")
     val n = sys.env.getOrElse("SPARK_GRAFT_PROBE_N", "5").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val ts = (1 to n).map { i =>
       val t0 = System.nanoTime()

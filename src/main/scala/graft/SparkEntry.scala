@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.Ord._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 (build plan) and §8
+/** Entry-point contract — see SURVEY.md §7 (build plan) and §8
   * (operator → query/spec coverage matrix).
   *
-  * 172 queries across four domains, every SQL-expressible one paired with
+  * 175 queries across four domains, every SQL-expressible one paired with
   * DuckDB oracle SQL (verified bit-exact at sf0.001/0.01/0.1; the four
   * rows-only entries are q_approx_distinct, llm_bpe_train,
   * llm_bpe_apply and llm_bpe_apply_idx):
@@ -15,7 +15,7 @@ import graft.Ord._
   *   - [[graft.rel.Relational]]      — join/agg/window/set-op/subquery capability
   *   - [[graft.llm.LlmQueries]]      — dedup / ANN / text analysis / multimodal
   * Streaming, DSv2-source, reliability, lifecycle, and scale-technique
-  * semantics are spec-verified (299 ScalaTest cases) — see
+  * semantics are spec-verified (316 ScalaTest cases) — see
   * graft.cdc.Streaming, graft.sources.ReplayLogSource,
   * graft.cdc.Reliability, graft.cdc.ListenerManager, graft.rel.Scale.
   */

@@ -39,72 +39,6 @@ object Tables {
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]())
 
-  /** Upper bound on inputs the scan fan-out below applies to: past this
-    * the one extra pass over the bytes is no longer noise, and an input
-    * this large has many row groups anyway (the no-op regime).
-    */
-  val FanOutMaxBytes: Long = 1L << 30
-
-  /** Scale-adaptive floor on scan parallelism (optimization guide §2.5,
-    * "input skew: one huge unsplittable file"). The harness tables are
-    * single-row-group parquet files, so a bare scan plans as ONE split —
-    * and every narrow transform Catalyst fuses into the scan stage (the
-    * text-analysis chains: trigram shingling, regex counts, minhash —
-    * the dominant per-row CPU of the curation family) runs single-core
-    * regardless of cluster width (measured: the llm_curate_full chain
-    * spends 2.7 s in a 1-split stage on a 32-core session at sf0.1).
-    * When the resolved scan yields fewer partitions than the session's
-    * default parallelism and the input is small enough that one extra
-    * round-robin exchange is noise (≤ [[FanOutMaxBytes]]), fan the rows
-    * out ONCE right after the read. At production layouts (≥ cores' worth
-    * of files / row groups) the condition is false and this is a no-op —
-    * the trigger derives from input layout and session width, never a
-    * local-mode constant. Correctness is placement-free: round-robin
-    * repartition is deterministic under retries (sort-before-repartition,
-    * SPARK-23207), no query reads spark_partition_id /
-    * monotonically_increasing_id / input_file_name, and every double
-    * aggregate in the repo is an ordered fold by the cross-engine rules.
-    */
-  private def fanOutOn(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.scanFanOut", "false").toBoolean
-
-  private def fanOutScan(spark: SparkSession, path: String,
-      df: DataFrame): DataFrame = {
-    // conf-gated (default off): the A/B record in OPTIMIZATION_r18.md —
-    // measured a wash-to-loss on the funnel family (the exchange re-prices
-    // every eager job's scan side without moving the hot stages).
-    if (!fanOutOn(spark)) return df
-    // spark.graft.scanFanOutParts: target width (default = the session's
-    // core count); a lower value trades per-stage scheduling overhead
-    // against CPU parallelism on the many-eager-job operators
-    val want = spark.conf.getOption("spark.graft.scanFanOutParts")
-      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
-    val bytes = {
-      // null-guarded: listFiles() returns null on an unreadable dir or an
-      // IO race — treat it as empty rather than NPE inside the memo
-      def sz(f: java.io.File): Long =
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).map(sz).sum
-        else f.length()
-      val f = new java.io.File(path)
-      if (f.exists()) sz(f) else Long.MaxValue
-    }
-    if (bytes > FanOutMaxBytes) df
-    else {
-      // estimate the scan's split count from the bytes already computed
-      // (ceil(bytes / maxPartitionBytes)) instead of df.rdd.getNumPartitions,
-      // which forces full physical planning inside the memo lambda. The
-      // estimate UNDER-counts splits for multi-file inputs (openCost
-      // padding), which only ever errs toward applying the fan-out — the
-      // intended direction for the small single-file harness inputs this
-      // path exists for; production inputs exit at FanOutMaxBytes above.
-      val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-      val splits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
-      if (splits >= want) df else df.repartition(want)
-    }
-  }
-
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     setup(spark)
     val perSession = relCache.synchronized {
@@ -115,15 +49,8 @@ object Tables {
       }
       m
     }
-    // the fan-out flag joins the memo key so a runtime toggle (the AbBench
-    // protocol) is honored instead of serving the first call's shape
-    val fanKey =
-      if (fanOutOn(spark))
-        "t" + spark.conf.getOption("spark.graft.scanFanOutParts").getOrElse("")
-      else "f"
-    perSession.computeIfAbsent((s"$sfDir|$fanKey", table), _ => {
-      val path = s"$sfDir/$table.parquet"
-      val df = fanOutScan(spark, path, spark.read.parquet(path))
+    perSession.computeIfAbsent((sfDir, table), _ => {
+      val df = spark.read.parquet(s"$sfDir/$table.parquet")
       if (table == "events") normalizeTs(df) else df
     })
   }

@@ -69,6 +69,51 @@ object LlmOps {
   def h56Duck(sqlArg: String): String =
     s"CAST('0x'||substr(md5($sqlArg),1,14) AS BIGINT)"
 
+  /** The one width rule: a CPU-heavy stage runs at least as wide as the
+    * session's cores (`defaultParallelism`), whatever the bytes say
+    * (guide §2.2/§2.5 — partitioning tracks CPU cost, not size). Call it
+    * on the frame that feeds the heavy stage.
+    *
+    *  - SCAN-FED `df` (no exchange in its plan: narrow work over a file
+    *    scan or a cached or checkpointed frame) whose heavy work fuses
+    *    onto its own stage: the width is the split count, fixed at
+    *    planning. At least cores wide, `df` is returned unchanged — no
+    *    exchange, never a coalesce. Narrower (the single-row-group
+    *    harness layout plans one split, so every per-row transform fused
+    *    into the scan stage runs on one core), it gets one exchange to
+    *    cores partitions.
+    *  - EXCHANGE-FED `df` (a shuffle or broadcast exchange in its plan),
+    *    or one whose consumer shuffles it on `keys` before the heavy work
+    *    (`feedsShuffle`): AQE decides that width at run time — reading it
+    *    would run the stages — and coalesces a byte-small frame
+    *    (candidate pairs, code triples) to one partition, serializing
+    *    the stage on top. It always gets the by-number exchange, which
+    *    AQE never coalesces.
+    *
+    * The exchange hashes on `keys` (round-robin without keys); hashing
+    * on the key the consumer groups or joins by REPLACES the planner's
+    * own exchange instead of adding one. Rows never depend on placement
+    * here: every consumer is key-clustered or a per-key total order.
+    * Measured in OPTIMIZATION_r19.md (fresh-session, sf0.1, 32 cores):
+    * §5 edit/ngram verify 1.55 → 1.03 and 1.97 → 1.09 s, §6 the ANN
+    * family 15.34/11.93 → 7.47/6.84 s, §7 the dedup family 9.97/9.19 →
+    * 8.62/8.61 s; `dedupContainment` opts out (`widen = false`), measured
+    * worse.
+    */
+  private[llm] def coresWide(df: DataFrame, keys: Seq[String] = Nil,
+      feedsShuffle: Boolean = false): DataFrame = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    def scanFedWide = !(df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }).exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]) &&
+      df.rdd.getNumPartitions >= cores
+    if (!feedsShuffle && scanFedWide) df
+    else if (keys.isEmpty) df.repartition(cores)
+    else df.repartition(cores, keys.map(col): _*)
+  }
+
   /** Canonicalize a text corpus to (doc_id, text) — and make h56
     * resolvable, since every downstream hash interpolates it.
     */
@@ -204,6 +249,12 @@ object LlmOps {
   val GateBroadcastMaxRows: Long    = 4000000L
   val GateBroadcastMaxVecRows: Long = 262144L
 
+  /** `df` with a broadcast hint iff `bound` — a collected row-count
+    * bound — is within [[GateBroadcastMaxRows]]; over it, AQE decides.
+    */
+  private def gateBroadcast(df: DataFrame, bound: Long): DataFrame =
+    if (bound <= GateBroadcastMaxRows) broadcast(df) else df
+
   /** Resolved-relation memo for STORED-ARTIFACT probe reads.
     * `spark.read.parquet` on a partitioned artifact re-lists every
     * partition directory, re-infers partition columns and re-reads a
@@ -215,16 +266,17 @@ object LlmOps {
     * RESOLVED relation (metadata only — scans still read the parquet
     * bytes every execution; no rows are ever cached) per (session, path,
     * artifact fingerprint), the [[graft.Tables]] relCache pattern
-    * applied to the stored artifacts. The fingerprint is the
-    * [[graft.llm.LlmQueries]] memo discipline — every file's
-    * path+size+mtime, ~one stat() per file, orders cheaper than
-    * re-resolution — so an append, a compaction, or an atomic swap mints
-    * a new key and a stale relation is never served (probes of MUTATING
-    * paths stay safe); lifecycle reads that must observe in-flight
-    * writes (the delta apply's corpus replay, prune maintenance) stay on
-    * bare `read.parquet` by design. Weak session key: a stopped
-    * session's relations unpin with it. Conf-gated for A/B
-    * (spark.graft.storedRelCache, default on).
+    * applied to the stored artifacts. The fingerprint
+    * ([[fileFingerprint]], shared with the [[graft.llm.LlmQueries]]
+    * memo) is orders cheaper than re-resolution, so an append, a
+    * compaction, or an atomic swap mints a new key and a stale relation
+    * is never served (probes of MUTATING paths stay safe); lifecycle
+    * reads that must observe in-flight writes (the delta apply's corpus
+    * replay, prune maintenance) stay on bare `read.parquet` by design.
+    * Weak session key: a stopped session's relations unpin with it.
+    * `spark.graft.storedRelCache=false` bypasses the memo — the
+    * workaround for URI-form paths, whose `java.io.File` fingerprint is
+    * constant.
     */
   private val storedRelCache = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
@@ -241,24 +293,35 @@ object LlmOps {
       }
       m
     }
+    perSession.computeIfAbsent(s"$path|${fileFingerprint(path)}",
+      _ => spark.read.parquet(path))
+  }
+
+  /** Cheap fingerprint of the files under `path`: every file's
+    * path+size+mtime in name order, ~one stat() per file. An append, a
+    * compaction or an atomic swap changes it. The walk is
+    * `java.io.File`, so it is only meaningful for plain local paths.
+    */
+  private[llm] def fileFingerprint(path: String): Int = {
+    // null-guarded: listFiles() returns null on an unreadable dir or an
+    // IO race — list it as empty rather than NPE inside a memo
     def ls(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
           .toSeq.sortBy(_.getName).flatMap(ls)
       else Seq(f)
-    val fp = ls(new java.io.File(path))
+    ls(new java.io.File(path))
       .map(f => s"${f.getPath}:${f.length}:${f.lastModified}")
       .mkString("|").hashCode
-    perSession.computeIfAbsent(s"$path|$fp", _ => spark.read.parquet(path))
   }
 
   /** Stage-frame pin for the BATCH FUNNEL family: a LAZY checkpoint
-    * (default) instead of `persist`. Same storage level, same
-    * materialize-on-first-action behavior, row-identical output — but
-    * the pinned frame's logical plan becomes a truncated LEAF, so every
-    * downstream consumer plan (and every AQE re-optimization round,
-    * which re-runs the optimizer over the whole remaining plan per query
-    * stage) carries a leaf instead of the full gate-chain lineage.
+    * instead of `persist`. Same materialize-on-first-action behavior,
+    * row-identical output — but the pinned frame's logical plan becomes
+    * a truncated LEAF, so every downstream consumer plan (and every AQE
+    * re-optimization round, which re-runs the optimizer over the whole
+    * remaining plan per query stage) carries a leaf instead of the full
+    * gate-chain lineage.
     * JobProfile measured ~40% of llm_curate_full_clf's wall as
     * driver-side planning gaps between jobs (guide §7.3 / §3.3: past a
     * few hundred nodes, planning is the bottleneck); interleaved A/B at
@@ -281,21 +344,14 @@ object LlmOps {
     * The nightly DELTA chain deliberately stays on `persist`: its
     * [[curateDeltaReport]] contract releases each pinned frame
     * explicitly (`unpersist`), which checkpoints cannot honor.
-    * `spark.graft.funnelLineageTruncate=false` restores persist — the
-    * A/B hook.
     */
-  private def stagePin(spark: SparkSession,
-      lvl: org.apache.spark.storage.StorageLevel): DataFrame => DataFrame = {
-    val truncate = spark.conf
-      .get("spark.graft.funnelLineageTruncate", "true").toBoolean
-    if (!truncate) df => df.persist(lvl)
-    else spark.conf.getOption("spark.graft.cc.checkpointDir") match {
+  private def stagePin(spark: SparkSession): DataFrame => DataFrame =
+    spark.conf.getOption("spark.graft.cc.checkpointDir") match {
       case Some(dir) =>
         spark.sparkContext.setCheckpointDir(dir)
         df => df.checkpoint(eager = false)
       case None => df => df.localCheckpoint(eager = false)
     }
-  }
 
   /** Max distinct partition values a stored probe pins as a STATIC
     * `IN (...)` literal on the index scan. The static pin is the
@@ -441,20 +497,16 @@ object LlmOps {
     // signature table — caching it would write the full (doc_id, gs)
     // frame to block storage once and leak it for the session
     //
-    // widen-only fan-out before the signature derivation ([[widenCorpus]]
-    // — the dedupEdit rule): shingling + 64 minhash folds per document
-    // fuse into the corpus scan's stage, and the single-row-group
-    // harness layout plans that scan 1-2 wide, serializing the family's
-    // dominant per-row CPU. hash(idCol) is what every downstream
-    // band/verify join keys on. No-op at production widths; a no-op too
-    // when the caller (dedupEdit) already widened its projected frame.
+    // [[coresWide]] before the signature derivation: shingling + 64
+    // minhash folds per document fuse into the corpus scan's stage.
+    // hash(idCol) is what every downstream band/verify join keys on. A
+    // no-op when the caller (dedupEdit) already widened its frame.
     // `widen = false` for dedupContainment, whose posting/rare/probe
     // micro-stage chain measured WORSE off a 32-partition cache
     // (fresh-bench A/B: 1.41/1.66 vs 1.35/1.32 s — task overhead across
     // its many tiny stages outweighs the wide signature pass).
     val hashed0 = signaturesOf(
-      if (widen) widenCorpus(corpus, idCol, "spark.graft.dedupScanFanOut")
-      else corpus,
+      if (widen) coresWide(corpus, Seq(idCol)) else corpus,
       idCol, textCol)
     val hashed = if (persistHashed)
       hashed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -530,39 +582,20 @@ object LlmOps {
     // (The signature table itself stays unpersisted: unlike dedupMinHash,
     // nothing downstream re-reads the per-doc shingle hashes.)
     //
-    // WIDEN-ONLY fan-out before the pin (default on): when the scan
-    // plans NARROWER than the session's cores (the single-row-group
-    // harness layout — guide §2.5's unsplittable-input case), every
-    // downstream consumer of the cache (the shingle/minhash derivation
-    // and both text sides of the levenshtein verify) inherits the
-    // too-narrow width, serializing this op's per-row CPU onto 1-2
-    // cores (measured: two sequential 2-task stages of 0.79+0.69 s at
-    // sf0.1 = most of the query). One keyed exchange (hash on doc_id —
-    // deterministic under retries, and exempt from the round-robin
-    // sort-before-repartition cost) rides INTO the cache
-    // materialization the op already pays. Interleaved A/B at sf0.1
-    // (session-level scanFanOut probe, same mechanism): 6/6 wins,
-    // 1.617 → 1.076 s. At production widths partitions ≥ cores, the
-    // condition is false and this is a no-op — never a coalesce.
-    val txt0 = textCorpus(corpus, idCol, textCol)
-    val fanP = corpus.sparkSession.sparkContext.defaultParallelism
-    val txt = (if (corpus.sparkSession.conf
-          .get("spark.graft.dedupEditFanOut", "true").toBoolean &&
-          txt0.rdd.getNumPartitions < fanP)
-        txt0.repartition(fanP, col("doc_id"))
-      else txt0)
+    // [[coresWide]] before the pin: every consumer of the cache (the
+    // shingle/minhash derivation and both text sides of the levenshtein
+    // verify) inherits its width (measured narrow: two sequential 2-task
+    // stages of 0.79+0.69 s at sf0.1 = most of the query); the keyed
+    // exchange rides INTO the cache materialization the op already pays.
+    val txt = coresWide(textCorpus(corpus, idCol, textCol), Seq("doc_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (_, pairs) = minHashCandidates(txt, "doc_id", "text",
       persistHashed = false)
-    pairs
-      // explicit fan-out before the expensive verify: the pairs frame is
-      // tiny in BYTES, so AQE's partition coalescing would collapse it to
-      // one partition and serialize the O(bound·n) levenshtein stage onto
-      // a single core (measured 2.6× on the whole query at sf0.1). A
-      // by-number repartition is exempt from coalescing, restoring
-      // cores-wide parallelism — the general rule that a stage's partition
-      // count must track its CPU cost, not its byte size.
-      .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
+    // [[coresWide]] before the expensive verify: the byte-small pairs
+    // frame would otherwise be coalesced onto one partition, serializing
+    // the O(bound·n) levenshtein stage (measured 2.6× on the whole query
+    // at sf0.1)
+    coresWide(pairs)
       .join(txt.as("ta"), col("id_a") === col("ta.doc_id"))
       .join(txt.as("tb"), col("id_b") === col("tb.doc_id"))
       // levenshtein ≥ |len_a − len_b|, so a pair whose length gap alone
@@ -741,19 +774,10 @@ object LlmOps {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .distinct()
-    // explicit fan-out before the expensive verify — the [[dedupEdit]]
-    // rule verbatim: the candidate-pair frame is tiny in BYTES, so AQE
-    // coalescing collapses it (and the bigram-array jaccard stage fed
-    // by it) onto 1-2 partitions; a by-number repartition is exempt
-    // from coalescing and restores cores-wide parallelism for the
-    // array_intersect/array_union verify (JobProfile: a 0.86 s wall /
-    // 1.45 s CPU 2-task stage at sf0.1 — the query's single largest).
-    // Conf is the A/B hook (default on).
-    val pairsW = if (corpus.sparkSession.conf
-        .get("spark.graft.ngramVerifyFanOut", "true").toBoolean)
-      pairs.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-    else pairs
-    pairsW
+    // [[coresWide]] before the expensive verify, as in [[dedupEdit]]: the
+    // array_intersect/array_union verify otherwise ran as a 0.86 s wall /
+    // 1.45 s CPU 2-task stage at sf0.1 (JobProfile) — the query's largest
+    coresWide(pairs)
       .join(g.as("a"), col("id_a") === col("a.doc_id"))
       .join(g.as("b"), col("id_b") === col("b.doc_id"))
       .select(col("id_a"), col("id_b"),
@@ -3317,58 +3341,32 @@ object LlmOps {
     * composition (the recursive-CC CTE dominates DuckDB's side).
     */
   /** The funnel's shared stage derivation: (raw corpus, quality-keeper
-    * ids [persisted iff `persistQIds`], stage-2 survivor corpus
-    * [persisted]). The persists back the returned lazy frames, so they
-    * live until the caller's post-materialization `clearCache` (the
-    * Bench rep discipline) — bounded: ids and stage-2 survivors only.
+    * ids, stage-2 survivor corpus), both derived frames stage-pinned.
+    *
+    * ONE corpus pass derives BOTH stage-1/2 decisions (§2.4 remove
+    * passes): the quality flags and the exact-dedup content hash are
+    * independent per-row projections of the same rows, so one pinned
+    * (doc_id, content_hash, keep) frame feeds both — qIds is a filter of
+    * the pin, keepers a groupBy of it — and the md5 groupBy pays no
+    * corpus scan of its own. The pin is ids + 32-byte hashes + one flag
+    * (text never cached) and always has ≥2 readers (both stage-2 semi
+    * joins; the FUNNEL read-out adds a third). quality ids ⊆ corpus ids,
+    * so counting qIds IS the stage-1 survivor count — no join needed.
     */
-  private def funnelStages(raw: DataFrame, idCol: String,
-      textCol: String, persistQIds: Boolean): (DataFrame, DataFrame, DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val pinStage = stagePin(raw.sparkSession, lvl)
+  private[graft] def funnelStages(raw: DataFrame, idCol: String,
+      textCol: String): (DataFrame, DataFrame, DataFrame) = {
+    val pinStage = stagePin(raw.sparkSession)
     val corpus = textCorpus(raw, idCol, textCol)
-    // ids only, persisted for the FUNNEL caller: the quality projections
-    // (trigram transform + regexp counts, the funnel's priciest narrow
-    // work) run ONCE even though the survivor set feeds two branches
-    // there (its own stage count and the stage-2 semi join); quality ids
-    // ⊆ corpus ids, so counting the id frame IS the stage-1 survivor
-    // count — no join needed. The APPLY caller consumes qIds exactly
-    // once (the semi join), so it skips the persist — a cache with one
-    // reader is pure block-manager leak.
-    // ONE corpus pass derives BOTH stage-1/2 decisions (§2.4 remove
-    // passes): the quality flags and the exact-dedup content hash are
-    // independent per-row projections of the same rows, so fusing them
-    // into one pinned (doc_id, content_hash, keep) frame removes the
-    // full corpus pass the md5 groupBy used to pay on its own scan —
-    // qIds becomes a filter of the pin, keepers a groupBy of it. The
-    // pin is ids + 32-byte hashes + one flag — text never cached, the
-    // standing pin discipline — and it always has ≥2 readers (both
-    // stage-2 semi joins; the FUNNEL read-out adds a third), so the
-    // persistQIds single-reader exemption no longer applies. The conf
-    // is the A/B hook; false restores the two-pass shape.
-    if (raw.sparkSession.conf
-        .get("spark.graft.funnelFusedGatePass", "true").toBoolean) {
-      val qk = pinStage(TextAnalysis.qualityFlags(corpus)
-        .select(col("doc_id"), md5(col("text")).as("content_hash"),
-          col("keep")))
-      val qIds = qk.filter(col("keep")).select("doc_id")
-      val keepers = qk.groupBy("content_hash")
-        .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-      val eCorpus = corpus.join(qIds, Seq("doc_id"), "left_semi")
-        .join(keepers, Seq("doc_id"), "left_semi")
-        .transform(pinStage)
-      (corpus, qIds, eCorpus)
-    } else {
-      val qIds0 = TextAnalysis.qualityFilter(corpus)
-        .filter(col("keep")).select("doc_id")
-      val qIds = if (persistQIds) pinStage(qIds0) else qIds0
-      val keepers = corpus.groupBy(md5(col("text")).as("content_hash"))
-        .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-      val eCorpus = corpus.join(qIds, Seq("doc_id"), "left_semi")
-        .join(keepers, Seq("doc_id"), "left_semi")
-        .transform(pinStage)
-      (corpus, qIds, eCorpus)
-    }
+    val qk = pinStage(TextAnalysis.qualityFlags(corpus)
+      .select(col("doc_id"), md5(col("text")).as("content_hash"),
+        col("keep")))
+    val qIds = qk.filter(col("keep")).select("doc_id")
+    val keepers = qk.groupBy("content_hash")
+      .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
+    val eCorpus = corpus.join(qIds, Seq("doc_id"), "left_semi")
+      .join(keepers, Seq("doc_id"), "left_semi")
+      .transform(pinStage)
+    (corpus, qIds, eCorpus)
   }
 
   /** One-pass stage read-out for a funnel whose survivor sets form a
@@ -3403,8 +3401,7 @@ object LlmOps {
 
   def curationFunnel(corpus: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val (raw, qIds, eCorpus) = funnelStages(corpus, idCol, textCol,
-      persistQIds = true)
+    val (raw, qIds, eCorpus) = funnelStages(corpus, idCol, textCol)
     val kept = dedupApply(eCorpus, dedupMinHash(eCorpus))
     stageCountsOnePass(("0_raw", raw), Seq(
       "1_quality" -> qIds, "2_exact_dedup" -> eCorpus,
@@ -3420,8 +3417,7 @@ object LlmOps {
     */
   def curationApply(corpus: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val (_, _, eCorpus) = funnelStages(corpus, idCol, textCol,
-      persistQIds = false)
+    val (_, _, eCorpus) = funnelStages(corpus, idCol, textCol)
     dedupApply(eCorpus, dedupMinHash(eCorpus))
       .select(col("doc_id"), length(col("text")).cast("bigint").as("n_chars"))
   }
@@ -3445,11 +3441,9 @@ object LlmOps {
   def curationFunnelLm(corpus: DataFrame, lmDir: String,
       threshold: Double = 0.0333, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val (raw, qIds, eCorpus) = funnelStages(corpus, idCol, textCol,
-      persistQIds = true)
+    val (raw, qIds, eCorpus) = funnelStages(corpus, idCol, textCol)
     val kept = dedupApply(eCorpus, dedupMinHash(eCorpus))
-      .transform(stagePin(corpus.sparkSession,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .transform(stagePin(corpus.sparkSession))
     val fluent = fluencyStored(kept, lmDir)
       .filter(col("fluency") >= threshold).select("doc_id")
     stageCountsOnePass(("0_raw", raw), Seq(
@@ -3484,15 +3478,14 @@ object LlmOps {
     * classifier probe's one-row footprint job when that gate is on),
     * the caches released at the caller's clearCache.
     */
-  private def fullStages(corpus: DataFrame, lmDir: String,
+  private[graft] def fullStages(corpus: DataFrame, lmDir: String,
       decontamDir: String, threshold: Double, maxSharedGrams: Long,
       idCol: String, textCol: String,
       lmLangDir: Option[String] = None, langCol: String = "lang",
       qualityModelDir: Option[String] = None, qualityTau: Double = 1.0)
       : (DataFrame, DataFrame, Option[DataFrame], DataFrame, DataFrame,
          DataFrame, DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val pinStage = stagePin(corpus.sparkSession, lvl)
+    val pinStage = stagePin(corpus.sparkSession)
     // with the PER-LANGUAGE bar on, the corpus carries its language
     // label through the chain (the deltaGates convention): the stage-5
     // scorer and its (lang, wb) footprint need it, every earlier gate
@@ -3506,21 +3499,11 @@ object LlmOps {
     // content hash (the [[funnelStages]] fused-gate-pass rationale: two
     // independent per-row projections of the same rows fuse into one
     // pinned (doc_id, content_hash, keep) frame — ids+hashes only, text
-    // never cached — removing the md5 groupBy's own corpus scan). The
-    // same conf is the A/B hook.
-    val fusedGate = corpus.sparkSession.conf
-      .get("spark.graft.funnelFusedGatePass", "true").toBoolean
-    val qk =
-      if (fusedGate) Some(pinStage(
-        TextAnalysis.qualityFlags(corpus, idCol, textCol)
-          .select(col("doc_id"), md5(col("text")).as("content_hash"),
-            col("keep"))))
-      else None
-    val qIds = qk match {
-      case Some(f) => f.filter(col("keep")).select("doc_id")
-      case None => TextAnalysis.qualityFilter(corpus, idCol, textCol)
-        .filter(col("keep")).select("doc_id").transform(pinStage)
-    }
+    // never cached — removing the md5 groupBy's own corpus scan)
+    val qk = pinStage(TextAnalysis.qualityFlags(corpus, idCol, textCol)
+      .select(col("doc_id"), md5(col("text")).as("content_hash"),
+        col("keep")))
+    val qIds = qk.filter(col("keep")).select("doc_id")
     // the TRAINED-classifier gate rides with the stateless leaders
     // (three-surface parity: the live loop's qualityModelDir option,
     // now on the batch funnel too): the corpus scores against the
@@ -3555,12 +3538,8 @@ object LlmOps {
     val clean = decontaminateStoredFrom(sig, decontamDir)
       .filter(col("n_shared") <= maxSharedGrams)
       .select("doc_id").transform(pinStage)
-    val keepers = qk match {
-      case Some(f) => f.groupBy("content_hash")
-        .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-      case None => raw.groupBy(md5(col("text")).as("content_hash"))
-        .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-    }
+    val keepers = qk.groupBy("content_hash")
+      .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
     val eIds = clean.join(keepers, Seq("doc_id"), "left_semi").transform(pinStage)
     val eSig = sig.join(eIds, Seq("doc_id"), "left_semi")
     val bands = bandsOf(eSig).transform(pinStage)
@@ -3957,22 +3936,11 @@ object LlmOps {
     // subtree into every branch with no exchange reuse — at sf0.1 the
     // delta cache build re-planned the fingerprint pass 3× behind 6
     // extra exchanges; at 100 TB that is two redundant fingerprint
-    // passes over the new snapshot. Conf-gated for A/B (default on).
-    val oneJoin = newC.sparkSession.conf
-      .get("spark.graft.deltaOneJoinDiff", "true").toBoolean
-    val delta = pin(
-      if (oneJoin)
-        newC.withColumn("nh", md5(col("text")))
-          .join(oldFp, Seq("doc_id"), "left_outer")
-          .filter(col("oh").isNull || col("oh") =!= col("nh"))
-          .select(newC.columns.map(col): _*)
-      else {
-        val deltaIds = newC.select(col("doc_id"), md5(col("text")).as("nh"))
-          .join(oldFp, Seq("doc_id"), "left_outer")
-          .filter(col("oh").isNull || col("oh") =!= col("nh"))
-          .select("doc_id")
-        newC.join(deltaIds, Seq("doc_id"), "left_semi")
-      })
+    // passes over the new snapshot.
+    val delta = pin(newC.withColumn("nh", md5(col("text")))
+      .join(oldFp, Seq("doc_id"), "left_outer")
+      .filter(col("oh").isNull || col("oh") =!= col("nh"))
+      .select(newC.columns.map(col): _*))
     // persisted when the decontam gate is on: the id frame then has three
     // consumers (its stage count, the gram-gate input, the clean-id
     // anti-join) and an un-cached qualityFilter chain re-derives per use.
@@ -4099,13 +4067,7 @@ object LlmOps {
     // Exchange + two Sort + 2-3 extra AQE query stages of pure driver
     // orchestration — the measured per-stage tax on this family); over
     // the bound the hint drops and AQE decides from runtime stats, the
-    // standard degradation. Conf-gated for A/B (default on; the flag is
-    // the measurement hook, not a tuning knob — the gate itself is
-    // scale-adaptive through the collected counts).
-    val bcGate = delta.sparkSession.conf
-      .get("spark.graft.deltaGateBroadcast", "true").toBoolean
-    def bc(df: DataFrame, bound: Long): DataFrame =
-      if (bcGate && bound <= GateBroadcastMaxRows) broadcast(df) else df
+    // standard degradation ([[gateBroadcast]]).
     // kept is persisted: the stage read-out, the LM intersect, and the
     // apply's survivor set all consume it — an id-only frame, never
     // corpus-sized
@@ -4126,20 +4088,24 @@ object LlmOps {
       case _ => None
     }
     val survivorIds0 = fluentIds match {
-      case Some(fl) => kept.join(bc(fl, ecCount), Seq("doc_id"), "left_semi")
+      case Some(fl) =>
+        kept.join(gateBroadcast(fl, ecCount), Seq("doc_id"), "left_semi")
       case None     => kept
     }
     val survivorIds1 = cleanIds match {
       case Some(ci) =>
-        survivorIds0.join(bc(ci, cleanCount.get), Seq("doc_id"), "left_semi")
+        survivorIds0.join(gateBroadcast(ci, cleanCount.get), Seq("doc_id"),
+          "left_semi")
       case None     => survivorIds0
     }
     val survivorIds = clfIds match {
       case Some(ci) =>
-        survivorIds1.join(bc(ci, deltaCount), Seq("doc_id"), "left_semi")
+        survivorIds1.join(gateBroadcast(ci, deltaCount), Seq("doc_id"),
+          "left_semi")
       case None     => survivorIds1
     }
-    val survivors = eC.join(bc(survivorIds, ecCount), Seq("doc_id"), "left_semi")
+    val survivors =
+      eC.join(gateBroadcast(survivorIds, ecCount), Seq("doc_id"), "left_semi")
     DeltaGates(delta, deltaCount, qIds, qCount, clfIds, clfCount,
       cleanIds, cleanCount, ecCount, dcClfCount, eC, kept, fluentIds,
       bSig, bBands, survivors)
@@ -4162,20 +4128,18 @@ object LlmOps {
     // the decontam and trained-classifier filters apply as id
     // intersections on every later stage's read-out (per-doc gates
     // commute — counts are identical to the nested form, see deltaGates).
-    // Same size-gated broadcast as the survivor chain (deltaGates' bc):
-    // every bound is a collected literal, so the hint costs no job.
-    val bcGate = g.delta.sparkSession.conf
-      .get("spark.graft.deltaGateBroadcast", "true").toBoolean
-    def bc(df: DataFrame, bound: Long): DataFrame =
-      if (bcGate && bound <= GateBroadcastMaxRows) broadcast(df) else df
+    // Same size-gated broadcast as the survivor chain: every bound is a
+    // collected literal, so the hint costs no job.
     def clean(df: DataFrame): DataFrame = {
       val c = g.cleanIds match {
         case Some(ci) =>
-          df.join(bc(ci, g.cleanCount.get), Seq("doc_id"), "left_semi")
+          df.join(gateBroadcast(ci, g.cleanCount.get), Seq("doc_id"),
+            "left_semi")
         case None     => df
       }
       g.clfIds match {
-        case Some(ci) => c.join(bc(ci, g.deltaCount), Seq("doc_id"), "left_semi")
+        case Some(ci) =>
+          c.join(gateBroadcast(ci, g.deltaCount), Seq("doc_id"), "left_semi")
         case None     => c
       }
     }
@@ -4214,8 +4178,8 @@ object LlmOps {
       case Some(fl) =>
         base.unionByName(
           clean(g.kept)
-            .join(bc(fl.select(col("doc_id"), lit(1).as("fl_hit")), g.ecCount),
-              Seq("doc_id"), "left")
+            .join(gateBroadcast(fl.select(col("doc_id"), lit(1).as("fl_hit")),
+                g.ecCount), Seq("doc_id"), "left")
             .agg(count(lit(1)).as("n_near"), count(col("fl_hit")).as("n_fluent"))
             .select(explode(array(
               struct(lit(nearName).as("stage"), col("n_near").as("n_docs")),
@@ -4760,13 +4724,9 @@ object LlmOps {
     // duplicates. `dup` ⊆ distinct batch ids, so the band-row count that
     // gated the probe hints bounds it too — under the gate the anti join
     // is a BroadcastHashJoin (the SMJ here was two Exchange + two Sort
-    // over batch-sized frames, pure stage tax on the nightly); the same
-    // conf flag as the delta read-out arms the A/B.
-    val bcTail = spark.conf
-      .get("spark.graft.deltaGateBroadcast", "true").toBoolean
+    // over batch-sized frames, pure stage tax on the nightly)
     bSig.select("doc_id")
-      .join(if (bcTail) hinted(dup) else dup,
-        col("doc_id") === col("batch_id"), "left_anti")
+      .join(hinted(dup), col("doc_id") === col("batch_id"), "left_anti")
       .select("doc_id")
   }
 
@@ -5452,11 +5412,9 @@ object LlmOps {
     */
   private def spanWindows(corpus: DataFrame, idCol: String,
       textCol: String, window: Int): DataFrame =
-    // widen-only fan-out ([[widenCorpus]]): hashing every sliding
-    // window is the spans family's dominant per-row cost and fuses into
-    // the 1-2-wide harness scan; no-op at production widths
-    widenCorpus(textCorpus(corpus, idCol, textCol), "doc_id",
-        "spark.graft.dedupScanFanOut")
+    // [[coresWide]]: hashing every sliding window is the spans family's
+    // dominant per-row cost and fuses into the corpus scan's stage
+    coresWide(textCorpus(corpus, idCol, textCol), Seq("doc_id"))
       .withColumn("toks", split(col("text"), " "))
       .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(1, greatest(size(toks)-${window - 1}, 1)), " +
@@ -5687,66 +5645,6 @@ object LlmOps {
       .select("vec_id", "scale", "q", "max_abs_err")
 
   // --------------------------------------------------- similarity search
-
-  /** Replace the planner's next exchange over `keys` with an explicit
-    * keyed repartition pinned at the session's shuffle-partition count —
-    * the ANN family's fan-out discipline (guide §2.2: partitioning must
-    * be scale-adaptive, not collapsed by byte-count heuristics).
-    *
-    * Mechanism: the frames feeding the PQ reconstruct groupBy (and the
-    * query-scoring join that fuses onto its output) project to KB-sized
-    * rows at harness scale, so AQE coalesces their EnsureRequirements
-    * exchanges to ONE partition and the downstream per-row CPU
-    * (reconstruct reassembly, cosine/adist scoring) runs single-core
-    * (measured: the fused reconstruct+score stage was 0.96 s CPU on 1
-    * task — half of llm_ann_recall_pq_lloyd solo).
-    * `repartition(n, keys)` plans a REPARTITION_BY_NUM exchange, which
-    * AQE never coalesces, and hash-by-keys satisfies the consumer's
-    * required clustering (groupBy keys, equi-join sides), so this
-    * REPLACES the planner's exchange instead of adding one — exchange
-    * count and shuffled bytes are unchanged at every scale (the plan
-    * dumps show the same node count with the exchange origin flipped).
-    * Scale-neutral by construction: post-shuffle parallelism is
-    * min(distinct keys, partitions) under either exchange; at
-    * production bytes AQE already keeps the exchange wide, this pins
-    * the same width when the bytes are small. Output rows are identical
-    * — every consumer is either a key-clustered aggregate or a join or
-    * window whose result never reads partition placement. The per-site
-    * confs (default on) are the A/B hooks.
-    */
-  private def pinWideExchange(df: DataFrame, flag: String,
-      keys: String*): DataFrame = {
-    val spark = df.sparkSession
-    if (!spark.conf.get(flag, "true").toBoolean) df
-    else df.repartition(spark.sessionState.conf.numShufflePartitions,
-      keys.map(col): _*)
-  }
-
-  /** WIDEN-ONLY corpus fan-out for the ANN family's per-row passes (the
-    * [[dedupEdit]] rule, guide §2.5): when the corpus projection plans
-    * NARROWER than the session's cores (the single-row-group harness
-    * layout), the scan-fused per-row CPU — PQ/k-means distance
-    * evaluations, quantization, cosine scoring against the broadcast
-    * query set — serializes onto 1-2 cores (the small sides broadcast,
-    * so the whole derivation fuses into the scan's stage). One keyed
-    * exchange of the narrow (vec_id, e) rows restores cores-wide
-    * execution, and hash(vec_id) additionally satisfies the
-    * key-clustered aggregates downstream (pqAssign's argmin groupBy).
-    * At production widths partitions ≥ cores, the condition is false
-    * and this is a no-op — never a coalesce. Conf (default on) is the
-    * A/B hook; measured under the driver's fresh-session methodology
-    * (see OPTIMIZATION_r19.md) jointly with [[pinWideExchange]]:
-    * the 13-query ANN family 12.0-15.3 s → 6.8-9.1 s.
-    */
-  private def widenCorpus(df: DataFrame, key: String = "vec_id",
-      flag: String = "spark.graft.annCorpusFanOut"): DataFrame = {
-    val spark = df.sparkSession
-    val fanP = spark.sparkContext.defaultParallelism
-    if (spark.conf.get(flag, "true").toBoolean &&
-        df.rdd.getNumPartitions < fanP)
-      df.repartition(fanP, col(key))
-    else df
-  }
 
   /** Brute-force cosine top-k: the query vectors (ids < nQueries) are
     * broadcast, the scan over candidates is embarrassingly parallel,
@@ -6157,14 +6055,14 @@ object LlmOps {
       sub: Int): DataFrame =
     // pin the reconstruct exchange wide on the NARROWEST rows — the
     // (vec_id, s, cid) code triples, before the broadcast-pivot join
-    // re-attaches the 448-byte centroid rows ([[pinWideExchange]]; §2.3
+    // re-attaches the 448-byte centroid rows ([[coresWide]]; §2.3
     // shuffle fewer bytes). hash(vec_id) satisfies the groupBy's
     // clustering, so the segment slicing, the reassembly agg AND the
     // downstream query-scoring BNLJ + rank sort all run wide instead of
     // on AQE's single coalesced partition (measured: the fused
     // reconstruct+score+rank stage was 0.96 s CPU on 1 task — half of
     // llm_ann_recall_pq_lloyd).
-    pinWideExchange(codes, "spark.graft.pqRankFanOut", "vec_id")
+    coresWide(codes, Seq("vec_id"), feedsShuffle = true)
       .join(broadcast(pivots), Seq("cid"))
       .withColumn("cseg", expr(s"slice(ce, s*$sub+1, $sub)"))
       .groupBy("vec_id")
@@ -6181,10 +6079,10 @@ object LlmOps {
       sub: Int): DataFrame =
     // same wide pin as [[pqReconstruct]] on the exploded code triples;
     // hash(vec_id) alone satisfies the (vec_id, label) clustering
-    pinWideExchange(
+    coresWide(
       packed.select(col("vec_id"), col("label"),
         posexplode(col("codes")).as(Seq("s", "cid"))),
-      "spark.graft.pqRankFanOut", "vec_id")
+      Seq("vec_id"), feedsShuffle = true)
       .join(broadcast(pivots), Seq("cid"))
       .withColumn("cseg", expr(s"slice(ce, s*$sub+1, $sub)"))
       .groupBy("vec_id", "label")
@@ -6195,13 +6093,14 @@ object LlmOps {
     val pivots =
       if (lloydIters > 0) pqPivotsLloyd(base, kc, trainMod, m, sub, lloydIters)
       else pqPivots(base, kc, trainMod)
-    // widen-only fan-out before the assignment pass: the n·m·K distance
+    // [[coresWide]] before the assignment pass: the n·m·K distance
     // evaluations of [[pqAssign]] fuse into the corpus scan's stage
-    // ([[widenCorpus]] — measured 0.45-0.48 s CPU on 1 task inside
+    // (measured 0.45-0.48 s CPU on 1 task inside
     // llm_ann_recall_pq_lloyd). Pivot training reads the UNWIDENED
-    // base: its memo key hashes the canonicalized plan, so a conf flip
-    // never mints a second centroid cache entry.
-    pqReconstruct(pqAssign(widenCorpus(base), pivots, m, sub), pivots, sub)
+    // base: its memo key hashes the canonicalized plan, which must not
+    // depend on the session's width.
+    pqReconstruct(pqAssign(coresWide(base, Seq("vec_id")), pivots, m, sub),
+      pivots, sub)
   }
 
   def annPq(emb: DataFrame, k: Int = 10, idCol: String = "vec_id",
@@ -6448,7 +6347,7 @@ object LlmOps {
       dim: Int = KmDim, nprobe: Int = 1): DataFrame = {
     val base = embBase(ensureH56(emb), idCol, vecCol).select("vec_id", "e")
     val cents = kmCentroids(base, c, trainMod, iters, dim)
-    // [[widenCorpus]] feeds BOTH the assignment pass and the join's
+    // [[coresWide]] feeds BOTH the assignment pass and the join's
     // base side: the narrow form plans the cell join as a BROADCAST
     // join fused into the 1-split harness scan, so the assignment
     // distances AND the query-scoring cosine run single-task; the widen
@@ -6457,7 +6356,7 @@ object LlmOps {
     // groupBy's clustering, and runtime ReusedExchange dedups the
     // repeated subtree occurrences). Centroid training stays on the
     // unwidened base, memo-stable.
-    val baseW = widenCorpus(base)
+    val baseW = coresWide(base, Seq("vec_id"))
     val b = baseW.join(kmAssign(baseW, cents, dim), Seq("vec_id"))
       .withColumn("nrm", expr(s"sqrt(${dotSql("e", "e")})"))
     val scored =
@@ -6520,7 +6419,7 @@ object LlmOps {
     // same co-partitioned widen as [[annIvfKm]] — the all-pairs cosine
     // against the broadcast query set (the gauge's dominant stage:
     // 0.73 s CPU on 1 task solo) fuses onto this join's output
-    val baseW = widenCorpus(base)
+    val baseW = coresWide(base, Seq("vec_id"))
     val b = baseW.join(kmAssign(baseW, cents, dim), Seq("vec_id"))
       .withColumn("nrm", expr(s"sqrt(${dotSql("e", "e")})"))
     val q0 = b.filter(col("vec_id") < nQueries)

@@ -38,14 +38,8 @@ object LlmQueries {
     * same directory in one JVM (a scale run rewriting a scaled dir) gets
     * a fresh index instead of probing a stale one.
     */
-  private def fingerprint(d: String, table: String): String = {
-    def ls(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(ls)
-      else Seq(f)
-    ls(new java.io.File(s"$d/$table.parquet"))
-      .map(f => s"${f.getPath}:${f.length}:${f.lastModified}")
-      .mkString("|").hashCode.toString
-  }
+  private def fingerprint(d: String, table: String): String =
+    LlmOps.fileFingerprint(s"$d/$table.parquet").toString
 
   /** Temp index dir, registered for recursive cleanup at JVM exit (a
     * superseded generation — fingerprint changed — also stays until exit;
@@ -125,7 +119,7 @@ object LlmQueries {
     * same corpus is bit-identical to the in-query form and the two share
     * one oracle.
     */
-  private def lmDir(s: SparkSession, d: String): String =
+  private[graft] def lmDir(s: SparkSession, d: String): String =
     memo(s"lm|$d|${fingerprint(d, "documents")}") {
       val dir = tempIndexDir("graft-lm")
       LlmOps.buildFluencyModel(Tables.documents(s, d), dir)
@@ -178,7 +172,7 @@ object LlmQueries {
     * stored probe is bit-identical to the in-query
     * [[LlmOps.qualityClassify]] restricted to that slice.
     */
-  private def qclfDir(s: SparkSession, d: String): String =
+  private[graft] def qclfDir(s: SparkSession, d: String): String =
     memo(s"qclf|$d|${fingerprint(d, "documents")}") {
       val dir = tempIndexDir("graft-qclf")
       LlmOps.buildQualityClassifier(
@@ -327,7 +321,7 @@ object LlmQueries {
     * same deterministic split [[LlmOps.decontaminate]] uses), frozen
     * into a distinct gram-hash table probed by the training-side gate.
     */
-  private def decontamIndexDir(s: SparkSession, d: String): String =
+  private[graft] def decontamIndexDir(s: SparkSession, d: String): String =
     memo(s"decontam|$d|${fingerprint(d, "documents")}") {
       val dir = tempIndexDir("graft-decontam-index")
       val docs = Tables.documents(s, d)

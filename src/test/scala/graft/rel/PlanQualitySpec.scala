@@ -1,6 +1,7 @@
 package graft.rel
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{SparkEntry, SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
 
 /** Regression tests for plan *shape* — the properties README claims are
   * asserted, not just documented: broadcast dimension joins, filter
@@ -679,127 +680,191 @@ class PlanQualitySpec extends SparkSpec {
       "the selection rule must fuse onto the probe pass as a filter")
   }
 
+  /** A query's rows as a set; clears the cache its pins left behind. */
+  private def rows(df: => DataFrame): Set[String] = {
+    val out = df.collect().map(_.toString).toSet
+    spark.sqlContext.clearCache()
+    out
+  }
+
   test("full funnel: the frozen gram artifact is the broadcast build side of its membership probe") {
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
     // the ONE deliberately inverted broadcast rule: benchmark gram sets
     // are eval-suite-bounded (megabytes vs a 100 TB probe side), so THIS
     // stored table must broadcast where every other artifact must not —
     // on the global AND the per-language form of the full pipeline.
-    // Asserted on the persist arm (funnelLineageTruncate=false): the
-    // default lazy-checkpoint pins truncate the stage frames to leaves,
-    // so the gram join is no longer VISIBLE in the top-level plan — but
-    // both arms build the identical decontam frame (the conf only
-    // changes how the frame is pinned, after construction), so the
-    // persist arm is the same wiring made inspectable.
-    spark.conf.set("spark.graft.funnelLineageTruncate", "false")
+    // Asserted on the decontam frame the funnel pins: a stage pin is a
+    // lazy checkpoint, so in the top-level plan the frame is a leaf, but
+    // the checkpoint action reports the frame's own plan to every
+    // QueryExecutionListener.
+    val pinned = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f.toLowerCase.contains("checkpoint")) pinned.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def isGrams(leaf: org.apache.spark.sql.execution.SparkPlan): Boolean =
+      leaf.toString.contains("/grams")
+    def readsGrams(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
+      p.collectLeaves().exists(isGrams)
+    // some broadcast join builds on the gram artifact and nothing else
+    def gramBuild(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
+      p.collect { case j: BroadcastHashJoinExec => j }.exists { j =>
+        val build = j.buildSide match {
+          case BuildLeft => j.left
+          case BuildRight => j.right
+        }
+        build.collectLeaves().forall(isGrams)
+      }
+    spark.listenerManager.register(listener)
     try {
       for (q <- Seq("llm_curate_full", "llm_curate_full_lang")) {
-        val df = SparkEntry.queries(q)(spark, sf)
-        val joins = df.queryExecution.sparkPlan
-          .collect { case j: BroadcastHashJoinExec => j }
-        val gramBuild = joins.exists { j =>
-          val build = j.buildSide match {
-            case BuildLeft => j.left
-            case BuildRight => j.right
-          }
-          build.collectLeaves().exists(_.toString.contains("/grams"))
-        }
-        assert(gramBuild, s"$q: the gram membership probe must broadcast the artifact")
+        pinned.clear()
+        SparkEntry.queries(q)(spark, sf)
+        // listener events arrive asynchronously
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        def decontam = pinned.asScala.toSeq.map(_.sparkPlan).filter(readsGrams)
+        while (decontam.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+        assert(decontam.nonEmpty, s"$q: no pinned frame reads the gram artifact")
+        assert(decontam.forall(gramBuild),
+          s"$q: the gram membership probe must broadcast the artifact")
+        spark.sqlContext.clearCache()
       }
-    } finally spark.conf.unset("spark.graft.funnelLineageTruncate")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("funnel lineage truncation: both pin arms produce identical rows") {
-    // the checkpoint pins change HOW stage frames are stored (leaf plans
-    // vs full lineage), never what they hold — the whole funnel family's
-    // read-outs must be row-identical across the arms
-    def rows(q: String): Set[String] = {
-      val out = SparkEntry.queries(q)(spark, sf).collect()
-        .map(_.toString).toSet
-      spark.sqlContext.clearCache()
-      out
-    }
+    import scala.jdk.CollectionConverters._
+    // the two stage-pin modes: local checkpoints (default) and reliable
+    // checkpoints under spark.graft.cc.checkpointDir (the cluster
+    // deployment setting) change WHERE pinned blocks live, never what
+    // they hold — the funnel family's read-outs must be row-identical
     for (q <- Seq("llm_curate_full_clf", "llm_curate_funnel",
         "llm_curate_full_lang_apply")) {
-      val withCkpt = rows(q)
-      spark.conf.set("spark.graft.funnelLineageTruncate", "false")
-      val withPersist =
-        try rows(q)
-        finally spark.conf.unset("spark.graft.funnelLineageTruncate")
-      assert(withCkpt === withPersist, s"$q: pin arms disagree")
+      val local = rows(SparkEntry.queries(q)(spark, sf))
+      val dir = java.nio.file.Files.createTempDirectory("graft-funnel-ckpt")
+      try {
+        spark.conf.set("spark.graft.cc.checkpointDir", dir.toString)
+        val reliable = rows(SparkEntry.queries(q)(spark, sf))
+        assert(local === reliable, s"$q: pin arms disagree")
+        assert(java.nio.file.Files.walk(dir).iterator().asScala
+            .exists(_.getFileName.toString.startsWith("part-")),
+          s"$q: no reliable-checkpoint files were written")
+      } finally {
+        spark.conf.unset("spark.graft.cc.checkpointDir")
+        org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+      }
     }
   }
 
   test("fused gate pass: both arms produce identical rows") {
-    // the fused (doc_id, content_hash, keep) gate pin changes HOW the
-    // stage-1 quality set and the exact-dedup keepers are derived (one
-    // corpus pass instead of two), never what they hold — funnel family
-    // read-outs must be row-identical across the arms
-    def rows(q: String): Set[String] = {
-      val out = SparkEntry.queries(q)(spark, sf).collect()
-        .map(_.toString).toSet
+    import org.apache.spark.sql.functions.{col, md5, min}
+    import graft.llm.{LlmOps, LlmQueries, TextAnalysis}
+    // the funnel derives its stage-1 quality set and its exact-dedup
+    // keepers from ONE pinned (doc_id, content_hash, keep) pass; the
+    // reference is the two-pass formulation — the qualityFilter keep ids,
+    // and the min(doc_id) keeper per md5 content hash, each from its own
+    // corpus scan
+    def ids(df: DataFrame): Set[Long] =
+      df.select("doc_id").collect().map(_.getLong(0)).toSet
+    def assertSame(got: DataFrame, want: DataFrame, what: String): Unit = {
+      val (g, w) = (ids(got), ids(want))
+      if (g != w) fail(s"$what disagree: only fused ${(g -- w).take(5)}, " +
+        s"only two-pass ${(w -- g).take(5)}")
+    }
+    def twoPass(corpus: DataFrame): (DataFrame, DataFrame) = (
+      TextAnalysis.qualityFilter(corpus).filter(col("keep")).select("doc_id"),
+      corpus.groupBy(md5(col("text")))
+        .agg(min(col("doc_id")).as("doc_id")).select("doc_id"))
+    // exact AND near copies injected, so the keeper choice is exercised
+    val corpus = LlmOps.nearDupCorpus(
+      LlmOps.exactDupCorpus(Tables.documents(spark, sf)))
+    // the funnel / apply chain: stage 2 is quality ∩ exact keepers
+    val (raw, qIds, eCorpus) = LlmOps.funnelStages(corpus, "doc_id", "text")
+    val (refQ, refK) = twoPass(raw)
+    assertSame(qIds, refQ, "funnel: stage-1 quality sets")
+    assertSame(eCorpus, raw.join(refQ, Seq("doc_id"), "left_semi")
+      .join(refK, Seq("doc_id"), "left_semi"), "funnel: stage-2 survivor sets")
+    spark.sqlContext.clearCache()
+    // the full / full_clf chain: the exact gate intersects the decontam
+    // (and trained-clf) survivors with the keepers
+    for (qualityModelDir <- Seq(None, Some(LlmQueries.qclfDir(spark, sf)))) {
+      val (fRaw, fQIds, _, clean, eIds, _, _) = LlmOps.fullStages(
+        corpus, LlmQueries.lmDir(spark, sf),
+        LlmQueries.decontamIndexDir(spark, sf), 0.0333, 5L, "doc_id", "text",
+        qualityModelDir = qualityModelDir)
+      val (fRefQ, fRefK) = twoPass(fRaw)
+      val arm = s"full (clf=${qualityModelDir.isDefined})"
+      assertSame(fQIds, fRefQ, s"$arm: stage-1 quality sets")
+      assertSame(eIds, clean.join(fRefK, Seq("doc_id"), "left_semi"),
+        s"$arm: exact-stage survivor sets")
       spark.sqlContext.clearCache()
-      out
     }
-    for (q <- Seq("llm_curate_funnel", "llm_curate_apply",
-        "llm_curate_full", "llm_curate_full_clf")) {
-      val fused = rows(q)
-      spark.conf.set("spark.graft.funnelFusedGatePass", "false")
-      val twoPass =
-        try rows(q)
-        finally spark.conf.unset("spark.graft.funnelFusedGatePass")
-      assert(fused === twoPass, s"$q: gate-pass arms disagree")
+  }
+
+  /** The single-file fixture's corpus tables rewritten ≥ cores wide: each
+    * scan there plans at least cores splits, so the width rule leaves
+    * scan-fed frames alone, while on the single-file fixture (one split)
+    * it widens them.
+    */
+  private lazy val wideSf: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-wide-sf").toFile
+    org.apache.commons.io.FileUtils.forceDeleteOnExit(dir)
+    val cores = spark.sparkContext.defaultParallelism
+    for (t <- Seq("documents", "embeddings")) {
+      spark.read.parquet(s"$sf/$t.parquet").repartition(2 * cores)
+        .write.parquet(s"$dir/$t.parquet")
+      assert(Tables.load(spark, sf, t).rdd.getNumPartitions == 1,
+        s"fixture invalid: single-file $t must scan as one split")
+      assert(Tables.load(spark, dir.toString, t).rdd.getNumPartitions >= cores,
+        s"fixture invalid: wide $t must scan at least cores wide")
     }
+    dir.toString
+  }
+
+  /** Rows of a corpus operator on the single-file corpus squeezed to one
+    * partition (the width rule fires at every scan-fed site) vs the wide
+    * copy (it fires at none); the registered query pins the operator.
+    */
+  private def assertDedupLayoutsAgree(q: String,
+      op: DataFrame => DataFrame): Unit = {
+    import graft.llm.LlmOps.nearDupCorpus
+    val narrow = rows(op(nearDupCorpus(Tables.documents(spark, sf)).coalesce(1)))
+    val wide = rows(op(nearDupCorpus(Tables.documents(spark, wideSf))))
+    assert(narrow === wide, s"$q: layouts disagree")
+    assert(rows(SparkEntry.queries(q)(spark, sf)) === narrow,
+      s"$q: the operator under test is not the registered query")
   }
 
   test("dedup verify fan-outs: both arms produce identical rows") {
-    // a by-number/keyed repartition moves rows between partitions, never
-    // between results — the fan-out arms must be row-identical
-    def rows(q: String): Set[String] = {
-      val out = SparkEntry.queries(q)(spark, sf).collect()
-        .map(_.toString).toSet
-      spark.sqlContext.clearCache()
-      out
-    }
-    for ((q, conf) <- Seq(
-        "llm_dedup_ngram" -> "spark.graft.ngramVerifyFanOut",
-        "llm_dedup_edit" -> "spark.graft.dedupEditFanOut")) {
-      val fanned = rows(q)
-      spark.conf.set(conf, "false")
-      val plain =
-        try rows(q)
-        finally spark.conf.unset(conf)
-      assert(fanned === plain, s"$q: fan-out arms disagree")
-    }
+    import graft.llm.LlmOps
+    // the width rule moves rows between partitions, never between
+    // results — a 1-partition and a ≥ cores-wide layout of the same
+    // corpus must give identical rows (the verify widens fire on both:
+    // their pair frames are exchange-fed)
+    assertDedupLayoutsAgree("llm_dedup_ngram", LlmOps.dedupNgram(_))
+    assertDedupLayoutsAgree("llm_dedup_edit", LlmOps.dedupEdit(_))
   }
 
   test("ann + dedup-scan fan-outs: both arms produce identical rows") {
-    // the ANN family's widen-only corpus fan-out, the PQ reconstruct
-    // width pin and the dedup signature/span widens move rows between
-    // partitions, never between results — every ranking is a per-key
-    // total order ((score, vec_id) ties broken) and every aggregate is
-    // key-clustered, so the arms must be row-identical
-    def rows(q: String): Set[String] = {
-      val out = SparkEntry.queries(q)(spark, sf).collect()
-        .map(_.toString).toSet
-      spark.sqlContext.clearCache()
-      out
+    import graft.llm.LlmOps
+    // the ANN corpus widen, the PQ reconstruct pin and the dedup
+    // signature/span widens move rows between partitions, never between
+    // results — every ranking is a per-key total order ((score, vec_id)
+    // ties broken) and every aggregate is key-clustered. The ANN queries
+    // read the embeddings scan directly, so they run as registered on
+    // both layouts.
+    for (q <- Seq("llm_ann_recall_ivfkm", "llm_ann_recall_pq_lloyd",
+        "llm_ann_ivfpq_idx")) {
+      assert(rows(SparkEntry.queries(q)(spark, sf)) ===
+        rows(SparkEntry.queries(q)(spark, wideSf)), s"$q: layouts disagree")
     }
-    for ((q, confs) <- Seq(
-        "llm_ann_recall_ivfkm" -> Seq("spark.graft.annCorpusFanOut"),
-        "llm_ann_recall_pq_lloyd" -> Seq("spark.graft.annCorpusFanOut",
-          "spark.graft.pqRankFanOut"),
-        "llm_ann_ivfpq_idx" -> Seq("spark.graft.pqRankFanOut"),
-        "llm_dedup_minhash" -> Seq("spark.graft.dedupScanFanOut"),
-        "llm_dedup_spans" -> Seq("spark.graft.dedupScanFanOut"))) {
-      val fanned = rows(q)
-      confs.foreach(spark.conf.set(_, "false"))
-      val plain =
-        try rows(q)
-        finally confs.foreach(spark.conf.unset)
-      assert(fanned === plain, s"$q: fan-out arms disagree")
-    }
+    assertDedupLayoutsAgree("llm_dedup_minhash", LlmOps.dedupMinHash(_))
+    assertDedupLayoutsAgree("llm_dedup_spans", LlmOps.dedupSpans(_))
   }
 
   test("per-language full funnel: model scan carries the (lang, wb) footprint, artifact never a build side") {
