@@ -102,7 +102,12 @@ object Streaming {
     */
   def start(spark: SparkSession, spec: PipelineSpec)(
       deliver: (DataFrame, Long) => Unit): StreamingQuery =
-    routed(spark, spec).writeStream
+    startOn(routed(spark, spec), spec)(deliver)
+
+  /** The one `writeStream` builder behind [[start]] and [[startToWebhook]]. */
+  private def startOn(stream: DataFrame, spec: PipelineSpec)(
+      deliver: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
       .option("checkpointLocation", spec.checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
@@ -122,10 +127,14 @@ object Streaming {
   /** K1 — live HTTP webhook delivery: each micro-batch POSTs its payload
     * rows from the executors under the reference retry contract (see
     * [[WebhookSink]]); exhausted retries abort the epoch → gated replay.
+    * The payload projection ([[WebhookSink.payloadJson]]) is part of the
+    * streaming plan, so each epoch is planned once, by the streaming
+    * engine, and the sink posts the planned `payload_json` column.
     */
   def startToWebhook(spark: SparkSession, spec: PipelineSpec,
       webhook: WebhookSink.Config): StreamingQuery =
-    start(spark, spec)(WebhookSink.deliver(webhook))
+    startOn(WebhookSink.payloadJson(routed(spark, spec)).select("payload_json"), spec)(
+      WebhookSink.deliver(webhook))
 
   /** Delivery-log storage layout for 100 TB: partition by entity so
     * downstream per-entity consumers read only their slice (partition

@@ -1,10 +1,12 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
+import java.util.concurrent.{ExecutionException, ExecutorService, Executors, Future}
 
 /** K1 — the real HTTP webhook delivery executor behind the retry envelope.
   *
@@ -16,10 +18,21 @@ import java.time.Duration
   * checkpoint commit — the gated at-least-once replay of [[Streaming]]
   * (K2) then re-delivers the whole micro-batch on restart.
   *
-  * Scale: delivery runs `foreachPartition` on the executors — each of the
-  * N source partitions posts its own slice concurrently, nothing is
-  * collected to the driver. The HTTP client is one per executor JVM
-  * (lazy val), reused across batches.
+  * Scale: [[deliver]] takes the one `payload_json` column that
+  * [[Streaming.startToWebhook]] projects inside the streaming plan, and
+  * runs `foreachPartition` on the executors over that planned batch;
+  * nothing is collected to the driver. Each partition task keeps a window of
+  * [[Window]] `postWithRetry` calls in flight on one lazily built daemon
+  * pool per executor JVM, and returns only after every post of its
+  * partition is acknowledged — so an epoch still commits only when all of
+  * its deliveries succeeded. The endpoint therefore sees at most
+  * (running delivery tasks × [[Window]]) concurrent posts; at the default
+  * `maxFilesPerTrigger = 1` an epoch is one task. The first exhausted
+  * retry, or an interrupt of the task (a query stop), cancels the posts
+  * still in flight with interruption and rethrows. Within an epoch,
+  * arrival order is no longer row order: payloads carry no change type or
+  * version, and the gated commit keeps epochs in order. The HTTP client is
+  * one per executor JVM (lazy val), reused across batches.
   */
 object WebhookSink {
 
@@ -35,6 +48,18 @@ object WebhookSink {
   // connections, so concurrent partition tasks share it.
   @transient private lazy val client: HttpClient =
     HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build()
+
+  /** Posts one partition task keeps in flight. */
+  val Window = 8
+
+  // one daemon pool per executor JVM; cached, so every running task gets
+  // its whole window and idle threads time out
+  @transient private lazy val pool: ExecutorService =
+    Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, "webhook-post")
+      t.setDaemon(true)
+      t
+    }
 
   /** POST one payload with the reference's retry contract. Throws after
     * `maxAttempts` failures (non-2xx status or transport error).
@@ -88,12 +113,41 @@ object WebhookSink {
       lit("""","instanceUrl":""""), jsonEsc(col("instance_url")),
       lit(""""}]}""")).as("payload_json"))
 
-  /** foreachBatch delivery function: serialize each delivery row and POST
-    * it from the executors. Any exhausted-retry failure propagates and
-    * aborts the epoch (gated commit).
+  /** POST every body through a window of [[Window]] concurrent
+    * `postWithRetry` calls, awaited oldest first; returns once all are
+    * acknowledged. Awaiting in order bounds what a failing post lets
+    * through (and a replay re-delivers) to the window behind it. The first
+    * failure, or an interrupt of the calling thread, cancels the posts
+    * still in flight (interrupting them) and is rethrown as is.
+    */
+  private def postAll(cfg: Config, bodies: Iterator[String]): Unit = {
+    val inflight = new java.util.ArrayDeque[Future[Unit]]()
+    def awaitOldest(): Unit = {
+      try inflight.peek().get() catch { case e: ExecutionException => throw e.getCause }
+      inflight.poll()
+    }
+    try {
+      bodies.foreach { body =>
+        if (inflight.size == Window) awaitOldest()
+        inflight.add(pool.submit[Unit](() => postWithRetry(cfg, body)))
+      }
+      while (!inflight.isEmpty) awaitOldest()
+    } catch {
+      case e: Throwable =>
+        inflight.forEach(_.cancel(true))
+        throw e
+    }
+  }
+
+  /** foreachBatch delivery function over the one-column `payload_json`
+    * batch [[Streaming.startToWebhook]] streams (see [[payloadJson]]): each
+    * partition posts its bodies from the executors through [[postAll]].
+    * The batch's own planned RDD is used, so the epoch is planned once.
+    * Any exhausted-retry failure propagates and aborts the epoch (gated
+    * commit).
     */
   def deliver(cfg: Config)(batch: DataFrame, epochId: Long): Unit =
-    payloadJson(batch).select("payload_json").foreachPartition {
-      (rows: Iterator[Row]) => rows.foreach(r => postWithRetry(cfg, r.getString(0)))
+    batch.queryExecution.toRdd.foreachPartition { (rows: Iterator[InternalRow]) =>
+      postAll(cfg, rows.map(_.getUTF8String(0).toString))
     }
 }

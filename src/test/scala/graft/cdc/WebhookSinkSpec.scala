@@ -3,36 +3,60 @@ package graft.cdc
 import graft.SparkSpec
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** K1 — live HTTP webhook delivery against a local endpoint: the retry
-  * contract, and the gated-commit epoch replay when the endpoint is down.
+  * contract, the bounded window of concurrent posts, the gated-commit
+  * epoch replay when the endpoint is down or one payload keeps failing,
+  * and a stop in the middle of delivery.
   */
 class WebhookSinkSpec extends SparkSpec {
 
-  /** Local webhook endpoint: counts attempts, records bodies of accepted
-    * (2xx) posts, fails with 500 while `healthy` is false.
+  /** Local webhook endpoint on a thread pool: counts attempts, records
+    * bodies of accepted (2xx) posts and the peak number of posts in
+    * flight, fails with 500 while `healthy` is false or `rejects` holds.
     */
   private class Endpoint {
     @volatile var healthy = true
     /** fail the first N attempts with 500 regardless of `healthy`. */
     @volatile var failFirst = 0
+    /** bodies that fail every attempt. */
+    @volatile var rejects: String => Boolean = _ => false
+    /** service time of every post. */
+    @volatile var delayMs = 0L
     val attempts = new AtomicInteger(0)
     val accepted = new ConcurrentLinkedQueue[String]()
+    private val inflight = new AtomicInteger(0)
+    val maxInflight = new AtomicInteger(0)
     private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/hook", new HttpHandler {
       override def handle(x: HttpExchange): Unit = {
         val n = attempts.incrementAndGet()
-        val body = new String(x.getRequestBody.readAllBytes(), "UTF-8")
-        if (healthy && n > failFirst) { accepted.add(body); x.sendResponseHeaders(200, -1) }
-        else x.sendResponseHeaders(500, -1)
-        x.close()
+        maxInflight.accumulateAndGet(inflight.incrementAndGet(), math.max)
+        try {
+          val body = new String(x.getRequestBody.readAllBytes(), "UTF-8")
+          if (delayMs > 0) Thread.sleep(delayMs)
+          if (healthy && n > failFirst && !rejects(body)) {
+            accepted.add(body); x.sendResponseHeaders(200, -1)
+          } else x.sendResponseHeaders(500, -1)
+        } catch {
+          // the client gave up on this post, or the endpoint is stopping
+          case _: java.io.IOException | _: InterruptedException => ()
+        } finally {
+          inflight.decrementAndGet()
+          x.close()
+        }
       }
     })
+    private val threads = Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, "webhook-endpoint"); t.setDaemon(true); t
+    }
+    server.setExecutor(threads)
     server.start()
     val url: String = s"http://127.0.0.1:${server.getAddress.getPort}/hook"
-    def stop(): Unit = server.stop(0)
+    def stop(): Unit = { server.stop(0); threads.shutdownNow() }
   }
 
   private def fastCfg(url: String) =
@@ -96,6 +120,87 @@ class WebhookSinkSpec extends SparkSpec {
         .collect().map(_.getString(1)).toSet
       import scala.jdk.CollectionConverters._
       assert(ep.accepted.asScala.toSet === expected)
+    } finally ep.stop()
+  }
+
+  /** The sf0.001 fixture tables (TESTDATA.md). */
+  private val Sf0001 = "/root/testdata/sf0.001"
+
+  /** One single-file source of the sf0.001 events (one epoch, one
+    * partition) and a fresh checkpoint.
+    */
+  private def singleEpochSpec(): Streaming.PipelineSpec = {
+    val src = java.nio.file.Files.createTempDirectory("graft-wh-src").toString
+    val ckp = java.nio.file.Files.createTempDirectory("graft-wh-ckp").toString
+    graft.Tables.events(spark, Sf0001).coalesce(1).write.mode("overwrite").parquet(src)
+    Streaming.PipelineSpec("c1", src, ckp)
+  }
+
+  /** The payload bodies of the sf0.001 route, in row order. */
+  private def expectedPayloads(): Seq[String] =
+    WebhookSink.payloadJson(Pipeline.deliveries(spark, Sf0001))
+      .collect().map(_.getString(1)).toSeq
+
+  test("e2e: one partition posts through a window of concurrent posts, never wider") {
+    val ep = new Endpoint
+    try {
+      ep.delayMs = 5
+      val spec = singleEpochSpec()
+      val expected = expectedPayloads()
+      assert(expected.size > WebhookSink.Window)
+      Streaming.startToWebhook(spark, spec, fastCfg(ep.url)).awaitTermination()
+      assert(ep.accepted.asScala.toSet === expected.toSet)
+      val peak = ep.maxInflight.get()
+      assert(peak > 1 && peak <= WebhookSink.Window, s"peak in-flight posts $peak")
+    } finally ep.stop()
+  }
+
+  test("e2e: an exhausted retry mid-partition aborts the epoch uncommitted; restart delivers everything") {
+    val ep = new Endpoint
+    try {
+      val spec = singleEpochSpec()
+      val expected = expectedPayloads()
+      val bad = expected(expected.size / 2)
+      ep.rejects = _ == bad
+      val e = intercept[Exception] {
+        Streaming.startToWebhook(spark, spec, fastCfg(ep.url)).awaitTermination()
+      }
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(c => c.getMessage != null &&
+        c.getMessage.startsWith("webhook delivery") &&
+        c.getMessage.contains("failed after 3 attempts")), chain.mkString("\n"))
+      assert(!chain.exists(_.isInstanceOf[java.util.concurrent.ExecutionException]))
+      assert(!Reliability.isFatal(e))
+      assert(!new java.io.File(spec.checkpointDir, "commits/0").exists(),
+        "the aborted epoch must not be committed")
+      assert(!ep.accepted.contains(bad))
+      ep.rejects = _ => false
+      Streaming.startToWebhook(spark, spec, fastCfg(ep.url)).awaitTermination()
+      assert(ep.accepted.asScala.toSet === expected.toSet)
+    } finally ep.stop()
+  }
+
+  test("e2e: a stop during delivery returns in time and no post follows it") {
+    val ep = new Endpoint
+    val holdMs = 5000L
+    val stopTimeoutMs = 3000L
+    try {
+      ep.delayMs = holdMs
+      val spec = singleEpochSpec()
+      val cfg = fastCfg(ep.url).copy(timeoutMs = 60000L)
+      val lm = new ListenerManager(stopTimeoutMs = stopTimeoutMs)
+      lm.start(spec.clientId)(_ => Streaming.startToWebhook(spark, spec, cfg))
+      val deadline = System.currentTimeMillis() + 120000L
+      while (ep.attempts.get() == 0 && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(ep.attempts.get() > 0, "delivery never started")
+      Thread.sleep(200) // let the window fill
+      val t0 = System.nanoTime()
+      lm.stop(spec.clientId)
+      val stopMs = (System.nanoTime() - t0) / 1000000L
+      assert(stopMs < stopTimeoutMs, s"stop took $stopMs ms")
+      val seen = ep.attempts.get()
+      Thread.sleep(holdMs + 2000L) // past the held responses
+      assert(ep.attempts.get() === seen, "a post reached the endpoint after stop returned")
     } finally ep.stop()
   }
 }
