@@ -21,6 +21,14 @@ import java.util.concurrent.ConcurrentLinkedQueue
   * cluster partitions by source split and each epoch is embarrassingly
   * parallel. Backpressure = `maxFilesPerTrigger` (the credit-based
   * `num_requested` analog, reference `:565,607`).
+  *
+  * Per-epoch commit cost: each epoch writes three checkpoint logs on the
+  * driver's blocking path — the source file log (`sources/0/N`), the
+  * offset WAL (`offsets/N`) and the commit log (`commits/N`). On a local
+  * checkpoint they go through `java.nio`
+  * ([[graft.streaming.NioCheckpointFileManager]]): about 2 ms each on a
+  * 4-vCPU VM, where Spark's own local manager took ~40 ms forking
+  * `chmod`/`readlink`. Any other scheme uses the manager Spark picks.
   */
 object Streaming {
 
@@ -106,7 +114,8 @@ object Streaming {
 
   /** The one `writeStream` builder behind [[start]] and [[startToWebhook]]. */
   private def startOn(stream: DataFrame, spec: PipelineSpec)(
-      deliver: (DataFrame, Long) => Unit): StreamingQuery =
+      deliver: (DataFrame, Long) => Unit): StreamingQuery = {
+    graft.streaming.NioCheckpointFileManager.install(stream.sparkSession)
     stream.writeStream
       .option("checkpointLocation", spec.checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -114,9 +123,10 @@ object Streaming {
         deliver(batch, epochId)
       }
       .start()
+  }
 
-  /** Delivery into an append-only parquet log (the observable webhook sink
-    * used by tests; swap the body for an HTTP POST executor in production).
+  /** Delivery into an append-only parquet log: the observable sink the
+    * specs read back. [[startToWebhook]] is the HTTP POST delivery.
     */
   def startToParquet(spark: SparkSession, spec: PipelineSpec, outDir: String): StreamingQuery =
     start(spark, spec) { (batch, _) =>

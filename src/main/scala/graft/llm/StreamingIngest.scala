@@ -211,6 +211,7 @@ object StreamingIngest {
     annIndexDir.foreach(d => graft.cdc.Compaction.recoverDir(s"$d/cells"))
     pqIndexDir.foreach(d => graft.cdc.Compaction.recoverDir(s"$d/codes"))
     val schema = spark.read.parquet(srcDir).schema
+    graft.streaming.NioCheckpointFileManager.install(spark)
     spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)

@@ -71,6 +71,7 @@ object StreamingMediaIngest {
     graft.cdc.Compaction.recoverDir(indexDir)
     graft.cdc.Compaction.recoverDir(s"$indexDir/chunks")
     val schema = spark.read.parquet(srcDir).schema
+    graft.streaming.NioCheckpointFileManager.install(spark)
     spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)

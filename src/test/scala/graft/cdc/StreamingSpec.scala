@@ -1,8 +1,16 @@
 package graft.cdc
 
 import graft.SparkSpec
+import graft.streaming.NioCheckpointFileManager
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import java.nio.file.{Files, Paths}
+import java.time.Instant
+import java.util.concurrent.ConcurrentLinkedQueue
+import jdk.jfr.Recording
+import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end streaming semantics (SURVEY §5 item 4): checkpointed
   * micro-batch run over events slices, failure-injected sink → replay
@@ -14,18 +22,22 @@ class StreamingSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  /** Two single-file micro-batches of CdcView-shaped events. */
-  private def writeSlices(srcDir: String): Unit = {
+  /** Single-file micro-batches of CdcView-shaped events, split by
+    * event_id at `cuts` (default: two slices, below and from 500).
+    */
+  private def writeSlices(srcDir: String, cuts: Seq[Long] = Seq(500L)): Unit = {
     val ev = graft.Tables.events(spark, "/root/testdata/sf0.001")
-    ev.filter(col("event_id") < 500).coalesce(1).write.parquet(s"$srcDir/s1")
-    ev.filter(col("event_id") >= 500).coalesce(1).write.parquet(s"$srcDir/s2")
+    val ranges = (Long.MinValue +: cuts).zip(cuts :+ Long.MaxValue)
+    val subs = ranges.indices.map(i => s"s${i + 1}")
+    for ((sub, (lo, hi)) <- subs.zip(ranges))
+      ev.filter(col("event_id") >= lo && col("event_id") < hi).coalesce(1).write.parquet(s"$srcDir/$sub")
     // flatten: move part files up so the dir is a flat file source
     val d = new java.io.File(srcDir)
-    for (sub <- Seq("s1", "s2"); f <- new java.io.File(d, sub).listFiles()
+    for (sub <- subs; f <- new java.io.File(d, sub).listFiles()
          if f.getName.endsWith(".parquet")) {
       Files.move(f.toPath, new java.io.File(d, s"$sub.parquet").toPath)
     }
-    Seq("s1", "s2").foreach { sub =>
+    subs.foreach { sub =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d, sub))
     }
   }
@@ -75,32 +87,93 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("gated commit: failing sink leaves offset uncommitted, batch replays on restart") {
-    val src = tmp("graft-src2"); val ckp = tmp("graft-ckp2"); val out = tmp("graft-out2")
-    writeSlices(src)
-    val spec = Streaming.PipelineSpec("c1", src, ckp)
-    val delivered = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var failedOnce = false
+    // The first run checkpoints either through Streaming.start (the nio
+    // checkpoint manager) or through a plain writeStream in a session
+    // without the manager key (Spark's default manager, which writes a
+    // .crc beside each log file): the restart under Streaming.start must
+    // resume both without re-running epoch 0 or re-sending its rows.
+    val viaSparkDefault: (Streaming.PipelineSpec, (DataFrame, Long) => Unit) => StreamingQuery =
+      (spec, deliver) => {
+        val plain = spark.newSession()
+        assert(plain.conf.getOption(NioCheckpointFileManager.Key).isEmpty)
+        Streaming.routed(plain, spec).writeStream
+          .option("checkpointLocation", spec.checkpointDir)
+          .trigger(Trigger.AvailableNow())
+          .foreachBatch(deliver)
+          .start()
+      }
+    val viaStart: (Streaming.PipelineSpec, (DataFrame, Long) => Unit) => StreamingQuery =
+      (spec, deliver) => Streaming.start(spark, spec)(deliver)
+    for ((firstRun, firstHasCrc) <- Seq(viaStart -> false, viaSparkDefault -> true)) {
+      val src = tmp("graft-src2"); val ckp = tmp("graft-ckp2"); val out = tmp("graft-out2")
+      writeSlices(src)
+      val spec = Streaming.PipelineSpec("c1", src, ckp)
+      val delivered = new java.util.concurrent.atomic.AtomicInteger(0)
+      val replayed = new ConcurrentLinkedQueue[Long]()
+      @volatile var failedOnce = false
 
-    // first run: sink throws on the second micro-batch → epoch NOT committed
-    val q1 = Streaming.start(spark, spec) { (batch, epoch) =>
-      if (epoch >= 1 && !failedOnce) { failedOnce = true; sys.error("webhook down") }
-      batch.write.mode("append").parquet(out)
-    }
-    intercept[Exception] { q1.awaitTermination() }
-    assert(failedOnce, "failure was injected")
-    val afterFail = spark.read.parquet(out).count()
+      // first run: sink throws on the second micro-batch → epoch NOT committed
+      val q1 = firstRun(spec, { (batch, epoch) =>
+        if (epoch >= 1 && !failedOnce) { failedOnce = true; sys.error("webhook down") }
+        batch.write.mode("append").parquet(out)
+      })
+      intercept[Exception] { q1.awaitTermination() }
+      assert(failedOnce, "failure was injected")
+      val afterFail = spark.read.parquet(out).count()
+      assert(Files.exists(Paths.get(ckp, "commits", ".0.crc")) === firstHasCrc,
+        "fixture: which manager wrote commits/0")
 
-    // restart from the same checkpoint: ONLY the failed batch replays
-    val q2 = Streaming.start(spark, spec) { (batch, _) =>
-      delivered.addAndGet(batch.count().toInt)
-      batch.write.mode("append").parquet(out)
+      // restart from the same checkpoint: ONLY the failed batch replays
+      val q2 = Streaming.start(spark, spec) { (batch, epoch) =>
+        replayed.add(epoch)
+        delivered.addAndGet(batch.count().toInt)
+        batch.write.mode("append").parquet(out)
+      }
+      q2.awaitTermination()
+      val total = spark.read.parquet(out).count()
+      val expected = Pipeline.deliveries(CdcView(spark, "/root/testdata/sf0.001")).count()
+      // at-least-once: everything delivered; committed batch 0 NOT re-sent
+      assert(replayed.asScala.toSeq === Seq(1L))
+      assert(total === expected)
+      assert(delivered.get() === (expected - afterFail))
+      // the restart committed through the nio manager: no .crc of its own
+      assert(Files.exists(Paths.get(ckp, "commits", "1")))
+      assert(!Files.exists(Paths.get(ckp, "commits", ".1.crc")))
     }
-    q2.awaitTermination()
-    val total = spark.read.parquet(out).count()
-    val expected = Pipeline.deliveries(CdcView(spark, "/root/testdata/sf0.001")).count()
-    // at-least-once: everything delivered; committed batch 0 NOT re-sent
-    assert(total === expected)
-    assert(delivered.get() === (expected - afterFail))
+  }
+
+  test("a local checkpoint commits every epoch after the first without starting a process") {
+    // Spark's local manager goes through Hadoop's RawLocalFileSystem,
+    // which without native libhadoop forks chmod on each create and
+    // readlink on each rename: about 30 processes per epoch on the stream
+    // thread. The nio manager starts none once the logs' directories exist.
+    val src = tmp("graft-src7"); val ckp = tmp("graft-ckp7")
+    writeSlices(src, cuts = Seq(200L, 400L, 600L, 800L))
+    val epochs = new ConcurrentLinkedQueue[Long]()
+    val dump = Files.createTempFile("graft-forks", ".jfr")
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val q = try {
+      // control: the recording sees a process this thread starts
+      new ProcessBuilder("true").start().waitFor()
+      val started = Streaming.start(spark, Streaming.PipelineSpec("c1", src, ckp)) { (batch, epoch) =>
+        batch.collect()
+        epochs.add(epoch)
+      }
+      started.awaitTermination()
+      started
+    } finally { rec.stop(); rec.dump(dump); rec.close() }
+    assert(epochs.asScala.toSeq === (0L to 4L))
+    val p0 = q.recentProgress.find(_.batchId == 0).get
+    val firstCommit = Instant.parse(p0.timestamp).plusMillis(p0.durationMs.get("triggerExecution"))
+    val starts = RecordingFile.readAllEvents(dump).asScala.toSeq
+    def thread(e: RecordedEvent) = Option(e.getThread).map(_.getJavaName).getOrElse("")
+    assert(starts.exists(thread(_) == Thread.currentThread().getName), "the control fork was not recorded")
+    val late = starts.filter(e => thread(e).startsWith("stream execution thread") &&
+      e.getStartTime.isAfter(firstCommit))
+    assert(late.isEmpty, s"${late.size} processes started on the stream thread after epoch 0: " +
+      late.take(3).map(_.getString("command")).mkString("; "))
   }
 
   test("effectively-once: replayed epoch overwrites its own partial output") {
