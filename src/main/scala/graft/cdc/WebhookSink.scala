@@ -1,5 +1,6 @@
 package graft.cdc
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -18,10 +19,10 @@ import java.util.concurrent.{ExecutionException, ExecutorService, Executors, Fut
   * checkpoint commit — the gated at-least-once replay of [[Streaming]]
   * (K2) then re-delivers the whole micro-batch on restart.
   *
-  * Scale: [[deliver]] takes the one `payload_json` column that
-  * [[Streaming.startToWebhook]] projects inside the streaming plan, and
-  * runs `foreachPartition` on the executors over that planned batch;
-  * nothing is collected to the driver. Each partition task keeps a window of
+  * Scale: [[deliver]] takes the rows of the one `payload_json` column
+  * that [[Streaming.startToWebhook]] plans with the route, and runs
+  * `foreachPartition` on the executors over them; nothing is collected to
+  * the driver. Each partition task keeps a window of
   * [[Window]] `postWithRetry` calls in flight on one lazily built daemon
   * pool per executor JVM, and returns only after every post of its
   * partition is acknowledged — so an epoch still commits only when all of
@@ -139,15 +140,14 @@ object WebhookSink {
     }
   }
 
-  /** foreachBatch delivery function over the one-column `payload_json`
-    * batch [[Streaming.startToWebhook]] streams (see [[payloadJson]]): each
-    * partition posts its bodies from the executors through [[postAll]].
-    * The batch's own planned RDD is used, so the epoch is planned once.
-    * Any exhausted-retry failure propagates and aborts the epoch (gated
-    * commit).
+  /** foreachBatch delivery over the rows of the one `payload_json`
+    * column (see [[payloadJson]]) that [[Streaming.startToWebhook]] binds
+    * its planned route to each epoch: each partition posts its bodies from
+    * the executors through [[postAll]]. Any exhausted-retry failure
+    * propagates and aborts the epoch (gated commit).
     */
-  def deliver(cfg: Config)(batch: DataFrame, epochId: Long): Unit =
-    batch.queryExecution.toRdd.foreachPartition { (rows: Iterator[InternalRow]) =>
-      postAll(cfg, rows.map(_.getUTF8String(0).toString))
+  def deliver(cfg: Config)(rows: RDD[InternalRow]): Unit =
+    rows.foreachPartition { (part: Iterator[InternalRow]) =>
+      postAll(cfg, part.map(_.getUTF8String(0).toString))
     }
 }

@@ -7,8 +7,12 @@ import org.apache.spark.sql.functions._
   * (`_subscribe_loop`, `app/services/sf_pubsub.py:602-789`) re-expressed as
   * composable `DataFrame => DataFrame` transforms. The full chain is narrow
   * (no shuffle): scan → project → filter → generate → filter → project,
-  * which Catalyst fuses into a single WholeStageCodegen span — the Spark
-  * analog of the reference's single-pass event loop.
+  * one pass per partition with no exchange — the Spark analog of the
+  * reference's single-pass event loop. It is not one WholeStageCodegen
+  * span: `transform` (the `record_ids` lambda) is `CodegenFallback`, so the
+  * executed plan keeps the pushed-down `Filter` and the `record_ids`
+  * `Project` outside codegen, between the scan's stage and the
+  * generate/project stage (`cdc_route` in PLANS.md).
   */
 object Route {
 

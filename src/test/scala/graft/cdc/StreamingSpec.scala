@@ -176,6 +176,30 @@ class StreamingSpec extends SparkSpec {
       late.take(3).map(_.getString("command")).mkString("; "))
   }
 
+  test("a sink projection that cannot be planned once fails at start, before any epoch or checkpoint file") {
+    // A grouping needs an exchange, so its plan depends on the data and
+    // cannot be kept across epochs: the start path must refuse it on the
+    // caller's thread, before the stream writes its checkpoint metadata.
+    val src = tmp("graft-src8"); val ckp = tmp("graft-ckp8")
+    writeSlices(src)
+    val spec = Streaming.PipelineSpec("c1", src, ckp)
+    val epochs = new ConcurrentLinkedQueue[Long]()
+    val e = intercept[IllegalArgumentException] {
+      Streaming.startOn(spark, spec, _.groupBy("entity").count()) { (_, _, epoch) =>
+        epochs.add(epoch)
+      }
+    }
+    assert(e.getMessage.contains("narrow"), e.getMessage)
+    assert(epochs.isEmpty)
+    assert(new java.io.File(ckp).list().isEmpty, "a checkpoint file was written")
+    // control: the narrow route on the same spec starts and delivers
+    Streaming.startOn(spark, spec, identity) { (route, batch, epoch) =>
+      assert(route.rows(batch).count() > 0)
+      epochs.add(epoch)
+    }.awaitTermination()
+    assert(epochs.asScala.toSeq === Seq(0L, 1L))
+  }
+
   test("effectively-once: replayed epoch overwrites its own partial output") {
     val src = tmp("graft-src4"); val ckp = tmp("graft-ckp4"); val out = tmp("graft-out4")
     writeSlices(src)

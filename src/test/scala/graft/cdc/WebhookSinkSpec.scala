@@ -2,8 +2,13 @@ package graft.cdc
 
 import graft.SparkSpec
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import java.net.InetSocketAddress
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Executors}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
@@ -153,6 +158,43 @@ class WebhookSinkSpec extends SparkSpec {
       val peak = ep.maxInflight.get()
       assert(peak > 1 && peak <= WebhookSink.Window, s"peak in-flight posts $peak")
     } finally ep.stop()
+  }
+
+  test("e2e: the route is planned at start and never optimized on the stream thread, which reads four columns") {
+    // Before, each epoch's incremental execution optimized the whole route
+    // and Spark 4.1's SQL-execution start event optimized it again to
+    // render its plan text: two optimizer runs per epoch on the stream
+    // thread, each under its own planning tracker.
+    val trackers = ConcurrentHashMap.newKeySet[QueryPlanningTracker]()
+    val recordRouteRuns = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        if (Thread.currentThread().getName.startsWith("stream execution thread") &&
+            plan.exists(_.isInstanceOf[Generate]))
+          QueryPlanningTracker.get.foreach(trackers.add)
+        plan
+      }
+    }
+    val ep = new Endpoint
+    val before = spark.experimental.extraOptimizations
+    try {
+      val src = java.nio.file.Files.createTempDirectory("graft-wh5-src").toString
+      val ckp = java.nio.file.Files.createTempDirectory("graft-wh5-ckp").toString
+      graft.Tables.events(spark, Sf0001).repartition(5).write.mode("overwrite").parquet(src)
+      val expected = expectedPayloads()
+      spark.experimental.extraOptimizations = before :+ recordRouteRuns
+      val q = Streaming.startToWebhook(spark, Streaming.PipelineSpec("c1", src, ckp),
+        fastCfg(ep.url))
+      q.awaitTermination()
+      assert(q.recentProgress.count(_.numInputRows > 0) === 5)
+      assert(ep.accepted.asScala.toSet === expected.toSet)
+      assert(trackers.isEmpty, s"${trackers.size} optimizer runs of the route on the stream thread")
+      val reads = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+        .executedPlan.collect { case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq }
+      assert(reads === Seq(Seq("event_id", "ts", "user_id", "event_type")))
+    } finally {
+      spark.experimental.extraOptimizations = before
+      ep.stop()
+    }
   }
 
   test("e2e: an exhausted retry mid-partition aborts the epoch uncommitted; restart delivers everything") {
