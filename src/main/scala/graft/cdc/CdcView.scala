@@ -41,6 +41,14 @@ object CdcView {
     val eid = col("event_id")
     val commitMsTrue = ops.Normalize.intDiv(col("ts"), lit(1000000L))
     val nIds = eid % 4
+    // ids R(4·eid + i) for i < nIds; none for a null or non-positive count.
+    // One CASE branch per count rather than a `transform(sequence(..))`
+    // lambda, which is `CodegenFallback` and keeps the route (and the
+    // predicate pushed below it) out of whole-stage codegen. Each branch
+    // computes only the ids it returns, as the lambda did, so ANSI
+    // overflow fails on the same rows.
+    val ids = (n: Int) =>
+      array((0 until n).map(i => concat(lit("R"), (eid * 4 + i).cast("string"))): _*)
 
     events.select(
       eid.as("event_id"),
@@ -51,9 +59,7 @@ object CdcView {
         array(lit("CREATE"), lit("UPDATE"), lit("DELETE"), lit("UNDELETE")),
         (ops.Normalize.intDiv(eid, lit(4L)) % 4).cast("int") + 1
       ).as("change_type"),
-      when(nIds > 0,
-        transform(sequence(lit(0L), nIds - 1),
-          i => concat(lit("R"), (eid * 4 + i).cast("string"))))
+      when(nIds === 1, ids(1)).when(nIds === 2, ids(2)).when(nIds === 3, ids(3))
         .otherwise(array().cast("array<string>"))
         .as("record_ids"),
       when(eid % 4 === 0, ops.Normalize.intDiv(commitMsTrue, lit(1000L)))

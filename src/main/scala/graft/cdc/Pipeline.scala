@@ -16,7 +16,10 @@ import graft.cdc.ops.{Normalize, Route}
 object Pipeline {
 
   /** events-shaped CDC view → delivery rows. Narrow end-to-end: no shuffle,
-    * one codegen stage, scales linearly with input splits at any SF.
+    * and one codegen stage from the view's projection to the delivery
+    * projection (over a stream's rows the whole route is that one stage,
+    * compiled once per stream start); scales linearly with input splits at
+    * any SF.
     */
   def deliveries(cdc: DataFrame, cutoffMs: Long = CdcView.SinceCutoffMs): DataFrame =
     cdc.transform(Route.withCommitMs)

@@ -33,17 +33,23 @@ import graft.streaming.PlannedRoute
   *
   * Per-epoch planning cost: the stream plans only its source (the parquet
   * scan, `ts` normalized, the optional replay dedup, projected to the four
-  * columns the route reads). The route and the sink's own projection are
-  * planned once, when the query starts, over a stand-in for the stream's
-  * rows, and each epoch binds its rows to that plan
+  * columns the route reads), and its file reader is built once
+  * ([[graft.streaming.StreamParquetFormat]]), not once per epoch with its
+  * own broadcast of the Hadoop conf. The route and the sink's own
+  * projection are planned, and compiled to one whole-stage codegen stage,
+  * once, when the query starts, over a stand-in for the stream's rows;
+  * each epoch maps that compiled stage over its rows
   * ([[graft.streaming.PlannedRoute]]). Planning the whole route in the
   * stream cost two optimizer runs per epoch: the epoch's incremental
   * execution (~45 ms on a 4-vCPU VM), and Spark 4.1's SQL-execution start
   * event, whose `QueryExecution.explainString` builds a second incremental
   * execution just to render the plan text (~35 ms); no setting skips the
-  * second. That plan text, in the UI and in listener events, now shows only
-  * the source; [[routed]] is the streaming form of the same route, for
-  * stateful consumers.
+  * second. Executing a kept plan per epoch still cost its code generation
+  * (~4 ms) and an optimizer pass over the batch (~5 ms). That plan text, in
+  * the UI and in listener events, now shows only the source, and the
+  * route's SQL metrics are the start-time stage's, summed over the stream;
+  * [[routed]] is the streaming form of the same route, for stateful
+  * consumers.
   */
 object Streaming {
 
@@ -116,7 +122,8 @@ object Streaming {
     val src = graft.Tables.normalizeTs(spark.readStream
       .schema(srcSchema)
       .option("maxFilesPerTrigger", spec.maxFilesPerTrigger)
-      .parquet(spec.sourceDir))
+      .format(classOf[graft.streaming.StreamParquetFormat].getName)
+      .load(spec.sourceDir))
     val ingest = if (spec.dedupe)
       graft.streaming.Windows.dedupStream(src, spec.dedupeDelay)
     else src
@@ -141,11 +148,12 @@ object Streaming {
       deliver(route.frame(batch), epochId)
     }
 
-  /** The one start path behind every sink: streams [[source]], plans
-    * [[route]] followed by the sink's own projection `sink` once, here on
-    * the caller's thread (a route that cannot be planned once throws
-    * before any checkpoint file exists), and hands `deliver` the planned
-    * route with each epoch's batch of source rows to bind it to.
+  /** The one start path behind every sink: streams [[source]], plans and
+    * compiles [[route]] followed by the sink's own projection `sink` once,
+    * here on the caller's thread (a route that cannot be kept as one
+    * compiled stage throws before any checkpoint file exists), and hands
+    * `deliver` the planned route with each epoch's batch of source rows to
+    * bind it to.
     */
   private[cdc] def startOn(spark: SparkSession, spec: PipelineSpec,
       sink: DataFrame => DataFrame)(
@@ -173,15 +181,19 @@ object Streaming {
   /** K1 — live HTTP webhook delivery: each micro-batch POSTs its payload
     * rows from the executors under the reference retry contract (see
     * [[WebhookSink]]); exhausted retries abort the epoch → gated replay.
-    * The payload projection ([[WebhookSink.payloadJson]]) is planned with
-    * the route at start, and the sink posts the bound `payload_json` rows
-    * directly, without a DataFrame around them.
+    * The payload projection ([[webhookPayload]]) is planned and compiled
+    * with the route at start, and the sink posts the bound `payload_json`
+    * rows directly, without a DataFrame around them.
     */
   def startToWebhook(spark: SparkSession, spec: PipelineSpec,
       webhook: WebhookSink.Config): StreamingQuery =
-    startOn(spark, spec, d => WebhookSink.payloadJson(d).select("payload_json")) {
+    startOn(spark, spec, webhookPayload) {
       (route, batch, _) => WebhookSink.deliver(webhook)(route.rows(batch))
     }
+
+  /** [[startToWebhook]]'s sink projection: the payload bodies alone. */
+  private[cdc] def webhookPayload(deliveries: DataFrame): DataFrame =
+    WebhookSink.payloadJson(deliveries).select("payload_json")
 
   /** Delivery-log storage layout for 100 TB: partition by entity so
     * downstream per-entity consumers read only their slice (partition

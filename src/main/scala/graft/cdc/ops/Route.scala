@@ -8,11 +8,13 @@ import org.apache.spark.sql.functions._
   * composable `DataFrame => DataFrame` transforms. The full chain is narrow
   * (no shuffle): scan → project → filter → generate → filter → project,
   * one pass per partition with no exchange — the Spark analog of the
-  * reference's single-pass event loop. It is not one WholeStageCodegen
-  * span: `transform` (the `record_ids` lambda) is `CodegenFallback`, so the
-  * executed plan keeps the pushed-down `Filter` and the `record_ids`
-  * `Project` outside codegen, between the scan's stage and the
-  * generate/project stage (`cdc_route` in PLANS.md).
+  * reference's single-pass event loop. It is one WholeStageCodegen span,
+  * from the scan's rows to the delivery projection: every expression of
+  * `CdcView.fromEvents` and of the route generates code (no
+  * `CodegenFallback` lambda), so the pushed-down `Filter` fuses with the
+  * projections and the generator (`cdc_route` in PLANS.md), and the
+  * streaming sinks compile the span once per stream start
+  * ([[graft.streaming.PlannedRoute]]).
   */
 object Route {
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.io.BufferedOutputStream
+import java.io.{BufferedOutputStream, IOException}
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileAlreadyExistsException,
@@ -25,7 +25,11 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *   - no overwrite: `Files.createLink(dst, tmp)`, which fails atomically
   *     when `dst` exists — mapped to Hadoop's `FileAlreadyExistsException`,
   *     the signal `HDFSMetadataLog` reads as a second writer — then the
-  *     temp file is deleted, whether the link succeeded or not;
+  *     temp file is deleted, whether the link succeeded or not. So a local
+  *     checkpoint directory must be on a filesystem with hard links (any
+  *     POSIX one; not e.g. a FAT or SMB mount); a link that fails for any
+  *     other reason than an existing `dst` throws an `IOException` that
+  *     names this requirement;
   *   - overwrite: `Files.move(ATOMIC_MOVE)`, after deleting `dst`'s stale
   *     `.crc` (a checksummed `open` would otherwise check the new bytes
   *     against the old sum; with the `.crc` gone it reads them unchecked).
@@ -93,6 +97,10 @@ object NioCheckpointFileManager {
       } else try Files.createLink(d, s) catch {
         case _: java.nio.file.FileAlreadyExistsException =>
           throw new FileAlreadyExistsException(s"Failed to rename $src to $dst: destination exists")
+        case e @ (_: IOException | _: UnsupportedOperationException) =>
+          throw new IOException(s"Failed to publish $dst: the checkpoint manager " +
+            s"${classOf[NioCheckpointFileManager].getName} needs a local filesystem with hard " +
+            s"links, and linking $src failed: $e", e)
       } finally Files.deleteIfExists(s)
     }
   }

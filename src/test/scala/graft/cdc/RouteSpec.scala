@@ -2,7 +2,10 @@ package graft.cdc
 
 import graft.SparkSpec
 import graft.cdc.ops.Route
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.util.Try
 
 /** E1/F1/F2/F3 dataflow semantics vs the reference's hot loop
   * (`app/services/sf_pubsub.py:602-789`).
@@ -88,5 +91,41 @@ class RouteSpec extends SparkSpec {
     // commit_raw 500 is 'small passthrough' → 500 < 1000 → dropped), 4 flash=no
     assert(out.count() === 3L)
     assert(out.select("id").as[String].collect().toSet === Set("r1", "r2", "r3"))
+  }
+
+  test("CdcView record_ids equal the transform(sequence) lambda form, overflow included, ANSI on and off") {
+    // The lambda form the view used before: the reference for every id.
+    val eid = col("event_id")
+    val lambdaIds = when(eid % 4 > 0,
+        transform(sequence(lit(0L), eid % 4 - 1), i => concat(lit("R"), (eid * 4 + i).cast("string"))))
+      .otherwise(array().cast("array<string>"))
+    val q = Long.MaxValue / 4
+    val ids: Seq[java.lang.Long] = Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L, 7L, 1001L, 1002L, 1003L,
+        -1L, -2L, -3L, -4L, -5L, -7L, q - 3, q - 2, q - 1, q, q + 1, q + 2, q + 3,
+        -q, -q - 1, Long.MaxValue, Long.MinValue).map(Long.box) :+ null
+    // one event through an RDD, so the view runs its generated code rather
+    // than a local relation the optimizer folds
+    def eval(id: java.lang.Long)(form: DataFrame => DataFrame): Try[Seq[String]] = {
+      val events = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        Row(id, 1704412800000000000L, 7L, "Account"))), StructType(Streaming.eventsSchema.take(4)))
+      Try(form(events).collect().head.getSeq[String](0))
+    }
+    val before = spark.conf.get("spark.sql.ansi.enabled")
+    try for (ansi <- Seq(true, false)) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      val results = ids.map { id =>
+        val view = eval(id)(CdcView.fromEvents(_).select("record_ids"))
+        val lambda = eval(id)(_.select(lambdaIds))
+        assert(view.toOption === lambda.toOption, s"event_id $id, ansi $ansi: $view vs $lambda")
+        assert(view.isFailure === lambda.isFailure, s"event_id $id, ansi $ansi")
+        id -> view
+      }.toMap
+      // fixture: each id count, the empty list and (under ANSI only) the overflow all occur
+      assert(results(3L).get === Seq("R12", "R13", "R14"))
+      assert(results(q).get.size === 3 && results(-5L).get.isEmpty && results(null).get.isEmpty)
+      assert(results(q + 1).get.isEmpty) // residue 0: no id computed, so no overflow
+      assert(results(q + 2).isFailure === ansi)
+      if (ansi) assert(results(q + 2).failed.get.getMessage.contains("overflow"))
+    } finally spark.conf.set("spark.sql.ansi.enabled", before)
   }
 }

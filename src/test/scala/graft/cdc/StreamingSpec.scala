@@ -1,7 +1,7 @@
 package graft.cdc
 
 import graft.SparkSpec
-import graft.streaming.NioCheckpointFileManager
+import graft.streaming.{NioCheckpointFileManager, PlannedRoute}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -198,6 +198,27 @@ class StreamingSpec extends SparkSpec {
       epochs.add(epoch)
     }.awaitTermination()
     assert(epochs.asScala.toSeq === Seq(0L, 1L))
+  }
+
+  test("a route that is not one codegen stage within Spark's method size limit is refused when planned") {
+    // A lambda is CodegenFallback, so Spark runs its projection outside the
+    // codegen stage: there is no one stage to compile once and reuse.
+    val e = intercept[IllegalArgumentException] {
+      PlannedRoute(spark, Streaming.eventsSchema)(
+        _.select(transform(array(col("event_id")), x => x + 1).as("ids")))
+    }
+    assert(e.getMessage.contains("one codegen stage"), e.getMessage)
+    // control: the same values without the lambda plan as one stage
+    val oneStage = (events: DataFrame) => events.select(array(col("event_id") + 1).as("ids"))
+    assert(PlannedRoute(spark, Streaming.eventsSchema)(oneStage).schema.fieldNames.toSeq === Seq("ids"))
+    // a stage whose largest method is over Spark's limit is refused too:
+    // Spark itself would run such a stage interpreted
+    val limit = "spark.sql.codegen.hugeMethodLimit"
+    spark.conf.set(limit, "100")
+    val big = try intercept[IllegalArgumentException] {
+      PlannedRoute(spark, Streaming.eventsSchema)(oneStage)
+    } finally spark.conf.unset(limit)
+    assert(big.getMessage.contains("within 100 bytes"), big.getMessage)
   }
 
   test("effectively-once: replayed epoch overwrites its own partial output") {

@@ -1,11 +1,13 @@
 package graft.cdc
 
 import graft.SparkSpec
+import graft.streaming.PlannedRoute
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, RDDScanExec, SparkPlan,
+  WholeStageCodegenExec}
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import java.net.InetSocketAddress
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Executors}
@@ -195,6 +197,41 @@ class WebhookSinkSpec extends SparkSpec {
       spark.experimental.extraOptimizations = before
       ep.stop()
     }
+  }
+
+  test("e2e: the route and payload projection are one codegen stage compiled at start, whose metrics count every epoch") {
+    // Before, each epoch executed its own copy of the kept plan: Spark
+    // generated the route's code again per epoch, and ran the pushed-down
+    // predicate and the record-id projection outside codegen, regenerating
+    // them per task. The copies owned the metrics, so the start-time plan's
+    // stayed 0.
+    val ep = new Endpoint
+    try {
+      val src = java.nio.file.Files.createTempDirectory("graft-wh6-src").toString
+      val ckp = java.nio.file.Files.createTempDirectory("graft-wh6-ckp").toString
+      graft.Tables.events(spark, Sf0001).repartition(5).write.mode("overwrite").parquet(src)
+      val expected = expectedPayloads()
+      val routes = ConcurrentHashMap.newKeySet[PlannedRoute]()
+      // startToWebhook's composition, keeping the planned route it binds
+      val q = Streaming.startOn(spark, Streaming.PipelineSpec("c1", src, ckp),
+          Streaming.webhookPayload) { (route, batch, _) =>
+        routes.add(route)
+        WebhookSink.deliver(fastCfg(ep.url))(route.rows(batch))
+      }
+      q.awaitTermination()
+      assert(q.recentProgress.count(_.numInputRows > 0) === 5)
+      assert(ep.accepted.size === expected.size && ep.accepted.asScala.toSet === expected.toSet)
+      assert(routes.size === 1)
+      val plan: SparkPlan = routes.asScala.head.stage
+      assert(plan.isInstanceOf[WholeStageCodegenExec], plan.treeString)
+      assert(plan.collectLeaves().map(_.getClass) === Seq(classOf[RDDScanExec]), plan.treeString)
+      assert(plan.children.forall(!_.exists {
+        case _: WholeStageCodegenExec | _: InputAdapter => true
+        case _ => false
+      }), plan.treeString)
+      val top = plan.collectFirst { case p if p.metrics.contains("numOutputRows") => p }.get
+      assert(top.metrics("numOutputRows").value === expected.size, top.simpleString(200))
+    } finally ep.stop()
   }
 
   test("e2e: an exhausted retry mid-partition aborts the epoch uncommitted; restart delivers everything") {

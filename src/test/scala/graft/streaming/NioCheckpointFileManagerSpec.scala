@@ -41,6 +41,22 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
     assert(names(d) === Set("0"), "no temp file or checksum left behind")
   }
 
+  test("a publish whose hard link fails names the hard-link requirement and leaves nothing behind") {
+    // The link fails here because its source is gone; on a filesystem
+    // without hard links it fails the same way, and the message must say
+    // what the manager needs rather than only what nio refused.
+    val d = dir(); val fm = manager(d)
+    val out = fm.createAtomic(new Path(d.toUri.toString, "2"), overwriteIfPossible = false)
+    out.write("a batch".getBytes(UTF_8))
+    names(d).foreach(n => Files.delete(d.resolve(n)))
+    val e = intercept[java.io.IOException] { out.close() }
+    assert(!e.isInstanceOf[FileAlreadyExistsException])
+    assert(e.getMessage.contains("hard links") &&
+      e.getMessage.contains(classOf[NioCheckpointFileManager].getName), e.getMessage)
+    assert(e.getCause.isInstanceOf[java.nio.file.NoSuchFileException], e.getCause)
+    assert(names(d).isEmpty)
+  }
+
   test("cancel leaves nothing behind") {
     val d = dir(); val fm = manager(d)
     val out = fm.createAtomic(new Path(d.toUri.toString, "1"), overwriteIfPossible = false)
