@@ -1,5 +1,6 @@
 package graft.cdc
 
+import graft.fs.ArtifactFs
 import org.apache.spark.sql.SparkSession
 
 /** Delivery-log compaction — the operational answer to the small-files
@@ -18,6 +19,12 @@ import org.apache.spark.sql.SparkSession
   * pointer flip; this operator keeps the data layout mechanics honest
   * without those dependencies. Content is preserved row-for-row (asserted
   * in CompactionSpec); only file boundaries change.
+  *
+  * Where `rename` is not atomic (an object store's copy-then-delete), the
+  * swap still converges when no rename is interrupted. A crash INSIDE one
+  * such rename leaves a half-copied directory, which is not one of the
+  * three windows [[recoverDir]] resolves: that deployment needs a table
+  * format or a pointer flip.
   */
 object Compaction {
 
@@ -45,15 +52,13 @@ object Compaction {
     *     the stale `.pre-compaction` remains → delete it (roll forward).
     */
   def recoverDir(dir: String): Unit = {
-    val d = new java.io.File(dir)
-    val pre = new java.io.File(dir + ".pre-compaction")
-    val tmp = new java.io.File(dir + ".compacted")
-    if (!d.exists() && pre.exists())
-      java.nio.file.Files.move(pre.toPath, d.toPath)
-    else if (d.exists() && pre.exists())
-      org.apache.commons.io.FileUtils.deleteDirectory(pre)
-    if (tmp.exists())
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+    val spark = SparkSession.active
+    val pre = dir + ".pre-compaction"
+    if (ArtifactFs.exists(spark, pre)) {
+      if (ArtifactFs.exists(spark, dir)) ArtifactFs.delete(spark, pre)
+      else ArtifactFs.rename(spark, pre, dir)
+    }
+    ArtifactFs.delete(spark, dir + ".compacted")
   }
 
   /** Replace `dir` with freshly-built content through the rename swap:
@@ -77,14 +82,13 @@ object Compaction {
     val tmp = dir + ".compacted"
     build(tmp)
     val old = dir + ".pre-compaction"
-    val dirPath = java.nio.file.Paths.get(dir)
+    val spark = SparkSession.active
     // create-or-replace: on a bootstrap build there is no old generation
     // to step aside (a crash before the move just leaves a tmp that
     // recoverDir deletes — re-running converges, as always)
-    if (new java.io.File(dir).exists())
-      java.nio.file.Files.move(dirPath, java.nio.file.Paths.get(old))
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmp), dirPath)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(old))
+    if (ArtifactFs.exists(spark, dir)) ArtifactFs.rename(spark, dir, old)
+    ArtifactFs.rename(spark, tmp, dir)
+    ArtifactFs.delete(spark, old)
   }
 
   /** Generic append-log compaction: rewrite the parquet directory `dir`
@@ -109,14 +113,9 @@ object Compaction {
       maxRecordsPerFile: Long = 1L << 20,
       dedupRows: Boolean = false): (Long, Long) = {
     recoverDir(dir)
-    def dataFiles(d: java.io.File): Seq[java.io.File] =
-      if (!d.exists()) Seq.empty
-      else d.listFiles().toSeq.flatMap {
-        case f if f.isDirectory => dataFiles(f)
-        case f if f.getName.endsWith(".parquet") => Seq(f)
-        case _ => Seq.empty
-      }
-    val before = dataFiles(new java.io.File(dir)).size.toLong
+    def dataFiles(): Long =
+      ArtifactFs.files(spark, dir).count(_.getPath.getName.endsWith(".parquet")).toLong
+    val before = dataFiles()
 
     swapDir(dir) { tmp =>
       val read0 = spark.read.parquet(dir)
@@ -131,6 +130,6 @@ object Compaction {
         .parquet(tmp)
     }
 
-    (before, dataFiles(new java.io.File(dir)).size.toLong)
+    (before, dataFiles())
   }
 }

@@ -69,18 +69,20 @@ object ConnectionTest {
       topicName: Option[String] = None,
       topicSchemaIds: Map[String, String] = Map.empty): TestConnResult = {
     // stage 1: source access (the auth analog) — each failure returns
-    // immediately with the stage marked, like the reference's early returns
-    val dir = new java.io.File(spec.sourceDir)
-    if (!dir.exists())
-      return sourceFail("PATH_NOT_FOUND", s"source dir ${spec.sourceDir} does not exist")
-    // the preflight must read under the same session conf the pipeline
-    // runs with: without setup, a TIMESTAMP(NANOS)-generation dir throws
-    // here while Streaming.routed (which calls setup) streams it fine —
-    // a preflight that contradicts runtime is worse than none
+    // immediately with the stage marked, like the reference's early returns.
+    // The preflight must resolve and read the source as the pipeline does:
+    // through the path's own filesystem (a `file:` or remote URI is no
+    // local file), and under the same session conf — without setup, a
+    // TIMESTAMP(NANOS)-generation dir throws here while Streaming.routed
+    // (which calls setup) streams it fine. A preflight that contradicts
+    // runtime is worse than none.
     graft.Tables.setup(spark)
     val schema =
-      try spark.read.parquet(spec.sourceDir).schema
-      catch {
+      try {
+        if (!graft.fs.ArtifactFs.exists(spark, spec.sourceDir))
+          return sourceFail("PATH_NOT_FOUND", s"source dir ${spec.sourceDir} does not exist")
+        spark.read.parquet(spec.sourceDir).schema
+      } catch {
         case e: Throwable =>
           return sourceFail(e.getClass.getSimpleName,
             Option(e.getMessage).getOrElse("unreadable source").linesIterator.next())

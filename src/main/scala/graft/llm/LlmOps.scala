@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.fs.ArtifactFs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -267,24 +268,21 @@ object LlmOps {
     * bytes every execution; no rows are ever cached) per (session, path,
     * artifact fingerprint), the [[graft.Tables]] relCache pattern
     * applied to the stored artifacts. The fingerprint
-    * ([[fileFingerprint]], shared with the [[graft.llm.LlmQueries]]
-    * memo) is orders cheaper than re-resolution, so an append, a
-    * compaction, or an atomic swap mints a new key and a stale relation
-    * is never served (probes of MUTATING paths stay safe); lifecycle
-    * reads that must observe in-flight writes (the delta apply's corpus
-    * replay, prune maintenance) stay on bare `read.parquet` by design.
-    * Weak session key: a stopped session's relations unpin with it.
-    * `spark.graft.storedRelCache=false` bypasses the memo — the
-    * workaround for URI-form paths, whose `java.io.File` fingerprint is
-    * constant.
+    * ([[graft.fs.ArtifactFs.fingerprint]], shared with the
+    * [[graft.llm.LlmQueries]] memo) is orders cheaper than re-resolution
+    * and lists the path through its own filesystem, URI paths included,
+    * so an append, a compaction, or an atomic swap mints a new key and a
+    * stale relation is never served (probes of MUTATING paths stay safe);
+    * lifecycle reads that must observe in-flight writes (the delta
+    * apply's corpus replay, prune maintenance) stay on bare
+    * `read.parquet` by design. Weak session key: a stopped session's
+    * relations unpin with it.
     */
   private val storedRelCache = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
 
   private[llm] def readStored(spark: SparkSession, path: String): DataFrame = {
-    if (!spark.conf.get("spark.graft.storedRelCache", "true").toBoolean)
-      return spark.read.parquet(path)
     val perSession = storedRelCache.synchronized {
       var m = storedRelCache.get(spark)
       if (m == null) {
@@ -293,26 +291,8 @@ object LlmOps {
       }
       m
     }
-    perSession.computeIfAbsent(s"$path|${fileFingerprint(path)}",
+    perSession.computeIfAbsent(s"$path|${ArtifactFs.fingerprint(spark, path)}",
       _ => spark.read.parquet(path))
-  }
-
-  /** Cheap fingerprint of the files under `path`: every file's
-    * path+size+mtime in name order, ~one stat() per file. An append, a
-    * compaction or an atomic swap changes it. The walk is
-    * `java.io.File`, so it is only meaningful for plain local paths.
-    */
-  private[llm] def fileFingerprint(path: String): Int = {
-    // null-guarded: listFiles() returns null on an unreadable dir or an
-    // IO race — list it as empty rather than NPE inside a memo
-    def ls(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          .toSeq.sortBy(_.getName).flatMap(ls)
-      else Seq(f)
-    ls(new java.io.File(path))
-      .map(f => s"${f.getPath}:${f.length}:${f.lastModified}")
-      .mkString("|").hashCode
   }
 
   /** Stage-frame pin for the BATCH FUNNEL family: a LAZY checkpoint
@@ -1067,9 +1047,6 @@ object LlmOps {
     */
   def dotSql(a: String, b: String): String =
     s"aggregate(zip_with($a, $b, (x, y) -> x * y), cast(0.0 as double), (acc, v) -> acc + v)"
-
-  def cosineSql(a: String, b: String): String =
-    s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
 
   /** Sign-projection bucket key — the LSH for cosine space. `bits` is the
     * code length: widen it as the corpus grows to keep buckets small
@@ -4256,14 +4233,14 @@ object LlmOps {
     graft.cdc.Compaction.recoverDir(indexDir)
     Seq(s"$indexDir/signatures", s"$indexDir/bands")
       .foreach(graft.cdc.Compaction.recoverDir)
-    val marker = new java.io.File(indexDir, s"_delta_epoch_$epoch")
-    val epochDir = new java.io.File(corpusDir, s"epoch=$epoch")
-    if (marker.exists()) {
+    val marker = s"$indexDir/_delta_epoch_$epoch"
+    val epochDir = s"$corpusDir/epoch=$epoch"
+    if (ArtifactFs.exists(spark, marker)) {
       // fully committed: corpus partition + index append + marker all
       // landed — the replay is a no-op (count is a footer read). A
       // zero-survivor nightly (every churn doc gated out — legitimate)
       // committed no partition at all: nothing to read.
-      val n = if (epochDir.exists())
+      val n = if (ArtifactFs.exists(spark, epochDir))
         spark.read.parquet(corpusDir).filter(col("epoch") === epoch).count()
       else 0L
       return (n, true)
@@ -4273,7 +4250,7 @@ object LlmOps {
     // crash) must not leave the session holding the run's caches
     try {
     val (survivors, replay) =
-      if (epochDir.exists()) {
+      if (ArtifactFs.exists(spark, epochDir)) {
         // corpus committed, index append unproven: the committed rows
         // are the survivor set; re-derive their (deterministic) rows.
         // The committed layout is CANONICAL (doc_id, text) — deltaGates
@@ -4317,7 +4294,7 @@ object LlmOps {
       sig.unpersist(false)
     }
     crashHook("index-appended") // second seam: before the marker
-    marker.createNewFile()
+    ArtifactFs.mark(spark, marker)
     if (compactAfter) compactMinHashIndex(spark, indexDir)
     (n, replay)
     } finally pins.foreach(_.unpersist(false))
@@ -5985,19 +5962,19 @@ object LlmOps {
 
   /** In-session memo key for results derived from a dataset: md5 over
     * the frame's canonicalized plan (captures the transformation chain,
-    * exprIds normalized) folded with every file-backed leaf's (path,
-    * size, mtime) — the [[graft.llm.LlmQueries]] fingerprint discipline,
-    * so a corpus REGENERATED under the same path within one JVM misses
-    * the memo instead of serving stale results. The plan serializes via
+    * exprIds normalized) folded with the (path, size, mtime) of every
+    * file under a file-backed leaf's root paths, listed through
+    * [[graft.fs.ArtifactFs.fingerprint]] (URI paths included) — the
+    * [[graft.llm.LlmQueries]] fingerprint discipline, so a corpus
+    * REGENERATED under the same path within one JVM misses the memo
+    * instead of serving stale results. The plan serializes via
     * `treeString` with `maxFields = Int.MaxValue`: the default
     * `toString` elides columns past `spark.sql.debug.maxToStringFields`
     * (25) as "... N more fields", so two frames differing only in
     * truncated fields would collide on one key and serve each other's
     * centroids/truth rows — a bit-exactness break no output check in
-    * the colliding session could catch. Two documented best-effort
-    * edges: a non-local URI contributes its path string only (still
-    * plan-distinct, just not regeneration-sensitive), and `lastModified`
-    * carries the local filesystem's mtime granularity (often 1 ms, some
+    * the colliding session could catch. One documented best-effort edge:
+    * the mtime carries the filesystem's granularity (often 1 ms, some
     * filesystems 1 s) — an in-place same-length rewrite WITHIN that
     * resolution window is indistinguishable from the original. Harness
     * corpora are write-once per generation; cross-process reuse goes
@@ -6005,14 +5982,11 @@ object LlmOps {
     */
   private def memoKey(kind: String, df: DataFrame, params: String): String = {
     val plan = df.queryExecution.analyzed
-    val files = plan.collectLeaves().flatMap {
+    val roots = plan.collectLeaves().flatMap {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation match {
           case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.inputFiles.toSeq.sorted.map { p =>
-              val f = new java.io.File(p.stripPrefix("file:"))
-              s"$p:${f.length}:${f.lastModified}"
-            }
+            fs.location.rootPaths.map(_.toString)
           case _ => Nil
         }
       case _ => Nil
@@ -6022,7 +5996,7 @@ object LlmOps {
       printOperatorId = false)
     val md = java.security.MessageDigest.getInstance("MD5")
     val h = md.digest(
-      (planStr + "§" + files.mkString(","))
+      (planStr + "§" + ArtifactFs.fingerprint(df.sparkSession, roots: _*))
         .getBytes("UTF-8")).map("%02x".format(_)).mkString
     s"$kind|$h|$params"
   }

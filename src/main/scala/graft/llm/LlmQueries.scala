@@ -38,8 +38,8 @@ object LlmQueries {
     * same directory in one JVM (a scale run rewriting a scaled dir) gets
     * a fresh index instead of probing a stale one.
     */
-  private def fingerprint(d: String, table: String): String =
-    LlmOps.fileFingerprint(s"$d/$table.parquet").toString
+  private def fingerprint(s: SparkSession, d: String, table: String): String =
+    graft.fs.ArtifactFs.fingerprint(s, s"$d/$table.parquet").toString
 
   /** Temp index dir, registered for recursive cleanup at JVM exit (a
     * superseded generation — fingerprint changed — also stays until exit;
@@ -56,7 +56,7 @@ object LlmQueries {
     * indexed ingest gate and the index-stats gauge).
     */
   private def mhIndexDir(s: SparkSession, d: String): String =
-    memo(s"mh|$d|${fingerprint(d, "documents")}") {
+    memo(s"mh|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-mh-index")
       LlmOps.buildMinHashIndex(Tables.documents(s, d), dir)
       dir
@@ -64,7 +64,7 @@ object LlmQueries {
 
   /** The stored ANN cell table for `d`'s embeddings. */
   private def annIndexDir(s: SparkSession, d: String): String =
-    memo(s"ann|$d|${fingerprint(d, "embeddings")}") {
+    memo(s"ann|$d|${fingerprint(s, d, "embeddings")}") {
       val dir = tempIndexDir("graft-ann-index")
       LlmOps.buildAnnIndex(Tables.embeddings(s, d), dir)
       dir
@@ -74,7 +74,7 @@ object LlmQueries {
     * for `d`'s embeddings.
     */
   private def pqIndexDir(s: SparkSession, d: String): String =
-    memo(s"pq|$d|${fingerprint(d, "embeddings")}") {
+    memo(s"pq|$d|${fingerprint(s, d, "embeddings")}") {
       val dir = tempIndexDir("graft-pq-index")
       LlmOps.buildPqIndex(Tables.embeddings(s, d), dir)
       dir
@@ -84,7 +84,7 @@ object LlmQueries {
     * cell-partitioned vectors) for `d`'s embeddings.
     */
   private def kmIndexDir(s: SparkSession, d: String): String =
-    memo(s"km|$d|${fingerprint(d, "embeddings")}") {
+    memo(s"km|$d|${fingerprint(s, d, "embeddings")}") {
       val dir = tempIndexDir("graft-km-index")
       LlmOps.buildKmAnnIndex(Tables.embeddings(s, d), dir)
       dir
@@ -95,7 +95,7 @@ object LlmQueries {
     * so the stored-vs-inline equivalence is exact.
     */
   private def bpeTokenizerDir(s: SparkSession, d: String): String =
-    memo(s"bpe|$d|${fingerprint(d, "documents")}") {
+    memo(s"bpe|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-bpe-tok")
       LlmOps.buildBpeTokenizer(
         Tables.documents(s, d).filter(col("doc_id") % 20 === 0), dir)
@@ -107,7 +107,7 @@ object LlmQueries {
     * remaining vec_ids play the arriving batch.
     */
   private def semAnnIndexDir(s: SparkSession, d: String): String =
-    memo(s"semann|$d|${fingerprint(d, "embeddings")}") {
+    memo(s"semann|$d|${fingerprint(s, d, "embeddings")}") {
       val dir = tempIndexDir("graft-semann-index")
       LlmOps.buildAnnIndex(Tables.embeddings(s, d).filter(col("vec_id") < 400L), dir)
       dir
@@ -120,7 +120,7 @@ object LlmQueries {
     * one oracle.
     */
   private[graft] def lmDir(s: SparkSession, d: String): String =
-    memo(s"lm|$d|${fingerprint(d, "documents")}") {
+    memo(s"lm|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-lm")
       LlmOps.buildFluencyModel(Tables.documents(s, d), dir)
       dir
@@ -131,7 +131,7 @@ object LlmQueries {
     * tercile thresholds `llm_lm_partition` applies statelessly.
     */
   private def lmCutsDir(s: SparkSession, d: String): String =
-    memo(s"lmcuts|$d|${fingerprint(d, "documents")}") {
+    memo(s"lmcuts|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-lm-cuts")
       LlmOps.buildLmPartitioner(Tables.documents(s, d), lmDir(s, d), dir)
       dir
@@ -144,7 +144,7 @@ object LlmQueries {
     * restricted to that slice.
     */
   private def idfDir(s: SparkSession, d: String): String =
-    memo(s"idf|$d|${fingerprint(d, "documents")}") {
+    memo(s"idf|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-idf")
       LlmOps.buildIdfModel(Tables.documents(s, d), dir)
       dir
@@ -157,7 +157,7 @@ object LlmQueries {
     * same arithmetic restricted to the slice.
     */
   private def idfLangDir(s: SparkSession, d: String): String =
-    memo(s"idflang|$d|${fingerprint(d, "documents")}") {
+    memo(s"idflang|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-idf-lang")
       LlmOps.buildIdfModelByLang(Tables.documents(s, d), dir)
       dir
@@ -173,7 +173,7 @@ object LlmQueries {
     * [[LlmOps.qualityClassify]] restricted to that slice.
     */
   private[graft] def qclfDir(s: SparkSession, d: String): String =
-    memo(s"qclf|$d|${fingerprint(d, "documents")}") {
+    memo(s"qclf|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-qclf")
       LlmOps.buildQualityClassifier(
         LlmOps.qclfCorpus(Tables.documents(s, d)), dir)
@@ -184,7 +184,7 @@ object LlmQueries {
     * label fixture — probed by the per-language classifier query.
     */
   private def qclfLangDir(s: SparkSession, d: String): String =
-    memo(s"qclflang|$d|${fingerprint(d, "documents")}") {
+    memo(s"qclflang|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-qclf-lang")
       LlmOps.buildQualityClassifierByLang(
         LlmOps.qclfCorpusLang(Tables.documents(s, d)), dir)
@@ -197,7 +197,7 @@ object LlmQueries {
     * the per-language fluency and partition queries.
     */
   private def lmLangDir(s: SparkSession, d: String): String =
-    memo(s"lmlang|$d|${fingerprint(d, "documents")}") {
+    memo(s"lmlang|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-lm-lang")
       val docs = Tables.documents(s, d)
       LlmOps.buildFluencyModelByLang(docs, s"$dir/lm")
@@ -215,7 +215,7 @@ object LlmQueries {
     * unpruned generation.
     */
   private def mhPrunedDir(s: SparkSession, d: String): String =
-    memo(s"mhprune|$d|${fingerprint(d, "documents")}") {
+    memo(s"mhprune|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-mh-pruned")
       val docs = Tables.documents(s, d)
       LlmOps.buildMinHashIndex(docs, dir)
@@ -227,7 +227,7 @@ object LlmQueries {
     * built over the base vectors, pruned to the next vector generation.
     */
   private def vecPrunedDir(s: SparkSession, d: String): String =
-    memo(s"vecprune|$d|${fingerprint(d, "embeddings")}") {
+    memo(s"vecprune|$d|${fingerprint(s, d, "embeddings")}") {
       val dir = tempIndexDir("graft-vec-pruned")
       val emb = Tables.embeddings(s, d)
       LlmOps.buildAnnIndex(emb, s"$dir/ann")
@@ -251,7 +251,7 @@ object LlmQueries {
     * `documents`.
     */
   private def epochCorpusDir(s: SparkSession, d: String): String =
-    memo(s"epochs|$d|${fingerprint(d, "documents")}") {
+    memo(s"epochs|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-corpus-epochs")
       Tables.documents(s, d)
         .select(col("doc_id"), col("text"),
@@ -262,7 +262,7 @@ object LlmQueries {
     }
 
   private def gcCorpusDir(s: SparkSession, d: String): String =
-    memo(s"gc|$d|${fingerprint(d, "documents")}") {
+    memo(s"gc|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-corpus-gc")
       val docs = Tables.documents(s, d)
       docs.select(col("doc_id"), col("text"),
@@ -284,7 +284,7 @@ object LlmQueries {
     * MUTATES the artifact.
     */
   private def deltaAppliedDir(s: SparkSession, d: String): String =
-    memo(s"deltaapply|$d|${fingerprint(d, "documents")}") {
+    memo(s"deltaapply|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-delta-apply")
       val docs = Tables.documents(s, d)
       LlmOps.buildMinHashIndex(docs, s"$dir/ix")
@@ -322,7 +322,7 @@ object LlmQueries {
     * into a distinct gram-hash table probed by the training-side gate.
     */
   private[graft] def decontamIndexDir(s: SparkSession, d: String): String =
-    memo(s"decontam|$d|${fingerprint(d, "documents")}") {
+    memo(s"decontam|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-decontam-index")
       val docs = Tables.documents(s, d)
       LlmOps.buildDecontamIndex(docs.filter(
@@ -334,7 +334,7 @@ object LlmQueries {
     * the media ingest gate, read by the stats gauge and coverage audit).
     */
   private def payIndexDir(s: SparkSession, d: String): String =
-    memo(s"pay|$d|${fingerprint(d, "documents")}") {
+    memo(s"pay|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-pay-index")
       Multimodal.buildPayloadIndex(Multimodal.media(Tables.documents(s, d)), dir)
       dir
@@ -345,7 +345,7 @@ object LlmQueries {
     * media as-of query.
     */
   private def mediaEpochDir(s: SparkSession, d: String): String =
-    memo(s"mediaepochs|$d|${fingerprint(d, "documents")}") {
+    memo(s"mediaepochs|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-media-epochs")
       Multimodal.media(Tables.documents(s, d))
         .select(col("doc_id"), col("payload"),
@@ -362,7 +362,7 @@ object LlmQueries {
     * maintenance pass.
     */
   private def mediaGcDir(s: SparkSession, d: String): String =
-    memo(s"mediagc|$d|${fingerprint(d, "documents")}") {
+    memo(s"mediagc|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-media-gc")
       val docs = Tables.documents(s, d)
       val m = Multimodal.media(docs)
@@ -380,7 +380,7 @@ object LlmQueries {
     * corpus, pruned to the next media generation.
     */
   private def payPrunedDir(s: SparkSession, d: String): String =
-    memo(s"payprune|$d|${fingerprint(d, "documents")}") {
+    memo(s"payprune|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-pay-pruned")
       val docs = Tables.documents(s, d)
       Multimodal.buildPayloadIndex(Multimodal.media(docs), dir)
@@ -1695,8 +1695,6 @@ object LlmQueries {
        |      FROM scored)""".stripMargin
   }
 
-  private def cosineDuck(a: String, b: String): String =
-    s"(${dotDuck(a, b)}) / (sqrt(${dotDuck(a, a)}) * sqrt(${dotDuck(b, b)}))"
   private def signBucketDuck(e: String): String =
     "concat(" + (1 to 8).map(i =>
       s"CASE WHEN $e[$i] >= CAST(0.0 AS DOUBLE) THEN '1' ELSE '0' END").mkString(", ") + ")"

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Event-time windowed aggregation + custom keyed state over the events
   * stream — the Structured Streaming capability surface beyond the
   * reference's own needs (its only state is offsets + counters, SURVEY
-  * §2.9): watermarked tumbling/sliding windows and
+  * §2.9): watermarked tumbling and session windows and
   * `flatMapGroupsWithState` session counters.
   *
   * All transforms take the CdcView/events column shapes and work
@@ -40,18 +40,8 @@ object Windows {
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"), col("sum_value"))
 
-  /** Sliding-window variant (overlapping windows). */
-  def slidingCounts(events: DataFrame, windowDur: String = "2 days",
-      slide: String = "1 day", delay: String = "2 days"): DataFrame =
-    withEventTime(events)
-      .withWatermark("event_time", delay)
-      .groupBy(window(col("event_time"), windowDur, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("n"))
-
   /** Session windows: activity bursts per user separated by `gap` of
-    * silence — the third window family (tumbling/sliding/session), state
-    * bounded by the watermark.
+    * silence, state bounded by the watermark.
     */
   def sessionCounts(events: DataFrame, gap: String = "2 days",
       delay: String = "2 days"): DataFrame =

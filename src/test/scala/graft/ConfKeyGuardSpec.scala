@@ -11,11 +11,7 @@ import scala.jdk.CollectionConverters._
 class ConfKeyGuardSpec extends AnyFunSuite {
   private val allowed = Set(
     // reliable checkpoints for pins and fixpoint loops on a cluster
-    "spark.graft.cc.checkpointDir",
-    // bypasses the stored-relation memo, the workaround for its stale
-    // fingerprint on URI-form paths; leaves with the filesystem-layer fix
-    // (ROADMAP.md open item 1)
-    "spark.graft.storedRelCache")
+    "spark.graft.cc.checkpointDir")
 
   test("main code reads no spark.graft.* key outside the allow-list") {
     val root = Paths.get("src/main/scala")

@@ -21,14 +21,17 @@ class ConnectionTestSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft-ct-ckp").toString)
 
   test("good source, no topic requested: ok, and no query was started") {
-    val before = spark.streams.active.length
-    val r = ConnectionTest.test(spark, spec(goodSrc))
-    assert(r.ok && r.source_ok && r.topic_ok)
-    assert(r.source_error.isEmpty && r.schema_id.isEmpty)
-    assert(spark.streams.active.length === before) // dry run
-    // the diagnostic surfaces as a one-row control-plane frame
-    val df = r.toDF(spark)
-    assert(df.columns.contains("source_error_class") && df.count() === 1L)
+    // the `file:` URI form streams fine, so the preflight must pass it too
+    for (src <- Seq(goodSrc, s"file:$goodSrc")) {
+      val before = spark.streams.active.length
+      val r = ConnectionTest.test(spark, spec(src))
+      assert(r.ok && r.source_ok && r.topic_ok, s"$src: $r")
+      assert(r.source_error.isEmpty && r.schema_id.isEmpty)
+      assert(spark.streams.active.length === before) // dry run
+      // the diagnostic surfaces as a one-row control-plane frame
+      val df = r.toDF(spark)
+      assert(df.columns.contains("source_error_class") && df.count() === 1L)
+    }
   }
 
   test("missing source dir fails the source stage with PATH_NOT_FOUND") {

@@ -2767,8 +2767,8 @@ class LlmSpec extends SparkSpec {
       6L -> (mk("delta") + " drift"),// near-dup of doc 4 → near gate
       7L -> mk("fresh"),             // genuinely new → survives
       8L -> "tiny doc")              // fails the quality gate
-    def freshFixture(): (String, String) = {
-      val root = java.nio.file.Files.createTempDirectory("graft-cda").toString
+    def freshFixture(uri: String => String): (String, String) = {
+      val root = uri(java.nio.file.Files.createTempDirectory("graft-cda").toString)
       LlmOps.buildMinHashIndex(base, s"$root/ix")
       (s"$root/corpus", s"$root/ix")
     }
@@ -2779,69 +2779,73 @@ class LlmSpec extends SparkSpec {
           String.valueOf(r.get(2)), String.valueOf(r.get(3)))).toSet
       (b, spark.read.parquet(s"$ix/signatures").count())
     }
-    // clean run: the committed partition IS the delta report's survivor
-    // set (count parity with the stage read-out, content by id)
-    val (c1, ix1) = freshFixture()
-    val (baseBands, _) = idxRows(ix1)
-    val expected = LlmOps.curateDeltaReport(base, next, ix1)
-      .toMap.apply("3_near")
-    val (n1, r1) = LlmOps.curateDeltaApply(base, next, c1, ix1, epoch = 1L)
-    assert(!r1 && n1 === expected, s"admitted $n1, report says $expected")
-    val committed = spark.read.parquet(c1)
-      .filter(col("epoch") === 1L).select("doc_id").collect()
-      .map(_.getLong(0)).toSet
-    assert(committed === Set(2L, 7L))
-    val (cleanBands, cleanSigs) = idxRows(ix1)
-    // the new rows belong only to admitted survivors (doc 2's UPDATE may
-    // reproduce some of its old version's band rows — its text differs by
-    // one token — so only containment is asserted, plus doc 7's arrival)
-    val gained = (cleanBands -- baseBands).map(_._1)
-    assert(gained.subsetOf(Set("2", "7")) && gained.contains("7"),
-      s"index must gain only admitted survivors' band rows, gained $gained")
-    // fully-committed replay: pure no-op — same count, index untouched
-    val (n2, r2) = LlmOps.curateDeltaApply(base, next, c1, ix1, epoch = 1L)
-    assert(r2 && n2 === n1)
-    assert(idxRows(ix1) === (cleanBands, cleanSigs))
-    // and the production point: a near-copy of an ADMITTED survivor
-    // arriving the NEXT night is now vetoed by the appended index
-    val night2 = docs(9L -> (mk("fresh") + " drift2"), 10L -> mk("novel"))
-    val rep2 = LlmOps.curateDeltaReport(base, night2, ix1).toMap
-    assert(rep2("3_near") === 1L,
-      s"epoch-1 survivor must veto its near-copy next night, got $rep2")
-    val (c3, ix3) = freshFixture()
-    val (n3, _) = LlmOps.curateDeltaApply(base, night2, c3, ix3, epoch = 1L)
-    assert(n3 === 2L, "against a pristine index both night-2 docs survive")
-    // crash window 1: corpus committed, index append never ran — the
-    // replay takes the committed partition as authoritative and heals
-    // the index to the clean run's state
-    val (c4, ix4) = freshFixture()
-    intercept[RuntimeException] {
-      LlmOps.curateDeltaApply(base, next, c4, ix4, epoch = 1L,
-        crashHook = at => if (at == "corpus-committed")
-          throw new RuntimeException("crash-1"))
+    // a plain root and the same root addressed as a `file:` URI, the form
+    // a data-lake deployment passes
+    for (uri <- Seq[String => String](identity, "file:" + _)) {
+      // clean run: the committed partition IS the delta report's survivor
+      // set (count parity with the stage read-out, content by id)
+      val (c1, ix1) = freshFixture(uri)
+      val (baseBands, _) = idxRows(ix1)
+      val expected = LlmOps.curateDeltaReport(base, next, ix1)
+        .toMap.apply("3_near")
+      val (n1, r1) = LlmOps.curateDeltaApply(base, next, c1, ix1, epoch = 1L)
+      assert(!r1 && n1 === expected, s"admitted $n1, report says $expected")
+      val committed = spark.read.parquet(c1)
+        .filter(col("epoch") === 1L).select("doc_id").collect()
+        .map(_.getLong(0)).toSet
+      assert(committed === Set(2L, 7L))
+      val (cleanBands, cleanSigs) = idxRows(ix1)
+      // the new rows belong only to admitted survivors (doc 2's UPDATE may
+      // reproduce some of its old version's band rows — its text differs by
+      // one token — so only containment is asserted, plus doc 7's arrival)
+      val gained = (cleanBands -- baseBands).map(_._1)
+      assert(gained.subsetOf(Set("2", "7")) && gained.contains("7"),
+        s"index must gain only admitted survivors' band rows, gained $gained")
+      // fully-committed replay: pure no-op — same count, index untouched
+      val (n2, r2) = LlmOps.curateDeltaApply(base, next, c1, ix1, epoch = 1L)
+      assert(r2 && n2 === n1)
+      assert(idxRows(ix1) === (cleanBands, cleanSigs))
+      // and the production point: a near-copy of an ADMITTED survivor
+      // arriving the NEXT night is now vetoed by the appended index
+      val night2 = docs(9L -> (mk("fresh") + " drift2"), 10L -> mk("novel"))
+      val rep2 = LlmOps.curateDeltaReport(base, night2, ix1).toMap
+      assert(rep2("3_near") === 1L,
+        s"epoch-1 survivor must veto its near-copy next night, got $rep2")
+      val (c3, ix3) = freshFixture(uri)
+      val (n3, _) = LlmOps.curateDeltaApply(base, night2, c3, ix3, epoch = 1L)
+      assert(n3 === 2L, "against a pristine index both night-2 docs survive")
+      // crash window 1: corpus committed, index append never ran — the
+      // replay takes the committed partition as authoritative and heals
+      // the index to the clean run's state
+      val (c4, ix4) = freshFixture(uri)
+      intercept[RuntimeException] {
+        LlmOps.curateDeltaApply(base, next, c4, ix4, epoch = 1L,
+          crashHook = at => if (at == "corpus-committed")
+            throw new RuntimeException("crash-1"))
+      }
+      assert(spark.read.parquet(c4).filter(col("epoch") === 1L).count() === n1,
+        "corpus partition must be committed before the crash point")
+      assert(idxRows(ix4)._1.map(_._1.toLong).forall(_ <= 4L),
+        "no survivor index rows may exist before the corpus commit")
+      val (n4, r4) = LlmOps.curateDeltaApply(base, next, c4, ix4, epoch = 1L)
+      assert(r4 && n4 === n1)
+      assert(idxRows(ix4) === (cleanBands, cleanSigs))
+      // crash window 2: index appended, marker never written — the replay
+      // re-appends (duplicates) and the commit's compaction pass heals the
+      // index back to the clean run's distinct rows
+      val (c5, ix5) = freshFixture(uri)
+      intercept[RuntimeException] {
+        LlmOps.curateDeltaApply(base, next, c5, ix5, epoch = 1L,
+          compactAfter = false,
+          crashHook = at => if (at == "index-appended")
+            throw new RuntimeException("crash-2"))
+      }
+      val (n5, r5) = LlmOps.curateDeltaApply(base, next, c5, ix5, epoch = 1L)
+      assert(r5 && n5 === n1)
+      assert(idxRows(ix5)._1 === cleanBands,
+        "replay duplicates must be erased by the commit's compaction")
+      assert(idxRows(ix5)._2 === cleanSigs)
     }
-    assert(spark.read.parquet(c4).filter(col("epoch") === 1L).count() === n1,
-      "corpus partition must be committed before the crash point")
-    assert(idxRows(ix4)._1.map(_._1.toLong).forall(_ <= 4L),
-      "no survivor index rows may exist before the corpus commit")
-    val (n4, r4) = LlmOps.curateDeltaApply(base, next, c4, ix4, epoch = 1L)
-    assert(r4 && n4 === n1)
-    assert(idxRows(ix4) === (cleanBands, cleanSigs))
-    // crash window 2: index appended, marker never written — the replay
-    // re-appends (duplicates) and the commit's compaction pass heals the
-    // index back to the clean run's distinct rows
-    val (c5, ix5) = freshFixture()
-    intercept[RuntimeException] {
-      LlmOps.curateDeltaApply(base, next, c5, ix5, epoch = 1L,
-        compactAfter = false,
-        crashHook = at => if (at == "index-appended")
-          throw new RuntimeException("crash-2"))
-    }
-    val (n5, r5) = LlmOps.curateDeltaApply(base, next, c5, ix5, epoch = 1L)
-    assert(r5 && n5 === n1)
-    assert(idxRows(ix5)._1 === cleanBands,
-      "replay duplicates must be erased by the commit's compaction")
-    assert(idxRows(ix5)._2 === cleanSigs)
   }
 
   test("pluggable token accounting: packer and budget sampler consume a tokenizer's counts") {
