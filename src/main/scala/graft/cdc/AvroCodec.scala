@@ -7,6 +7,7 @@ import org.apache.avro.io.EncoderFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.DecodeChangeEvent
+import graft.plans.GraftExtensions
 import scala.jdk.CollectionConverters._
 
 /** P1/S4 — Avro binary decode against a dynamic schema registry, the heart
@@ -92,7 +93,8 @@ object AvroCodec {
     val ev = call_function("decode_change_event",
       col("payload"), col("schema_id"), regCol,
       lit(readerSchemaJson), lit(permissive))
-    val decoded = events.select(col("replay_id"), col("schema_id"), ev.as("ev"))
+    val decoded = GraftExtensions.register(events)
+      .select(col("replay_id"), col("schema_id"), ev.as("ev"))
     // permissive corrupt events decode to null — drop them (strict mode
     // throws inside the expression instead, failing the task)
     (if (permissive) decoded.filter(col("ev").isNotNull) else decoded)

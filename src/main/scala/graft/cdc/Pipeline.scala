@@ -3,6 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cdc.ops.{Normalize, Route}
+import graft.plans.GraftExtensions
 
 /** The composed CDC delivery pipeline — batch form. The identical transform
   * chain runs under Structured Streaming in [[Streaming]]; batch-first so
@@ -45,7 +46,7 @@ object Pipeline {
     val obs = new Observation("route_metrics")
     val flashNorm = Normalize.boolNorm(col("flash_raw"))
     val commitMs = Normalize.commitMsLong(col("commit_raw"))
-    val observed = cdc.observe(obs,
+    val observed = GraftExtensions.register(cdc).observe(obs,
       count(lit(1)).as("events_seen"),
       sum(when(flashNorm.isNull && col("flash_raw").isNotNull, 1L).otherwise(0L))
         .as("unparseable_flash"),

@@ -4,9 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Scalar normalization column functions mirroring the reference's decode
-  * helpers. Everything here is built from codegen'd Catalyst built-ins —
-  * no UDFs — so the whole chain stays inside WholeStageCodegen and is
-  * SQL-expressible for the DuckDB oracle.
+  * helpers. Everything here is a codegen'd Catalyst expression — built-ins,
+  * plus the native `normalize_epoch_millis` — no UDFs, so the whole chain
+  * stays inside WholeStageCodegen.
   */
 object Normalize {
 
@@ -25,13 +25,11 @@ object Normalize {
     * (integer-divide by 1e6), ms if > 1e11 (pass through), s if > 1e9
     * (multiply by 1000), otherwise passed through as-is ("small test
     * values"); non-integral input → null (the `int(val)` failure path).
+    * Resolves the native [[graft.functions.NormalizeEpochMillis]] by name:
+    * the frame it is used on registers it first
+    * ([[graft.plans.GraftExtensions.register]]).
     */
-  def commitMsLong(v: Column): Column =
-    when(v.isNull, lit(null).cast("long"))
-      .when(v > lit(100000000000000L), intDiv(v, lit(1000000L)))
-      .when(v > lit(100000000000L), v)
-      .when(v > lit(1000000000L), v * lit(1000L))
-      .otherwise(v)
+  def commitMsLong(v: Column): Column = call_function("normalize_epoch_millis", v)
 
   /** P3 over stringly-typed input: non-integral strings → null. */
   def commitMs(raw: Column): Column = commitMsLong(raw.try_cast("long"))
@@ -43,9 +41,15 @@ object Normalize {
     * lower+strip, then "true"/"1"/"yes"/"y" → true,
     * "false"/"0"/"no"/"n"/"" → false, null → null, anything else → null
     * (the reference logs-and-skips; the log side-channel is dropped).
+    *
+    * Case folds only the upper-case letters of the accepted words:
+    * `lower` runs Spark's ICU case mapping, whose first call per JVM
+    * fills a table for every code point (~1.2 s). The verdict is the
+    * same: the only non-ASCII character that lower-cases to ASCII is the
+    * Kelvin sign (to `k`), which no accepted word holds.
     */
   def boolNorm(s: Column): Column = {
-    val t = lower(trim(s))
+    val t = translate(trim(s), "TRUEYSNOFAL", "trueysnofal")
     when(s.isNull, lit(null).cast("boolean"))
       .when(t.isin("true", "1", "yes", "y"), lit(true))
       .when(t.isin("false", "0", "no", "n", ""), lit(false))

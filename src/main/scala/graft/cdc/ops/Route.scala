@@ -1,5 +1,6 @@
 package graft.cdc.ops
 
+import graft.plans.GraftExtensions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,7 +21,7 @@ object Route {
 
   /** P3 — add normalized `commit_ms` from the unit-ambiguous `commit_raw`. */
   def withCommitMs(df: DataFrame): DataFrame =
-    df.withColumn("commit_ms", Normalize.commitMsLong(col("commit_raw")))
+    GraftExtensions.register(df).withColumn("commit_ms", Normalize.commitMsLong(col("commit_raw")))
 
   /** F2 — "since" mode: drop events older than the cutoff (reference
     * `app/services/sf_pubsub.py:621-628`). The reference still advances the

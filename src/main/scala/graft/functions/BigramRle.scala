@@ -25,10 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * hot-loop fusion argument as [[MinHashSigs]]. Output order is the
   * binary (w1, w2) sort — deterministic, though every consumer treats
   * the exploded rows as a set. Registered as SQL function `bigram_rle`
-  * by [[graft.plans.GraftExtensions]]; sessions without the extensions
-  * get a value-identical UDF fallback
-  * ([[graft.llm.LlmOps.ensureBigramRle]]). DuckDB oracles keep their CTE
-  * bigram derivations and hash-match bit-for-bit.
+  * by [[graft.plans.GraftExtensions]] on every session that resolves it.
+  * DuckDB oracles keep their CTE bigram derivations and hash-match
+  * bit-for-bit.
   */
 case class BigramRle(child: Expression) extends UnaryExpression {
 

@@ -14,8 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * per value and re-parses 14 chars of it; at sf0.1 the dedup pipelines
   * hash ~10⁶ shingles, and at 100 TB the hash is the dominant dedup cost
   * (SURVEY §9), so the string round-trip is worth deleting. Registered as
-  * SQL function `h56` by [[graft.plans.GraftExtensions]]; the DuckDB
-  * oracles keep the arithmetic form and hash-match bit-for-bit.
+  * SQL function `h56` by [[graft.plans.GraftExtensions]] on every session
+  * that resolves it; the DuckDB oracles keep the arithmetic form and
+  * hash-match bit-for-bit.
   */
 case class Md5Prefix56(child: Expression) extends UnaryExpression {
 

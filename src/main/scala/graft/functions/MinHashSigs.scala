@@ -15,10 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * intermediate array per hash function per row; the dedup family derives
   * signatures for every document of the corpus, so at 100 TB this is a
   * 12×-fewer-passes, zero-allocation hot loop. Registered as SQL function
-  * `minhash_sigs` by [[graft.plans.GraftExtensions]]; sessions without the
-  * extensions get a value-identical UDF fallback
-  * ([[graft.llm.LlmOps.ensureMinHashSigs]]). The DuckDB oracles keep the
-  * per-j `list_min(list_transform(...))` form and hash-match bit-for-bit.
+  * `minhash_sigs` by [[graft.plans.GraftExtensions]] on every session
+  * that resolves it. The DuckDB oracles keep the per-j
+  * `list_min(list_transform(...))` form and hash-match bit-for-bit.
   */
 case class MinHashSigs(child: Expression) extends UnaryExpression {
 

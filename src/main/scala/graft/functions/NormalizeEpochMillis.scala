@@ -9,10 +9,12 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * with whole-stage codegen (SURVEY §7.3's demonstration extension point).
   *
   * Semantics mirror the reference's `_normalize_commit_ms`
-  * (`app/services/sf_pubsub.py:215-227`) and are identical to the
-  * SQL-expressible `when`-chain in [[graft.cdc.ops.Normalize.commitMsLong]]:
-  * > 1e14 → nanoseconds (floor-divide by 1e6), > 1e11 → millis
-  * (passthrough), > 1e9 → seconds (×1000), else passthrough; null → null.
+  * (`app/services/sf_pubsub.py:215-227`): > 1e14 → nanoseconds
+  * (floor-divide by 1e6), > 1e11 → millis (passthrough), > 1e9 → seconds
+  * (×1000), else passthrough; null → null. [[graft.cdc.ops.Normalize.commitMsLong]]
+  * resolves it as SQL function `normalize_epoch_millis`, registered by
+  * [[graft.plans.GraftExtensions]]; the specs compare it with the
+  * SQL-expressible `when`-chain the DuckDB oracle states.
   *
   * The generated code is three branch-predictable long compares — no
   * Decimal round-trip like the built-in chain's exact-division trick — so

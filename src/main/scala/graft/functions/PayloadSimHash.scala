@@ -24,10 +24,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * shuffle left in near-dup detection is the chunk-bucket self-join. At
   * 100 TB of media that's the difference between shuffling the corpus
   * and shuffling one long per document. Registered as SQL function
-  * `payload_simhash` by [[graft.plans.GraftExtensions]]; sessions without
-  * the extensions get a value-identical UDF fallback
-  * ([[graft.llm.Multimodal.ensurePayloadSimHash]]). The DuckDB oracle
-  * keeps the explode/groupBy form and hash-matches bit-for-bit.
+  * `payload_simhash` by [[graft.plans.GraftExtensions]] on every session
+  * that resolves it. The DuckDB oracle keeps the explode/groupBy form and
+  * hash-matches bit-for-bit.
   */
 case class PayloadSimHash(child: Expression) extends UnaryExpression {
 

@@ -26,10 +26,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * row costs no exchange (a doc's tokens all live in its own text) and
   * shrinks both the join's probe side and the per-doc fold's list by
   * the corpus' mean token repetition. Registered as SQL function
-  * `token_rle` by [[graft.plans.GraftExtensions]]; sessions without the
-  * extensions get a value-identical UDF fallback
-  * ([[graft.llm.LlmOps.ensureTokenRle]]). DuckDB oracles state the same
-  * reduction as a (doc_id, tok) GROUP BY and hash-match bit-for-bit.
+  * `token_rle` by [[graft.plans.GraftExtensions]] on every session that
+  * resolves it. DuckDB oracles state the same reduction as a
+  * (doc_id, tok) GROUP BY and hash-match bit-for-bit.
   */
 case class TokenRle(child: Expression) extends UnaryExpression {
 

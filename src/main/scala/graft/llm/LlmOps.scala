@@ -1,15 +1,10 @@
 package graft.llm
 
 import graft.fs.ArtifactFs
+import graft.plans.GraftExtensions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-/** Row shape of the `bigram_rle` UDF fallback (field names must match the
-  * native [[graft.functions.BigramRle]] output struct).
-  */
-case class BigramRow(w1: String, w2: String, n: Long)
-case class TokRow(tok: String, tf: Long)
 
 /** LLM-training-data pipeline operators (north-star extensions; SURVEY §7.2
   * step 6): deduplication (exact / MinHash+LSH / SimHash / n-gram Jaccard /
@@ -43,28 +38,11 @@ object LlmOps {
     * registered by GraftExtensions (value-identical to
     * `cast(conv(substr(md5(x),1,14),16,10) as bigint)`, minus the
     * hex-string round-trip per value — the hash is the dominant dedup
-    * cost at scale). Sessions built without the extensions get a
-    * value-identical UDF fallback via [[ensureH56]], called by every
-    * operator that interpolates this.
+    * cost at scale). Every operator that interpolates this registers the
+    * function on its frame's session first
+    * ([[graft.plans.GraftExtensions.register]]).
     */
   def h56(sqlArg: String): String = s"h56($sqlArg)"
-
-  /** Make `h56` resolvable on any session: no-op when GraftExtensions
-    * already registered the native expression; otherwise registers a
-    * value-identical UDF (slower — no codegen — but correct), so LlmOps /
-    * TextAnalysis work on sessions built without the extensions.
-    */
-  def ensureH56(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    if (!s.catalog.functionExists("h56"))
-      // null-guarded to match the native expression's null-in → null-out
-      // semantics (boxed java.lang.Long so the UDF's return type is nullable)
-      s.udf.register("h56", (x: String) =>
-        if (x == null) null
-        else java.lang.Long.valueOf(graft.functions.Md5Prefix56.hash(
-          org.apache.spark.unsafe.types.UTF8String.fromString(x))))
-    df
-  }
 
   /** Same hash in DuckDB SQL text. */
   def h56Duck(sqlArg: String): String =
@@ -115,11 +93,11 @@ object LlmOps {
     else df.repartition(cores, keys.map(col): _*)
   }
 
-  /** Canonicalize a text corpus to (doc_id, text) — and make h56
-    * resolvable, since every downstream hash interpolates it.
+  /** Canonicalize a text corpus to (doc_id, text) — and register h56,
+    * since every downstream hash interpolates it.
     */
   private def textCorpus(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    ensureH56(df).select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    GraftExtensions.register(df).select(col(idCol).as("doc_id"), col(textCol).as("text"))
 
   // ------------------------------------------- harness dup-injection fixtures
 
@@ -423,27 +401,6 @@ object LlmOps {
   def affineA(j: Int): Long = graft.functions.MinHashSigs.affineA(j)
   def affineB(j: Int): Long = graft.functions.MinHashSigs.affineB(j)
 
-  /** Make `minhash_sigs` resolvable on any session — the [[ensureH56]]
-    * pattern: no-op when GraftExtensions registered the native expression;
-    * otherwise a value-identical UDF fallback (boxed elements so null
-    * minima survive the encoder).
-    */
-  def ensureMinHashSigs(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    if (!s.catalog.functionExists("minhash_sigs"))
-      s.udf.register("minhash_sigs", (gs: Seq[java.lang.Long]) =>
-        if (gs == null) null
-        else {
-          val nonNull = gs.filter(_ != null)
-          if (nonNull.isEmpty) Seq.fill[java.lang.Long](NumHashes)(null)
-          else (1 to NumHashes).map { j =>
-            java.lang.Long.valueOf(
-              nonNull.iterator.map(g => (affineA(j) * g + affineB(j)) % MersenneP).min)
-          }
-        })
-    df
-  }
-
   /** MinHash signature over a `gs` column (the per-doc distinct shingle
     * hashes), banded into 4 keys. The 12 minima come from the fused
     * native [[graft.functions.MinHashSigs]] expression — ONE pass over the
@@ -452,7 +409,7 @@ object LlmOps {
     * (spec'd against the unfused SQL form element-for-element).
     */
   def withMinHashBands(df: DataFrame): DataFrame = {
-    val withMh = ensureMinHashSigs(df).withColumn("mhs", expr("minhash_sigs(gs)"))
+    val withMh = GraftExtensions.register(df).withColumn("mhs", expr("minhash_sigs(gs)"))
     (0 until Bands).foldLeft(withMh) { (d, b) =>
       val parts = (1 to 3).map(r => s"cast(element_at(mhs, ${3 * b + r}) as string)").mkString(", ',', ")
       d.withColumn(s"band$b", expr(s"md5(concat($parts))"))
@@ -1368,93 +1325,10 @@ object LlmOps {
     // replaced — see the expression's scaladoc; equivalence spec'd).
     // Docs with fewer than two tokens yield an empty array and vanish
     // at the explode, the old filter's semantics.
-    ensureBigramRle(textCorpus(corpus, idCol, textCol))
+    textCorpus(corpus, idCol, textCol)
       .select(col("doc_id"), explode(expr("bigram_rle(text)")).as("bg"))
       .select(col("doc_id"), col("bg.w1").as("w1"),
         col("bg.w2").as("w2"), col("bg.n").as("n"))
-
-  /** Make `bigram_rle` resolvable on any session: no-op when
-    * [[graft.plans.GraftExtensions]] already registered the native
-    * expression; otherwise a value-identical UDF fallback (no codegen,
-    * but correct).
-    */
-  /** The UDF fallback's row function — extracted so the spec can compare
-    * its sort order against the native expression directly.
-    */
-  private[graft] def bigramRleFallback(text: String): Seq[BigramRow] =
-    if (text == null) null
-    else {
-      val toks = text.split(" ", -1)
-      if (toks.length < 2) Seq.empty[BigramRow]
-      else {
-        // UTF-8 BYTE order, not Scala's default String (UTF-16
-        // code-unit) order: the native expression and array_sort
-        // compare UTF8String binary, and the two diverge on
-        // supplementary-plane characters — the fallback must keep
-        // the expression scaladoc's "value-identical, deterministic
-        // binary sort" claim true for every input.
-        def u8(s: String): Array[Byte] =
-          s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        def cmpU8(a: String, b: String): Int = {
-          val (x, y) = (u8(a), u8(b))
-          var i = 0
-          val n = math.min(x.length, y.length)
-          while (i < n) {
-            val d = (x(i) & 0xff) - (y(i) & 0xff)
-            if (d != 0) return d
-            i += 1
-          }
-          x.length - y.length
-        }
-        toks.sliding(2).toSeq
-          .groupBy(p => (p(0), p(1))).toSeq
-          .map { case ((w1, w2), g) => BigramRow(w1, w2, g.size.toLong) }
-          .sortWith { (a, b) =>
-            val c = cmpU8(a.w1, b.w1)
-            if (c != 0) c < 0 else cmpU8(a.w2, b.w2) < 0
-          }
-      }
-    }
-
-  def ensureBigramRle(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    if (!s.catalog.functionExists("bigram_rle"))
-      s.udf.register("bigram_rle", (text: String) => bigramRleFallback(text))
-    df
-  }
-
-  /** [[bigramRleFallback]]'s unigram sibling — the `token_rle` UDF body
-    * for extension-less sessions; same UTF-8 BYTE sort-order contract as
-    * the native [[graft.functions.TokenRle]] (spec-compared).
-    */
-  private[graft] def tokenRleFallback(text: String): Seq[TokRow] =
-    if (text == null) null
-    else {
-      def u8(s: String): Array[Byte] =
-        s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      def cmpU8(a: String, b: String): Int = {
-        val (x, y) = (u8(a), u8(b))
-        var i = 0
-        val n = math.min(x.length, y.length)
-        while (i < n) {
-          val d = (x(i) & 0xff) - (y(i) & 0xff)
-          if (d != 0) return d
-          i += 1
-        }
-        x.length - y.length
-      }
-      text.split(" ", -1).toSeq
-        .groupBy(identity).toSeq
-        .map { case (tok, g) => TokRow(tok, g.size.toLong) }
-        .sortWith((a, b) => cmpU8(a.tok, b.tok) < 0)
-    }
-
-  def ensureTokenRle(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    if (!s.catalog.functionExists("token_rle"))
-      s.udf.register("token_rle", (text: String) => tokenRleFallback(text))
-    df
-  }
 
   /** The per-doc reduced token-frequency frame (doc_id, tok, tf) —
     * [[docBigrams]]' unigram sibling, the one derivation every
@@ -1468,7 +1342,7 @@ object LlmOps {
     */
   def docTokens(corpus: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
-    ensureTokenRle(textCorpus(corpus, idCol, textCol))
+    textCorpus(corpus, idCol, textCol)
       .select(col("doc_id"), explode(expr("token_rle(text)")).as("tk"))
       .select(col("doc_id"), col("tk.tok").as("tok"), col("tk.tf").as("tf"))
 
@@ -1864,7 +1738,7 @@ object LlmOps {
     require(midPermille >= 0 && midPermille <= 1000,
       "midPermille is a per-mille keep rate in [0, 1000]")
     val (cut1, cut2) = lmCutStructs(scored.sparkSession, cutsDir)
-    ensureH56(scored)
+    GraftExtensions.register(scored)
       .withColumn("bucket", lmBucketCol(cut1, cut2))
       .filter(ccnetKeep(midPermille))
       .select(col("doc_id"))
@@ -1887,7 +1761,7 @@ object LlmOps {
     */
   private[llm] def docBigramsLang(corpus: DataFrame, idCol: String,
       textCol: String, langCol: String): DataFrame =
-    ensureBigramRle(corpus.select(col(idCol).as("doc_id"),
+    GraftExtensions.register(corpus.select(col(idCol).as("doc_id"),
         col(textCol).as("text"), col(langCol).as("lang")))
       .select(col("doc_id"), col("lang"),
         explode(expr("bigram_rle(text)")).as("bg"))
@@ -2066,7 +1940,7 @@ object LlmOps {
       maxPerLang: Int = LmCalibMaxPerLang, idCol: String = "doc_id",
       langCol: String = "lang"): DataFrame = {
     val slice = corpus.filter(col(idCol) % refMod === 0)
-    val picked = ensureH56(slice)
+    val picked = GraftExtensions.register(slice)
       .select(col(langCol).as("lang"),
         col(idCol).cast("bigint").as("did"),
         expr(h56(s"concat('lmcal|', cast($idCol as string))")).as("pri"))
@@ -2333,9 +2207,7 @@ object LlmOps {
       idCol: String = "doc_id", textCol: String = "text",
       langCol: String = "lang"): Unit =
     graft.cdc.Compaction.swapDir(s"$dir/df") { tmp =>
-      // ensureH56/ensureTokenRle: the tb expr and the RLE must resolve
-      // on extension-less sessions (the textCorpus discipline)
-      val base = ensureTokenRle(ensureH56(corpus))
+      val base = GraftExtensions.register(corpus)
         .select(col(idCol).as("doc_id"), col(textCol).as("text"),
           col(langCol).as("lang"))
         .filter(col("text").isNotNull)
@@ -2368,7 +2240,7 @@ object LlmOps {
       langCol: String = "lang",
       broadcastMaxRows: Long = GateBroadcastMaxRows): DataFrame = {
     val spark = batch.sparkSession
-    val base = ensureTokenRle(ensureH56(batch))
+    val base = GraftExtensions.register(batch)
       .select(col(idCol).as("doc_id"), col(textCol).as("text"),
         col(langCol).as("lang"))
       .filter(col("text").isNotNull)
@@ -2744,10 +2616,7 @@ object LlmOps {
       idCol: String = "doc_id", textCol: String = "text",
       langCol: String = "lang"): Unit =
     graft.cdc.Compaction.swapDir(s"$dir/w") { tmp =>
-      // ensureH56: the tb bucket expr below interpolates h56 — the
-      // builder must resolve on extension-less sessions like every
-      // other h56 surface (the textCorpus discipline)
-      val base = ensureH56(corpus).select(col(idCol).as("doc_id"),
+      val base = GraftExtensions.register(corpus).select(col(idCol).as("doc_id"),
           col(textCol).as("text"), col(langCol).as("lang"))
         .filter(col("text").isNotNull)
       val keep = TextAnalysis.qualityFilter(base)
@@ -2782,10 +2651,7 @@ object LlmOps {
       textCol: String = "text", langCol: String = "lang",
       broadcastMaxRows: Long = GateBroadcastMaxRows): DataFrame = {
     val spark = batch.sparkSession
-    // ensureH56: the footprint expr below interpolates h56 — the probe
-    // must resolve on extension-less sessions (the textCorpus
-    // discipline; every other h56 surface routes through it)
-    val base = ensureH56(batch).select(col(idCol).as("doc_id"),
+    val base = GraftExtensions.register(batch).select(col(idCol).as("doc_id"),
         col(textCol).as("text"), col(langCol).as("lang"))
       .filter(col("text").isNotNull)
     // fused footprint: distinct (lang, tb) pairs (bucket sets dedup
@@ -2814,7 +2680,7 @@ object LlmOps {
     // in-row (doc, tok, tf) reduction with the language label riding —
     // the [[docTokens]] discipline, language-keyed: join and fold pay
     // per distinct doc-token
-    val toks = ensureTokenRle(base)
+    val toks = base
       .select(col("doc_id"), col("lang"),
         explode(expr("token_rle(text)")).as("tk"))
       .select(col("doc_id"), col("lang"),
@@ -2852,7 +2718,7 @@ object LlmOps {
     */
   def sampleByHash(corpus: DataFrame, n: Int,
       idCol: String = "doc_id"): DataFrame =
-    ensureH56(corpus).withColumn("pri",
+    GraftExtensions.register(corpus).withColumn("pri",
         expr(h56(s"concat('sample|', cast($idCol as string))")))
       .orderBy(col("pri"), col(idCol))
       .limit(n)
@@ -2899,7 +2765,7 @@ object LlmOps {
     // returns empty for perStratum <= 0, but MinKAgg would throw its
     // k > 0 require at plan time — fail identically, loudly, up front
     require(perStratum > 0, "perStratum must be positive")
-    val docs = ensureH56(corpus).filter(col(idCol).isNotNull)
+    val docs = GraftExtensions.register(corpus).filter(col(idCol).isNotNull)
       .withColumn("pri",
         expr(h56(s"concat('sample|', cast($idCol as string))")))
     if (perStratum <= heapMaxK && isIntegralColumn(docs, idCol)) {
@@ -3469,7 +3335,7 @@ object LlmOps {
     // ignores the extra column
     val raw =
       if (lmLangDir.isDefined)
-        ensureH56(corpus).select(col(idCol).as("doc_id"),
+        GraftExtensions.register(corpus).select(col(idCol).as("doc_id"),
           col(textCol).as("text"), col(langCol).as("lang"))
       else textCorpus(corpus, idCol, textCol)
     // ONE corpus pass derives the quality flags AND the exact-dedup
@@ -3895,7 +3761,7 @@ object LlmOps {
     // it); every other gate ignores the extra column
     val newC =
       if (lmLangDir.isDefined)
-        ensureH56(newSnap).select(col(idCol).as("doc_id"),
+        GraftExtensions.register(newSnap).select(col(idCol).as("doc_id"),
           col(textCol).as("text"), col(langCol).as("lang"))
       else textCorpus(newSnap, idCol, textCol)
     val oldFp = pin(oldC.select(col("doc_id"), md5(col("text")).as("oh")))
@@ -5051,7 +4917,7 @@ object LlmOps {
       weights: Map[String, Long] = Map.empty,
       heapMaxK: Int = SamplerHeapMaxK): DataFrame = {
     val spark = corpus.sparkSession
-    val base = ensureH56(corpus).filter(col(idCol).isNotNull).select(
+    val base = GraftExtensions.register(corpus).filter(col(idCol).isNotNull).select(
       col(idCol).as("doc_id"), col(sourceCol).as("source"))
     // explicit weight map (the library path — a real build reads these
     // from config; unlisted domains drop out via the inner join) or the
@@ -5149,7 +5015,7 @@ object LlmOps {
       idCol: String = "doc_id",
       weightsPermille: Map[String, Long] = Map.empty): DataFrame = {
     val spark = corpus.sparkSession
-    val base = ensureH56(corpus).filter(col(idCol).isNotNull).select(
+    val base = GraftExtensions.register(corpus).filter(col(idCol).isNotNull).select(
       col(idCol).as("doc_id"), col(sourceCol).as("source"))
     val weighted = if (weightsPermille.nonEmpty) {
       import spark.implicits._
@@ -5221,7 +5087,7 @@ object LlmOps {
       budgets: Map[String, Long],
       tokenCountExpr: Option[String] = None): DataFrame = {
     val spark = corpus.sparkSession
-    val base = ensureH56(corpus).filter(col(idCol).isNotNull)
+    val base = GraftExtensions.register(corpus).filter(col(idCol).isNotNull)
       .select(col(sourceCol).as("source"), col(idCol).as("doc_id"),
         expr(tokenCountExpr.getOrElse(s"size(split($textCol, ' '))"))
           .cast("bigint").as("n_toks"))
@@ -5331,7 +5197,7 @@ object LlmOps {
     // persisted like packSequences' shard frame: both the in-bucket rank
     // and the bucket-counts branch read it — without the cache the corpus
     // is scanned and md5-hashed twice (the dominant per-row cost here)
-    val prid = ensureH56(corpus).select(col(idCol).as("doc_id"))
+    val prid = GraftExtensions.register(corpus).select(col(idCol).as("doc_id"))
       .withColumn("pri", expr(h56("concat('shuffle|', cast(doc_id as string))")))
       .withColumn("bucket", expr(s"pri div ${1L << (56 - ShuffleBucketBits)}"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -6082,7 +5948,7 @@ object LlmOps {
       m: Int = PqSubspaces, kc: Int = PqCentroids,
       sub: Int = PqSubDim, trainMod: Long = PqTrainSliceMod,
       lloydIters: Int = 0): DataFrame = {
-    val base = embBase(ensureH56(emb), idCol, vecCol).select("vec_id", "e")
+    val base = embBase(GraftExtensions.register(emb), idCol, vecCol).select("vec_id", "e")
     val approx = pqApproxFrame(base, m, kc, sub, trainMod, lloydIters)
     val q = base.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("e").as("qe"))
@@ -6109,7 +5975,7 @@ object LlmOps {
       lloydIters: Int = 0): DataFrame = {
     // canonical widening via embBase (it keeps a `label` column when one
     // exists — normalize the caller's labelCol to that name first)
-    val base = embBase(ensureH56(emb).withColumn("label", col(labelCol)),
+    val base = embBase(GraftExtensions.register(emb).withColumn("label", col(labelCol)),
       idCol, vecCol)
     val approx = pqApproxFrame(base.select("vec_id", "e"), m, kc, sub,
       trainMod, lloydIters)
@@ -6141,7 +6007,7 @@ object LlmOps {
       sub: Int = PqSubDim, trainMod: Long = PqTrainSliceMod): DataFrame = {
     val short = annPq(emb, shortlist, idCol, vecCol, nQueries, m, kc, sub,
       trainMod).select("qid", "vec_id")
-    val base = embBase(ensureH56(emb), idCol, vecCol).select("vec_id", "e")
+    val base = embBase(GraftExtensions.register(emb), idCol, vecCol).select("vec_id", "e")
       .withColumn("nrm", expr(s"sqrt(${dotSql("e", "e")})"))
     val q = base.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qnrm"))
@@ -6319,7 +6185,7 @@ object LlmOps {
       vecCol: String = "embedding", nQueries: Int = 8, c: Int = KmCells,
       trainMod: Long = PqTrainSliceMod, iters: Int = PqLloydIters,
       dim: Int = KmDim, nprobe: Int = 1): DataFrame = {
-    val base = embBase(ensureH56(emb), idCol, vecCol).select("vec_id", "e")
+    val base = embBase(GraftExtensions.register(emb), idCol, vecCol).select("vec_id", "e")
     val cents = kmCentroids(base, c, trainMod, iters, dim)
     // [[coresWide]] feeds BOTH the assignment pass and the join's
     // base side: the narrow form plans the cell join as a BROADCAST
@@ -6388,7 +6254,7 @@ object LlmOps {
     // nprobe 1/2 (1.13×/0.94× the quiet oracle). The gauge stays
     // diagnostic-cadence: its truth side is inherently the
     // bounded-query brute force.
-    val base = embBase(ensureH56(emb), idCol, vecCol).select("vec_id", "e")
+    val base = embBase(GraftExtensions.register(emb), idCol, vecCol).select("vec_id", "e")
     val cents = kmCentroids(base, c, trainMod, iters, dim)
     // same co-partitioned widen as [[annIvfKm]] — the all-pairs cosine
     // against the broadcast query set (the gauge's dominant stage:
@@ -6542,7 +6408,7 @@ object LlmOps {
       idCol: String = "vec_id", vecCol: String = "embedding",
       c: Int = KmCells, trainMod: Long = PqTrainSliceMod,
       iters: Int = PqLloydIters, dim: Int = KmDim): Unit = {
-    val base = embBase(ensureH56(emb), idCol, vecCol).select("vec_id", "e")
+    val base = embBase(GraftExtensions.register(emb), idCol, vecCol).select("vec_id", "e")
     val cents = kmCentroids(base, c, trainMod, iters, dim)
     cents.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
     writeKmCells(base,
@@ -6566,7 +6432,7 @@ object LlmOps {
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = KmDim): Unit = {
     val cents = emb.sparkSession.read.parquet(s"$dir/centroids")
-    val base = embBase(ensureH56(emb), idCol, vecCol).select("vec_id", "e")
+    val base = embBase(GraftExtensions.register(emb), idCol, vecCol).select("vec_id", "e")
     writeKmCells(base, cents, dir, dim, "append")
   }
 
@@ -6614,7 +6480,7 @@ object LlmOps {
     val spark = queries.sparkSession
     val cents = readStored(spark, s"$indexDir/centroids")
     val cells = readStored(spark, s"$indexDir/cells")
-    val qb = embBase(ensureH56(queries), idCol, vecCol).select("vec_id", "e")
+    val qb = embBase(GraftExtensions.register(queries), idCol, vecCol).select("vec_id", "e")
     // nprobe = 1 is the single-cell assignment; above it each query
     // probes its nprobe nearest cells (same broadcast-probe shape, the
     // probed directory count scales with nprobe, never the index size)
@@ -6852,7 +6718,7 @@ object LlmOps {
       vecCol: String = "embedding", labelCol: String = "label",
       m: Int = PqSubspaces, kc: Int = PqCentroids, sub: Int = PqSubDim,
       trainMod: Long = PqTrainSliceMod, lloydIters: Int = 0): Unit = {
-    val base = embBase(ensureH56(emb).withColumn("label", col(labelCol)),
+    val base = embBase(GraftExtensions.register(emb).withColumn("label", col(labelCol)),
       idCol, vecCol)
     val pivots =
       if (lloydIters > 0)

@@ -324,7 +324,7 @@ object LlmQueries {
   private[graft] def decontamIndexDir(s: SparkSession, d: String): String =
     memo(s"decontam|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-decontam-index")
-      val docs = Tables.documents(s, d)
+      val docs = graft.plans.GraftExtensions.register(Tables.documents(s, d))
       LlmOps.buildDecontamIndex(docs.filter(
         expr(s"${LlmOps.h56("concat('split|', cast(doc_id as string))")} % 100") >= 95), dir)
       dir
@@ -982,7 +982,7 @@ object LlmQueries {
     // frozen into the artifact) — llm_decontaminate's roles inverted
     // into the stored-artifact lifecycle
     "llm_decontam_idx" -> ((s, d) => LlmOps.decontaminateStored(
-      Tables.documents(s, d).filter(
+      graft.plans.GraftExtensions.register(Tables.documents(s, d)).filter(
         expr(s"${LlmOps.h56("concat('split|', cast(doc_id as string))")} % 100") < 90),
       decontamIndexDir(s, d))),
     // gram-table health gauge: per hb bucket, physical rows vs distinct

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.plans.GraftExtensions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -98,19 +99,6 @@ object Multimodal {
   val PayloadSimChunks = 4
   val PayloadMaxHamming = 3
 
-  /** Make `payload_simhash` resolvable on any session: no-op when
-    * GraftExtensions already registered the native expression; otherwise a
-    * value-identical UDF fallback (no codegen, but correct).
-    */
-  def ensurePayloadSimHash(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    if (!s.catalog.functionExists("payload_simhash"))
-      s.udf.register("payload_simhash", (payload: Array[Byte]) =>
-        if (payload == null) null
-        else java.lang.Long.valueOf(graft.functions.PayloadSimHash.simhash(payload)))
-    df
-  }
-
   /** Near-dup detection over binary payloads — simhash over byte 4-grams:
     * slide a 4-byte (stride one) window, hash each distinct gram (as its
     * uppercase-hex string through the 56-bit md5 prefix), per-bit ±1
@@ -133,7 +121,7 @@ object Multimodal {
     val chunkBits = PayloadSimBits / PayloadSimChunks
     // persisted: both sides of the chunk self-join read it (the
     // minHashCandidates band-table discipline)
-    val sims = ensurePayloadSimHash(payloadDupCorpus(docs))
+    val sims = GraftExtensions.register(payloadDupCorpus(docs))
       .select(col("doc_id"), expr("payload_simhash(payload)").as("simhash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val chunks = sims.select(col("doc_id"), col("simhash"),
@@ -187,7 +175,7 @@ object Multimodal {
     * inside the scan; the payload never crosses a shuffle.
     */
   def payloadSims(mediaDf: DataFrame): DataFrame =
-    ensurePayloadSimHash(mediaDf)
+    GraftExtensions.register(mediaDf)
       .select(col("doc_id"), expr("payload_simhash(payload)").as("simhash"))
 
   /** The exploded (doc_id, simhash, chunk_idx, chunk_val, ck_bucket) block

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.plans.GraftExtensions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -180,7 +181,7 @@ object TextAnalysis {
     */
   def trainValSplit(docs: DataFrame, idCol: String = "doc_id",
       trainPct: Int = 90, valPct: Int = 5): DataFrame =
-    LlmOps.ensureH56(docs).select(col(idCol).as("doc_id"))
+    GraftExtensions.register(docs).select(col(idCol).as("doc_id"))
       .withColumn("bucket", expr(s"${LlmOps.h56(s"concat('split|', cast(doc_id as string))")} % 100"))
       .withColumn("split",
         when(col("bucket") < trainPct, "train")
@@ -197,7 +198,7 @@ object TextAnalysis {
     */
   def fingerprint(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
-    LlmOps.withShingles(LlmOps.ensureH56(docs)
+    LlmOps.withShingles(GraftExtensions.register(docs)
       .select(col(idCol).as("doc_id"), col(textCol).as("text")))
       .select(
         col("doc_id"),

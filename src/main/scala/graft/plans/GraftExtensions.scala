@@ -1,107 +1,46 @@
 package graft.plans
 
-import graft.functions.NormalizeEpochMillis
-import org.apache.spark.sql.SparkSessionExtensions
+import graft.functions._
+import org.apache.spark.sql.{DataFrame, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Optimizer rule: strength-reduce the SQL-expressible P3 `when`-chain
-  * (emitted by [[graft.cdc.ops.Normalize.commitMsLong]]) into the native
-  * codegen'd [[NormalizeEpochMillis]]. The match is anchored on the exact
-  * unit-heuristic shape — the three threshold literals, the millis
-  * passthrough branch, the ×1000 seconds branch, the identity else — AND
-  * a semantic check of the nanoseconds-branch result: the rule is injected
-  * session-wide, so a CaseWhen sharing every other branch but computing
-  * something different for v > 1e14 must NOT be rewritten. Rather than
-  * pattern-matching one syntactic form of `intDiv(v, 1e6)` (which drifts
-  * under analyzer casts and constant folding), [[nsBranchIsFloorDivMicro]]
-  * substitutes probe values for `v` and requires the branch to evaluate
-  * exactly to `floorDiv(x, 1e6)` on all of them — any deterministic
-  * expression built from the same input that disagrees anywhere on the
-  * probes is left alone. Results are bit-identical (thresholds imply
-  * v > 0 in the division branch, where floorDiv equals the chain's exact
-  * round-divide).
-  */
-object EpochNormalizeStrengthReduction extends Rule[LogicalPlan] {
-  private val NsT = Literal(100000000000000L)
-  private val MsT = Literal(100000000000L)
-  private val SecT = Literal(1000000000L)
-
-  /** Probe points spanning the ns-branch domain (> 1e14), with varied
-    * remainders mod 1e6 and magnitudes up to near Long.MaxValue.
-    */
-  private val Probes: Seq[Long] = Seq(
-    100000000000001L, 123456789123456789L, 999999999999999999L,
-    100000123456789012L, 9223372036854000000L)
-
-  /** True iff `res`, with every occurrence of `v` replaced by the probe
-    * literal, constant-evaluates to Math.floorDiv(probe, 1_000_000) for
-    * every probe. Requires `res` to be deterministic and reference no
-    * inputs other than `v`.
-    */
-  private def nsBranchIsFloorDivMicro(res: Expression, v: Expression): Boolean =
-    res.dataType == org.apache.spark.sql.types.LongType &&
-      res.deterministic &&
-      Probes.forall { x =>
-        val sub = res.transformUp {
-          case e if e.semanticEquals(v) => Literal(x)
-        }
-        sub.references.isEmpty &&
-          (try sub.eval(EmptyRow) == Math.floorDiv(x, 1000000L)
-           catch { case scala.util.control.NonFatal(_) => false })
-      }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
-    case CaseWhen(Seq(
-          (IsNull(v1), Literal(null, _)),
-          (GreaterThan(v2, NsT), nsRes),
-          (GreaterThan(v3, MsT), passMs),
-          (GreaterThan(v4, SecT), Multiply(v5, Literal(1000L, _), _))),
-        Some(passElse))
-        if v1.semanticEquals(v2) && v1.semanticEquals(v3) && v1.semanticEquals(v4) &&
-          v1.semanticEquals(v5) && v1.semanticEquals(passMs) && v1.semanticEquals(passElse) &&
-          nsBranchIsFloorDivMicro(nsRes, v1) =>
-      NormalizeEpochMillis(v1)
-  }
-}
-
-/** Session extensions: `normalize_epoch_millis` SQL function + the
-  * strength-reduction rule. Activate with
+/** Session extensions: pre-register the native codegen'd SQL functions
+  * (the table in the companion object). Activate with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
+  * Optional: every operator that resolves one of these functions by name
+  * registers it first through [[GraftExtensions.register]], so a session
+  * built without the extensions plans the same expressions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("normalize_epoch_millis"),
-      new ExpressionInfo(classOf[NormalizeEpochMillis].getName, "normalize_epoch_millis"),
-      (children: Seq[Expression]) => NormalizeEpochMillis(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("decode_change_event"),
-      new ExpressionInfo(classOf[graft.functions.DecodeChangeEvent].getName,
-        "decode_change_event"),
-      graft.functions.DecodeChangeEvent.builder _))
-    ext.injectFunction((
-      new FunctionIdentifier("h56"),
-      new ExpressionInfo(classOf[graft.functions.Md5Prefix56].getName, "h56"),
-      (children: Seq[Expression]) => graft.functions.Md5Prefix56(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[graft.functions.MinHashSigs].getName, "minhash_sigs"),
-      (children: Seq[Expression]) => graft.functions.MinHashSigs(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("payload_simhash"),
-      new ExpressionInfo(classOf[graft.functions.PayloadSimHash].getName, "payload_simhash"),
-      (children: Seq[Expression]) => graft.functions.PayloadSimHash(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("bigram_rle"),
-      new ExpressionInfo(classOf[graft.functions.BigramRle].getName, "bigram_rle"),
-      (children: Seq[Expression]) => graft.functions.BigramRle(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("token_rle"),
-      new ExpressionInfo(classOf[graft.functions.TokenRle].getName, "token_rle"),
-      (children: Seq[Expression]) => graft.functions.TokenRle(children.head)))
-    ext.injectOptimizerRule(_ => EpochNormalizeStrengthReduction)
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.Functions.foreach(ext.injectFunction)
+}
+
+object GraftExtensions {
+  private type Builder = Seq[Expression] => Expression
+
+  private def fn(name: String, cls: Class[_])(builder: Builder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+
+  /** The native functions: SQL name, description, builder. */
+  private val Functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
+    fn("normalize_epoch_millis", classOf[NormalizeEpochMillis])(c => NormalizeEpochMillis(c.head)),
+    fn("decode_change_event", classOf[DecodeChangeEvent])(DecodeChangeEvent.builder),
+    fn("h56", classOf[Md5Prefix56])(c => Md5Prefix56(c.head)),
+    fn("minhash_sigs", classOf[MinHashSigs])(c => MinHashSigs(c.head)),
+    fn("payload_simhash", classOf[PayloadSimHash])(c => PayloadSimHash(c.head)),
+    fn("bigram_rle", classOf[BigramRle])(c => BigramRle(c.head)),
+    fn("token_rle", classOf[TokenRle])(c => TokenRle(c.head)))
+
+  /** Register every entry of [[Functions]] that `df`'s session lacks, with
+    * the builder the extensions inject; returns `df`.
+    */
+  def register(df: DataFrame): DataFrame = {
+    val registry = df.sparkSession.sessionState.functionRegistry
+    Functions.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
+    df
   }
 }

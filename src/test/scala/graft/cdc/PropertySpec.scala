@@ -3,6 +3,7 @@ package graft.cdc
 import graft.SparkSpec
 import graft.cdc.ops.{Normalize, Route}
 import graft.functions.NormalizeEpochMillis
+import graft.plans.ExtensionsSpec
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -34,9 +35,20 @@ class PropertySpec extends SparkSpec {
   }
 
   test("P4 case/whitespace invariance: norm(s) == norm(lower(trim(s)))") {
-    val ss = samples(Gen.oneOf(
+    val sampled = samples(Gen.oneOf(
       "true", "TRUE", "  True ", "yes", "Y", "1", "false", "NO", " n ",
       "0", "", "  ", "maybe", "2", "on", "off"), 100)
+    // every case variant of every accepted word, plus the non-ASCII
+    // letters whose case mapping touches ASCII: the Kelvin sign (lower
+    // case `k`), dotted capital I (lower case `i` + U+0307) and long s
+    // (upper case `S`)
+    def variants(w: String): Seq[String] = w.foldLeft(Seq("")) { (acc, c) =>
+      acc.flatMap(p => Seq(c.toLower, c.toUpper).distinct.map(p + _))
+    }
+    val words = Seq("true", "1", "yes", "y", "false", "0", "no", "n", "")
+    val exotic = Seq("\u212A", "\u0130", "\u017F", "ye\u017F", "\u212Ano", " \u0130 ")
+    val ss = sampled ++ words.flatMap(variants) ++ exotic
+    assert(words.flatMap(variants).size === 67)
     val both = ss.toDF("s")
       .select(Normalize.boolNorm(col("s")).as("a"),
         Normalize.boolNorm(lower(trim(col("s")))).as("b"))
@@ -50,7 +62,7 @@ class PropertySpec extends SparkSpec {
       Gen.chooseNum(0L, 4000000000000000L),
       Gen.chooseNum(-1000000L, 1000000L)), 300)
     val chain = vs.toDF("v")
-      .select(Normalize.commitMsLong(col("v"))).as[Long].collect().toSeq
+      .select(ExtensionsSpec.commitMsChain(col("v"))).as[Long].collect().toSeq
     assert(chain === vs.map(NormalizeEpochMillis.normalize))
   }
 

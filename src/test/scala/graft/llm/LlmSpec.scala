@@ -97,7 +97,8 @@ class LlmSpec extends SparkSpec {
     // structural precondition = the round-6 miss: the short doc's 3
     // smallest shingle hashes all have df > 2, so k-smallest-overall ∩
     // rare was empty for it
-    val gs = LlmOps.withShingles(LlmOps.ensureH56(d).select(col("doc_id"), col("text")))
+    val gs = LlmOps.withShingles(
+        graft.plans.GraftExtensions.register(d).select(col("doc_id"), col("text")))
       .withColumn("gs", expr(
         s"array_distinct(transform(shingles, s -> ${LlmOps.h56("s")} % ${LlmOps.MersenneP}))"))
       .select(col("doc_id"), explode(col("gs")).as("g"))
@@ -3194,7 +3195,7 @@ class LlmSpec extends SparkSpec {
     LlmOps.buildQualityClassifierByLang(d, dir)
     val out = LlmOps.qualityScoreStoredByLang(d, dir).collect()
     assert(out.length === 3,
-      "builder and probe must run on the extension-less session via the UDF fallback")
+      "builder and probe must run on the extension-less session, which registers the native h56")
   }
 
   test("Lloyd/truth memo is regeneration-sensitive: a corpus rewritten in place retrains") {

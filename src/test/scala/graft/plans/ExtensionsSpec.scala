@@ -3,10 +3,11 @@ package graft.plans
 import graft.SparkSpec
 import graft.cdc.ops.Normalize
 import graft.functions.NormalizeEpochMillis
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Custom Catalyst surface: the codegen'd expression, its SQL registration,
-  * and the strength-reduction rule rewriting the P3 when-chain into it.
+/** Custom Catalyst surface: the codegen'd expressions and their SQL
+  * registration, each compared with the SQL-expressible chain it fuses.
   */
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
@@ -28,56 +29,9 @@ class ExtensionsSpec extends SparkSpec {
 
   test("native expression matches the SQL-expressible when-chain bit-for-bit") {
     val df = regimes.toDF("v")
-    val chain = df.select(Normalize.commitMsLong(col("v")).as("n")).as[Long].collect().toSeq
+    val chain = df.select(ExtensionsSpec.commitMsChain(col("v")).as("n")).as[Long].collect().toSeq
     val native = df.selectExpr("normalize_epoch_millis(v) as n").as[Long].collect().toSeq
     assert(chain === native)
-  }
-
-  test("strength-reduction rule rewrites the when-chain to the native expression") {
-    // a parquet-backed plan (a local literal relation constant-folds away
-    // before the rule can be observed) — this is the production cdc plan.
-    val df = graft.cdc.CdcView(spark, "/root/testdata/sf0.001")
-      .transform(graft.cdc.ops.Route.withCommitMs)
-      .select(col("event_id"), col("commit_raw"), col("commit_ms"))
-    val optimized = df.queryExecution.optimizedPlan
-    val hasNative = optimized.expressions.exists(_.exists(_.isInstanceOf[NormalizeEpochMillis]))
-    assert(hasNative, s"expected NormalizeEpochMillis in:\n$optimized")
-    // and the rewrite preserves results vs the unoptimized chain semantics
-    val viaNative = df.select(col("event_id"), col("commit_ms"))
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-    val direct = graft.cdc.CdcView(spark, "/root/testdata/sf0.001")
-      .select(col("event_id"),
-        expr("normalize_epoch_millis(commit_raw)").as("n"))
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-    assert(viaNative === direct)
-  }
-
-  test("rule does NOT rewrite a look-alike chain whose >1e14 branch differs") {
-    // Same null branch, same three thresholds, same ms-passthrough, same
-    // ×1000 and identity-else — but the nanoseconds branch divides by 1e3
-    // instead of 1e6. The rule is session-wide, so rewriting this user
-    // expression would silently change its results.
-    val lookAlike =
-      when(col("commit_raw").isNull, lit(null).cast("long"))
-        .when(col("commit_raw") > lit(100000000000000L),
-          Normalize.intDiv(col("commit_raw"), lit(1000L)))
-        .when(col("commit_raw") > lit(100000000000L), col("commit_raw"))
-        .when(col("commit_raw") > lit(1000000000L), col("commit_raw") * lit(1000L))
-        .otherwise(col("commit_raw"))
-    val df = graft.cdc.CdcView(spark, "/root/testdata/sf0.001")
-      .select(col("event_id"), col("commit_raw"), lookAlike.as("almost_ms"))
-    val optimized = df.queryExecution.optimizedPlan
-    assert(!optimized.expressions.exists(_.exists(_.isInstanceOf[NormalizeEpochMillis])),
-      s"look-alike chain must be left alone:\n$optimized")
-    // and its semantics are intact end-to-end (ns inputs ÷ 1e3, not 1e6).
-    // The fixture-sanity assert keeps this half falsifiable: a data
-    // regeneration without ns-scale commits would otherwise silently skip
-    // the semantic check forever.
-    val nsRow = df.filter(col("commit_raw") > lit(100000000000000L)).limit(1).collect()
-    assert(nsRow.nonEmpty,
-      "fixture invalid: no ns-scale commit_raw row to exercise the look-alike semantics")
-    val raw = nsRow(0).getLong(1)
-    assert(nsRow(0).getLong(2) === Math.floorDiv(raw, 1000L))
   }
 
   test("h56 native expression equals the conv(substr(md5)) chain on arbitrary strings") {
@@ -141,8 +95,12 @@ class ExtensionsSpec extends SparkSpec {
 
   test("bigram_rle fused pass equals the split/sort/RLE SQL chain, edge shapes included") {
     // repeated bigrams, consecutive/trailing spaces (empty tokens KEPT by
-    // split limit -1), single token, empty string, unicode, long mixed
+    // split limit -1), single token, empty string, unicode, long mixed.
+    // Supplementary-plane trap: 'ﬀ' (U+FB00, UTF-8 EF AC 80) sorts before
+    // '𝕏' (U+1D54F, UTF-8 F0 9D 95 8F) in UTF-8 byte order — array_sort's
+    // and the native expression's — but after it in UTF-16 code units.
     val cases = Seq(
+      "𝕏 ﬀ 𝕏 ﬀ z",
       "a b a b a c",
       "x  y",          // double space → empty middle token
       "tail space ",   // trailing empty token
@@ -160,9 +118,9 @@ class ExtensionsSpec extends SparkSpec {
       .collect()
     rows.foreach { r =>
       val fused = r.getSeq[org.apache.spark.sql.Row](1)
-        .map(x => (x.getString(0), x.getString(1), x.getLong(2))).toSet
+        .map(x => (x.getString(0), x.getString(1), x.getLong(2)))
       val unfused = r.getSeq[org.apache.spark.sql.Row](2)
-        .map(x => (x.getString(0), x.getString(1), x.getLong(2))).toSet
+        .map(x => (x.getString(0), x.getString(1), x.getLong(2)))
       assert(fused === unfused, s"diverged on '${r.getString(0)}'")
     }
     val nr = Seq[String](null).toDF("text")
@@ -170,31 +128,13 @@ class ExtensionsSpec extends SparkSpec {
     assert(nr.isNullAt(0))
   }
 
-  test("bigram_rle UDF fallback row order equals the native expression's UTF8 binary sort") {
-    // supplementary-plane trap: 'ﬀ' (U+FB00, UTF-16 0xFB00 / UTF-8
-    // EF AC 80) vs '𝕏' (U+1D54F, UTF-16 surrogate lead 0xD835 / UTF-8
-    // F0 9D 95 8F) — UTF-16 code-unit order puts 𝕏 first, UTF-8 byte
-    // order puts ﬀ first. The fallback must agree with the native
-    // expression (UTF8String binary) ROW FOR ROW, not just as a set.
-    val cases = Seq("𝕏 ﬀ 𝕏 ﬀ z",
-      "a b a b a c", "ü ber ü ber", "x  y", "")
-    cases.foreach { text =>
-      val native = Seq(text).toDF("text")
-        .selectExpr("bigram_rle(text) AS bgs").collect()(0)
-        .getSeq[org.apache.spark.sql.Row](0)
-        .map(x => (x.getString(0), x.getString(1), x.getLong(2)))
-      val fallback = graft.llm.LlmOps.bigramRleFallback(text)
-        .map(r => (r.w1, r.w2, r.n))
-      assert(native === fallback, s"row order diverged on '$text'")
-    }
-    assert(graft.llm.LlmOps.bigramRleFallback(null) === null)
-  }
-
   test("token_rle fused pass equals the distinct/count SQL chain, edge shapes included") {
     // repeated tokens, consecutive/trailing spaces (empty tokens KEPT by
     // split limit -1 — so Σtf always equals size(split)), single token,
-    // empty string (ONE empty token), unicode, long mixed
+    // empty string (ONE empty token), unicode, long mixed, and the
+    // bigram test's UTF-8 vs UTF-16 order trap
     val cases = Seq(
+      "𝕏 ﬀ 𝕏 ﬀ z",
       "a b a b a c",
       "x  y",
       "tail space ",
@@ -204,7 +144,7 @@ class ExtensionsSpec extends SparkSpec {
       (1 to 200).map(i => s"w${i % 13}").mkString(" "))
     val rows = cases.toDF("text")
       .selectExpr("text", "token_rle(text) AS fused",
-        "transform(array_distinct(split(text, ' ')), w -> struct(w AS tok, cast(size(filter(split(text, ' '), x -> x = w)) AS bigint) AS tf)) AS unfused",
+        "transform(array_sort(array_distinct(split(text, ' '))), w -> struct(w AS tok, cast(size(filter(split(text, ' '), x -> x = w)) AS bigint) AS tf)) AS unfused",
         "cast(size(split(text, ' ')) AS bigint) AS n_split")
       .collect()
     rows.foreach { r =>
@@ -212,7 +152,7 @@ class ExtensionsSpec extends SparkSpec {
         .map(x => (x.getString(0), x.getLong(1)))
       val unfused = r.getSeq[org.apache.spark.sql.Row](2)
         .map(x => (x.getString(0), x.getLong(1)))
-      assert(fused.toSet === unfused.toSet, s"diverged on '${r.getString(0)}'")
+      assert(fused === unfused, s"diverged on '${r.getString(0)}'")
       // the mass invariant every scorer's fold relies on
       assert(fused.map(_._2).sum === r.getLong(3),
         s"Σtf ≠ size(split) on '${r.getString(0)}'")
@@ -220,23 +160,6 @@ class ExtensionsSpec extends SparkSpec {
     val nr = Seq[String](null).toDF("text")
       .selectExpr("token_rle(text) AS fused").collect()(0)
     assert(nr.isNullAt(0))
-  }
-
-  test("token_rle UDF fallback row order equals the native expression's UTF8 binary sort") {
-    // same supplementary-plane trap as the bigram twin: UTF-16 code-unit
-    // order and UTF-8 byte order disagree on 𝕏 vs ﬀ
-    val cases = Seq("𝕏 ﬀ 𝕏 ﬀ z",
-      "a b a b a c", "ü ber ü ber", "x  y", "")
-    cases.foreach { text =>
-      val native = Seq(text).toDF("text")
-        .selectExpr("token_rle(text) AS tks").collect()(0)
-        .getSeq[org.apache.spark.sql.Row](0)
-        .map(x => (x.getString(0), x.getLong(1)))
-      val fallback = graft.llm.LlmOps.tokenRleFallback(text)
-        .map(r => (r.tok, r.tf))
-      assert(native === fallback, s"row order diverged on '$text'")
-    }
-    assert(graft.llm.LlmOps.tokenRleFallback(null) === null)
   }
 
   test("payload_simhash fused pass equals the hex/explode/vote SQL chain, edge lengths included") {
@@ -268,4 +191,16 @@ class ExtensionsSpec extends SparkSpec {
       .selectExpr("payload_simhash(payload) AS fused").collect()(0)
     assert(nr.isNullAt(0))
   }
+}
+
+object ExtensionsSpec {
+  /** P3 as the SQL-expressible `when`-chain the DuckDB oracle states — the
+    * independent reference for [[NormalizeEpochMillis]].
+    */
+  def commitMsChain(v: Column): Column =
+    when(v.isNull, lit(null).cast("long"))
+      .when(v > lit(100000000000000L), Normalize.intDiv(v, lit(1000000L)))
+      .when(v > lit(100000000000L), v)
+      .when(v > lit(1000000000L), v * lit(1000L))
+      .otherwise(v)
 }
