@@ -6,6 +6,12 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> <query,query,...> [sfDir]
   * Writes `<outDir>/<query>_<suffix>.txt` per query.
+  *
+  * Queries dumped in one JVM share its session, and AQE state at
+  * `explain` time (whether an earlier query's pinned cache is
+  * materialised) shows in the text: a plan-identity comparison of the
+  * delta family (`llm_curate_delta*`) needs solo dumps, one query per
+  * JVM, several per side.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

@@ -15,7 +15,7 @@ import graft.Ord._
   *   - [[graft.rel.Relational]]      — join/agg/window/set-op/subquery capability
   *   - [[graft.llm.LlmQueries]]      — dedup / ANN / text analysis / multimodal
   * Streaming, DSv2-source, reliability, lifecycle, and scale-technique
-  * semantics are spec-verified (333 ScalaTest cases) — see
+  * semantics are spec-verified (335 ScalaTest cases) — see
   * graft.cdc.Streaming, graft.sources.ReplayLogSource,
   * graft.cdc.Reliability, graft.cdc.ListenerManager, graft.rel.Scale.
   */

@@ -228,11 +228,61 @@ object LlmOps {
   val GateBroadcastMaxRows: Long    = 4000000L
   val GateBroadcastMaxVecRows: Long = 262144L
 
-  /** `df` with a broadcast hint iff `bound` — a collected row-count
-    * bound — is within [[GateBroadcastMaxRows]]; over it, AQE decides.
+  /** `df` with a broadcast hint iff `rows` — a collected row-count bound
+    * — is within `maxRows` ([[GateBroadcastMaxRows]], or
+    * [[GateBroadcastMaxVecRows]] for vector frames); over it, AQE
+    * decides. Every stored-artifact probe gates its batch side here.
     */
-  private def gateBroadcast(df: DataFrame, bound: Long): DataFrame =
-    if (bound <= GateBroadcastMaxRows) broadcast(df) else df
+  private[llm] def gateBroadcast(df: DataFrame, rows: Long,
+      maxRows: Long = GateBroadcastMaxRows): DataFrame =
+    if (rows <= maxRows) broadcast(df) else df
+
+  /** A long count field of a probe's collected footprint row; a null
+    * (a `sum` over an empty batch) reads as 0.
+    */
+  private[llm] def fpCount(fp: org.apache.spark.sql.Row, field: String): Long = {
+    val i = fp.fieldIndex(field)
+    if (fp.isNullAt(i)) 0L else fp.getLong(i)
+  }
+
+  /** STATIC partition pruning of a stored artifact to a probe's
+    * collected footprint: one flat `IN` per partition column over that
+    * column's distinct footprint values, AND-ed. The filter lands in
+    * the scan's PartitionFilters whatever the size estimates say, and
+    * unprobed directories are never opened (DPP alone can't see through
+    * a cached batch relation: InMemoryRelation is a leaf with no
+    * selective predicate for the rule to find). An empty footprint
+    * filters on `false`, so the scan is eliminated entirely.
+    *
+    * Over two or more columns the predicate is the footprint's
+    * CROSS-PRODUCT relaxation — e.g. (lang ∈ L) ∧ (wb ∈ W), not the
+    * exact pair disjunction. Every caller's join is exact on the
+    * partition columns plus its key, so the filter is pure pruning and
+    * any relaxation leaves the output bit-identical, while the exact
+    * form is a (|L| × |W|)-term OR tree (≈640 predicate nodes at 5
+    * languages × [[LmBuckets]]) that Catalyst re-analyzes on every plan
+    * of the consuming query for no extra pruning in the regimes that
+    * matter: a nightly churn covers every pair (both forms read
+    * everything), a single-language micro-batch makes the cross product
+    * degenerate to the pair set, and a minhash batch's (band_idx,
+    * bk_bucket) footprint saturates the Bands × [[BandBuckets]] grid
+    * anyway (every doc emits one key per band). The over-read is
+    * bounded by (|L|−1)·|W| directories in the mixed-small-batch
+    * corner. Measured: matched alternating solo A/B,
+    * llm_curate_delta_lang sf0.1 medians, OR-chain 5.58/5.30/4.98 s →
+    * cross-product 3.92/4.50/4.73 s; same-window A/B across the probe
+    * family (sf0.1 REPS=5 medians, minhash / per-language IDF / qclf /
+    * payload relaxations together): llm_curate_delta 2.77 → 2.33/2.61,
+    * inc_mh_idx 0.73 → 0.65/0.78, keywords_lang 0.54 → 0.47/0.50,
+    * quality_clf_lang 0.69 → 0.60/0.64, payload_inc_idx 0.49 →
+    * 0.45/0.47 — the relaxation at or below the OR tree in every pair.
+    */
+  private[llm] def pinPartitions(stored: DataFrame,
+      footprint: (String, Seq[Any])*): DataFrame =
+    stored.filter(
+      if (footprint.exists(_._2.isEmpty)) lit(false)
+      else footprint.map { case (c, vs) => col(c).isin(vs.distinct: _*) }
+        .reduce(_ && _))
 
   /** Resolved-relation memo for STORED-ARTIFACT probe reads.
     * `spark.read.parquet` on a partitioned artifact re-lists every
@@ -293,8 +343,9 @@ object LlmOps {
     * checkpointed frame cannot recompute lost blocks from lineage — on a
     * cluster, set `spark.graft.cc.checkpointDir` (the [[dedupClusters]]
     * deployment knob) and the pin becomes a RELIABLE checkpoint instead;
-    * losing an executor under plain localCheckpoint fails the query and
-    * a retry recomputes from source, standard batch semantics. (b)
+    * losing an executor under plain localCheckpoint is expected to fail
+    * the query, with a retry recomputing from source, standard batch
+    * semantics (untested: no spec injects block loss). (b)
     * `sqlContext.clearCache` does not free checkpoint blocks — they are
     * freed by the ContextCleaner once the run's frames are dropped; the
     * funnel's pins were already session-lifetime (released only at
@@ -371,15 +422,12 @@ object LlmOps {
   private def pruneToCells(stored: DataFrame, partCol: String,
       pinned: Seq[Any], maxPin: Int,
       probeCells: => DataFrame): DataFrame =
-    if (pinned.isEmpty) stored.filter(lit(false))
-    else if (pinned.length <= maxPin)
-      stored.filter(col(partCol).isin(pinned: _*))
+    if (pinned.length <= maxPin) pinPartitions(stored, partCol -> pinned)
     else {
       val probe = probeCells.groupBy(partCol).agg(count(lit(1)).as("pc_n"))
         .filter(col("pc_n") >= 1L).select(partCol)
-      val withinBound = probe.limit(
-        (GateBroadcastMaxRows + 1).toInt).count() <= GateBroadcastMaxRows
-      stored.join(if (withinBound) broadcast(probe) else probe,
+      stored.join(gateBroadcast(probe,
+          probe.limit((GateBroadcastMaxRows + 1).toInt).count()),
         Seq(partCol), "left_semi")
     }
 
@@ -1144,20 +1192,19 @@ object LlmOps {
     * bounded by the evaluation suite — megabytes against a 100 TB
     * training corpus — and the probe side is the huge one, so the
     * right plan STREAMS the batch and broadcasts the artifact. The
-    * hint is still size-gated (`broadcastMaxRows`, a parquet
-    * footer-count job): a degenerate "benchmark" bigger than the gate
-    * drops the hint and AQE decides — degrading to a shuffle join
-    * instead of dying on the 8 GB cap.
+    * hint is still size-gated ([[gateBroadcast]] over a parquet
+    * footer-count job): a degenerate "benchmark" bigger than
+    * [[GateBroadcastMaxRows]] drops the hint and AQE decides —
+    * degrading to a shuffle join instead of dying on the 8 GB cap.
     */
   def decontaminateStored(batch: DataFrame, dir: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      broadcastMaxRows: Long = GateBroadcastMaxRows): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // batch-derived cache backs the returned lazy frame (two consumers:
     // membership join + per-doc gram totals), released at the caller's
     // post-materialization clearCache; the loop uses the From variant
     val bsig = signaturesOf(batch, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    decontaminateStoredFrom(bsig, dir, broadcastMaxRows)
+    decontaminateStoredFrom(bsig, dir)
   }
 
   /** [[decontaminateStored]] over a caller-derived (caller-persisted,
@@ -1165,18 +1212,15 @@ object LlmOps {
     * form: the epoch's one shingling feeds the minhash probe, the
     * survivor append, AND this gate.
     */
-  def decontaminateStoredFrom(bsig: DataFrame, dir: String,
-      broadcastMaxRows: Long = GateBroadcastMaxRows): DataFrame = {
+  def decontaminateStoredFrom(bsig: DataFrame, dir: String): DataFrame = {
     val spark = bsig.sparkSession
     val bench0 = readStored(spark, s"$dir/grams").select("h")
     // replay duplicates in an uncompacted table would double n_shared —
-    // membership must count each gram once
-    val bench = bench0.distinct()
-    // parquet footer-count, not a scan — the size gate's only eager step
-    val small = broadcastMaxRows > 0 && bench0.count() <= broadcastMaxRows
-    val hinted = if (small) broadcast(bench) else bench
+    // membership must count each gram once; the gate's parquet
+    // footer-count (not a scan) is the only eager step
+    val bench = gateBroadcast(bench0.distinct(), bench0.count())
     val shared = bsig.select(col("doc_id"), explode(col("gs")).as("h"))
-      .join(hinted, "h")
+      .join(bench, "h")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
     bsig.select(col("doc_id"), size(col("gs")).cast("bigint").as("n_grams"))
       .join(shared, Seq("doc_id"), "left")
@@ -1397,6 +1441,29 @@ object LlmOps {
     }
   }
 
+  /** The LM probe's one-row eager payload over `docs`: total token count
+    * (`toks` — the size-gate bound) and the distinct token-bucket set
+    * (`buckets` — the partition-pruning footprint, ≤ [[LmBuckets]]
+    * values). Exposed so an orchestrator running SEVERAL stored probes
+    * over one batch ([[curateDelta]]) can crossJoin the probes'
+    * footprint aggregates into ONE driver-blocking job — each eager
+    * barrier is a full sequential stage chain, and fusing them is where
+    * the latency goes. See [[fluencyStored]] for why the shape is
+    * size-independent.
+    */
+  def lmFpAgg(docs: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame =
+    textCorpus(docs, idCol, textCol)
+      .select(size(split(col("text"), " ")).cast("bigint").as("k"),
+        // the lambda restates [[lmBucket]] in SQL text (a lambda body
+        // can't call the Column form): `hash` is the same Murmur3
+        // expression in both dialects, and LmBuckets is interpolated —
+        // keep the two in lockstep
+        expr(s"array_distinct(transform(split(text, ' '), w -> pmod(hash(w), $LmBuckets)))").as("bs"))
+      .select(col("k"), posexplode(col("bs")).as(Seq("p", "b")))
+      .agg(sum(when(col("p") === 0, col("k"))).as("toks"),
+        collect_set(col("b")).as("buckets"))
+
   /** Score `docs` against a STORED [[buildFluencyModel]] artifact — the
     * production fluency probe: the model is never re-derived, the batch
     * joins one-sidedly against the frozen table. Bit-identical to
@@ -1437,32 +1504,8 @@ object LlmOps {
     * that holds at corpus scale: per-batch work is the batch's own
     * narrow derivation plus a pruned streamed model scan.
     */
-  /** The LM probe's one-row eager payload over `docs`: total token count
-    * (`toks` — the size-gate bound) and the distinct token-bucket set
-    * (`buckets` — the partition-pruning footprint, ≤ [[LmBuckets]]
-    * values). Exposed so an orchestrator running SEVERAL stored probes
-    * over one batch ([[curateDelta]]) can crossJoin the probes'
-    * footprint aggregates into ONE driver-blocking job — each eager
-    * barrier is a full sequential stage chain, and fusing them is where
-    * the latency goes. See [[fluencyStored]] for why the shape is
-    * size-independent.
-    */
-  def lmFpAgg(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    textCorpus(docs, idCol, textCol)
-      .select(size(split(col("text"), " ")).cast("bigint").as("k"),
-        // the lambda restates [[lmBucket]] in SQL text (a lambda body
-        // can't call the Column form): `hash` is the same Murmur3
-        // expression in both dialects, and LmBuckets is interpolated —
-        // keep the two in lockstep
-        expr(s"array_distinct(transform(split(text, ' '), w -> pmod(hash(w), $LmBuckets)))").as("bs"))
-      .select(col("k"), posexplode(col("bs")).as(Seq("p", "b")))
-      .agg(sum(when(col("p") === 0, col("k"))).as("toks"),
-        collect_set(col("b")).as("buckets"))
-
   def fluencyStored(docs: DataFrame, modelDir: String,
       idCol: String = "doc_id", textCol: String = "text",
-      broadcastMaxRows: Long = GateBroadcastMaxRows,
       fpRow: Option[org.apache.spark.sql.Row] = None): DataFrame = {
     // ONE light eager job (a single-row aggregate, [[lmFpAgg]]) derives
     // the bucket footprint and the size gate from in-row projections:
@@ -1492,12 +1535,9 @@ object LlmOps {
       .filter(size(col("t")) >= 2)
       .select(col("doc_id"), lit(null).cast("double").as("v"),
         (size(col("t")) - 1).cast("bigint").as("nn"))
-    val toksAt = fp.fieldIndex("toks")
-    probeStored(docBigrams(docs, idCol, textCol), mass, modelDir,
-      Option(fp.getSeq[Int](fp.fieldIndex("buckets")))
-        .getOrElse(Seq.empty).toArray,
-      broadcastMaxRows > 0 &&
-        (if (fp.isNullAt(toksAt)) 0L else fp.getLong(toksAt)) <= broadcastMaxRows)
+    probeStored(gateBroadcast(docBigrams(docs, idCol, textCol), fpCount(fp, "toks")),
+      mass, modelDir,
+      Option(fp.getSeq[Int](fp.fieldIndex("buckets"))).getOrElse(Seq.empty))
   }
 
   /** [[fluencyStored]] over a caller-derived (caller-persisted,
@@ -1506,33 +1546,29 @@ object LlmOps {
     * footprint job here reads `bg` itself (materializing the caller's
     * cache as a side effect).
     */
-  def fluencyStoredFrom(bg: DataFrame, modelDir: String,
-      broadcastMaxRows: Long = GateBroadcastMaxRows): DataFrame = {
+  def fluencyStoredFrom(bg: DataFrame, modelDir: String): DataFrame = {
     // static partition pruning off the batch's bounded bucket footprint
-    // (≤ LmBuckets values — the incrementalDedupMinHashIndexedFrom
-    // rationale: an IN over the partition column lands in the scan's
-    // PartitionFilters regardless of size-estimate heuristics). ONE
-    // eager job derives the footprint AND the size-gate row count.
+    // (≤ LmBuckets values, [[pinPartitions]]). ONE eager job derives
+    // the footprint AND the size-gate row count.
     val bucketCounts = bg.groupBy(lmBucket(col("w1")).as("wb"))
       .agg(count(lit(1)).as("c")).collect()
-    probeStored(bg,
+    probeStored(gateBroadcast(bg, bucketCounts.map(_.getLong(1)).sum),
       bg.select(col("doc_id"), lit(null).cast("double").as("v"),
         col("n").as("nn")),
-      modelDir, bucketCounts.map(_.getInt(0)),
-      broadcastMaxRows > 0 &&
-        bucketCounts.map(_.getLong(1)).sum <= broadcastMaxRows)
+      modelDir, bucketCounts.map(_.getInt(0)).toSeq)
   }
 
   /** The probe's shared tail: `bg` the batch's reduced (doc_id, w1, w2,
     * n) bigram rows (fed to the probability join), `mass` the per-doc
     * totals as (doc_id, v=null, nn) rows — the [[fluencyStored]] path
     * derives them as a plain `size(t)-1` projection (no bigram encode at
-    * all), the From variant re-reads its caller's cached frame.
+    * all), the From variant re-reads its caller's cached frame. `bg`
+    * arrives with the caller's broadcast decision already applied
+    * ([[gateBroadcast]]).
     */
   private def probeStored(bg: DataFrame, mass: DataFrame, modelDir: String,
-      buckets: Array[Int], small: Boolean): DataFrame = {
+      buckets: Seq[Int]): DataFrame = {
     val spark = bg.sparkSession
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // NO row-level model pruning beyond the bucket pins: semi-joining
     // the model against the batch's distinct-w1 set first (the "let the
     // churn's prefixes prune the weight rows" idea) was measured WORSE
@@ -1543,8 +1579,8 @@ object LlmOps {
     // second join stage to save hash lookups that cost nothing. At
     // production scale the wb partition pins bound what is read; rows
     // within probed buckets are cheapest dropped AT the join.
-    val model = readStored(spark, s"$modelDir/bigrams")
-      .filter(col("wb").isin(buckets.map(Integer.valueOf): _*))
+    val model = pinPartitions(readStored(spark, s"$modelDir/bigrams"),
+      "wb" -> buckets)
     // ONE aggregation serves both outputs: matched rows carry their
     // probability term (and 0 bigram mass), each mass row its doc's
     // bigram total (and a null term that collect_list skips) — so the
@@ -1552,7 +1588,7 @@ object LlmOps {
     // own counts, and a doc with no modeled transition folds an empty
     // list to 0.0. No per-doc outer join, no coalesce: the union is the
     // unmatched-recovery.
-    val matched = model.join(hinted(bg), Seq("w1", "w2"))
+    val matched = model.join(bg, Seq("w1", "w2"))
       .select(col("doc_id"),
         (col("n").cast("double") *
           (col("c2").cast("double") / col("c1").cast("double"))).as("v"),
@@ -1704,7 +1740,7 @@ object LlmOps {
       .select(col("doc_id"), lit(null).cast("double").as("v"),
         (size(col("t")) - 1).cast("bigint").as("nn"))
     probeStored(docBigrams(corpus, idCol, textCol), mass, modelDir,
-        (0 until LmBuckets).toArray, small = false)
+        0 until LmBuckets)
       .select(col("doc_id"), col("fluency"),
         lmBucketCol(cut1, cut2).as("bucket"))
   }
@@ -1811,8 +1847,7 @@ object LlmOps {
     */
   def fluencyStoredByLang(docs: DataFrame, modelDir: String,
       idCol: String = "doc_id", textCol: String = "text",
-      langCol: String = "lang",
-      broadcastMaxRows: Long = GateBroadcastMaxRows): DataFrame = {
+      langCol: String = "lang"): DataFrame = {
     // Footprint from in-row projections over the corpus scan — the
     // [[lmFpAgg]] shape, language-keyed — so the bigram frame has
     // exactly ONE consumer (the probability join) and NOTHING is
@@ -1827,7 +1862,7 @@ object LlmOps {
     val fp = lmLangFpAggDocs(docs, textCol, langCol).collect()(0)
     fluencyStoredByLangFrom(docs,
       docBigramsLang(docs, idCol, textCol, langCol),
-      modelDir, idCol, textCol, langCol, broadcastMaxRows, Some(fp))
+      modelDir, idCol, textCol, langCol, Some(fp))
   }
 
   /** The per-language footprint derived from the CORPUS scan itself
@@ -1848,12 +1883,6 @@ object LlmOps {
         collect_set(struct(col("lang"), col("b").as("wb"))).as("lm_lw"),
         sum(when(col("p") === 0, col("k"))).as("lm_lt"))
 
-  /** [[fluencyStoredByLang]] over a caller-derived (caller-persisted,
-    * caller-released) [[docBigramsLang]] frame — the live loop's form
-    * ([[fluencyStoredFrom]]'s per-language twin): the epoch owns the
-    * shared lang-bigram cache, and the footprint job here materializes
-    * it as a side effect.
-    */
   /** The per-language probe's one-row eager payload over a
     * [[docBigramsLang]] frame: the distinct (lang, wb) footprint (`lm_lw`,
     * ≤ languages × [[LmBuckets]] pairs) and the batch transition mass
@@ -1866,39 +1895,26 @@ object LlmOps {
       collect_set(struct(col("lang"), lmBucket(col("w1")).as("wb"))).as("lm_lw"),
       sum(col("n")).as("lm_lt"))
 
+  /** [[fluencyStoredByLang]] over a caller-derived (caller-persisted,
+    * caller-released) [[docBigramsLang]] frame — the live loop's form
+    * ([[fluencyStoredFrom]]'s per-language twin): the epoch owns the
+    * shared lang-bigram cache, and the footprint job here materializes
+    * it as a side effect.
+    */
   def fluencyStoredByLangFrom(docs: DataFrame, bg: DataFrame,
       modelDir: String, idCol: String = "doc_id", textCol: String = "text",
       langCol: String = "lang",
-      broadcastMaxRows: Long = GateBroadcastMaxRows,
       fpRow: Option[org.apache.spark.sql.Row] = None): DataFrame = {
     val spark = docs.sparkSession
     val fp = fpRow.getOrElse(lmLangFpAgg(bg).collect()(0))
     val pairs = Option(fp.getSeq[org.apache.spark.sql.Row](fp.fieldIndex("lm_lw")))
       .getOrElse(Seq.empty).map(r => (r.getString(0), r.getInt(1)))
-    val toksAt = fp.fieldIndex("lm_lt")
-    val small = broadcastMaxRows > 0 &&
-      (if (fp.isNullAt(toksAt)) 0L else fp.getLong(toksAt)) <= broadcastMaxRows
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // Pruning predicate is the footprint's CROSS-PRODUCT relaxation
-    // (lang ∈ L) ∧ (wb ∈ W), not the exact pair disjunction: the filter
-    // is pure pruning — the probability join is exact on (lang, w1, w2),
-    // so any relaxation leaves the output bit-identical — and the exact
-    // form is a (langs × buckets)-term OR tree (≈640 predicate nodes at
-    // 5 langs) that Catalyst re-analyzes on every plan of the consuming
-    // query for zero extra pruning in the regimes that matter: a nightly
-    // churn's tokens cover every (lang, wb) pair (both forms read
-    // everything), and a single-language micro-batch makes the cross
-    // product degenerate to the pair set. The over-read is bounded by
-    // (|L|−1)·|W| directories in the mixed-small-batch corner; two flat
-    // IN lists (≤ langs + [[LmBuckets]] literals) keep the plan small.
-    // Matched alternating solo A/B, llm_curate_delta_lang sf0.1 medians
-    // on a warm-drifting host: OR-chain 5.58/5.30/4.98 s → cross-product
-    // 3.92/4.50/4.73 s — the relaxation wins every adjacent pair.
-    val model = readStored(spark, s"$modelDir/bigrams").filter(
-      if (pairs.isEmpty) lit(false)
-      else col("lang").isin(pairs.map(_._1).distinct: _*) &&
-        col("wb").isin(pairs.map(_._2).distinct: _*))
-    val matched = model.join(hinted(bg), Seq("lang", "w1", "w2"))
+    // the probability join is exact on (lang, w1, w2), so the
+    // cross-product pin is pure pruning
+    val model = pinPartitions(readStored(spark, s"$modelDir/bigrams"),
+      "lang" -> pairs.map(_._1), "wb" -> pairs.map(_._2))
+    val matched = model.join(gateBroadcast(bg, fpCount(fp, "lm_lt")),
+        Seq("lang", "w1", "w2"))
       .select(col("doc_id"), col("lang"),
         (col("n").cast("double") *
           (col("c2").cast("double") / col("c1").cast("double"))).as("v"),
@@ -2142,8 +2158,7 @@ object LlmOps {
     * cache backs it ([[curateDelta]]'s lazy-return contract).
     */
   def keywordsStored(batch: DataFrame, dir: String, k: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
-      broadcastMaxRows: Long = GateBroadcastMaxRows): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = batch.sparkSession
     val tf = textCorpus(batch, idCol, textCol).filter(col("text").isNotNull)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
@@ -2158,12 +2173,9 @@ object LlmOps {
     val fpRow = tf
       .agg(collect_set(expr(idfTb("tok"))).as("tbs"), count(lit(1)).as("n"))
       .head
-    val fp = fpRow.getSeq[Long](fpRow.fieldIndex("tbs"))
-    val smallBatch = broadcastMaxRows > 0 &&
-      fpRow.getLong(fpRow.fieldIndex("n")) <= broadcastMaxRows
-    val model = readStored(spark, s"$dir/df")
-      .filter(col("tb").isin(fp: _*))
-    val scored = model.join(if (smallBatch) broadcast(tf) else tf, "tok")
+    val model = pinPartitions(readStored(spark, s"$dir/df"),
+      "tb" -> fpRow.getSeq[Long](fpRow.fieldIndex("tbs")))
+    val scored = model.join(gateBroadcast(tf, fpCount(fpRow, "n")), "tok")
       .withColumn("score",
         col("tf").cast("double") * col("n_docs").cast("double") / col("df").cast("double"))
     val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("tok"))
@@ -2237,8 +2249,7 @@ object LlmOps {
     */
   def keywordsStoredByLang(batch: DataFrame, dir: String, k: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
-      langCol: String = "lang",
-      broadcastMaxRows: Long = GateBroadcastMaxRows): DataFrame = {
+      langCol: String = "lang"): DataFrame = {
     val spark = batch.sparkSession
     val base = GraftExtensions.register(batch)
       .select(col(idCol).as("doc_id"), col(textCol).as("text"),
@@ -2258,20 +2269,12 @@ object LlmOps {
     val pairs = Option(fpRow.getSeq[org.apache.spark.sql.Row](
         fpRow.fieldIndex("pairs"))).getOrElse(Seq.empty)
       .map(r => (r.getString(0), r.getLong(1)))
-    val small = broadcastMaxRows > 0 &&
-      fpRow.getLong(fpRow.fieldIndex("n")) <= broadcastMaxRows
-    // cross-product relaxation of the (lang, tb) footprint — the
-    // [[fluencyStoredByLangFrom]] rationale verbatim: the scored join is
-    // exact on (lang, tok), so the filter is pure pruning; two flat IN
-    // lists replace a langs × [[IdfBuckets]] OR tree (~640 predicate
-    // nodes at 5 languages) with identical pruning in the saturated
-    // regime and a (|L|−1)·|B|-directory bounded over-read off it
-    val model = readStored(spark, s"$dir/df").filter(
-      if (pairs.isEmpty) lit(false)
-      else col("lang").isin(pairs.map(_._1).distinct: _*) &&
-        col("tb").isin(pairs.map(_._2).distinct: _*))
+    // the scored join is exact on (lang, tok), so the cross-product pin
+    // is pure pruning
+    val model = pinPartitions(readStored(spark, s"$dir/df"),
+      "lang" -> pairs.map(_._1), "tb" -> pairs.map(_._2))
     val scored = model
-      .join(if (small) broadcast(tf) else tf, Seq("lang", "tok"))
+      .join(gateBroadcast(tf, fpCount(fpRow, "n")), Seq("lang", "tok"))
       .withColumn("score",
         col("tf").cast("double") * col("n_docs").cast("double") / col("df").cast("double"))
     val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("tok"))
@@ -2415,12 +2418,12 @@ object LlmOps {
     * matched-only union — the [[fluencyStored]] semantics: a token the
     * reference corpus never produced is evidence of neither class, and
     * an all-unseen doc scores 0 (below any sane τ), which is the
-    * conservative gate decision for alien text.
+    * conservative gate decision for alien text. `toks` arrives with the
+    * caller's broadcast decision already applied ([[gateBroadcast]]).
     */
   private def qclfScore(toks: DataFrame, mass: DataFrame,
-      weights: DataFrame, tau: Double, small: Boolean): DataFrame = {
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val matched = weights.join(hinted(toks), "tok")
+      weights: DataFrame, tau: Double): DataFrame = {
+    val matched = weights.join(toks, "tok")
       .select(col("doc_id"),
         (col("tf").cast("double") *
           (((col("c_pos") + 1).cast("double") *
@@ -2462,8 +2465,7 @@ object LlmOps {
     val mass = base.select(col("doc_id"),
       lit(null).cast("double").as("v"),
       size(split(col("text"), " ")).cast("bigint").as("nn"))
-    qclfScore(docTokens(base), mass, qclfCounts(corpus, idCol, textCol),
-      tau, small = false)
+    qclfScore(docTokens(base), mass, qclfCounts(corpus, idCol, textCol), tau)
   }
 
   /** The probe's one-row eager payload over `docs`: total token count
@@ -2515,31 +2517,27 @@ object LlmOps {
     */
   def qualityScoreStored(batch: DataFrame, dir: String, tau: Double = 1.0,
       idCol: String = "doc_id", textCol: String = "text",
-      broadcastMaxRows: Long = GateBroadcastMaxRows,
       fpRow: Option[org.apache.spark.sql.Row] = None,
       footprint: Boolean = true): DataFrame = {
     val spark = batch.sparkSession
     val base = qclfBase(batch, idCol, textCol)
     val weightsRaw = readStored(spark, s"$dir/w")
-    val (weights, small) =
-      if (!footprint) (weightsRaw, false)
+    val toks = docTokens(base)
+    val (weights, probe) =
+      if (!footprint) (weightsRaw, toks)
       else {
         // an orchestrator that already fused this aggregate into its own
         // eager job passes the row in — name-based field access, the
         // [[fluencyStored]] contract
         val fp = fpRow.getOrElse(qclfFpAgg(batch, idCol, textCol).collect()(0))
-        val toksAt = fp.fieldIndex("qc_toks")
-        val buckets = Option(fp.getSeq[Long](fp.fieldIndex("qc_buckets")))
-          .getOrElse(Seq.empty)
-        val sm = broadcastMaxRows > 0 &&
-          (if (fp.isNullAt(toksAt)) 0L else fp.getLong(toksAt)) <= broadcastMaxRows
-        (weightsRaw.filter(
-          col("tb").isin(buckets.map(java.lang.Long.valueOf): _*)), sm)
+        (pinPartitions(weightsRaw, "tb" ->
+            Option(fp.getSeq[Long](fp.fieldIndex("qc_buckets"))).getOrElse(Seq.empty)),
+          gateBroadcast(toks, fpCount(fp, "qc_toks")))
       }
     val mass = base.select(col("doc_id"),
       lit(null).cast("double").as("v"),
       size(split(col("text"), " ")).cast("bigint").as("nn"))
-    qclfScore(docTokens(base), mass, weights, tau, small)
+    qclfScore(probe, mass, weights, tau)
   }
 
   /** Health gauge over the stored classifier — per tb bucket: vocabulary
@@ -2648,8 +2646,7 @@ object LlmOps {
     */
   def qualityScoreStoredByLang(batch: DataFrame, dir: String,
       tau: Double = 1.0, idCol: String = "doc_id",
-      textCol: String = "text", langCol: String = "lang",
-      broadcastMaxRows: Long = GateBroadcastMaxRows): DataFrame = {
+      textCol: String = "text", langCol: String = "lang"): DataFrame = {
     val spark = batch.sparkSession
     val base = GraftExtensions.register(batch).select(col(idCol).as("doc_id"),
         col(textCol).as("text"), col(langCol).as("lang"))
@@ -2666,17 +2663,10 @@ object LlmOps {
       .collect()(0)
     val pairs = Option(fp.getSeq[org.apache.spark.sql.Row](fp.fieldIndex("pairs")))
       .getOrElse(Seq.empty).map(r => (r.getString(0), r.getLong(1)))
-    val toksAt = fp.fieldIndex("toks")
-    val small = broadcastMaxRows > 0 &&
-      (if (fp.isNullAt(toksAt)) 0L else fp.getLong(toksAt)) <= broadcastMaxRows
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // cross-product relaxation of the (lang, tb) footprint — the
-    // [[fluencyStoredByLangFrom]] rationale verbatim (the scoring join
-    // is exact on (lang, tok); the filter is pure pruning)
-    val weights = readStored(spark, s"$dir/w").filter(
-      if (pairs.isEmpty) lit(false)
-      else col("lang").isin(pairs.map(_._1).distinct: _*) &&
-        col("tb").isin(pairs.map(_._2).distinct: _*))
+    // the scoring join is exact on (lang, tok), so the cross-product
+    // pin is pure pruning
+    val weights = pinPartitions(readStored(spark, s"$dir/w"),
+      "lang" -> pairs.map(_._1), "tb" -> pairs.map(_._2))
     // in-row (doc, tok, tf) reduction with the language label riding —
     // the [[docTokens]] discipline, language-keyed: join and fold pay
     // per distinct doc-token
@@ -2685,7 +2675,8 @@ object LlmOps {
         explode(expr("token_rle(text)")).as("tk"))
       .select(col("doc_id"), col("lang"),
         col("tk.tok").as("tok"), col("tk.tf").as("tf"))
-    val matched = weights.join(hinted(toks), Seq("lang", "tok"))
+    val matched = weights.join(gateBroadcast(toks, fpCount(fp, "toks")),
+        Seq("lang", "tok"))
       .select(col("doc_id"), col("lang"),
         (col("tf").cast("double") *
           (((col("c_pos") + 1).cast("double") *
@@ -4464,6 +4455,18 @@ object LlmOps {
     incrementalDedupMinHashIndexedFrom(bSig, bBands, indexDir, threshold)
   }
 
+  /** The stored-LSH probe's one-row eager payload over a batch band
+    * frame: the distinct (band_idx, bk_bucket) footprint (`mh_fp`, ≤
+    * Bands × BandBuckets pairs) and the band-row count (`mh_n`, the
+    * size gate). Exposed for the same reason as [[lmFpAgg]]: an
+    * orchestrator crossJoins several probes' footprint aggregates into
+    * ONE driver-blocking job.
+    */
+  def mhFpAgg(bBands: DataFrame): DataFrame =
+    bBands
+      .agg(collect_set(struct(col("band_idx"), col("bk_bucket"))).as("mh_fp"),
+        count(lit(1)).as("mh_n"))
+
   /** [[incrementalDedupMinHashIndexed]] over a caller-derived (and
     * caller-persisted, caller-released) signature/band pair — the form
     * [[StreamingIngest]] uses so one shingling job per epoch feeds both
@@ -4477,36 +4480,17 @@ object LlmOps {
     * against its own committed index rows is what makes epoch replay
     * idempotent there.
     */
-  /** The stored-LSH probe's one-row eager payload over a batch band
-    * frame: the distinct (band_idx, bk_bucket) footprint (`mh_fp`, ≤
-    * Bands × BandBuckets pairs) and the band-row count (`mh_n`, the
-    * size gate). Exposed for the same reason as [[lmFpAgg]]: an
-    * orchestrator crossJoins several probes' footprint aggregates into
-    * ONE driver-blocking job.
-    */
-  def mhFpAgg(bBands: DataFrame): DataFrame =
-    bBands
-      .agg(collect_set(struct(col("band_idx"), col("bk_bucket"))).as("mh_fp"),
-        count(lit(1)).as("mh_n"))
-
   def incrementalDedupMinHashIndexedFrom(bSig: DataFrame, bBands: DataFrame,
       indexDir: String, threshold: Double = 0.6,
       excludeSelfId: Boolean = false,
-      broadcastMaxRows: Long = GateBroadcastMaxRows,
       fpRow: Option[org.apache.spark.sql.Row] = None): DataFrame = {
     val spark = bSig.sparkSession
     val baseSig = readStored(spark, s"$indexDir/signatures")
     val baseBands = readStored(spark, s"$indexDir/bands")
-    // STATIC partition pruning: the batch's directory footprint is bounded
-    // by construction (≤ Bands × BandBuckets pairs, = 64 values — a
-    // driver-safe collect no matter how big the batch or index is), so
-    // the probe pins it as a literal disjunction over the partition
-    // columns. Unlike DPP this does not depend on size-estimate
-    // heuristics — the IN filter lands in the scan's PartitionFilters and
-    // unprobed directories are never opened. (DPP alone can't see through
-    // the cached batch relation: InMemoryRelation is a leaf, so the rule
-    // finds no selective predicate on the build side.)
-    // ONE single-row aggregate ([[mhFpAgg]]) serves the footprint AND
+    // STATIC partition pruning ([[pinPartitions]]): the batch's directory
+    // footprint is bounded by construction (≤ Bands × BandBuckets pairs,
+    // = 64 values — a driver-safe collect no matter how big the batch or
+    // index is). ONE single-row aggregate ([[mhFpAgg]]) serves the footprint AND
     // the size gate (two separate collects = two sequential driver
     // barriers; fusing them halves the probe's eager-job count):
     // collect_set's merge buffer is bounded at ≤ Bands × BandBuckets
@@ -4522,30 +4506,15 @@ object LlmOps {
     val batchBuckets = fp
       .getSeq[org.apache.spark.sql.Row](fp.fieldIndex("mh_fp"))
       .map(r => (r.getInt(0), r.getInt(1)))
-    val smallBatch = broadcastMaxRows > 0 &&
-      fp.getLong(fp.fieldIndex("mh_n")) <= broadcastMaxRows
-    def hinted(df: DataFrame): DataFrame = if (smallBatch) broadcast(df) else df
-    // cross-product relaxation of the (band_idx, bk_bucket) footprint —
-    // the [[fluencyStoredByLangFrom]] rationale: the candidate join is
-    // exact on (band_idx, bk_bucket, band_key), so the filter is pure
-    // pruning; two flat IN lists (≤ [[graft.functions.MinHashSigs.Bands]]
-    // + [[BandBuckets]] literals) replace the up-to-64-pair OR tree, and
-    // the over-read is bounded by the full Bands × BandBuckets directory
-    // grid — which any multi-doc batch's footprint saturates anyway
-    // (every doc emits one key per band). Matched same-window A/B across
-    // the probe family (sf0.1 REPS=5 medians, this + the per-lang IDF /
-    // qclf / payload relaxations together): llm_curate_delta 2.77 →
-    // 2.33/2.61, inc_mh_idx 0.73 → 0.65/0.78, keywords_lang 0.54 →
-    // 0.47/0.50, quality_clf_lang 0.69 → 0.60/0.64, payload_inc_idx
-    // 0.49 → 0.45/0.47 — the relaxation at or below old in every pair.
-    val prunedBands = baseBands.filter(
-      if (batchBuckets.isEmpty) lit(false)
-      else col("band_idx").isin(batchBuckets.map(_._1).distinct: _*) &&
-        col("bk_bucket").isin(batchBuckets.map(_._2).distinct: _*))
+    val n = fpCount(fp, "mh_n")
+    // the candidate join is exact on (band_idx, bk_bucket, band_key), so
+    // the cross-product pin is pure pruning
+    val prunedBands = pinPartitions(baseBands,
+      "band_idx" -> batchBuckets.map(_._1), "bk_bucket" -> batchBuckets.map(_._2))
     val bandMatch = col("nb.band_idx") === col("ob.band_idx") &&
       col("nb.bk_bucket") === col("ob.bk_bucket") &&
       col("nb.band_key") === col("ob.band_key")
-    val cand = prunedBands.as("ob").join(hinted(bBands.as("nb")),
+    val cand = prunedBands.as("ob").join(gateBroadcast(bBands.as("nb"), n),
         if (excludeSelfId) bandMatch && col("nb.doc_id") =!= col("ob.doc_id")
         else bandMatch)
       .select(col("nb.doc_id").as("batch_id"), col("ob.doc_id").as("base_id"))
@@ -4557,7 +4526,7 @@ object LlmOps {
     val candB = cand.join(bSig.as("sa"), col("batch_id") === col("sa.doc_id"))
       .select(col("batch_id"), col("base_id"), col("sa.gs").as("bgs"))
       .withColumn("cand_bucket", sigBucket(col("base_id")))
-    val dup = baseSig.as("sb").join(hinted(candB.as("c")),
+    val dup = baseSig.as("sb").join(gateBroadcast(candB.as("c"), n),
         col("c.cand_bucket") === col("sb.sig_bucket") &&
           col("c.base_id") === col("sb.doc_id"))
       .filter((size(array_intersect(col("c.bgs"), col("sb.gs"))).cast("double") /
@@ -4569,7 +4538,7 @@ object LlmOps {
     // is a BroadcastHashJoin (the SMJ here was two Exchange + two Sort
     // over batch-sized frames, pure stage tax on the nightly)
     bSig.select("doc_id")
-      .join(hinted(dup), col("doc_id") === col("batch_id"), "left_anti")
+      .join(gateBroadcast(dup, n), col("doc_id") === col("batch_id"), "left_anti")
       .select("doc_id")
   }
 
@@ -6641,16 +6610,12 @@ object LlmOps {
     */
   def incrementalDedupCosineIndexedFrom(b: DataFrame, indexDir: String,
       threshold: Double = 0.99, excludeBatchIds: Boolean = false,
-      broadcastMaxVecRows: Long = GateBroadcastMaxVecRows,
       staticPinMaxCells: Int = StaticPinMaxCells): DataFrame = {
     val cells = readStored(b.sparkSession, s"$indexDir/cells")
-    // STATIC partition pruning, the incrementalDedupMinHashIndexedFrom
-    // discipline: collect the batch's distinct cells (bounded by the cell
-    // count, not the batch) and pin them as a literal IN over the cell
-    // table's partition column — the filter lands in PartitionFilters and
-    // unprobed cell directories are never opened. (DPP can't see through
-    // the persisted batch: InMemoryRelation is a leaf with no selective
-    // predicate for the rule to find.)
+    // STATIC partition pruning ([[pinPartitions]] through
+    // [[pruneToCells]]): collect the batch's distinct cells (bounded by
+    // the cell count, not the batch) and pin them as a literal IN over
+    // the cell table's partition column.
     // ONE single-row aggregate serves the footprint AND the size gate
     // (the fused-eager-job discipline of the minhash gate): collect_set
     // keeps the merge buffer bounded at the cell count, and the row
@@ -6665,19 +6630,16 @@ object LlmOps {
     // not), so the pinned plan is stable across runs. Size gate (the
     // [[GateBroadcastMaxRows]] rationale): micro-batches keep the pinned
     // broadcast shape; an unbounded batch drops the hints and AQE
-    // decides. One knob governs BOTH hints: the id frame is ~3 orders
-    // smaller than the vector frame, so sharing the vector bound is
-    // conservative for it — past the bound AQE still broadcasts the id
-    // frame off runtime stats, it just isn't forced.
+    // decides. [[GateBroadcastMaxVecRows]] governs BOTH hints: the id
+    // frame is ~3 orders smaller than the vector frame, so sharing the
+    // vector bound is conservative for it — past the bound AQE still
+    // broadcasts the id frame off runtime stats, it just isn't forced.
     val fpRow = b.agg(
       slice(sort_array(collect_set(col("label"))),
         1, staticPinMaxCells + 1).as("fp"),
       count(lit(1)).as("n")).collect()(0)
     val batchCells = fpRow.getSeq[Any](0)
-    val smallBatch =
-      broadcastMaxVecRows > 0 && fpRow.getLong(1) <= broadcastMaxVecRows
-    def hintedV(df: DataFrame): DataFrame =
-      if (smallBatch) broadcast(df) else df
+    val n = fpCount(fpRow, "n")
     // size-gated static pin ([[StaticPinMaxCells]]): the collected set
     // is ⊆ the index's cell count (driver-bounded), but a plan literal
     // per cell is not free — past the bound the probe semi-joins the
@@ -6689,9 +6651,10 @@ object LlmOps {
     // batch-sized and broadcasts; the index side stays streamed
     val pruned =
       if (excludeBatchIds)
-        pruned0.join(hintedV(b.select("vec_id")), Seq("vec_id"), "left_anti")
+        pruned0.join(gateBroadcast(b.select("vec_id"), n, GateBroadcastMaxVecRows),
+          Seq("vec_id"), "left_anti")
       else pruned0
-    val dup = pruned.as("ob").join(hintedV(b.as("nb")),
+    val dup = pruned.as("ob").join(gateBroadcast(b.as("nb"), n, GateBroadcastMaxVecRows),
         col("nb.label") === col("ob.label"))
       .filter(expr(s"${dotSql("nb.e", "ob.e")} / (nb.nrm * ob.nrm)") >= threshold)
       .select(col("nb.vec_id").as("batch_id")).distinct()

@@ -230,13 +230,11 @@ object Multimodal {
     * lazy frame until the caller's post-materialization cache clear.
     */
   def incrementalPayloadDedupIndexed(batch: DataFrame, indexDir: String,
-      maxHamming: Int = PayloadMaxHamming,
-      broadcastMaxRows: Long = graft.llm.LlmOps.GateBroadcastMaxRows): DataFrame = {
+      maxHamming: Int = PayloadMaxHamming): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val bSims = payloadSims(batch).persist(lvl)
     val bChunks = payloadChunks(bSims).persist(lvl)
-    incrementalPayloadDedupIndexedFrom(bSims, bChunks, indexDir,
-      maxHamming, broadcastMaxRows)
+    incrementalPayloadDedupIndexedFrom(bSims, bChunks, indexDir, maxHamming)
   }
 
   /** [[incrementalPayloadDedupIndexed]] over caller-derived
@@ -249,8 +247,7 @@ object Multimodal {
     */
   def incrementalPayloadDedupIndexedFrom(bSims: DataFrame,
       bChunks: DataFrame, indexDir: String,
-      maxHamming: Int = PayloadMaxHamming,
-      broadcastMaxRows: Long = graft.llm.LlmOps.GateBroadcastMaxRows): DataFrame = {
+      maxHamming: Int = PayloadMaxHamming): DataFrame = {
     val spark = bSims.sparkSession
     val fpRow = bChunks
       .agg(collect_set(struct(col("chunk_idx"), col("ck_bucket"))).as("fp"),
@@ -260,20 +257,14 @@ object Multimodal {
     val footprint = fpRow
       .getSeq[org.apache.spark.sql.Row](fpRow.fieldIndex("fp"))
       .map(r => (r.getInt(0), r.getLong(1)))
-    val smallBatch = broadcastMaxRows > 0 &&
-      fpRow.getLong(fpRow.fieldIndex("n")) <= broadcastMaxRows
-    def hinted(df: DataFrame): DataFrame = if (smallBatch) broadcast(df) else df
-    // cross-product relaxation of the (chunk_idx, ck_bucket) footprint —
-    // the [[graft.llm.LlmOps.fluencyStoredByLangFrom]] rationale: the
-    // dup join is exact on (chunk_idx, ck_bucket, chunk_val), so the
-    // filter is pure pruning; two flat IN lists replace the
-    // chunk_idx × bucket pair OR tree, over-read bounded by the
+    // the dup join is exact on (chunk_idx, ck_bucket, chunk_val), so the
+    // cross-product pin is pure pruning, its over-read bounded by the
     // [[PayloadSimChunks]] × [[PayloadChunkBuckets]] directory grid
-    val pruned = graft.llm.LlmOps.readStored(spark, s"$indexDir/chunks").filter(
-      if (footprint.isEmpty) lit(false)
-      else col("chunk_idx").isin(footprint.map(_._1).distinct: _*) &&
-        col("ck_bucket").isin(footprint.map(_._2).distinct: _*))
-    val dup = pruned.as("ox").join(hinted(bChunks.as("nx")),
+    val pruned = LlmOps.pinPartitions(
+      LlmOps.readStored(spark, s"$indexDir/chunks"),
+      "chunk_idx" -> footprint.map(_._1), "ck_bucket" -> footprint.map(_._2))
+    val dup = pruned.as("ox").join(
+        LlmOps.gateBroadcast(bChunks.as("nx"), LlmOps.fpCount(fpRow, "n")),
         col("nx.chunk_idx") === col("ox.chunk_idx") &&
           col("nx.ck_bucket") === col("ox.ck_bucket") &&
           col("nx.chunk_val") === col("ox.chunk_val"))

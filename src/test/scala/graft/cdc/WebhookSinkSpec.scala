@@ -42,17 +42,22 @@ class WebhookSinkSpec extends SparkSpec {
       override def handle(x: HttpExchange): Unit = {
         val n = attempts.incrementAndGet()
         maxInflight.accumulateAndGet(inflight.incrementAndGet(), math.max)
+        var counted = true
+        // the post ends for the client when the response goes out, and the
+        // client may send its next post at once: stop counting it first,
+        // or a slow handler thread shows one post more than the client has
+        def ended(): Unit = if (counted) { counted = false; inflight.decrementAndGet() }
         try {
           val body = new String(x.getRequestBody.readAllBytes(), "UTF-8")
           if (delayMs > 0) Thread.sleep(delayMs)
           if (healthy && n > failFirst && !rejects(body)) {
-            accepted.add(body); x.sendResponseHeaders(200, -1)
-          } else x.sendResponseHeaders(500, -1)
+            accepted.add(body); ended(); x.sendResponseHeaders(200, -1)
+          } else { ended(); x.sendResponseHeaders(500, -1) }
         } catch {
           // the client gave up on this post, or the endpoint is stopping
           case _: java.io.IOException | _: InterruptedException => ()
         } finally {
-          inflight.decrementAndGet()
+          ended()
           x.close()
         }
       }

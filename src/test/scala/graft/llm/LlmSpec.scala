@@ -14,6 +14,15 @@ class LlmSpec extends SparkSpec {
       .withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("bigint"))
 
+  /** `fp` with its `field` count one past [[LlmOps.GateBroadcastMaxRows]]:
+    * a probe handed this footprint row takes the over-bound (unhinted)
+    * path on a small fixture.
+    */
+  private def overBound(fp: org.apache.spark.sql.Row, field: String) =
+    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      fp.toSeq.updated(fp.fieldIndex(field), LlmOps.GateBroadcastMaxRows + 1).toArray,
+      fp.schema)
+
   test("exact dedup groups identical text, keeps min doc_id") {
     val d = docs(0L -> "alpha beta gamma", 3L -> "other text here")
     val out = LlmOps.dedupExact(LlmOps.exactDupCorpus(d)).collect()
@@ -381,7 +390,8 @@ class LlmSpec extends SparkSpec {
     val direct = rows(LlmOps.qualityClassify(corpus)
       .filter(col("doc_id") % 4 === 0))
     assert(rows(LlmOps.qualityScoreStored(slice, dir)) === direct)
-    assert(rows(LlmOps.qualityScoreStored(slice, dir, broadcastMaxRows = 0L)) === direct)
+    assert(rows(LlmOps.qualityScoreStored(slice, dir, fpRow = Some(
+      overBound(LlmOps.qclfFpAgg(slice).collect()(0), "qc_toks")))) === direct)
     // the churn/corpus-scale form (footprint = false: no eager footprint
     // job, weights unpruned, AQE join) is bit-identical too — the
     // curateDelta/curationFunnelFull gate's scorer; the inner join drops
@@ -1479,12 +1489,13 @@ class LlmSpec extends SparkSpec {
   }
 
   test("over the broadcast bound the gates drop their hints and stay output-identical") {
-    // The indexed gates force-broadcast the batch side only while it is
-    // small (GateBroadcastMaxRows/MaxVecRows) — a corpus-sized "batch"
+    // The stored-probe gates force-broadcast the batch side only while it
+    // is small (GateBroadcastMaxRows/MaxVecRows) — a corpus-sized "batch"
     // (delta curation first run, backfill) must degrade to whatever AQE
-    // picks instead of dying on the 8 GB broadcast cap. broadcastMaxRows=0
-    // forces that over-the-bound path on the small fixture: the plan must
-    // carry no batch-side hint, and the survivors must be identical.
+    // picks instead of dying on the 8 GB broadcast cap. Every gate that
+    // takes a footprint row is handed one whose count is one past the
+    // bound: the plan must carry no batch-side hint, and the rows must
+    // equal the hinted run's.
     val mk = (seed: String) => (1 to 30).map(i => s"$seed$i").mkString(" ")
     val base = docs(70L -> mk("alpha"), 13L -> mk("beta"), 3L -> mk("gamma"))
     val batch = LlmOps.incrementalNearBatch(base)
@@ -1493,38 +1504,74 @@ class LlmSpec extends SparkSpec {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val bSig = LlmOps.signaturesOf(batch).persist(lvl)
     val bBands = LlmOps.bandsOf(bSig).persist(lvl)
-    val hintedOut = LlmOps.incrementalDedupMinHashIndexedFrom(bSig, bBands, dir)
-    val unhinted = LlmOps.incrementalDedupMinHashIndexedFrom(bSig, bBands, dir,
-      broadcastMaxRows = 0L)
-    // the negative check must read the ANALYZED plan: the optimizer's
-    // EliminateResolvedHint strips hint nodes from optimizedPlan even
-    // when present, which would make this assertion vacuous there
-    assert(!unhinted.queryExecution.analyzed.toString.contains("ResolvedHint"),
-      "over the bound, no broadcast hint may survive in the plan")
-    assert(hintedOut.queryExecution.analyzed.toString.contains("ResolvedHint"),
-      "under the bound, the batch-side hint must be present")
-    assert(unhinted.collect().map(_.getLong(0)).toSet
-      === hintedOut.collect().map(_.getLong(0)).toSet,
-      "hinted and unhinted probes must agree")
-    bSig.unpersist(); bBands.unpersist()
+    val lmDocs = docs(1L -> "a b a b", 3L -> "a c", 5L -> "x b a", 7L -> "")
+    val lmDir = java.nio.file.Files.createTempDirectory("graft-lm-nohint").toString
+    LlmOps.buildFluencyModel(lmDocs, lmDir)
+    val lmLangDir = java.nio.file.Files.createTempDirectory("graft-lmlang-nohint").toString
+    LlmOps.buildFluencyModelByLang(lmDocs, lmLangDir)
+    val bgLang = LlmOps.docBigramsLang(lmDocs, "doc_id", "text", "lang").persist(lvl)
+    val qDir = java.nio.file.Files.createTempDirectory("graft-qclf-nohint").toString
+    val qCorpus = LlmOps.qclfCorpus(
+      docs((0L until 20L).map(i => i -> s"alpha bravo charlie delta tok$i"): _*))
+    LlmOps.buildQualityClassifier(qCorpus, qDir)
+    val qSlice = qCorpus.filter(col("doc_id") % 4 === 0)
+    // (gate, probe given an optional footprint row, its footprint row,
+    // the row's size-gate count field)
+    val gates: Seq[(String, Option[org.apache.spark.sql.Row] => org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.Row, String)] = Seq(
+      ("incrementalDedupMinHashIndexedFrom",
+        fp => LlmOps.incrementalDedupMinHashIndexedFrom(bSig, bBands, dir, fpRow = fp),
+        LlmOps.mhFpAgg(bBands).collect()(0), "mh_n"),
+      ("fluencyStored", fp => LlmOps.fluencyStored(lmDocs, lmDir, fpRow = fp),
+        LlmOps.lmFpAgg(lmDocs).collect()(0), "toks"),
+      ("fluencyStoredByLangFrom",
+        fp => LlmOps.fluencyStoredByLangFrom(lmDocs, bgLang, lmLangDir, fpRow = fp),
+        LlmOps.lmLangFpAgg(bgLang).collect()(0), "lm_lt"),
+      ("qualityScoreStored", fp => LlmOps.qualityScoreStored(qSlice, qDir, fpRow = fp),
+        LlmOps.qclfFpAgg(qSlice).collect()(0), "qc_toks"))
+    def sortedRows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    gates.foreach { case (name, probe, fp, field) =>
+      val hinted = probe(None)
+      val unhinted = probe(Some(overBound(fp, field)))
+      // the negative check must read the ANALYZED plan: the optimizer's
+      // EliminateResolvedHint strips hint nodes from optimizedPlan even
+      // when present, which would make this assertion vacuous there
+      assert(!unhinted.queryExecution.analyzed.toString.contains("ResolvedHint"),
+        s"$name: over the bound, no broadcast hint may survive in the plan")
+      assert(hinted.queryExecution.analyzed.toString.contains("ResolvedHint"),
+        s"$name: under the bound, the batch-side hint must be present")
+      val hintedRows = sortedRows(hinted)
+      assert(hintedRows.nonEmpty, s"$name: the fixture must produce rows")
+      assert(sortedRows(unhinted) === hintedRows,
+        s"$name: hinted and unhinted probes must agree")
+    }
+    bSig.unpersist(); bBands.unpersist(); bgLang.unpersist()
 
-    // the cosine gate: same contract
+    // the cosine gate takes no footprint row: a batch one row past
+    // GateBroadcastMaxVecRows takes the unhinted path itself
     val emb = Seq((1L, Seq(1.0, 0.0), 7), (2L, Seq(0.0, 1.0), 7))
       .toDF("vec_id", "e", "label")
     val adir = java.nio.file.Files.createTempDirectory("graft-annix-nohint").toString
     LlmOps.buildAnnIndex(emb, adir, vecCol = "e")
+    val nrm = expr("sqrt(aggregate(zip_with(e, e, (x, y) -> x * y), cast(0.0 as double), (a, x) -> a + x))")
     val vb = Seq((10L, Seq(1.0, 0.001), 7), (11L, Seq(0.5, 0.5), 7))
-      .toDF("vec_id", "e", "label")
-      .withColumn("nrm", expr("sqrt(aggregate(zip_with(e, e, (x, y) -> x * y), cast(0.0 as double), (a, x) -> a + x))"))
-      .persist(lvl)
+      .toDF("vec_id", "e", "label").withColumn("nrm", nrm).persist(lvl)
     val vHint = LlmOps.incrementalDedupCosineIndexedFrom(vb, adir)
-      .collect().map(_.getLong(0)).toSet
-    val vPlain = LlmOps.incrementalDedupCosineIndexedFrom(vb, adir,
-      broadcastMaxVecRows = 0L)
+    assert(vHint.queryExecution.analyzed.toString.contains("ResolvedHint"))
+    val vHintIds = vHint.collect().map(_.getLong(0)).toSet
+    assert(vHintIds === Set(11L), s"near-copy of a stored vector drops, got $vHintIds")
+    // filler vectors sit at cosine ≈0.707 to both stored ones: all survive
+    val fillerN = LlmOps.GateBroadcastMaxVecRows + 1 - 2
+    val vbBig = spark.range(100L, 100L + fillerN)
+      .select(col("id").as("vec_id"), array(lit(0.5), lit(0.5)).as("e"), lit(7).as("label"))
+      .withColumn("nrm", nrm).unionByName(vb).persist(lvl)
+    val vPlain = LlmOps.incrementalDedupCosineIndexedFrom(vbBig, adir)
     assert(!vPlain.queryExecution.analyzed.toString.contains("ResolvedHint"))
-    assert(vPlain.collect().map(_.getLong(0)).toSet === vHint)
-    assert(vHint === Set(11L), s"near-copy of a stored vector drops, got $vHint")
-    vb.unpersist()
+    val vPlainIds = vPlain.collect().map(_.getLong(0)).toSet
+    assert(vPlainIds.size === fillerN + 1 && vPlainIds.contains(11L) && !vPlainIds.contains(10L),
+      "over the bound the cosine gate must drop exactly the near-copy")
+    vb.unpersist(); vbBig.unpersist()
   }
 
   test("index append closes the loop: a later batch's near-copy of an admitted doc is caught") {

@@ -213,7 +213,7 @@ class PlanQualitySpec extends SparkSpec {
     assert(dumped.queryExecution.executedPlan.toString.contains("SinglePartition"))
   }
 
-  test("the strength-reduced native expression is in the executed cdc plan") {
+  test("the native normalize_epoch_millis expression is in the executed cdc plan") {
     assert(plan("cdc_commit_ts_norm").contains("normalize_epoch_millis"))
   }
 
