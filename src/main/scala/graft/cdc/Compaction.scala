@@ -1,14 +1,15 @@
 package graft.cdc
 
-import graft.fs.ArtifactFs
-import org.apache.spark.sql.SparkSession
+import graft.fs.{ArtifactFs, StoredTable}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Delivery-log compaction — the operational answer to the small-files
   * problem every streaming parquet sink produces: each micro-batch
   * appends its own files, and after days of 1-second epochs a 100 TB log
   * is millions of KB-sized files whose open/footer cost dominates reads.
   * Compaction rewrites the log with the same `entity` partitioning but
-  * `maxRecordsPerFile`-bounded files, then swaps directories.
+  * at most [[MaxRecordsPerFile]] rows per file, then swaps directories.
   *
   * The swap is rename-based (not crash-atomic): a reader racing the swap
   * can observe the old or new directory, and a crash inside the swap
@@ -28,13 +29,22 @@ import org.apache.spark.sql.SparkSession
   */
 object Compaction {
 
-  /** Rewrite `dir` (an entity-partitioned delivery log) with at most
-    * `maxRecordsPerFile` rows per file and one write task per output
-    * split. Returns (files before, files after), counting data files.
+  /** The row bound per file of every rewrite. */
+  private val MaxRecordsPerFile: Long = 1L << 20
+
+  /** Rewrite `dir` (an entity-partitioned delivery log) with one write
+    * task per entity directory. Returns (files before, files after),
+    * counting data files.
     */
-  def compactDeliveryLog(spark: SparkSession, dir: String,
-      maxRecordsPerFile: Long = 1L << 20): (Long, Long) =
-    compactDir(spark, dir, Seq("entity"), Seq("entity"), maxRecordsPerFile)
+  def compactDeliveryLog(spark: SparkSession, dir: String): (Long, Long) =
+    compactDir(spark, dir, Seq("entity"))
+
+  /** `dir`'s swap sibling `dir<suffix>`, named through Hadoop's `Path`,
+    * which drops a trailing `/` (a `file:` URI of an existing directory
+    * has one) that would put the sibling inside `dir`.
+    */
+  private def sibling(dir: String, suffix: String): String =
+    new Path(dir).toString + suffix
 
   /** Recover `dir` from a compaction that crashed mid-swap — idempotent,
     * call before reading or re-compacting a directory that a possibly-
@@ -53,12 +63,12 @@ object Compaction {
     */
   def recoverDir(dir: String): Unit = {
     val spark = SparkSession.active
-    val pre = dir + ".pre-compaction"
+    val pre = sibling(dir, ".pre-compaction")
     if (ArtifactFs.exists(spark, pre)) {
       if (ArtifactFs.exists(spark, dir)) ArtifactFs.delete(spark, pre)
       else ArtifactFs.rename(spark, pre, dir)
     }
-    ArtifactFs.delete(spark, dir + ".compacted")
+    ArtifactFs.delete(spark, sibling(dir, ".compacted"))
   }
 
   /** Replace `dir` with freshly-built content through the rename swap:
@@ -79,9 +89,9 @@ object Compaction {
     */
   def swapDir(dir: String)(build: String => Unit): Unit = {
     recoverDir(dir)
-    val tmp = dir + ".compacted"
+    val tmp = sibling(dir, ".compacted")
     build(tmp)
-    val old = dir + ".pre-compaction"
+    val old = sibling(dir, ".pre-compaction")
     val spark = SparkSession.active
     // create-or-replace: on a bootstrap build there is no old generation
     // to step aside (a crash before the move just leaves a tmp that
@@ -91,16 +101,34 @@ object Compaction {
     ArtifactFs.delete(spark, old)
   }
 
+  /** Rewrite `dir` through [[swapDir]]: `keep` of its current rows,
+    * hash-clustered on and partitioned by `parts` through the stored-table
+    * writer ([[graft.fs.StoredTable.clustered]]), or coalesced to the
+    * session's parallelism when `parts` is empty, at most
+    * [[MaxRecordsPerFile]] rows per file. The rewrite shared by
+    * compaction and the index prunes.
+    */
+  private[graft] def rewriteDir(spark: SparkSession, dir: String,
+      parts: Seq[String])(keep: DataFrame => DataFrame): Unit =
+    swapDir(dir) { tmp =>
+      val rows = keep(spark.read.parquet(dir))
+      StoredTable.clustered(
+          if (parts.isEmpty) rows.coalesce(spark.sparkContext.defaultParallelism)
+          else rows, parts)
+        .mode("overwrite").option("maxRecordsPerFile", MaxRecordsPerFile)
+        .parquet(tmp)
+    }
+
   /** Generic append-log compaction: rewrite the parquet directory `dir`
-    * hash-clustered by `clusterCols` (restoring the locality layout an
-    * `append`-mode writer erodes — new files never co-group with old
-    * ones), `partitionBy(partitionCols)` when given, then swap. The same
-    * rename-based mechanics and caveats as [[compactDeliveryLog]];
-    * content preserved row-for-row, only file boundaries change — unless
-    * `dedupRows` is set, which collapses EXACT duplicate rows during the
-    * rewrite (only valid when the table's rows are a deterministic
-    * function of their keys, so a duplicate can only be a replayed
-    * append — the LSH-index tables' contract).
+    * through [[rewriteDir]], hash-clustered on and partitioned by
+    * `partitionCols` (restoring the locality layout an `append`-mode
+    * writer erodes — new files never co-group with old ones), then swap.
+    * The same rename-based mechanics and caveats as
+    * [[compactDeliveryLog]]; content preserved row-for-row, only file
+    * boundaries change — unless `dedupRows` is set, which collapses EXACT
+    * duplicate rows during the rewrite (only valid when the table's rows
+    * are a deterministic function of their keys, so a duplicate can only
+    * be a replayed append — the LSH-index tables' contract).
     *
     * Every entry first runs [[recoverDir]], so a directory orphaned by a
     * crashed earlier compaction heals on the next attempt; a long-running
@@ -108,28 +136,13 @@ object Compaction {
     * runs recovery at startup so a probe never reads a half-swapped
     * directory.
     */
-  def compactDir(spark: SparkSession, dir: String,
-      clusterCols: Seq[String], partitionCols: Seq[String] = Nil,
-      maxRecordsPerFile: Long = 1L << 20,
+  def compactDir(spark: SparkSession, dir: String, partitionCols: Seq[String],
       dedupRows: Boolean = false): (Long, Long) = {
     recoverDir(dir)
     def dataFiles(): Long =
       ArtifactFs.files(spark, dir).count(_.getPath.getName.endsWith(".parquet")).toLong
     val before = dataFiles()
-
-    swapDir(dir) { tmp =>
-      val read0 = spark.read.parquet(dir)
-      val read = if (dedupRows) read0.distinct() else read0
-      val clustered =
-        if (clusterCols.nonEmpty)
-          read.repartition(clusterCols.map(org.apache.spark.sql.functions.col): _*)
-        else read.coalesce(spark.sparkContext.defaultParallelism)
-      val writer = clustered.write.mode("overwrite")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-        .parquet(tmp)
-    }
-
+    rewriteDir(spark, dir, partitionCols)(rows => if (dedupRows) rows.distinct() else rows)
     (before, dataFiles())
   }
 }

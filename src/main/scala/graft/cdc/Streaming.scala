@@ -216,10 +216,7 @@ object Streaming {
   def startToParquetIdempotent(spark: SparkSession, spec: PipelineSpec,
       outDir: String): StreamingQuery =
     startOn(spark, spec, _.withColumn("client_id", lit(spec.clientId))) { (route, batch, epochId) =>
-      batch.sparkSession.conf
-        .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      route.frame(batch).withColumn("epoch", lit(epochId))
-        .write.mode("overwrite").partitionBy("epoch").parquet(outDir)
+      graft.fs.StoredTable.commitEpoch(route.frame(batch), epochId, outDir)
     }
 
   /** A4 — running per-entity counters as a stateful streaming agg

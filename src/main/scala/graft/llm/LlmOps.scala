@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.fs.ArtifactFs
+import graft.fs.{ArtifactFs, StoredArtifact, StoredTable}
 import graft.plans.GraftExtensions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1133,13 +1133,14 @@ object LlmOps {
     */
   def buildDecontamIndex(benchmark: DataFrame, dir: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit =
-    graft.cdc.Compaction.swapDir(s"$dir/grams") { tmp =>
-      signaturesOf(benchmark, idCol, textCol)
-        .select(explode(col("gs")).as("h")).distinct()
-        .withColumn("hb", pmod(col("h"), lit(16)))
-        .repartition(col("hb"))
-        .write.mode("overwrite").partitionBy("hb").parquet(tmp)
-    }
+    StoredTable.Grams.swap(dir)(decontamGrams(benchmark, idCol, textCol))
+
+  /** The gram-table rows of a benchmark: its distinct shingle hashes. */
+  private def decontamGrams(benchmark: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    signaturesOf(benchmark, idCol, textCol)
+      .select(explode(col("gs")).as("h")).distinct()
+      .withColumn("hb", pmod(col("h"), lit(16)))
 
   /** Append a new benchmark version's grams — parquet `append` inside
     * the builder's hb directories; duplicates (grams shared with prior
@@ -1149,19 +1150,15 @@ object LlmOps {
     */
   def appendDecontamIndex(benchmark: DataFrame, dir: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit =
-    signaturesOf(benchmark, idCol, textCol)
-      .select(explode(col("gs")).as("h")).distinct()
-      .withColumn("hb", pmod(col("h"), lit(16)))
-      .repartition(col("hb"))
-      .write.mode("append").partitionBy("hb").parquet(s"$dir/grams")
+    StoredTable.Grams.write(decontamGrams(benchmark, idCol, textCol), dir, "append")
 
   /** Fold + dedup the gram table — [[compactMinHashIndex]]'s contract
     * (every row is a deterministic function of benchmark text, so an
     * exact duplicate is a replayed/overlapping append).
     */
   def compactDecontamIndex(spark: SparkSession, dir: String): (Long, Long) =
-    graft.cdc.Compaction.compactDir(spark, s"$dir/grams",
-      Seq("hb"), Seq("hb"), dedupRows = true)
+    graft.cdc.Compaction.compactDir(spark, StoredTable.Grams.at(dir),
+      StoredTable.Grams.parts, dedupRows = true)
 
   /** Health gauge over the stored benchmark gram table — the
     * [[minHashIndexStats]] discipline for the decontam artifact: per hb
@@ -1172,7 +1169,7 @@ object LlmOps {
     * groupBy over the narrow gram table, cheap after every append.
     */
   def decontamIndexStats(spark: SparkSession, dir: String): DataFrame =
-    readStored(spark, s"$dir/grams")
+    readStored(spark, StoredTable.Grams.at(dir))
       .groupBy(col("hb").cast("bigint").as("hb"))
       .agg(count(lit(1)).as("n_rows"),
         countDistinct(col("h")).as("n_grams"))
@@ -1214,7 +1211,7 @@ object LlmOps {
     */
   def decontaminateStoredFrom(bsig: DataFrame, dir: String): DataFrame = {
     val spark = bsig.sparkSession
-    val bench0 = readStored(spark, s"$dir/grams").select("h")
+    val bench0 = readStored(spark, StoredTable.Grams.at(dir)).select("h")
     // replay duplicates in an uncompacted table would double n_shared —
     // membership must count each gram once; the gate's parquet
     // footer-count (not a scan) is the only eager step
@@ -1435,10 +1432,7 @@ object LlmOps {
       .withColumn("c1", sum(col("c2")).over(Window.partitionBy("w1")))
       .filter(col("c2") >= minCount)
       .withColumn("wb", lmBucket(col("w1")))
-    graft.cdc.Compaction.swapDir(dir) { tmp =>
-      bg.repartition(col("wb")).write.mode("overwrite")
-        .partitionBy("wb").parquet(s"$tmp/bigrams")
-    }
+    graft.cdc.Compaction.swapDir(dir)(StoredTable.Bigrams.write(bg, _))
   }
 
   /** The LM probe's one-row eager payload over `docs`: total token count
@@ -1579,7 +1573,7 @@ object LlmOps {
     // second join stage to save hash lookups that cost nothing. At
     // production scale the wb partition pins bound what is read; rows
     // within probed buckets are cheapest dropped AT the join.
-    val model = pinPartitions(readStored(spark, s"$modelDir/bigrams"),
+    val model = pinPartitions(readStored(spark, StoredTable.Bigrams.at(modelDir)),
       "wb" -> buckets)
     // ONE aggregation serves both outputs: matched rows carry their
     // probability term (and 0 bigram mass), each mass row its doc's
@@ -1611,7 +1605,7 @@ object LlmOps {
     * path.
     */
   def lmStats(spark: SparkSession, modelDir: String): DataFrame =
-    readStored(spark, s"$modelDir/bigrams")
+    readStored(spark, StoredTable.Bigrams.at(modelDir))
       .agg(countDistinct(col("w1")).as("n_prefixes"),
         count(lit(1)).as("n_bigrams"),
         sum(col("c2")).as("total_mass"),
@@ -1628,7 +1622,7 @@ object LlmOps {
     * cadence scan of the artifact, never in the probe path.
     */
   def lmStatsLang(spark: SparkSession, modelDir: String): DataFrame =
-    readStored(spark, s"$modelDir/bigrams")
+    readStored(spark, StoredTable.BigramsByLang.at(modelDir))
       .groupBy(col("lang"))
       .agg(countDistinct(col("w1")).as("n_prefixes"),
         count(lit(1)).as("n_bigrams"),
@@ -1671,12 +1665,10 @@ object LlmOps {
     def cutAt(k: Long, as: String): DataFrame =
       ref.orderBy(col("fluency"), col("doc_id")).limit(k.toInt)
         .agg(max(struct(col("fluency"), col("doc_id"))).as(as))
-    graft.cdc.Compaction.swapDir(dir) { tmp =>
+    graft.cdc.Compaction.swapDir(dir)(StoredTable.Cuts.write(
       cutAt((cnt + 2) / 3, "c1").crossJoin(cutAt((2 * cnt + 2) / 3, "c2"))
         .select(col("c1.fluency").as("f1"), col("c1.doc_id").as("d1"),
-          col("c2.fluency").as("f2"), col("c2.doc_id").as("d2"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/cuts")
-    }
+          col("c2.fluency").as("f2"), col("c2.doc_id").as("d2")), _))
     ref.unpersist()
   }
 
@@ -1705,7 +1697,7 @@ object LlmOps {
     */
   private def lmCutStructs(spark: SparkSession,
       cutsDir: String): (Column, Column) = {
-    val c = readStored(spark, s"$cutsDir/cuts").collect()(0)
+    val c = readStored(spark, StoredTable.Cuts.at(cutsDir)).collect()(0)
     (struct(lit(c.getDouble(0)).as("fluency"), lit(c.getLong(1)).as("doc_id")),
       struct(lit(c.getDouble(2)).as("fluency"), lit(c.getLong(3)).as("doc_id")))
   }
@@ -1827,10 +1819,7 @@ object LlmOps {
         sum(col("c2")).over(Window.partitionBy("lang", "w1")))
       .filter(col("c2") >= minCount)
       .withColumn("wb", lmBucket(col("w1")))
-    graft.cdc.Compaction.swapDir(dir) { tmp =>
-      bg.repartition(col("lang"), col("wb")).write.mode("overwrite")
-        .partitionBy("lang", "wb").parquet(s"$tmp/bigrams")
-    }
+    graft.cdc.Compaction.swapDir(dir)(StoredTable.BigramsByLang.write(bg, _))
   }
 
   /** Batch fluency against the stored PER-LANGUAGE LM — each document
@@ -1911,7 +1900,7 @@ object LlmOps {
       .getOrElse(Seq.empty).map(r => (r.getString(0), r.getInt(1)))
     // the probability join is exact on (lang, w1, w2), so the
     // cross-product pin is pure pruning
-    val model = pinPartitions(readStored(spark, s"$modelDir/bigrams"),
+    val model = pinPartitions(readStored(spark, StoredTable.BigramsByLang.at(modelDir)),
       "lang" -> pairs.map(_._1), "wb" -> pairs.map(_._2))
     val matched = model.join(gateBroadcast(bg, fpCount(fp, "lm_lt")),
         Seq("lang", "w1", "w2"))
@@ -2008,9 +1997,7 @@ object LlmOps {
           struct(col("fluency"), col("doc_id")))).as("c2"))
       .select(col("lang"), col("c1.fluency").as("f1"), col("c1.doc_id").as("d1"),
         col("c2.fluency").as("f2"), col("c2.doc_id").as("d2"))
-    graft.cdc.Compaction.swapDir(dir) { tmp =>
-      cuts.coalesce(1).write.mode("overwrite").parquet(s"$tmp/cuts")
-    }
+    graft.cdc.Compaction.swapDir(dir)(StoredTable.Cuts.write(cuts, _))
     ref.unpersist()
   }
 
@@ -2029,7 +2016,7 @@ object LlmOps {
       langCol: String = "lang"): DataFrame = {
     val spark = corpus.sparkSession
     val bg = docBigramsLang(corpus, idCol, textCol, langCol)
-    val model = readStored(spark, s"$modelDir/bigrams")
+    val model = readStored(spark, StoredTable.BigramsByLang.at(modelDir))
     val matched = model.join(bg, Seq("lang", "w1", "w2"))
       .select(col("doc_id"), col("lang"),
         (col("n").cast("double") *
@@ -2048,7 +2035,7 @@ object LlmOps {
           .as("f_sum"))
       .select(col("doc_id"), col("lang"),
         (col("f_sum") / col("n_bigrams").cast("double")).as("fluency"))
-    val cuts = readStored(spark, s"$cutsDir/cuts")
+    val cuts = readStored(spark, StoredTable.Cuts.at(cutsDir))
     // LEFT join — the cut-less-language contract: a language present in
     // the corpus but absent from the calibration slice (tiny minority +
     // a sparse refMod slice — precisely who this feature protects) gets
@@ -2130,7 +2117,7 @@ object LlmOps {
     */
   def buildIdfModel(corpus: DataFrame, dir: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit =
-    graft.cdc.Compaction.swapDir(s"$dir/df") { tmp =>
+    StoredTable.Df.swap(dir) {
       val base = textCorpus(corpus, idCol, textCol).filter(col("text").isNotNull)
       val tf = base
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
@@ -2140,8 +2127,6 @@ object LlmOps {
         .agg(count(lit(1)).as("n_docs"))
       dfreq.crossJoin(broadcast(nDocs))
         .withColumn("tb", expr(idfTb("tok")))
-        .repartition(col("tb"))
-        .write.mode("overwrite").partitionBy("tb").parquet(tmp)
     }
 
   /** Top-k keywords for a batch against the STORED IDF model — the
@@ -2173,7 +2158,7 @@ object LlmOps {
     val fpRow = tf
       .agg(collect_set(expr(idfTb("tok"))).as("tbs"), count(lit(1)).as("n"))
       .head
-    val model = pinPartitions(readStored(spark, s"$dir/df"),
+    val model = pinPartitions(readStored(spark, StoredTable.Df.at(dir)),
       "tb" -> fpRow.getSeq[Long](fpRow.fieldIndex("tbs")))
     val scored = model.join(gateBroadcast(tf, fpCount(fpRow, "n")), "tok")
       .withColumn("score",
@@ -2191,7 +2176,7 @@ object LlmOps {
     * corpus needs a stopword pass before the model is useful.
     */
   def idfModelStats(spark: SparkSession, dir: String): DataFrame =
-    readStored(spark, s"$dir/df")
+    readStored(spark, StoredTable.Df.at(dir))
       .groupBy(col("tb").cast("bigint").as("tb"))
       .agg(count(lit(1)).as("n_toks"),
         max(col("df")).as("max_df"),
@@ -2218,7 +2203,7 @@ object LlmOps {
   def buildIdfModelByLang(corpus: DataFrame, dir: String,
       idCol: String = "doc_id", textCol: String = "text",
       langCol: String = "lang"): Unit =
-    graft.cdc.Compaction.swapDir(s"$dir/df") { tmp =>
+    StoredTable.DfByLang.swap(dir) {
       val base = GraftExtensions.register(corpus)
         .select(col(idCol).as("doc_id"), col(textCol).as("text"),
           col(langCol).as("lang"))
@@ -2231,8 +2216,6 @@ object LlmOps {
         .agg(countDistinct(col("doc_id")).as("n_docs"))
       dfreq.join(broadcast(nDocs), Seq("lang"))
         .withColumn("tb", expr(idfTb("tok")))
-        .repartition(col("lang"), col("tb"))
-        .write.mode("overwrite").partitionBy("lang", "tb").parquet(tmp)
     }
 
   /** Top-k keywords for a batch against the stored PER-LANGUAGE IDF —
@@ -2271,7 +2254,7 @@ object LlmOps {
       .map(r => (r.getString(0), r.getLong(1)))
     // the scored join is exact on (lang, tok), so the cross-product pin
     // is pure pruning
-    val model = pinPartitions(readStored(spark, s"$dir/df"),
+    val model = pinPartitions(readStored(spark, StoredTable.DfByLang.at(dir)),
       "lang" -> pairs.map(_._1), "tb" -> pairs.map(_._2))
     val scored = model
       .join(gateBroadcast(tf, fpCount(fpRow, "n")), Seq("lang", "tok"))
@@ -2291,7 +2274,7 @@ object LlmOps {
     * cadence, never in the probe path.
     */
   def idfModelStatsByLang(spark: SparkSession, dir: String): DataFrame =
-    readStored(spark, s"$dir/df")
+    readStored(spark, StoredTable.DfByLang.at(dir))
       .groupBy(col("lang"), col("tb").cast("bigint").as("tb"))
       .agg(count(lit(1)).as("n_toks"),
         max(col("df")).as("max_df"),
@@ -2388,11 +2371,8 @@ object LlmOps {
     */
   def buildQualityClassifier(corpus: DataFrame, dir: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit =
-    graft.cdc.Compaction.swapDir(s"$dir/w") { tmp =>
-      qclfCounts(corpus, idCol, textCol)
-        .withColumn("tb", expr(qclfTb("tok")))
-        .repartition(col("tb"))
-        .write.mode("overwrite").partitionBy("tb").parquet(tmp)
+    StoredTable.Weights.swap(dir) {
+      qclfCounts(corpus, idCol, textCol).withColumn("tb", expr(qclfTb("tok")))
     }
 
   /** The scorer shared by [[qualityClassify]] and [[qualityScoreStored]]:
@@ -2521,7 +2501,7 @@ object LlmOps {
       footprint: Boolean = true): DataFrame = {
     val spark = batch.sparkSession
     val base = qclfBase(batch, idCol, textCol)
-    val weightsRaw = readStored(spark, s"$dir/w")
+    val weightsRaw = readStored(spark, StoredTable.Weights.at(dir))
     val toks = docTokens(base)
     val (weights, probe) =
       if (!footprint) (weightsRaw, toks)
@@ -2547,7 +2527,7 @@ object LlmOps {
     * corpus' keep rate means the label pass drifted.
     */
   def qclfStats(spark: SparkSession, dir: String): DataFrame =
-    readStored(spark, s"$dir/w")
+    readStored(spark, StoredTable.Weights.at(dir))
       .groupBy(col("tb").cast("bigint").as("tb"))
       .agg(count(lit(1)).as("n_toks"),
         sum(col("c_pos")).cast("bigint").as("pos_occ"),
@@ -2613,7 +2593,7 @@ object LlmOps {
   def buildQualityClassifierByLang(corpus: DataFrame, dir: String,
       idCol: String = "doc_id", textCol: String = "text",
       langCol: String = "lang"): Unit =
-    graft.cdc.Compaction.swapDir(s"$dir/w") { tmp =>
+    StoredTable.WeightsByLang.swap(dir) {
       val base = GraftExtensions.register(corpus).select(col(idCol).as("doc_id"),
           col(textCol).as("text"), col(langCol).as("lang"))
         .filter(col("text").isNotNull)
@@ -2630,8 +2610,6 @@ object LlmOps {
         sum(col("c_neg")).as("t_neg"), count(lit(1)).as("vv"))
       cnt.join(broadcast(tot), Seq("lang"))
         .withColumn("tb", expr(qclfTb("tok")))
-        .repartition(col("lang"), col("tb"))
-        .write.mode("overwrite").partitionBy("lang", "tb").parquet(tmp)
     }
 
   /** Score a batch against the stored PER-LANGUAGE classifier — each
@@ -2665,7 +2643,7 @@ object LlmOps {
       .getOrElse(Seq.empty).map(r => (r.getString(0), r.getLong(1)))
     // the scoring join is exact on (lang, tok), so the cross-product
     // pin is pure pruning
-    val weights = pinPartitions(readStored(spark, s"$dir/w"),
+    val weights = pinPartitions(readStored(spark, StoredTable.WeightsByLang.at(dir)),
       "lang" -> pairs.map(_._1), "tb" -> pairs.map(_._2))
     // in-row (doc, tok, tf) reduction with the language label riding —
     // the [[docTokens]] discipline, language-keyed: join and fold pay
@@ -3127,8 +3105,7 @@ object LlmOps {
     */
   def buildBpeTokenizer(corpus: DataFrame, dir: String, nMerges: Int = 8,
       idCol: String = "doc_id", textCol: String = "text"): Unit =
-    bpeTrain(corpus, nMerges, idCol, textCol)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/merges")
+    StoredTable.Merges.write(bpeTrain(corpus, nMerges, idCol, textCol), dir)
 
   /** Encode against a STORED tokenizer — the production encode path:
     * read the merge table (vocab-sized — the same driver-side table
@@ -3141,7 +3118,7 @@ object LlmOps {
     */
   def bpeApplyStored(corpus: DataFrame, dir: String,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val merges = readStored(corpus.sparkSession, s"$dir/merges")
+    val merges = readStored(corpus.sparkSession, StoredTable.Merges.at(dir))
       .orderBy("rank").collect()
       .map(r => (r.getAs[String]("sym_a"), r.getAs[String]("sym_b"))).toSeq
     bpeApply(corpus, merges, idCol, textCol)
@@ -3798,7 +3775,7 @@ object LlmOps {
     // the quality survivors exactly as before but applied as an
     // end-stage intersection
     val cleanIds = decontamDir.map { dd =>
-      val bench = readStored(delta.sparkSession, s"$dd/grams").select("h")
+      val bench = readStored(delta.sparkSession, StoredTable.Grams.at(dd)).select("h")
       val dirty = signaturesOf(qC)
         .select(col("doc_id"), explode(col("gs")).as("h"))
         .join(bench, "h")
@@ -4036,9 +4013,9 @@ object LlmOps {
     * run's corpus commit was found and this call only healed the index.
     *
     * Commit protocol (every crash window converges on re-run):
-    *   1. [[graft.cdc.Compaction.recoverDir]] over the corpus and both
-    *      index tables — a crash inside an earlier compaction/GC swap
-    *      rolls back before anything reads.
+    *   1. [[graft.fs.StoredArtifact.recover]] over the corpus and the
+    *      index (root, then both tables) — a crash inside an earlier
+    *      compaction/GC swap rolls back before anything reads.
     *   2. If the corpus already holds `epoch=<epoch>` rows, the gate
     *      chain is NOT re-run: the committed partition IS the survivor
     *      set (authoritative — re-deriving it against an index some
@@ -4085,13 +4062,11 @@ object LlmOps {
       qualityModelDir: Option[String] = None,
       qualityTau: Double = 1.0): (Long, Boolean) = {
     val spark = newSnap.sparkSession
-    graft.cdc.Compaction.recoverDir(corpusDir)
-    lmLangDir.foreach(graft.cdc.Compaction.recoverDir)
-    graft.cdc.Compaction.recoverDir(indexDir)
-    Seq(s"$indexDir/signatures", s"$indexDir/bands")
-      .foreach(graft.cdc.Compaction.recoverDir)
+    StoredArtifact.EpochCorpus.recover(corpusDir)
+    lmLangDir.foreach(StoredArtifact.FluencyModelByLang.recover)
+    StoredArtifact.MinHashIndex.recover(indexDir)
     val marker = s"$indexDir/_delta_epoch_$epoch"
-    val epochDir = s"$corpusDir/epoch=$epoch"
+    val epochDir = StoredTable.Corpus.partition(corpusDir, epoch)
     if (ArtifactFs.exists(spark, marker)) {
       // fully committed: corpus partition + index append + marker all
       // landed — the replay is a no-op (count is a footer read). A
@@ -4126,20 +4101,9 @@ object LlmOps {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         pins += s
         // effectively-once corpus: epoch-keyed dynamic partition
-        // overwrite — a replayed epoch replaces its own output. The
-        // session's prior mode is restored (unlike the live loop this
-        // runs on the CALLER's session, not a foreachBatch clone).
-        val prior = spark.conf.getOption(
-          "spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try s.withColumn("epoch", lit(epoch))
-          .write.mode("overwrite").partitionBy("epoch").parquet(corpusDir)
-        finally prior match {
-          case Some(v) =>
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None =>
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
+        // overwrite — a replayed epoch replaces its own output; the
+        // caller's session conf is untouched (a writer option)
+        StoredTable.commitEpoch(s, epoch, corpusDir)
         (s, false)
       }
     crashHook("corpus-committed") // failure-injection seam (spec'd)
@@ -4358,14 +4322,7 @@ object LlmOps {
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val sig = signaturesOf(corpus, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sig.withColumn("sig_bucket", sigBucket(col("doc_id")))
-      .repartition(col("sig_bucket"))
-      .write.mode("overwrite").partitionBy("sig_bucket")
-      .parquet(s"$dir/signatures")
-    bandsOf(sig)
-      .repartition(col("band_idx"), col("bk_bucket"))
-      .write.mode("overwrite").partitionBy("band_idx", "bk_bucket")
-      .parquet(s"$dir/bands")
+    writeMinHashIndex(sig, bandsOf(sig), dir, "overwrite")
     sig.unpersist()
   }
 
@@ -4485,8 +4442,8 @@ object LlmOps {
       excludeSelfId: Boolean = false,
       fpRow: Option[org.apache.spark.sql.Row] = None): DataFrame = {
     val spark = bSig.sparkSession
-    val baseSig = readStored(spark, s"$indexDir/signatures")
-    val baseBands = readStored(spark, s"$indexDir/bands")
+    val baseSig = readStored(spark, StoredTable.Signatures.at(indexDir))
+    val baseBands = readStored(spark, StoredTable.Bands.at(indexDir))
     // STATIC partition pruning ([[pinPartitions]]): the batch's directory
     // footprint is bounded by construction (≤ Bands × BandBuckets pairs,
     // = 64 values — a driver-safe collect no matter how big the batch or
@@ -4567,14 +4524,15 @@ object LlmOps {
     * this append and the probe that preceded it.
     */
   def appendMinHashIndexFrom(sig: DataFrame, bands: DataFrame,
-      dir: String): Unit = {
-    sig.withColumn("sig_bucket", sigBucket(col("doc_id")))
-      .repartition(col("sig_bucket"))
-      .write.mode("append").partitionBy("sig_bucket")
-      .parquet(s"$dir/signatures")
-    bands.repartition(col("band_idx"), col("bk_bucket"))
-      .write.mode("append").partitionBy("band_idx", "bk_bucket")
-      .parquet(s"$dir/bands")
+      dir: String): Unit =
+    writeMinHashIndex(sig, bands, dir, "append")
+
+  /** Writes a signature/band pair into the index at `dir` in `mode`. */
+  private def writeMinHashIndex(sig: DataFrame, bands: DataFrame,
+      dir: String, mode: String): Unit = {
+    StoredTable.Signatures.write(
+      sig.withColumn("sig_bucket", sigBucket(col("doc_id"))), dir, mode)
+    StoredTable.Bands.write(bands, dir, mode)
   }
 
   /** Fold the small files [[appendMinHashIndex]] accumulates — the index
@@ -4593,12 +4551,11 @@ object LlmOps {
     * distinct-ed); compaction erases them from the stats too, making the
     * at-least-once append loop self-healing at its maintenance cadence.
     */
-  def compactMinHashIndex(spark: SparkSession, dir: String): ((Long, Long), (Long, Long)) = (
-    graft.cdc.Compaction.compactDir(spark, s"$dir/signatures",
-      Seq("sig_bucket"), Seq("sig_bucket"), dedupRows = true),
-    graft.cdc.Compaction.compactDir(spark, s"$dir/bands",
-      Seq("band_idx", "bk_bucket"), Seq("band_idx", "bk_bucket"),
-      dedupRows = true))
+  def compactMinHashIndex(spark: SparkSession, dir: String): ((Long, Long), (Long, Long)) = {
+    def compact(t: StoredTable) =
+      graft.cdc.Compaction.compactDir(spark, t.at(dir), t.parts, dedupRows = true)
+    (compact(StoredTable.Signatures), compact(StoredTable.Bands))
+  }
 
   /** Index-health gauge over a stored [[buildMinHashIndex]] artifact —
     * the numbers an operator watches between ingests: per band, how many
@@ -4611,7 +4568,7 @@ object LlmOps {
     * to run after every append.
     */
   def minHashIndexStats(spark: SparkSession, dir: String): DataFrame =
-    readStored(spark, s"$dir/bands")
+    readStored(spark, StoredTable.Bands.at(dir))
       .groupBy(col("band_idx"), col("band_key"))
       .agg(count(lit(1)).as("bucket"))
       .groupBy(col("band_idx").cast("bigint").as("band_idx"))
@@ -4646,7 +4603,7 @@ object LlmOps {
     * [[minHashIndexStats]] / [[annIndexStats]] / [[pqIndexStats]].
     */
   def indexCoverage(corpus: DataFrame, indexDir: String,
-      idCol: String = "doc_id", indexTable: String = "signatures",
+      idCol: String = "doc_id", indexTable: String = StoredTable.Signatures.dir,
       indexIdCol: String = "doc_id"): DataFrame = {
     val idx = readStored(corpus.sparkSession, s"$indexDir/$indexTable")
       .select(col(indexIdCol).as("idx_id")).distinct()
@@ -4664,8 +4621,10 @@ object LlmOps {
     * [[graft.cdc.Compaction.swapDir]] mechanics as compaction (the old
     * generation serves readers throughout, every crash window rolls back
     * or re-runs to convergence — a prune re-run over an already-pruned
-    * table is a no-op rewrite), and the builder's cluster/partition
-    * layout is restated so probe-side pruning survives the repair.
+    * table is a no-op rewrite) and the same rewrite
+    * ([[graft.cdc.Compaction.rewriteDir]]), clustered on and partitioned
+    * by the table's `partitionCols` so probe-side pruning survives the
+    * repair.
     * Returns (rows before, rows after) — the difference IS the orphan
     * count, the repair metric an operator logs.
     *
@@ -4679,22 +4638,19 @@ object LlmOps {
     */
   private[llm] def pruneIndexTable(spark: SparkSession, path: String,
       idxIdCol: String, curIds: DataFrame,
-      clusterCols: Seq[String], partitionCols: Seq[String]): (Long, Long) = {
+      partitionCols: Seq[String]): (Long, Long) = {
     graft.cdc.Compaction.recoverDir(path)
     // parquet row-count metadata makes both counts footer-reads, not scans
     val before = spark.read.parquet(path).count()
-    graft.cdc.Compaction.swapDir(path) { tmp =>
-      val kept = spark.read.parquet(path)
-        .join(curIds, col(idxIdCol) === col("cur_id"), "left_semi")
-      val clustered =
-        if (clusterCols.nonEmpty) kept.repartition(clusterCols.map(col): _*)
-        else kept.coalesce(spark.sparkContext.defaultParallelism)
-      val w = clustered.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(tmp)
-    }
+    graft.cdc.Compaction.rewriteDir(spark, path, partitionCols)(
+      _.join(curIds, col(idxIdCol) === col("cur_id"), "left_semi"))
     (before, spark.read.parquet(path).count())
   }
+
+  /** [[pruneIndexTable]] over the stored table `t` of the artifact at `dir`. */
+  private[llm] def pruneIndexTable(t: StoredTable, dir: String, idxIdCol: String,
+      curIds: DataFrame): (Long, Long) =
+    pruneIndexTable(curIds.sparkSession, t.at(dir), idxIdCol, curIds, t.parts)
 
   /** The REPAIR [[indexCoverage]]'s `orphaned` class calls for — drop
     * every stored-LSH row whose doc has left the corpus. Detection
@@ -4709,24 +4665,20 @@ object LlmOps {
     */
   def pruneMinHashIndexTo(corpus: DataFrame, dir: String,
       idCol: String = "doc_id"): ((Long, Long), (Long, Long)) = {
-    val spark = corpus.sparkSession
     // id-only projection persisted: both table rewrites consume it
     val cur = corpus.select(col(idCol).as("cur_id")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try (
-      pruneIndexTable(spark, s"$dir/signatures", "doc_id", cur,
-        Seq("sig_bucket"), Seq("sig_bucket")),
-      pruneIndexTable(spark, s"$dir/bands", "doc_id", cur,
-        Seq("band_idx", "bk_bucket"), Seq("band_idx", "bk_bucket")))
+      pruneIndexTable(StoredTable.Signatures, dir, "doc_id", cur),
+      pruneIndexTable(StoredTable.Bands, dir, "doc_id", cur))
     finally { cur.unpersist(); () }
   }
 
   /** [[pruneMinHashIndexTo]] for the stored ANN cell table. */
   def pruneAnnIndexTo(emb: DataFrame, dir: String,
       idCol: String = "vec_id"): (Long, Long) =
-    pruneIndexTable(emb.sparkSession, s"$dir/cells", "vec_id",
-      emb.select(col(idCol).as("cur_id")).distinct(),
-      Seq("label"), Seq("label"))
+    pruneIndexTable(StoredTable.AnnCells, dir, "vec_id",
+      emb.select(col(idCol).as("cur_id")).distinct())
 
   /** [[pruneMinHashIndexTo]] for the stored PQ codes table. The frozen
     * codebook is untouched: it is a trained artifact, not per-vector
@@ -4734,9 +4686,8 @@ object LlmOps {
     */
   def prunePqIndexTo(emb: DataFrame, dir: String,
       idCol: String = "vec_id"): (Long, Long) =
-    pruneIndexTable(emb.sparkSession, s"$dir/codes", "vec_id",
-      emb.select(col(idCol).as("cur_id")).distinct(),
-      Seq("label"), Seq("label"))
+    pruneIndexTable(StoredTable.Codes, dir, "vec_id",
+      emb.select(col(idCol).as("cur_id")).distinct())
 
   /** Apply [[corpusDiff]]'s `removed` class to a STORED corpus — the
     * dataset-versioning maintenance pass (takedowns, recrawl shrinkage)
@@ -4754,12 +4705,10 @@ object LlmOps {
     // the previous swap must see the rolled-back (or rolled-forward)
     // directory, not the absent mid-swap state
     graft.cdc.Compaction.recoverDir(corpusDir)
-    val parts =
-      if (spark.read.parquet(corpusDir).columns.contains("epoch"))
-        Seq("epoch")
-      else Seq.empty
+    val parts = StoredTable.Corpus.parts
+      .filter(spark.read.parquet(corpusDir).columns.contains)
     pruneIndexTable(spark, corpusDir, idCol,
-      current.select(col(idCol).as("cur_id")).distinct(), parts, parts)
+      current.select(col(idCol).as("cur_id")).distinct(), parts)
   }
 
   /** Reproducible as-of read of the epoch-partitioned stored corpus —
@@ -6292,15 +6241,14 @@ object LlmOps {
     */
   def buildAnnIndex(emb: DataFrame, dir: String, idCol: String = "vec_id",
       vecCol: String = "embedding", labelCol: String = "label"): Unit =
+    StoredTable.AnnCells.write(annRows(emb, idCol, vecCol, labelCol), dir)
+
+  /** The cell-table rows (vec_id, e, label, nrm) of an embedding frame. */
+  private def annRows(emb: DataFrame, idCol: String, vecCol: String,
+      labelCol: String): DataFrame =
     emb.select(col(idCol).as("vec_id"),
         col(vecCol).cast("array<double>").as("e"), col(labelCol).as("label"))
       .withColumn("nrm", expr(s"sqrt(${dotSql("e", "e")})"))
-      // hash-cluster rows by cell before the partitioned write: one file
-      // per cell directory instead of one per (shuffle partition × cell) —
-      // at scale the probe's task count tracks probed cells, not the
-      // builder's parallelism
-      .repartition(col("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(s"$dir/cells")
 
   /** [[annIvf]] over a STORED index: the query set probes `dir`'s cell
     * table instead of re-deriving cells and norms from the corpus —
@@ -6314,7 +6262,7 @@ object LlmOps {
   def annIvfIndexed(queries: DataFrame, indexDir: String, k: Int = 5,
       idCol: String = "vec_id", vecCol: String = "embedding",
       labelCol: String = "label"): DataFrame = {
-    val cells = readStored(queries.sparkSession, s"$indexDir/cells")
+    val cells = readStored(queries.sparkSession, StoredTable.AnnCells.at(indexDir))
     val q = queries.select(col(idCol).as("qid"),
         col(vecCol).cast("array<double>").as("qe"), col(labelCol).as("qlabel"))
       .withColumn("qnrm", expr(s"sqrt(${dotSql("qe", "qe")})"))
@@ -6338,19 +6286,15 @@ object LlmOps {
     */
   def appendAnnIndex(emb: DataFrame, dir: String, idCol: String = "vec_id",
       vecCol: String = "embedding", labelCol: String = "label"): Unit =
-    appendAnnIndexFrom(
-      emb.select(col(idCol).as("vec_id"),
-          col(vecCol).cast("array<double>").as("e"), col(labelCol).as("label"))
-        .withColumn("nrm", expr(s"sqrt(${dotSql("e", "e")})")), dir)
+    appendAnnIndexFrom(annRows(emb, idCol, vecCol, labelCol), dir)
 
   /** [[appendAnnIndex]] over a caller-derived (vec_id, e, label, nrm)
     * frame — the form [[StreamingIngest]] uses so one norm derivation per
     * epoch feeds both the semantic gate's probe and the survivor append.
     */
   def appendAnnIndexFrom(b: DataFrame, dir: String): Unit =
-    b.select(col("vec_id"), col("e"), col("label"), col("nrm"))
-      .repartition(col("label"))
-      .write.mode("append").partitionBy("label").parquet(s"$dir/cells")
+    StoredTable.AnnCells.write(
+      b.select(col("vec_id"), col("e"), col("label"), col("nrm")), dir, "append")
 
   /** Fold the small files [[appendAnnIndex]] accumulates — same swap
     * mechanics and replay-healing contract as [[compactMinHashIndex]]:
@@ -6359,8 +6303,8 @@ object LlmOps {
     * collapses it. Returns (files before, files after).
     */
   def compactAnnIndex(spark: SparkSession, dir: String): (Long, Long) =
-    graft.cdc.Compaction.compactDir(spark, s"$dir/cells",
-      Seq("label"), Seq("label"), dedupRows = true)
+    graft.cdc.Compaction.compactDir(spark, StoredTable.AnnCells.at(dir),
+      StoredTable.AnnCells.parts, dedupRows = true)
 
   /** Materialize the TRAINED-cell IVF serving index under `dir` — the
     * FAISS IVF-flat artifact as two parquet tables (the [[buildPqIndex]]
@@ -6379,18 +6323,16 @@ object LlmOps {
       iters: Int = PqLloydIters, dim: Int = KmDim): Unit = {
     val base = embBase(GraftExtensions.register(emb), idCol, vecCol).select("vec_id", "e")
     val cents = kmCentroids(base, c, trainMod, iters, dim)
-    cents.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+    StoredTable.Centroids.write(cents, dir)
     writeKmCells(base,
-      emb.sparkSession.read.parquet(s"$dir/centroids"), dir, dim,
+      emb.sparkSession.read.parquet(StoredTable.Centroids.at(dir)), dir, dim,
       "overwrite")
   }
 
   private def writeKmCells(base: DataFrame, cents: DataFrame, dir: String,
       dim: Int, mode: String): Unit =
-    base.join(kmAssign(base, cents, dim), Seq("vec_id"))
-      .withColumn("nrm", expr(s"sqrt(${dotSql("e", "e")})"))
-      .repartition(col("cell"))
-      .write.mode(mode).partitionBy("cell").parquet(s"$dir/cells")
+    StoredTable.KmCells.write(base.join(kmAssign(base, cents, dim), Seq("vec_id"))
+      .withColumn("nrm", expr(s"sqrt(${dotSql("e", "e")})")), dir, mode)
 
   /** Index maintenance for [[buildKmAnnIndex]]: assign `emb`'s vectors
     * against the STORED centroids (never retrained between rebuilds)
@@ -6400,7 +6342,7 @@ object LlmOps {
   def appendKmAnnIndex(emb: DataFrame, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = KmDim): Unit = {
-    val cents = emb.sparkSession.read.parquet(s"$dir/centroids")
+    val cents = emb.sparkSession.read.parquet(StoredTable.Centroids.at(dir))
     val base = embBase(GraftExtensions.register(emb), idCol, vecCol).select("vec_id", "e")
     writeKmCells(base, cents, dir, dim, "append")
   }
@@ -6447,8 +6389,8 @@ object LlmOps {
       dim: Int = KmDim, nprobe: Int = 1,
       staticPinMaxCells: Int = StaticPinMaxCells): DataFrame = {
     val spark = queries.sparkSession
-    val cents = readStored(spark, s"$indexDir/centroids")
-    val cells = readStored(spark, s"$indexDir/cells")
+    val cents = readStored(spark, StoredTable.Centroids.at(indexDir))
+    val cells = readStored(spark, StoredTable.KmCells.at(indexDir))
     val qb = embBase(GraftExtensions.register(queries), idCol, vecCol).select("vec_id", "e")
     // nprobe = 1 is the single-cell assignment; above it each query
     // probes its nprobe nearest cells (same broadcast-probe shape, the
@@ -6489,8 +6431,8 @@ object LlmOps {
     */
   def kmDrift(spark: SparkSession, dir: String,
       errBudget: Double = 2.0): DataFrame = {
-    val cents = readStored(spark, s"$dir/centroids")
-    readStored(spark, s"$dir/cells")
+    val cents = readStored(spark, StoredTable.Centroids.at(dir))
+    readStored(spark, StoredTable.KmCells.at(dir))
       .join(broadcast(cents), col("cell") === col("cid"))
       .withColumn("err", expr(ssdSql("e", "ce")))
       .groupBy(col("cell").cast("bigint").as("cell"))
@@ -6508,7 +6450,7 @@ object LlmOps {
     * — never touches the vectors, cheap enough to run after every append.
     */
   def annIndexStats(spark: SparkSession, dir: String): DataFrame =
-    readStored(spark, s"$dir/cells")
+    readStored(spark, StoredTable.AnnCells.at(dir))
       .groupBy(col("label").cast("bigint").as("cell"))
       .agg(count(lit(1)).as("n_vectors"))
 
@@ -6611,7 +6553,7 @@ object LlmOps {
   def incrementalDedupCosineIndexedFrom(b: DataFrame, indexDir: String,
       threshold: Double = 0.99, excludeBatchIds: Boolean = false,
       staticPinMaxCells: Int = StaticPinMaxCells): DataFrame = {
-    val cells = readStored(b.sparkSession, s"$indexDir/cells")
+    val cells = readStored(b.sparkSession, StoredTable.AnnCells.at(indexDir))
     // STATIC partition pruning ([[pinPartitions]] through
     // [[pruneToCells]]): collect the batch's distinct cells (bounded by
     // the cell count, not the batch) and pin them as a literal IN over
@@ -6688,8 +6630,8 @@ object LlmOps {
         pqPivotsLloyd(base.select("vec_id", "e"), kc, trainMod, m, sub,
           lloydIters)
       else pqPivots(base.select("vec_id", "e"), kc, trainMod)
-    pivots.coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    writePqCodes(base, emb.sparkSession.read.parquet(s"$dir/codebooks"),
+    StoredTable.Codebooks.write(pivots, dir)
+    writePqCodes(base, emb.sparkSession.read.parquet(StoredTable.Codebooks.at(dir)),
       dir, m, sub, "overwrite")
   }
 
@@ -6698,12 +6640,10 @@ object LlmOps {
     */
   private def writePqCodes(base: DataFrame, pivots: DataFrame, dir: String,
       m: Int, sub: Int, mode: String): Unit =
-    pqAssign(base.select("vec_id", "e"), pivots, m, sub)
+    StoredTable.Codes.write(pqAssign(base.select("vec_id", "e"), pivots, m, sub)
       .groupBy("vec_id")
       .agg(expr("transform(array_sort(collect_list(struct(s, cid))), x -> x.cid)").as("codes"))
-      .join(base.select("vec_id", "label"), Seq("vec_id"))
-      .repartition(col("label"))
-      .write.mode(mode).partitionBy("label").parquet(s"$dir/codes")
+      .join(base.select("vec_id", "label"), Seq("vec_id")), dir, mode)
 
   /** Index maintenance for [[buildPqIndex]]: encode `emb` against the
     * STORED codebook (never retrained — append cost is the irreducible
@@ -6714,7 +6654,7 @@ object LlmOps {
   def appendPqIndex(emb: DataFrame, dir: String, idCol: String = "vec_id",
       vecCol: String = "embedding", labelCol: String = "label",
       m: Int = PqSubspaces, sub: Int = PqSubDim): Unit = {
-    val pivots = emb.sparkSession.read.parquet(s"$dir/codebooks")
+    val pivots = emb.sparkSession.read.parquet(StoredTable.Codebooks.at(dir))
     val base = embBase(emb.withColumn("label", col(labelCol)), idCol, vecCol)
     writePqCodes(base, pivots, dir, m, sub, "append")
   }
@@ -6725,8 +6665,8 @@ object LlmOps {
     * duplicate row can only be a replayed append).
     */
   def compactPqIndex(spark: SparkSession, dir: String): (Long, Long) =
-    graft.cdc.Compaction.compactDir(spark, s"$dir/codes",
-      Seq("label"), Seq("label"), dedupRows = true)
+    graft.cdc.Compaction.compactDir(spark, StoredTable.Codes.at(dir),
+      StoredTable.Codes.parts, dedupRows = true)
 
   /** The REBUILD leg of the PQ lifecycle — the step [[pqDrift]]'s gauge
     * triggers: retrain the codebook on the CURRENT corpus and re-encode
@@ -6793,7 +6733,7 @@ object LlmOps {
     * count is carrying un-compacted replayed appends.
     */
   def pqIndexStats(spark: SparkSession, dir: String): DataFrame =
-    readStored(spark, s"$dir/codes")
+    readStored(spark, StoredTable.Codes.at(dir))
       .groupBy(col("label").cast("bigint").as("cell"))
       .agg(count(lit(1)).as("n_vectors"))
 
@@ -6811,8 +6751,8 @@ object LlmOps {
       labelCol: String = "label", sub: Int = PqSubDim,
       staticPinMaxCells: Int = StaticPinMaxCells): DataFrame = {
     val spark = queries.sparkSession
-    val pivots = readStored(spark, s"$indexDir/codebooks")
-    val codes = readStored(spark, s"$indexDir/codes")
+    val pivots = readStored(spark, StoredTable.Codebooks.at(indexDir))
+    val codes = readStored(spark, StoredTable.Codes.at(indexDir))
     // NOT persisted: q is a narrow projection read twice (the footprint
     // collect and the broadcast join) — re-deriving it costs two tiny
     // scans, a persisted copy would outlive the call in the block manager
@@ -6857,8 +6797,8 @@ object LlmOps {
       vecCol: String = "embedding", labelCol: String = "label",
       sub: Int = PqSubDim, errBudget: Double = 1.0): DataFrame = {
     val spark = emb.sparkSession
-    val pivots = readStored(spark, s"$indexDir/codebooks")
-    val codes = readStored(spark, s"$indexDir/codes")
+    val pivots = readStored(spark, StoredTable.Codebooks.at(indexDir))
+    val codes = readStored(spark, StoredTable.Codes.at(indexDir))
     val base = embBase(emb.withColumn("label", col(labelCol)), idCol, vecCol)
     val approx = pqReconstructStored(codes, pivots, sub)
     approx.join(base.select("vec_id", "e"), Seq("vec_id"))

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.fs.StoredTable
 
 /** LLM-pipeline query registry + DuckDB oracle SQL. Each oracle mirrors the
   * Spark formula construct-for-construct (same hash derivation, same
@@ -253,11 +254,9 @@ object LlmQueries {
   private def epochCorpusDir(s: SparkSession, d: String): String =
     memo(s"epochs|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-corpus-epochs")
-      Tables.documents(s, d)
+      StoredTable.Corpus.write(Tables.documents(s, d)
         .select(col("doc_id"), col("text"),
-          pmod(col("doc_id"), lit(4L)).as("epoch"))
-        .repartition(col("epoch"))
-        .write.mode("overwrite").partitionBy("epoch").parquet(s"$dir/corpus")
+          pmod(col("doc_id"), lit(4L)).as("epoch")), s"$dir/corpus")
       dir
     }
 
@@ -265,10 +264,8 @@ object LlmQueries {
     memo(s"gc|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-corpus-gc")
       val docs = Tables.documents(s, d)
-      docs.select(col("doc_id"), col("text"),
-          pmod(col("doc_id"), lit(4L)).as("epoch"))
-        .repartition(col("epoch"))
-        .write.mode("overwrite").partitionBy("epoch").parquet(s"$dir/corpus")
+      StoredTable.Corpus.write(docs.select(col("doc_id"), col("text"),
+          pmod(col("doc_id"), lit(4L)).as("epoch")), s"$dir/corpus")
       LlmOps.applyCorpusRemovals(s, s"$dir/corpus", LlmOps.snapshotNext(docs))
       dir
     }
@@ -347,11 +344,9 @@ object LlmQueries {
   private def mediaEpochDir(s: SparkSession, d: String): String =
     memo(s"mediaepochs|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-media-epochs")
-      Multimodal.media(Tables.documents(s, d))
+      StoredTable.Corpus.write(Multimodal.media(Tables.documents(s, d))
         .select(col("doc_id"), col("payload"),
-          pmod(col("doc_id"), lit(4L)).as("epoch"))
-        .repartition(col("epoch"))
-        .write.mode("overwrite").partitionBy("epoch").parquet(s"$dir/media")
+          pmod(col("doc_id"), lit(4L)).as("epoch")), s"$dir/media")
       dir
     }
 
@@ -366,10 +361,8 @@ object LlmQueries {
       val dir = tempIndexDir("graft-media-gc")
       val docs = Tables.documents(s, d)
       val m = Multimodal.media(docs)
-      m.select(col("doc_id"), col("payload"),
-          pmod(col("doc_id"), lit(4L)).as("epoch"))
-        .repartition(col("epoch"))
-        .write.mode("overwrite").partitionBy("epoch").parquet(s"$dir/media")
+      StoredTable.Corpus.write(m.select(col("doc_id"), col("payload"),
+          pmod(col("doc_id"), lit(4L)).as("epoch")), s"$dir/media")
       Multimodal.buildPayloadIndex(m, s"$dir/pay")
       Multimodal.mediaGc(s, Multimodal.mediaSnapshotNext(docs),
         s"$dir/media", Some(s"$dir/pay"))
@@ -897,10 +890,10 @@ object LlmQueries {
     // the next vector generation — arrivals unindexed, removals orphaned
     "llm_ann_coverage" -> ((s, d) => LlmOps.indexCoverage(
       LlmOps.vecSnapshotNext(Tables.embeddings(s, d)), annIndexDir(s, d),
-      idCol = "vec_id", indexTable = "cells", indexIdCol = "vec_id")),
+      idCol = "vec_id", indexTable = StoredTable.AnnCells.dir, indexIdCol = "vec_id")),
     "llm_pq_coverage" -> ((s, d) => LlmOps.indexCoverage(
       LlmOps.vecSnapshotNext(Tables.embeddings(s, d)), pqIndexDir(s, d),
-      idCol = "vec_id", indexTable = "codes", indexIdCol = "vec_id")),
+      idCol = "vec_id", indexTable = StoredTable.Codes.dir, indexIdCol = "vec_id")),
     // codebook-drift gauge over the stored PQ index: per cell, vectors
     // over the quantization-error budget + worst error — the retrain dial
     "llm_pq_drift" -> ((s, d) =>
@@ -914,11 +907,11 @@ object LlmQueries {
     "llm_ann_prune" -> ((s, d) => LlmOps.indexCoverage(
       LlmOps.vecSnapshotNext(Tables.embeddings(s, d)),
       s"${vecPrunedDir(s, d)}/ann",
-      idCol = "vec_id", indexTable = "cells", indexIdCol = "vec_id")),
+      idCol = "vec_id", indexTable = StoredTable.AnnCells.dir, indexIdCol = "vec_id")),
     "llm_pq_prune" -> ((s, d) => LlmOps.indexCoverage(
       LlmOps.vecSnapshotNext(Tables.embeddings(s, d)),
       s"${vecPrunedDir(s, d)}/pq",
-      idCol = "vec_id", indexTable = "codes", indexIdCol = "vec_id")),
+      idCol = "vec_id", indexTable = StoredTable.Codes.dir, indexIdCol = "vec_id")),
     // corpus GC: the stored (epoch-partitioned) corpus after
     // applyCorpusRemovals — removed ids gone, survivors byte-identical,
     // dumped as (doc_id, n_chars), the dedup-apply witness convention
@@ -949,12 +942,12 @@ object LlmQueries {
     // next media generation (chunks table, 4 rows/payload — distinct'd)
     "mm_payload_coverage" -> ((s, d) => LlmOps.indexCoverage(
       Multimodal.mediaSnapshotNext(Tables.documents(s, d)),
-      payIndexDir(s, d), indexTable = "chunks")),
+      payIndexDir(s, d), indexTable = StoredTable.Chunks.dir)),
     // the repaired artifact's audit: after prunePayloadIndexTo no
     // orphaned class remains
     "mm_payload_prune" -> ((s, d) => LlmOps.indexCoverage(
       Multimodal.mediaSnapshotNext(Tables.documents(s, d)),
-      payPrunedDir(s, d), indexTable = "chunks")),
+      payPrunedDir(s, d), indexTable = StoredTable.Chunks.dir)),
     // content-level drift audit between two MEDIA generations: per asset,
     // added / removed / changed (re-encode) / unchanged off md5 payload
     // fingerprints — the payloads never join or shuffle

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.fs.StoredTable
 import graft.plans.GraftExtensions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -203,12 +204,7 @@ object Multimodal {
     * gates against 4 longs per indexed payload.
     */
   def buildPayloadIndex(mediaDf: DataFrame, dir: String): Unit =
-    graft.cdc.Compaction.swapDir(s"$dir/chunks") { tmp =>
-      payloadChunks(payloadSims(mediaDf))
-        .repartition(col("chunk_idx"), col("ck_bucket"))
-        .write.mode("overwrite").partitionBy("chunk_idx", "ck_bucket")
-        .parquet(tmp)
-    }
+    StoredTable.Chunks.swap(dir)(payloadChunks(payloadSims(mediaDf)))
 
   /** The steady-state media ingest gate over a STORED payload index —
     * [[graft.llm.LlmOps.incrementalDedupMinHashIndexed]]'s multimodal
@@ -261,7 +257,7 @@ object Multimodal {
     // cross-product pin is pure pruning, its over-read bounded by the
     // [[PayloadSimChunks]] × [[PayloadChunkBuckets]] directory grid
     val pruned = LlmOps.pinPartitions(
-      LlmOps.readStored(spark, s"$indexDir/chunks"),
+      LlmOps.readStored(spark, StoredTable.Chunks.at(indexDir)),
       "chunk_idx" -> footprint.map(_._1), "ck_bucket" -> footprint.map(_._2))
     val dup = pruned.as("ox").join(
         LlmOps.gateBroadcast(bChunks.as("nx"), LlmOps.fpCount(fpRow, "n")),
@@ -290,10 +286,7 @@ object Multimodal {
     * cache instead of re-reading payload bytes.
     */
   def appendPayloadIndexFrom(chunks: DataFrame, dir: String): Unit =
-    chunks
-      .repartition(col("chunk_idx"), col("ck_bucket"))
-      .write.mode("append").partitionBy("chunk_idx", "ck_bucket")
-      .parquet(s"$dir/chunks")
+    StoredTable.Chunks.write(chunks, dir, "append")
 
   /** Fold the small files [[appendPayloadIndex]] accumulates —
     * [[graft.llm.LlmOps.compactMinHashIndex]]'s twin: rewrite through the
@@ -304,9 +297,8 @@ object Multimodal {
     * Returns (before, after) file counts.
     */
   def compactPayloadIndex(spark: SparkSession, dir: String): (Long, Long) =
-    graft.cdc.Compaction.compactDir(spark, s"$dir/chunks",
-      Seq("chunk_idx", "ck_bucket"), Seq("chunk_idx", "ck_bucket"),
-      dedupRows = true)
+    graft.cdc.Compaction.compactDir(spark, StoredTable.Chunks.at(dir),
+      StoredTable.Chunks.parts, dedupRows = true)
 
   /** Index-health gauge over a stored [[buildPayloadIndex]] artifact —
     * per chunk position: distinct chunk values, the hottest bucket, total
@@ -318,7 +310,7 @@ object Multimodal {
     * to run after every append.
     */
   def payloadIndexStats(spark: SparkSession, dir: String): DataFrame =
-    graft.llm.LlmOps.readStored(spark, s"$dir/chunks")
+    graft.llm.LlmOps.readStored(spark, StoredTable.Chunks.at(dir))
       .groupBy(col("chunk_idx"), col("chunk_val"))
       .agg(count(lit(1)).as("bucket"))
       .groupBy(col("chunk_idx").cast("bigint").as("chunk_idx"))
@@ -334,9 +326,8 @@ object Multimodal {
     */
   def prunePayloadIndexTo(mediaDf: DataFrame, dir: String,
       idCol: String = "doc_id"): (Long, Long) =
-    graft.llm.LlmOps.pruneIndexTable(mediaDf.sparkSession, s"$dir/chunks",
-      "doc_id", mediaDf.select(col(idCol).as("cur_id")).distinct(),
-      Seq("chunk_idx", "ck_bucket"), Seq("chunk_idx", "ck_bucket"))
+    graft.llm.LlmOps.pruneIndexTable(StoredTable.Chunks, dir,
+      "doc_id", mediaDf.select(col(idCol).as("cur_id")).distinct())
 
   /** Harness fixture for the stored-payload-index gate: the arriving
     * media batch — exact byte copies of every 10th payload (+70000000,

@@ -1,7 +1,8 @@
 package graft.llm
 
+import graft.fs.{StoredArtifact, StoredTable}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The near-dup ingest gate as a LIVE pipeline — the production
@@ -25,11 +26,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the minhash rows); they are output-harmless (candidates and dup sets
   * are distinct-ed) and the next compaction erases them (`dedupRows`).
   * The one remaining window is a crash INSIDE a compaction swap itself
-  * (two renames — not atomic): `start` runs
-  * [[graft.cdc.Compaction.recoverDir]] over every index directory before
-  * the stream begins, rolling an interrupted swap back, so the restarted
-  * loop never probes a half-swapped index. The loop as a whole is
-  * effectively-once at its maintenance cadence.
+  * (two renames — not atomic): `start` recovers every artifact it reads
+  * or writes, the admitted corpus included
+  * ([[graft.fs.StoredArtifact.recover]]), before the stream begins,
+  * rolling an interrupted swap back, so the restarted loop never probes
+  * a half-swapped index nor commits next to a stepped-aside corpus. The
+  * loop as a whole is effectively-once at its maintenance cadence.
   *
   * At 100 TB this is the shape that holds: per-batch cost is the batch's
   * own signature derivation plus a narrow columnar probe of the index —
@@ -182,34 +184,24 @@ object StreamingIngest {
     require(lmCutsDir.isEmpty || lmDir.nonEmpty,
       "lmCutsDir needs lmDir: the frozen cuts were calibrated against the " +
         "global stored model the selection's scores must come from")
-    // startup recovery: a previous run may have died INSIDE a compaction
-    // swap (table level) or a PQ REBUILD swap (parent level — the whole
-    // artifact renamed away mid-generation-change), leaving an index
-    // directory missing or half-swapped. recoverDir rolls each back (or
-    // cleans up a completed one), so the first probe of this run never
-    // reads a half-swapped index — the one crash window the epoch-replay
-    // reasoning below doesn't cover on its own. Parent-level recovery
-    // runs FIRST: until the artifact root is back in place its
-    // subdirectories don't exist to recover.
-    graft.cdc.Compaction.recoverDir(indexDir)
-    annIndexDir.foreach(graft.cdc.Compaction.recoverDir)
-    pqIndexDir.foreach(graft.cdc.Compaction.recoverDir)
-    // the LM and benchmark-gram artifacts are read-only in the loop
-    // (generation artifacts), but a REBUILD that crashed mid-swap leaves
-    // the parent renamed away — same recovery as the PQ artifact parent
-    lmDir.foreach(graft.cdc.Compaction.recoverDir)
-    lmLangDir.foreach(graft.cdc.Compaction.recoverDir)
-    lmCutsDir.foreach(graft.cdc.Compaction.recoverDir)
-    decontamIndexDir.foreach(graft.cdc.Compaction.recoverDir)
-    decontamIndexDir.foreach(d => graft.cdc.Compaction.recoverDir(s"$d/grams"))
-    // the trained quality classifier is read-only in the loop too — but a
-    // retrain that crashed mid-swap needs the same table-level rollback
-    qualityModelDir.foreach(graft.cdc.Compaction.recoverDir)
-    qualityModelDir.foreach(d => graft.cdc.Compaction.recoverDir(s"$d/w"))
-    Seq(s"$indexDir/signatures", s"$indexDir/bands")
-      .foreach(graft.cdc.Compaction.recoverDir)
-    annIndexDir.foreach(d => graft.cdc.Compaction.recoverDir(s"$d/cells"))
-    pqIndexDir.foreach(d => graft.cdc.Compaction.recoverDir(s"$d/codes"))
+    // startup recovery: a previous run may have died INSIDE a swap — a
+    // compaction (table level), a rebuild (the artifact parent renamed
+    // away mid-generation-change, read-only artifacts included) or a
+    // corpus GC — leaving a directory missing or half-swapped. Each
+    // artifact recovers from its descriptor, root first, so the first
+    // probe never reads a half-swapped index and the first commit never
+    // writes into a fresh corpus next to the stepped-aside old one — the
+    // crash window the epoch-replay reasoning below doesn't cover on its
+    // own.
+    StoredArtifact.EpochCorpus.recover(outDir)
+    StoredArtifact.MinHashIndex.recover(indexDir)
+    annIndexDir.foreach(StoredArtifact.AnnIndex.recover)
+    pqIndexDir.foreach(StoredArtifact.PqIndex.recover)
+    lmDir.foreach(StoredArtifact.FluencyModel.recover)
+    lmLangDir.foreach(StoredArtifact.FluencyModelByLang.recover)
+    lmCutsDir.foreach(StoredArtifact.LmCuts.recover)
+    decontamIndexDir.foreach(StoredArtifact.DecontamIndex.recover)
+    qualityModelDir.foreach(StoredArtifact.QualityModel.recover)
     val schema = spark.read.parquet(srcDir).schema
     graft.streaming.NioCheckpointFileManager.install(spark)
     spark.readStream
@@ -356,12 +348,8 @@ object StreamingIngest {
         // effectively-once corpus: epoch-keyed dynamic partition overwrite
         // (the cdc.Streaming.startToParquetIdempotent discipline) — a
         // replayed epoch overwrites its own partition instead of
-        // re-appending. Set on the BATCH's session: foreachBatch runs the
-        // function against a cloned session with isolated conf.
-        kept.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        kept.withColumn("epoch", lit(epoch))
-          .write.mode("overwrite").partitionBy("epoch").parquet(outDir)
+        // re-appending
+        StoredTable.commitEpoch(kept, epoch, outDir)
         // ANN first, minhash second — see the ordering note above
         annIndexDir.foreach { aDir =>
           bVec match {

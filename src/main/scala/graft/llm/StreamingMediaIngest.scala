@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The LIVE media ingest loop — [[StreamingIngest]]'s multimodal twin:
@@ -64,12 +63,11 @@ object StreamingMediaIngest {
       compactEvery: Int = 0,
       epochHook: Long => Unit = _ => ()): StreamingQuery = {
     // startup recovery: a previous run may have died inside a
-    // compaction/prune swap, leaving the chunk table missing or
-    // half-swapped — roll back (or finish) before the first probe.
-    // Parent first: until the artifact root is in place its
-    // subdirectories don't exist to recover.
-    graft.cdc.Compaction.recoverDir(indexDir)
-    graft.cdc.Compaction.recoverDir(s"$indexDir/chunks")
+    // compaction/prune/GC swap, leaving the chunk table or the corpus
+    // missing or half-swapped — roll back (or finish) before the first
+    // probe and the first commit, each artifact from its descriptor
+    graft.fs.StoredArtifact.EpochCorpus.recover(outDir)
+    graft.fs.StoredArtifact.PayloadIndex.recover(indexDir)
     val schema = spark.read.parquet(srcDir).schema
     graft.streaming.NioCheckpointFileManager.install(spark)
     spark.readStream
@@ -88,12 +86,8 @@ object StreamingMediaIngest {
           .incrementalPayloadDedupIndexedFrom(sims, chunks, indexDir, maxHamming)
         val kept = batch.join(survivors, Seq("doc_id"), "left_semi")
           .persist(lvl)
-        // effectively-once corpus: epoch-keyed dynamic partition
-        // overwrite on the batch's cloned session
-        kept.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        kept.withColumn("epoch", lit(epoch))
-          .write.mode("overwrite").partitionBy("epoch").parquet(outDir)
+        // effectively-once corpus: epoch-keyed dynamic partition overwrite
+        graft.fs.StoredTable.commitEpoch(kept, epoch, outDir)
         // the index append commits LAST — see the self-cancel reasoning
         // in the object scaladoc
         Multimodal.appendPayloadIndexFrom(

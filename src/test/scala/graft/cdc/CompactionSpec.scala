@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   */
 class CompactionSpec extends SparkSpec {
 
-  // a plain path and the same directory addressed as a `file:` URI, the
-  // form a data-lake deployment passes
-  private val uris = Seq[String => String](identity, "file:" + _)
+  // a plain path, the same directory addressed as a `file:` URI (the form
+  // a data-lake deployment passes) and as the URI with a trailing `/`
+  // (what `java.nio.file.Path.toUri.toString` gives for a directory)
+  private val uris = Seq[String => String](identity, "file:" + _, "file://" + _ + "/")
 
   test("compaction shrinks the file count and preserves every row") {
     for (uri <- uris) {

@@ -236,9 +236,17 @@ class StreamingSpec extends SparkSpec {
     }
     intercept[Exception] { q1.awaitTermination() }
     val afterCrash = spark.read.parquet(out).count()
-    // restart: epoch 1 replays and OVERWRITES its partition — no duplicates
-    val q2 = Streaming.startToParquetIdempotent(spark, spec, out)
-    q2.awaitTermination()
+    // restart: epoch 1 replays and OVERWRITES its partition — no
+    // duplicates — even when the caller's session says static overwrite:
+    // the commit's dynamic mode is its writer's, and the session is left
+    // as it was
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(mode, "static")
+    try {
+      val q2 = Streaming.startToParquetIdempotent(spark, spec, out)
+      q2.awaitTermination()
+      assert(spark.conf.get(mode) === "static")
+    } finally spark.conf.unset(mode)
     val streamed = spark.read.parquet(out).drop("client_id", "epoch")
     val batchRun = Pipeline.deliveries(CdcView(spark, "/root/testdata/sf0.001"))
     assert(streamed.count() === batchRun.count(), s"afterCrash=$afterCrash")

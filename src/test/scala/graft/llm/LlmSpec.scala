@@ -2866,11 +2866,14 @@ class LlmSpec extends SparkSpec {
       // replay takes the committed partition as authoritative and heals
       // the index to the clean run's state
       val (c4, ix4) = freshFixture(uri)
+      val modeBefore = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       intercept[RuntimeException] {
         LlmOps.curateDeltaApply(base, next, c4, ix4, epoch = 1L,
           crashHook = at => if (at == "corpus-committed")
             throw new RuntimeException("crash-1"))
       }
+      assert(spark.conf.getOption("spark.sql.sources.partitionOverwriteMode") === modeBefore,
+        "the commit must leave the caller's partition overwrite mode as it was")
       assert(spark.read.parquet(c4).filter(col("epoch") === 1L).count() === n1,
         "corpus partition must be committed before the crash point")
       assert(idxRows(ix4)._1.map(_._1.toLong).forall(_ <= 4L),

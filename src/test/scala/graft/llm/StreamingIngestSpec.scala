@@ -542,6 +542,19 @@ class StreamingIngestSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet === Set(1L, 100L),
       "survivor codes must land in the recovered old-generation index")
     assert(!new java.io.File(pq + ".pre-compaction").exists())
+    // the admitted corpus recovers too: a corpus GC that died between its
+    // renames leaves `out` absent and the old corpus stepped aside; the
+    // restarted loop must roll it back before committing its next epoch,
+    // or the next recovery deletes every earlier epoch as a stale sibling
+    Files.move(java.nio.file.Paths.get(out),
+      java.nio.file.Paths.get(out + ".pre-compaction"))
+    writeSlice("s2", docsE((200L, mk("omega"), Seq(0f, 1f), 7)),
+      System.currentTimeMillis() - 30000)
+    StreamingIngest.start(spark, src, idx, out, ckp, pqIndexDir = Some(pq))
+      .awaitTermination()
+    assert(LlmOps.readCorpusAsOf(spark, out, 1L).select("doc_id")
+      .collect().map(_.getLong(0)).toSet === Set(100L, 200L),
+      "both epochs' rows must survive a corpus swap crashed before the restart")
   }
 
   test("crash replay with two mutually-near survivors re-admits both — no permanent minhash absence") {

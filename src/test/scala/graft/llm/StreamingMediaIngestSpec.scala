@@ -123,5 +123,15 @@ class StreamingMediaIngestSpec extends SparkSpec {
     assert(spark.read.parquet(s"$idx/chunks").count()
       === 3L * Multimodal.PayloadSimChunks,
       "dedupRows collapsed the duplicate append")
+
+    // a media GC that died between its renames leaves `out` absent and
+    // the old corpus stepped aside: the restarted loop rolls it back
+    // before committing its next epoch, so no earlier epoch is lost
+    Files.move(java.nio.file.Paths.get(out),
+      java.nio.file.Paths.get(out + ".pre-compaction"))
+    writeSlice(src, "s3", mediaOf(500L -> mk("kappa")), t0 + 45000)
+    StreamingMediaIngest.start(spark, src, idx, out, ckp).awaitTermination()
+    assert(Multimodal.readMediaAsOf(spark, out, 2L).select("doc_id")
+      .collect().map(_.getLong(0)).toSet === Set(100L, 200L, 500L))
   }
 }
