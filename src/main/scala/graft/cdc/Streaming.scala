@@ -31,25 +31,29 @@ import graft.streaming.PlannedRoute
   * 4-vCPU VM, where Spark's own local manager took ~40 ms forking
   * `chmod`/`readlink`. Any other scheme uses the manager Spark picks.
   *
-  * Per-epoch planning cost: the stream plans only its source (the parquet
-  * scan, `ts` normalized, the optional replay dedup, projected to the four
-  * columns the route reads), and its file reader is built once
-  * ([[graft.streaming.StreamParquetFormat]]), not once per epoch with its
-  * own broadcast of the Hadoop conf. The route and the sink's own
-  * projection are planned, and compiled to one whole-stage codegen stage,
-  * once, when the query starts, over a stand-in for the stream's rows;
-  * each epoch maps that compiled stage over its rows
-  * ([[graft.streaming.PlannedRoute]]). Planning the whole route in the
-  * stream cost two optimizer runs per epoch: the epoch's incremental
-  * execution (~45 ms on a 4-vCPU VM), and Spark 4.1's SQL-execution start
-  * event, whose `QueryExecution.explainString` builds a second incremental
-  * execution just to render the plan text (~35 ms); no setting skips the
-  * second. Executing a kept plan per epoch still cost its code generation
-  * (~4 ms) and an optimizer pass over the batch (~5 ms). That plan text, in
-  * the UI and in listener events, now shows only the source, and the
-  * route's SQL metrics are the start-time stage's, summed over the stream;
-  * [[routed]] is the streaming form of the same route, for stateful
-  * consumers.
+  * Per-epoch planning cost: an epoch's source is a file-log lookup and
+  * one RDD ([[graft.streaming.StreamFileSource]]). Spark's file stream
+  * still discovers and orders the files and writes the checkpoint's
+  * batch→files log, but the epoch's rows come from one parquet reader,
+  * built at start and pruned to the four columns the route reads, as a
+  * single plan leaf: no file relation is resolved, no scan is planned and
+  * no code is generated per epoch. `ts` is normalized, and the route and
+  * the sink's own projection are planned and compiled to one whole-stage
+  * codegen stage, once, when the query starts, over a stand-in for the
+  * stream's rows; each epoch maps that compiled stage over its rows
+  * ([[graft.streaming.PlannedRoute]]). What an epoch still plans on the
+  * stream thread is that one leaf, twice: the epoch's incremental
+  * execution, and Spark 4.1's SQL-execution start event, whose
+  * `QueryExecution.explainString` builds a second incremental execution
+  * just to render the plan text (no setting skips it). On a 4-vCPU VM
+  * the driver time before an epoch's job went from ~13 ms (a file
+  * relation, a scan planned twice and code-generated, its closure
+  * cleaned) to ~8 ms. With `dedupe`, the stateful dedup and its `ts`
+  * normalization stay in the stream plan and are planned per epoch. The
+  * plan text, in the UI and in listener events, shows only the source,
+  * and the route's SQL metrics are the start-time stage's, summed over
+  * the stream; [[routed]] is the streaming form of the same route, for
+  * stateful consumers.
   */
 object Streaming {
 
@@ -103,36 +107,32 @@ object Streaming {
   def routed(spark: SparkSession, spec: PipelineSpec): DataFrame =
     route(spec)(source(spark, spec))
 
-  /** The stream every sink reads: the source files, `ts` normalized, the
-    * optional replay dedup, projected to the four columns
-    * `CdcView.fromEvents` reads.
+  /** The stream every sink reads: the four columns of the source files
+    * `CdcView.fromEvents` reads, `ts` in the files' own type; with
+    * `spec.dedupe`, `ts` normalized and the replay dedup applied.
     */
   private def source(spark: SparkSession, spec: PipelineSpec): DataFrame = {
     graft.Tables.setup(spark)
     // Declare ts with the SOURCE's physical type (read off the files
-    // already present — the StreamingIngest schema discipline), then
-    // normalize to the epoch-nanos Long the route expects, exactly the
-    // Tables.load rule. Forcing LongType onto a TIMESTAMP(MICROS) file
-    // would make the vectorized reader hand back RAW MICROS — commit_ms
-    // lands on the seconds scale, the since-filter drops 100% of events,
-    // and the stream silently delivers nothing.
+    // already present — the StreamingIngest schema discipline); the route
+    // normalizes it to the epoch-nanos Long, exactly the Tables.load rule.
+    // Forcing LongType onto a TIMESTAMP(MICROS) file would make the
+    // vectorized reader hand back RAW MICROS — commit_ms lands on the
+    // seconds scale, the since-filter drops 100% of events, and the
+    // stream silently delivers nothing.
     val tsType = spark.read.parquet(spec.sourceDir).schema("ts").dataType
-    val srcSchema = org.apache.spark.sql.types.StructType(eventsSchema.map(f =>
+    val schema = StructType(eventsSchema.take(4).map(f =>
       if (f.name == "ts") f.copy(dataType = tsType) else f))
-    val src = graft.Tables.normalizeTs(spark.readStream
-      .schema(srcSchema)
-      .option("maxFilesPerTrigger", spec.maxFilesPerTrigger)
-      .format(classOf[graft.streaming.StreamParquetFormat].getName)
-      .load(spec.sourceDir))
-    val ingest = if (spec.dedupe)
-      graft.streaming.Windows.dedupStream(src, spec.dedupeDelay)
+    val src = graft.streaming.StreamFileSource.read(spark, spec.sourceDir, schema, spec.maxFilesPerTrigger)
+    if (spec.dedupe)
+      graft.streaming.Windows.dedupStream(graft.Tables.normalizeTs(src), spec.dedupeDelay)
+        .select("event_id", "ts", "user_id", "event_type")
     else src
-    ingest.select("event_id", "ts", "user_id", "event_type")
   }
 
   /** The route from source rows to delivery rows, as in the batch twin. */
   private def route(spec: PipelineSpec)(events: DataFrame): DataFrame =
-    Pipeline.deliveries(CdcView.fromEvents(events), spec.cutoffMs)
+    Pipeline.deliveries(CdcView.fromEvents(graft.Tables.normalizeTs(events)), spec.cutoffMs)
 
   /** Start the pipeline with a delivery callback (K1 webhook analog).
     * `deliver` receives each micro-batch's delivery rows; throwing aborts

@@ -176,6 +176,68 @@ class StreamingSpec extends SparkSpec {
       late.take(3).map(_.getString("command")).mkString("; "))
   }
 
+  test("each epoch's progress counts its file's events, over a source plan of one leaf") {
+    // numInputRows feeds the idle watchdog (Reliability) and StatusBoard;
+    // it must stay the events of the epoch's file. The epoch's source plan
+    // is one leaf over its rows: no file scan, no codegen stage.
+    val src = tmp("graft-src9"); val ckp = tmp("graft-ckp9"); val out = tmp("graft-out9")
+    writeSlices(src, cuts = Seq(200L, 400L, 600L, 800L))
+    val q = Streaming.startToParquet(spark, Streaming.PipelineSpec("c1", src, ckp), out)
+    q.awaitTermination()
+    val progress = q.recentProgress.filter(_.numInputRows > 0)
+    assert(progress.map(_.batchId).toSeq === (0L to 4L))
+    for (p <- progress) {
+      // the epoch's file, as the checkpoint's source log records it
+      val entries = Files.readAllLines(Paths.get(ckp, "sources", "0", p.batchId.toString)).asScala
+        .filter(_.startsWith("{"))
+      assert(entries.size === 1)
+      val file = """"path":"([^"]+)"""".r.findFirstMatchIn(entries.head).get.group(1)
+      assert(p.numInputRows === spark.read.parquet(file).count(), s"epoch ${p.batchId}: $file")
+      assert(p.sources.map(_.numInputRows).sum === p.numInputRows)
+    }
+    assert(progress.map(_.numInputRows).sum ===
+      graft.Tables.events(spark, "/root/testdata/sf0.001").count())
+    val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan
+    assert(plan.collectLeaves().map(_.getClass) === Seq(classOf[graft.streaming.EpochRowsExec]),
+      plan.treeString)
+    assert(!plan.exists {
+      case _: org.apache.spark.sql.execution.FileSourceScanExec => true
+      case _: org.apache.spark.sql.execution.WholeStageCodegenExec => true
+      case _ => false
+    }, plan.treeString)
+  }
+
+  test("a checkpoint written by Spark's parquet file stream resumes at its next file") {
+    // The first run checkpoints through Spark's own parquet source, as the
+    // stream did before it read its epochs itself, and stops with epoch 2
+    // logged but uncommitted. The restart under startToParquet must replay
+    // epoch 2 and go on: no file skipped, none read twice.
+    val src = tmp("graft-src10"); val ckp = tmp("graft-ckp10"); val out = tmp("graft-out10")
+    writeSlices(src, cuts = Seq(200L, 400L, 600L, 800L))
+    val spec = Streaming.PipelineSpec("c1", src, ckp)
+    val q1 = spark.readStream.schema(spark.read.parquet(src).schema)
+      .option("maxFilesPerTrigger", 1).parquet(src)
+      .writeStream.option("checkpointLocation", ckp).trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, epoch: Long) =>
+        if (epoch == 2) sys.error("stopped part-way")
+        Pipeline.deliveries(CdcView.fromEvents(graft.Tables.normalizeTs(batch)), spec.cutoffMs)
+          .withColumn("client_id", lit(spec.clientId))
+          .write.mode("append").parquet(out)
+      }.start()
+    intercept[Exception] { q1.awaitTermination() }
+    assert(Files.exists(Paths.get(ckp, "sources", "0", "2")) && Files.exists(Paths.get(ckp, "offsets", "2")))
+    assert(Files.exists(Paths.get(ckp, "commits", "1")) && !Files.exists(Paths.get(ckp, "commits", "2")))
+
+    val q2 = Streaming.startToParquet(spark, spec, out)
+    q2.awaitTermination()
+    assert(q2.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq === Seq(2L, 3L, 4L))
+    val streamed = spark.read.parquet(out).drop("client_id")
+    val batch = Pipeline.deliveries(CdcView(spark, "/root/testdata/sf0.001"))
+    assert(streamed.count() === batch.count())
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
+
   test("a sink projection that cannot be planned once fails at start, before any epoch or checkpoint file") {
     // A grouping needs an exchange, so its plan depends on the data and
     // cannot be kept across epochs: the start path must refuse it on the

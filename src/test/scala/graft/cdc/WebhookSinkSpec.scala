@@ -1,15 +1,19 @@
 package graft.cdc
 
 import graft.SparkSpec
-import graft.streaming.PlannedRoute
+import graft.streaming.{EpochRowsExec, PlannedRoute}
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, RDDScanExec, SparkPlan,
-  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{InputAdapter, RDDScanExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
 import java.net.InetSocketAddress
+import java.time.Instant
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Executors}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
@@ -196,7 +200,7 @@ class WebhookSinkSpec extends SparkSpec {
       assert(ep.accepted.asScala.toSet === expected.toSet)
       assert(trackers.isEmpty, s"${trackers.size} optimizer runs of the route on the stream thread")
       val reads = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
-        .executedPlan.collect { case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq }
+        .executedPlan.collect { case s: EpochRowsExec => s.output.map(_.name) }
       assert(reads === Seq(Seq("event_id", "ts", "user_id", "event_type")))
     } finally {
       spark.experimental.extraOptimizations = before
@@ -237,6 +241,64 @@ class WebhookSinkSpec extends SparkSpec {
       val top = plan.collectFirst { case p if p.metrics.contains("numOutputRows") => p }.get
       assert(top.metrics("numOutputRows").value === expected.size, top.simpleString(200))
     } finally ep.stop()
+  }
+
+  test("e2e: after epoch 0 the stream thread generates no code and cleans no closure") {
+    // Before, each epoch planned its parquet scan as a codegen stage of its
+    // own: the stream thread generated that stage's code, and cleaning the
+    // stage's RDD closure read its class file out of Spark's jar. Both are
+    // logged at DEBUG, so a capture of those two loggers sees them. The
+    // fixture starts the session first: its logging set-up would drop a
+    // capture added before it.
+    val src = java.nio.file.Files.createTempDirectory("graft-wh7-src").toString
+    val ckp = java.nio.file.Files.createTempDirectory("graft-wh7-ckp").toString
+    graft.Tables.events(spark, Sf0001).repartition(5).write.mode("overwrite").parquet(src)
+    val loggers = Seq("org.apache.spark.sql.execution.WholeStageCodegenExec",
+      "org.apache.spark.util.ClosureCleaner")
+    val logged = new ConcurrentLinkedQueue[(String, String, Long, String)]()
+    val capture = new AbstractAppender("graft-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add((e.getThreadName, e.getLoggerName,
+        e.getTimeMillis, e.getMessage.getFormattedMessage.take(120)))
+    }
+    val ctx = LoggerContext.getContext(false)
+    val levels = loggers.map(n => n -> ctx.getLogger(n).getLevel)
+    capture.start()
+    loggers.foreach { n =>
+      Configurator.setLevel(n, Level.DEBUG)
+      val cfg = ctx.getConfiguration.getLoggerConfig(n)
+      cfg.setAdditive(false) // keep the captured lines off the console
+      cfg.addAppender(capture, Level.DEBUG, null)
+    }
+    ctx.updateLoggers()
+    val ep = new Endpoint
+    val q = try {
+      // control: the capture sees a closure this thread cleans
+      spark.sparkContext.parallelize(Seq(1, 2)).map(_ + 1).count()
+      val started = Streaming.startToWebhook(spark, Streaming.PipelineSpec("c1", src, ckp),
+        fastCfg(ep.url))
+      started.awaitTermination()
+      started
+    } finally {
+      ep.stop()
+      loggers.foreach { n =>
+        val cfg = ctx.getConfiguration.getLoggerConfig(n)
+        cfg.removeAppender("graft-capture")
+        cfg.setAdditive(true)
+      }
+      levels.foreach { case (n, l) => Configurator.setLevel(n, l) }
+      capture.stop()
+    }
+    assert(q.recentProgress.count(_.numInputRows > 0) === 5)
+    val p0 = q.recentProgress.find(_.batchId == 0).get
+    val firstCommit = Instant.parse(p0.timestamp).plusMillis(p0.durationMs.get("triggerExecution"))
+      .toEpochMilli
+    def isWork(e: (String, String, Long, String)) = e._2.endsWith("WholeStageCodegenExec") ||
+      e._4.startsWith("Cleaning indylambda closure") || e._4.startsWith("+++ Cleaning closure")
+    val all = logged.asScala.toSeq.filter(isWork)
+    assert(all.exists(_._1 == Thread.currentThread().getName), "the control clean was not captured")
+    val late = all.filter(e => e._1.startsWith("stream execution thread") && e._3 > firstCommit)
+    assert(late.isEmpty, s"${late.size} code generations or closure cleans on the stream thread " +
+      s"after epoch 0: ${late.take(3).map(e => e._2 + ": " + e._4).mkString("; ")}")
   }
 
   test("e2e: an exhausted retry mid-partition aborts the epoch uncommitted; restart delivers everything") {

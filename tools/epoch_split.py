@@ -11,9 +11,10 @@ median of each part of an epoch's `addBatch`:
   sink          first POST arrival -> last acknowledgement
   after_ack     last acknowledgement -> the epoch's last job end
 
-plus the epoch itself (trigger start -> offset commit) and addBatch. An
-epoch without a job or without an acknowledged POST is counted and left
-out of the parts it lacks.
+plus the epoch itself (trigger start -> offset commit), addBatch, and
+`driver`: the epoch's driver time before its first job, getBatch +
+queryPlanning + before_job. An epoch without a job or without an
+acknowledged POST is counted and left out of the parts it lacks.
 
     python3 tools/epoch_split.py perfbench/target/work/spans/cdc_live-seed7.jsonl
 """
@@ -45,6 +46,8 @@ def split(lines, first_epoch):
             parts["no_job"].append(epoch)
             continue
         parts["before_job"].append(min(j[0] for j in jobs) - a0)
+        parts["driver"].append(parts["before_job"][-1] + sum(
+            e - s for k in ("getBatch", "queryPlanning") for s, e in sp[k]))
         if not acks:
             parts["no_ack"].append(epoch)
             continue
@@ -68,7 +71,8 @@ def main():
     if not parts["epoch"]:
         sys.exit(f"no epoch >= {args.first} in {args.spans}")
     print(f"{args.spans}: {len(parts['epoch'])} epochs from {args.first}")
-    for name in ("epoch", "add_batch", "before_job", "to_first_post", "sink", "after_ack"):
+    for name in ("epoch", "add_batch", "before_job", "to_first_post", "sink", "after_ack",
+                 "driver"):
         xs = parts[name]
         if xs:
             print(f"  {name:<14} p50 {statistics.median(xs):8.1f} ms  (n={len(xs)})")
