@@ -487,11 +487,11 @@ object ScaleBench {
         .unionByName(Tables.documents(spark, dir)
           .select((col("doc_id") + 800000000L).as("doc_id"), col("text"),
             lit("bb").as("lang")))
-      graft.llm.LlmOps.buildFluencyModelByLang(modelCorpus, mDir)
+      graft.llm.LlmOps.buildFluencyModel(modelCorpus, mDir, byLang = true)
       spark.sqlContext.clearCache()
       def probe(): Double = {
         val t0 = System.nanoTime()
-        graft.llm.LlmOps.fluencyStoredByLang(langBatch, mDir)
+        graft.llm.LlmOps.fluencyStored(langBatch, mDir)
           .write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
         spark.sqlContext.clearCache()

@@ -11,8 +11,16 @@ import org.apache.spark.sql.functions.{col, lit}
   * take a table's path and partition columns from here, so each layout
   * is stated once. The partition layout is also the unit of probe-side
   * pruning: a probe pins the directories its batch keys land in.
+  *
+  * A keyed table (a model family built per language, a cell table) is
+  * declared once, without its key, and written through [[keyed]]: the
+  * key's directories sit above the table's own (bucket) partitions, so
+  * the key of a table on disk is its partition columns less `parts`.
   */
 private[graft] final case class StoredTable(dir: String, parts: String*) {
+
+  /** This table with `key` partition columns in front of its own. */
+  def keyed(key: Seq[String]): StoredTable = StoredTable(dir, key ++ parts: _*)
 
   /** The table's path under the artifact root `root`. */
   def at(root: String): String = if (dir.isEmpty) root else s"$root/$dir"
@@ -44,17 +52,15 @@ private[graft] final case class StoredTable(dir: String, parts: String*) {
 private[graft] object StoredTable {
   val Grams = StoredTable("grams", "hb")
   val Bigrams = StoredTable("bigrams", "wb")
-  val BigramsByLang = StoredTable("bigrams", "lang", "wb")
   val Df = StoredTable("df", "tb")
-  val DfByLang = StoredTable("df", "lang", "tb")
   val Weights = StoredTable("w", "tb")
-  val WeightsByLang = StoredTable("w", "lang", "tb")
   val Signatures = StoredTable("signatures", "sig_bucket")
   val Bands = StoredTable("bands", "band_idx", "bk_bucket")
-  /** The ANN index's cells, partitioned by the caller's cell label. */
-  val AnnCells = StoredTable("cells", "label")
-  /** The k-means index's cells, partitioned by the trained cell. */
-  val KmCells = StoredTable("cells", "cell")
+  val Cells = StoredTable("cells")
+  /** The ANN index's cells, keyed by the caller's cell label. */
+  val AnnCells = Cells.keyed(Seq("label"))
+  /** The k-means index's cells, keyed by the trained cell. */
+  val KmCells = Cells.keyed(Seq("cell"))
   val Codes = StoredTable("codes", "label")
   val Chunks = StoredTable("chunks", "chunk_idx", "ck_bucket")
   /** The epoch-partitioned corpus the ingest loops and the delta apply
@@ -109,7 +115,6 @@ private[graft] object StoredArtifact {
   val MinHashIndex = StoredArtifact(Signatures, Bands)
   val DecontamIndex = StoredArtifact(Grams)
   val FluencyModel = StoredArtifact(Bigrams)
-  val FluencyModelByLang = StoredArtifact(BigramsByLang)
   val LmCuts = StoredArtifact(Cuts)
   val QualityModel = StoredArtifact(Weights)
   val AnnIndex = StoredArtifact(AnnCells)

@@ -93,11 +93,19 @@ object LlmOps {
     else df.repartition(cores, keys.map(col): _*)
   }
 
-  /** Canonicalize a text corpus to (doc_id, text) — and register h56,
-    * since every downstream hash interpolates it.
+  /** Canonicalize a text corpus to (doc_id, text) plus its `key` columns
+    * — and register h56, since every downstream hash interpolates it.
     */
-  private def textCorpus(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    GraftExtensions.register(df).select(col(idCol).as("doc_id"), col(textCol).as("text"))
+  private def textCorpus(df: DataFrame, idCol: String, textCol: String,
+      key: Seq[String] = Nil): DataFrame =
+    GraftExtensions.register(df).select(
+      Seq(col(idCol).as("doc_id"), col(textCol).as("text")) ++ key.map(col): _*)
+
+  /** The key of a per-language stored model family: a `byLang` build
+    * groups every count by the document's `lang` column, a global build
+    * by nothing.
+    */
+  private def keyOf(byLang: Boolean): Seq[String] = if (byLang) Seq("lang") else Nil
 
   // ------------------------------------------- harness dup-injection fixtures
 
@@ -111,28 +119,26 @@ object LlmOps {
     """SELECT doc_id, text FROM documents
       |UNION ALL SELECT doc_id + 20000000, text FROM documents WHERE doc_id % 10 = 0""".stripMargin
 
+  /** The `lang` column of a fixture's input, if it has one: the fixtures
+    * carry it, so injected copies inherit their base doc's language and
+    * the per-language model families score the same fixtures.
+    */
+  private def langOf(docs: DataFrame): Seq[Column] =
+    docs.columns.filter(_ == "lang").map(col).toSeq
+
   /** corpus ∪ near copies of every 7th doc (id +10000000, tail appended). */
   def nearDupCorpus(docs: DataFrame): DataFrame =
-    docs.select("doc_id", "text").unionByName(
+    docs.select(col("doc_id") +: col("text") +: langOf(docs): _*).unionByName(
       docs.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 10000000L).as("doc_id"),
-          concat(col("text"), lit(" graft near dup tail")).as("text")))
+        .select((col("doc_id") + 10000000L).as("doc_id") +:
+          concat(col("text"), lit(" graft near dup tail")).as("text") +:
+          langOf(docs): _*))
 
   val NearCorpusSql: String =
     """SELECT doc_id, text FROM documents
       |UNION ALL SELECT doc_id + 10000000, text || ' graft near dup tail' FROM documents WHERE doc_id % 7 = 0""".stripMargin
 
-  /** [[nearDupCorpus]] with the language label carried — injected near
-    * copies inherit their base doc's language: the fixture the
-    * PER-LANGUAGE batch funnel scores.
-    */
-  def nearDupCorpusLang(docs: DataFrame): DataFrame =
-    docs.select("doc_id", "text", "lang").unionByName(
-      docs.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 10000000L).as("doc_id"),
-          concat(col("text"), lit(" graft near dup tail")).as("text"),
-          col("lang")))
-
+  /** [[nearDupCorpus]] over a corpus that carries `lang`, in DuckDB SQL. */
   val NearCorpusLangSql: String =
     """SELECT doc_id, text, lang FROM documents
       |UNION ALL SELECT doc_id + 10000000, text || ' graft near dup tail', lang FROM documents WHERE doc_id % 7 = 0""".stripMargin
@@ -321,6 +327,56 @@ object LlmOps {
     }
     perSession.computeIfAbsent(s"$path|${ArtifactFs.fingerprint(spark, path)}",
       _ => spark.read.parquet(path))
+  }
+
+  /** A keyed stored table `t` under `root`, with its key read back from
+    * the partition columns the files carry, less `t`'s own: `lang` for a
+    * `byLang` build, none for a global one. Every probe, health read and
+    * cut rule of a model family takes its group and join keys from here,
+    * so a per-language artifact is never read as a global one.
+    */
+  private[llm] def readKeyed(spark: SparkSession, t: StoredTable,
+      root: String): (DataFrame, Seq[String]) = {
+    val stored = readStored(spark, t.at(root))
+    val parts = stored.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation match {
+          case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            r.partitionSchema.fieldNames.toSeq
+          case _ => Nil
+        }
+    }.getOrElse(Nil)
+    (stored, parts.filterNot(t.parts.contains))
+  }
+
+  /** Fails unless `batch` carries every `key` column of the artifact at
+    * `root` it is probed against.
+    */
+  private[llm] def requireKey(batch: DataFrame, key: Seq[String], root: String): Unit =
+    key.foreach(k => require(batch.columns.contains(k),
+      s"the stored model at $root is keyed by column `$k`, which the batch lacks"))
+
+  /** The key columns a curation chain over `corpus` carries: those of
+    * the stored LM and classifier it probes, each checked present.
+    */
+  private def modelKey(corpus: DataFrame, lmDir: Option[String],
+      qualityModelDir: Option[String]): Seq[String] =
+    (lmDir.map(StoredTable.Bigrams -> _) ++ qualityModelDir.map(StoredTable.Weights -> _))
+      .toSeq.flatMap { case (t, root) =>
+        val (_, key) = readKeyed(corpus.sparkSession, t, root)
+        requireKey(corpus, key, root)
+        key
+      }.distinct
+
+  /** [[pinPartitions]] of `stored` to the footprint collected in field
+    * `field` of `fp`: a set of structs whose fields are named by `parts`,
+    * the stored table's partition columns (key first, then bucket).
+    */
+  private def pinFootprint(stored: DataFrame, fp: org.apache.spark.sql.Row,
+      field: String, parts: Seq[String]): DataFrame = {
+    val rows = Option(fp.getSeq[org.apache.spark.sql.Row](fp.fieldIndex(field)))
+      .getOrElse(Seq.empty)
+    pinPartitions(stored, parts.map(c => c -> rows.map(r => r.get(r.fieldIndex(c)))): _*)
   }
 
   /** Stage-frame pin for the BATCH FUNNEL family: a LAZY checkpoint
@@ -1347,31 +1403,33 @@ object LlmOps {
         (col("f_sum") / col("n_bigrams").cast("double")).as("fluency"))
   }
 
-  /** The per-doc reduced bigram frame (doc_id, w1, w2, n) — the one
+  /** The per-doc reduced bigram frame (doc_id, key…, w1, w2, n) — the one
     * derivation [[fluencyScore]], [[buildFluencyModel]] and
     * [[fluencyStored]] all start from (single-sourced so the three can
-    * never drift on tokenization or windowing). The reduce happens
-    * entirely WITHIN each document's row: a doc's bigrams all live in
-    * its own text, so a per-row sort + run-length encode (linear after
-    * the sort) replaces a corpus-wide groupBy — the derivation is a
-    * pure scan-stage projection with no exchange, the [[signaturesOf]]
-    * discipline. Docs with fewer than two tokens have no bigrams and
-    * are absent by construction.
+    * never drift on tokenization or windowing). `key` columns ride every
+    * row: a per-language model's builder and probes pass `lang`. The
+    * reduce happens entirely WITHIN each document's row: a doc's bigrams
+    * all live in its own text, so a per-row sort + run-length encode
+    * (linear after the sort) replaces a corpus-wide groupBy — the
+    * derivation is a pure scan-stage projection with no exchange, the
+    * [[signaturesOf]] discipline. Docs with fewer than two tokens have
+    * no bigrams and are absent by construction.
     */
-  def docBigrams(corpus: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
+  private[graft] def docBigrams(corpus: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text", key: Seq[String] = Nil): DataFrame =
     // the fused [[graft.functions.BigramRle]] expression: split →
     // adjacent pairs → sort → run-length encode in one imperative pass
     // per row (row-set identical to the five-lambda SQL chain it
     // replaced — see the expression's scaladoc; equivalence spec'd).
     // Docs with fewer than two tokens yield an empty array and vanish
     // at the explode, the old filter's semantics.
-    textCorpus(corpus, idCol, textCol)
-      .select(col("doc_id"), explode(expr("bigram_rle(text)")).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"),
-        col("bg.w2").as("w2"), col("bg.n").as("n"))
+    textCorpus(corpus, idCol, textCol, key)
+      .select(col("doc_id") +: key.map(col) :+
+        explode(expr("bigram_rle(text)")).as("bg"): _*)
+      .select(col("doc_id") +: key.map(col) :+ col("bg.w1").as("w1") :+
+        col("bg.w2").as("w2") :+ col("bg.n").as("n"): _*)
 
-  /** The per-doc reduced token-frequency frame (doc_id, tok, tf) —
+  /** The per-doc reduced token-frequency frame (doc_id, key…, tok, tf) —
     * [[docBigrams]]' unigram sibling, the one derivation every
     * token-weight scorer starts from: the reduce happens entirely WITHIN
     * each document's row ([[graft.functions.TokenRle]] — a doc's tokens
@@ -1381,11 +1439,13 @@ object LlmOps {
     * mass side of a matched-only fold stays derivable from the same
     * split.
     */
-  def docTokens(corpus: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    textCorpus(corpus, idCol, textCol)
-      .select(col("doc_id"), explode(expr("token_rle(text)")).as("tk"))
-      .select(col("doc_id"), col("tk.tok").as("tok"), col("tk.tf").as("tf"))
+  private[graft] def docTokens(corpus: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text", key: Seq[String] = Nil): DataFrame =
+    textCorpus(corpus, idCol, textCol, key)
+      .select(col("doc_id") +: key.map(col) :+
+        explode(expr("token_rle(text)")).as("tk"): _*)
+      .select(col("doc_id") +: key.map(col) :+ col("tk.tok").as("tok") :+
+        col("tk.tf").as("tf"): _*)
 
   // ----------------------------------------------- stored fluency model
 
@@ -1407,6 +1467,17 @@ object LlmOps {
     * join instead of two. Directory-partitioned by `wb = [[lmBucket]]`
     * so a probe prunes to its batch's bucket footprint.
     *
+    * `byLang` builds CCNet's actual regime (Wenzek et al. 2019 train one
+    * KenLM per language; a single global bar systematically mis-scores
+    * minority languages because transition mass concentrates in the
+    * majority language's vocabulary): every count and prefix total is
+    * taken WITHIN the corpus' `lang` column (c1 = Σ_w2 c2 per (lang,
+    * w1)), so a document scores under ITS OWN language's model, and the
+    * table is partitioned by (lang, wb) — a probe prunes to its batch's
+    * (language, bucket) footprint and reads the key back from those
+    * directories. `lang` is the upstream lang-id label (compose
+    * [[TextAnalysis.langId]] when the corpus carries none).
+    *
     * `minCount` prunes rare bigrams (the classic KenLM size control —
     * the hapax tail dominates table size under Zipf) AFTER the prefix
     * totals are taken, so c1 keeps the full mass and surviving
@@ -1426,41 +1497,46 @@ object LlmOps {
     */
   def buildFluencyModel(corpus: DataFrame, dir: String,
       idCol: String = "doc_id", textCol: String = "text",
-      minCount: Long = 1L): Unit = {
-    val bg = docBigrams(corpus, idCol, textCol)
-      .groupBy("w1", "w2").agg(sum(col("n")).as("c2"))
-      .withColumn("c1", sum(col("c2")).over(Window.partitionBy("w1")))
+      minCount: Long = 1L, byLang: Boolean = false): Unit = {
+    val key = keyOf(byLang)
+    val bg = docBigrams(corpus, idCol, textCol, key)
+      .groupBy((key :+ "w1" :+ "w2").map(col): _*).agg(sum(col("n")).as("c2"))
+      .withColumn("c1",
+        sum(col("c2")).over(Window.partitionBy((key :+ "w1").map(col): _*)))
       .filter(col("c2") >= minCount)
       .withColumn("wb", lmBucket(col("w1")))
-    graft.cdc.Compaction.swapDir(dir)(StoredTable.Bigrams.write(bg, _))
+    graft.cdc.Compaction.swapDir(dir)(StoredTable.Bigrams.keyed(key).write(bg, _))
   }
 
   /** The LM probe's one-row eager payload over `docs`: total token count
-    * (`toks` — the size-gate bound) and the distinct token-bucket set
-    * (`buckets` — the partition-pruning footprint, ≤ [[LmBuckets]]
-    * values). Exposed so an orchestrator running SEVERAL stored probes
-    * over one batch ([[curateDelta]]) can crossJoin the probes'
+    * (`toks` — the size-gate bound) and the distinct (key…, token-bucket)
+    * set (`buckets` — the partition-pruning footprint, ≤ [[LmBuckets]]
+    * values per key). Exposed so an orchestrator running SEVERAL stored
+    * probes over one batch ([[curateDelta]]) can crossJoin the probes'
     * footprint aggregates into ONE driver-blocking job — each eager
     * barrier is a full sequential stage chain, and fusing them is where
     * the latency goes. See [[fluencyStored]] for why the shape is
-    * size-independent.
+    * size-independent. `key` is the probed model's key.
     */
-  def lmFpAgg(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    textCorpus(docs, idCol, textCol)
-      .select(size(split(col("text"), " ")).cast("bigint").as("k"),
+  private[graft] def lmFpAgg(docs: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text", key: Seq[String] = Nil): DataFrame =
+    textCorpus(docs, idCol, textCol, key)
+      .select(key.map(col) :+ size(split(col("text"), " ")).cast("bigint").as("k") :+
         // the lambda restates [[lmBucket]] in SQL text (a lambda body
         // can't call the Column form): `hash` is the same Murmur3
         // expression in both dialects, and LmBuckets is interpolated —
         // keep the two in lockstep
-        expr(s"array_distinct(transform(split(text, ' '), w -> pmod(hash(w), $LmBuckets)))").as("bs"))
-      .select(col("k"), posexplode(col("bs")).as(Seq("p", "b")))
+        expr(s"array_distinct(transform(split(text, ' '), w -> pmod(hash(w), $LmBuckets)))").as("bs"): _*)
+      .select(key.map(col) :+ col("k") :+ posexplode(col("bs")).as(Seq("p", "b")): _*)
       .agg(sum(when(col("p") === 0, col("k"))).as("toks"),
-        collect_set(col("b")).as("buckets"))
+        collect_set(struct(key.map(col) :+ col("b").as("wb"): _*)).as("buckets"))
 
   /** Score `docs` against a STORED [[buildFluencyModel]] artifact — the
     * production fluency probe: the model is never re-derived, the batch
-    * joins one-sidedly against the frozen table. Bit-identical to
+    * joins one-sidedly against the frozen table. The model's key (`lang`
+    * for a `byLang` build) is read back from its partition columns: each
+    * document then scores under its own key's model, the output carries
+    * the key, and a batch without the key column fails. Bit-identical to
     * [[fluencyScore]] when the model was built (unpruned) on the scored
     * corpus itself — same integers, same value-sorted fold (spec'd); on
     * NEW text, a bigram the model never saw contributes probability 0
@@ -1470,22 +1546,23 @@ object LlmOps {
     * disfluency under the reference corpus, which is the filter's
     * semantics.
     *
-    * 100 TB shape: the batch's bucket footprint (≤ [[LmBuckets]] values,
-    * driver-safe at any batch size) pins a static partition filter on the
-    * model scan — the stored-LSH-probe discipline — and the batch side
-    * carries a size-gated broadcast hint ([[GateBroadcastMaxRows]]), so
-    * an ingest micro-batch streams the pruned model directories with no
-    * model-side shuffle, while a corpus-sized backfill drops the hint and
-    * AQE decides. The unmatched side is recovered without any outer join
-    * (a left join would need the model as the build side of an outer
-    * join — unsupported broadcast-left shape): matched probability terms
-    * union with the batch's own mass rows and ONE per-doc aggregation
-    * folds both; the mass rows are a plain `size(t)-1` projection, so
-    * only the probability join ever pays the bigram encode
-    * ([[docBigrams]] — in-row RLE, no reduce shuffle). Model cost
-    * is bounded by `minCount` pruning at build time, and the artifact is
-    * generation-frozen: probe cost tracks model size and batch
-    * footprint, never the (growing) ingested corpus.
+    * 100 TB shape: the batch's (key, bucket) footprint (≤ [[LmBuckets]]
+    * values per key, driver-safe at any batch size) pins a static
+    * partition filter on the model scan — the stored-LSH-probe
+    * discipline — and the batch side carries a size-gated broadcast hint
+    * ([[GateBroadcastMaxRows]]), so an ingest micro-batch streams the
+    * pruned model directories with no model-side shuffle, while a
+    * corpus-sized backfill drops the hint and AQE decides. The unmatched
+    * side is recovered without any outer join (a left join would need
+    * the model as the build side of an outer join — unsupported
+    * broadcast-left shape): matched probability terms union with the
+    * batch's own mass rows and ONE per-doc aggregation folds both; the
+    * mass rows are a plain `size(t)-1` projection, so only the
+    * probability join ever pays the bigram encode ([[docBigrams]] —
+    * in-row RLE, no reduce shuffle). Model cost is bounded by `minCount`
+    * pruning at build time, and the artifact is generation-frozen: probe
+    * cost tracks model size and batch footprint, never the (growing)
+    * ingested corpus.
     *
     * Harness-scale note (measured at sf0.1, 500-doc batch, REPS=5
     * medians): ~0.95 s vs the oracle's ~0.1 s is chained-stage fixed
@@ -1501,68 +1578,79 @@ object LlmOps {
   def fluencyStored(docs: DataFrame, modelDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       fpRow: Option[org.apache.spark.sql.Row] = None): DataFrame = {
+    val (model, key) = readKeyed(docs.sparkSession, StoredTable.Bigrams, modelDir)
+    requireKey(docs, key, modelDir)
     // ONE light eager job (a single-row aggregate, [[lmFpAgg]]) derives
     // the bucket footprint and the size gate from in-row projections:
     // per-doc bucket sets dedup inside the row (≤ LmBuckets elements
     // each), then posexplode + collect_set reduce them through a merge
-    // buffer BOUNDED at LmBuckets values — partial aggregation collapses
-    // each partition to ≤ 64 distinct buckets before anything crosses
-    // the wire, so the job is size-independent in doc count (not just in
-    // its final result). The token total rides the same job: only a
-    // row's pos-0 bucket carries its doc's k, so the sum counts each
-    // doc exactly once. No bigram shuffle, nothing cached — the bigram
-    // frame's two consumers (probability join, mass rows) share their
-    // one shuffle through exchange reuse, the llm_keywords lesson.
-    // Every w1 is a token, so token buckets are a superset of prefix
-    // buckets (pruning stays sound, at most one extra directory opens),
-    // and the token count bounds the bigram-row count from above (the
-    // gate only ever degrades toward the safe, unhinted side).
-    // An orchestrator that already fused this aggregate into its own
-    // eager job passes the row in ([[curateDelta]]'s fused collect) and
-    // no job runs here at all — name-based field access, so the row may
-    // carry other probes' footprint fields alongside.
-    val fp = fpRow.getOrElse(lmFpAgg(docs, idCol, textCol).collect()(0))
-    // per-doc totals need NO bigram encode: a doc's bigram mass is
-    // size(t)-1, read straight off its own row
-    val mass = textCorpus(docs, idCol, textCol)
+    // buffer BOUNDED at LmBuckets values per key — partial aggregation
+    // collapses each partition to its distinct (key, bucket) pairs
+    // before anything crosses the wire, so the job is size-independent
+    // in doc count (not just in its final result). The token total rides
+    // the same job: only a row's pos-0 bucket carries its doc's k, so
+    // the sum counts each doc exactly once. No bigram shuffle, nothing
+    // cached — the bigram frame's two consumers (probability join, mass
+    // rows) share their one shuffle through exchange reuse, the
+    // llm_keywords lesson. Every w1 is a token, so token buckets are a
+    // superset of prefix buckets (pruning stays sound, at most one extra
+    // directory opens per key), and the token count bounds the
+    // bigram-row count from above (the gate only ever degrades toward
+    // the safe, unhinted side). An orchestrator that already fused this
+    // aggregate into its own eager job passes the row in
+    // ([[curateDelta]]'s fused collect) and no job runs here at all —
+    // name-based field access, so the row may carry other probes'
+    // footprint fields alongside.
+    val fp = fpRow.getOrElse(lmFpAgg(docs, idCol, textCol, key).collect()(0))
+    probeStored(
+      gateBroadcast(docBigrams(docs, idCol, textCol, key), fpCount(fp, "toks")),
+      lmMass(docs, idCol, textCol, key),
+      pinFootprint(model, fp, "buckets", key :+ "wb"), key)
+  }
+
+  /** The probe's per-doc mass rows (doc_id, key…, v=null, nn): a doc's
+    * bigram total needs NO bigram encode — it is size(t)-1, read straight
+    * off its own row; docs with fewer than two tokens have none.
+    */
+  private def lmMass(docs: DataFrame, idCol: String, textCol: String,
+      key: Seq[String]): DataFrame =
+    textCorpus(docs, idCol, textCol, key)
       .withColumn("t", split(col("text"), " "))
       .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), lit(null).cast("double").as("v"),
-        (size(col("t")) - 1).cast("bigint").as("nn"))
-    probeStored(gateBroadcast(docBigrams(docs, idCol, textCol), fpCount(fp, "toks")),
-      mass, modelDir,
-      Option(fp.getSeq[Int](fp.fieldIndex("buckets"))).getOrElse(Seq.empty))
-  }
+      .select(col("doc_id") +: key.map(col) :+ lit(null).cast("double").as("v") :+
+        (size(col("t")) - 1).cast("bigint").as("nn"): _*)
 
   /** [[fluencyStored]] over a caller-derived (caller-persisted,
-    * caller-released) [[docBigrams]] frame — the form the ingest gate
-    * uses when the epoch already owns a shared bigram cache. The
-    * footprint job here reads `bg` itself (materializing the caller's
-    * cache as a side effect).
+    * caller-released) [[docBigrams]] frame carrying the model's key — the
+    * form the ingest gate uses when the epoch already owns a shared
+    * bigram cache. The footprint job here reads `bg` itself
+    * (materializing the caller's cache as a side effect).
     */
   def fluencyStoredFrom(bg: DataFrame, modelDir: String): DataFrame = {
-    // static partition pruning off the batch's bounded bucket footprint
-    // (≤ LmBuckets values, [[pinPartitions]]). ONE eager job derives
-    // the footprint AND the size-gate row count.
-    val bucketCounts = bg.groupBy(lmBucket(col("w1")).as("wb"))
-      .agg(count(lit(1)).as("c")).collect()
-    probeStored(gateBroadcast(bg, bucketCounts.map(_.getLong(1)).sum),
-      bg.select(col("doc_id"), lit(null).cast("double").as("v"),
-        col("n").as("nn")),
-      modelDir, bucketCounts.map(_.getInt(0)).toSeq)
+    val (model, key) = readKeyed(bg.sparkSession, StoredTable.Bigrams, modelDir)
+    requireKey(bg, key, modelDir)
+    // static partition pruning off the batch's bounded (key, bucket)
+    // footprint ([[pinPartitions]]). ONE eager job derives the footprint
+    // AND the size-gate row count.
+    val fp = bg.agg(
+        collect_set(struct(key.map(col) :+ lmBucket(col("w1")).as("wb"): _*)).as("buckets"),
+        count(lit(1)).as("n"))
+      .collect()(0)
+    probeStored(gateBroadcast(bg, fpCount(fp, "n")),
+      bg.select(col("doc_id") +: key.map(col) :+ lit(null).cast("double").as("v") :+
+        col("n").as("nn"): _*),
+      pinFootprint(model, fp, "buckets", key :+ "wb"), key)
   }
 
-  /** The probe's shared tail: `bg` the batch's reduced (doc_id, w1, w2,
-    * n) bigram rows (fed to the probability join), `mass` the per-doc
-    * totals as (doc_id, v=null, nn) rows — the [[fluencyStored]] path
-    * derives them as a plain `size(t)-1` projection (no bigram encode at
-    * all), the From variant re-reads its caller's cached frame. `bg`
-    * arrives with the caller's broadcast decision already applied
-    * ([[gateBroadcast]]).
+  /** The probe's shared tail: `bg` the batch's reduced (doc_id, key…, w1,
+    * w2, n) bigram rows (fed to the probability join), `mass` the per-doc
+    * totals as (doc_id, key…, v=null, nn) rows — [[lmMass]] for the
+    * [[fluencyStored]] path, the From variant re-reads its caller's
+    * cached frame. `bg` arrives with the caller's broadcast decision already
+    * applied ([[gateBroadcast]]), `model` with its partition pins.
     */
-  private def probeStored(bg: DataFrame, mass: DataFrame, modelDir: String,
-      buckets: Seq[Int]): DataFrame = {
-    val spark = bg.sparkSession
+  private def probeStored(bg: DataFrame, mass: DataFrame, model: DataFrame,
+      key: Seq[String]): DataFrame = {
     // NO row-level model pruning beyond the bucket pins: semi-joining
     // the model against the batch's distinct-w1 set first (the "let the
     // churn's prefixes prune the weight rows" idea) was measured WORSE
@@ -1573,8 +1661,7 @@ object LlmOps {
     // second join stage to save hash lookups that cost nothing. At
     // production scale the wb partition pins bound what is read; rows
     // within probed buckets are cheapest dropped AT the join.
-    val model = pinPartitions(readStored(spark, StoredTable.Bigrams.at(modelDir)),
-      "wb" -> buckets)
+    //
     // ONE aggregation serves both outputs: matched rows carry their
     // probability term (and 0 bigram mass), each mass row its doc's
     // bigram total (and a null term that collect_list skips) — so the
@@ -1582,135 +1669,159 @@ object LlmOps {
     // own counts, and a doc with no modeled transition folds an empty
     // list to 0.0. No per-doc outer join, no coalesce: the union is the
     // unmatched-recovery.
-    val matched = model.join(bg, Seq("w1", "w2"))
-      .select(col("doc_id"),
+    val matched = model.join(bg, key :+ "w1" :+ "w2")
+      .select(col("doc_id") +: key.map(col) :+
         (col("n").cast("double") *
-          (col("c2").cast("double") / col("c1").cast("double"))).as("v"),
-        lit(0L).as("nn"))
+          (col("c2").cast("double") / col("c1").cast("double"))).as("v") :+
+        lit(0L).as("nn"): _*)
     matched.unionByName(mass)
-      .groupBy("doc_id")
+      .groupBy((col("doc_id") +: key.map(col)): _*)
       .agg(sum(col("nn")).as("n_bigrams"),
         expr("aggregate(array_sort(collect_list(v)), cast(0.0 as double), (a, x) -> a + x)")
           .as("f_sum"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (col("f_sum") / col("n_bigrams").cast("double")).as("fluency"))
+      .select(col("doc_id") +: key.map(col) :+ col("n_bigrams") :+
+        (col("f_sum") / col("n_bigrams").cast("double")).as("fluency"): _*)
   }
 
   /** Health gauge for a stored [[buildFluencyModel]] artifact — size and
-    * mass in one row: distinct prefixes (vocabulary), stored bigram rows
-    * (what `minCount` pruning is bounding), total transition mass, and
-    * the hottest prefix's mass (a skew early-warning: one w1 owning a
-    * huge share means its bucket's directories dominate probe cost).
-    * Maintenance-cadence read of the stored table, never in the probe
-    * path.
+    * mass in one row per key (one row for a global model, one per
+    * language for a `byLang` one, so a collapsed minority-language model
+    * — a handful of rows, vanishing mass, the failure a global total
+    * averages away — reads as its own row): distinct prefixes
+    * (vocabulary), stored bigram rows (what `minCount` pruning is
+    * bounding), total transition mass, and the hottest prefix's mass (a
+    * skew early-warning: one w1 owning a huge share means its bucket's
+    * directories dominate probe cost). Maintenance-cadence read of the
+    * stored table, never in the probe path.
     */
-  def lmStats(spark: SparkSession, modelDir: String): DataFrame =
-    readStored(spark, StoredTable.Bigrams.at(modelDir))
+  def lmStats(spark: SparkSession, modelDir: String): DataFrame = {
+    val (model, key) = readKeyed(spark, StoredTable.Bigrams, modelDir)
+    model.groupBy(key.map(col): _*)
       .agg(countDistinct(col("w1")).as("n_prefixes"),
         count(lit(1)).as("n_bigrams"),
         sum(col("c2")).as("total_mass"),
         max(col("c1")).as("max_prefix_mass"))
+  }
 
-  /** PER-LANGUAGE health of a stored [[buildFluencyModelByLang]]
-    * artifact — the read [[lmStats]] cannot provide: the same four
-    * aggregates grouped by language over the (lang, wb)-partitioned
-    * table, so a collapsed minority-language model (a handful of rows,
-    * vanishing mass — the exact failure the per-language family exists
-    * to prevent, and one a global total averages away) reads as its own
-    * row. One combinable groupBy on the partition column itself
-    * (languages number in the dozens — bounded output); maintenance-
-    * cadence scan of the artifact, never in the probe path.
+  /** Largest per-key calibration sample [[buildLmPartitioner]] scores:
+    * the [[SamplerHeapMaxK]] rationale (a 64k-entry heap ≈ 1 MiB per key
+    * buffer), and 64k docs per key estimate a tercile bar far inside the
+    * noise of the slice itself.
     */
-  def lmStatsLang(spark: SparkSession, modelDir: String): DataFrame =
-    readStored(spark, StoredTable.BigramsByLang.at(modelDir))
-      .groupBy(col("lang"))
-      .agg(countDistinct(col("w1")).as("n_prefixes"),
-        count(lit(1)).as("n_bigrams"),
-        sum(col("c2")).as("total_mass"),
-        max(col("c1")).as("max_prefix_mass"))
+  val LmCalibMaxPerLang = 65536
+
+  /** The ABSOLUTE-BOUNDED calibration slice: the `refMod` sample capped
+    * at `maxPerLang` docs per `key` value — bottom-k by a salted 56-bit
+    * id hash via the bounded-buffer [[graft.functions.MinKAgg]] (heaps
+    * combine map-side; nothing larger than the cap crosses the wire),
+    * ids joined back by semi join. At 100 TB a fraction-only slice puts
+    * 10% of the majority language behind the rank window — the cap
+    * bounds both the scoring cost and the window's largest partition by
+    * a CONSTANT, not a corpus fraction. When the cap exceeds a key's
+    * slice the selection is the identity and the frozen cuts are
+    * unchanged (spec'd).
+    */
+  private[graft] def lmCalibSlice(corpus: DataFrame, key: Seq[String],
+      refMod: Int = 10, maxPerLang: Int = LmCalibMaxPerLang,
+      idCol: String = "doc_id"): DataFrame = {
+    val slice = corpus.filter(col(idCol) % refMod === 0)
+    val picked = GraftExtensions.register(slice)
+      .select(key.map(col) :+ col(idCol).cast("bigint").as("did") :+
+        expr(h56(s"concat('lmcal|', cast($idCol as string))")).as("pri"): _*)
+      .groupBy(key.map(col): _*)
+      .agg(graft.functions.MinKAgg.udf(maxPerLang)(
+        col("pri"), col("did")).as("mins"))
+      .select(posexplode(col("mins")).as(Seq("i", "pv")))
+      .select(col("pv._2").as("did"))
+    slice.join(picked, col(idCol) === col("did"), "left_semi")
+  }
 
   /** Calibrate a CCNet-style head/middle/tail partitioner (Wenzek et
     * al. 2019) and freeze it as a stored artifact: the calibration
-    * slice scores against the stored reference LM, its exact tercile
+    * slice scores against the stored reference LM, and its exact tercile
     * cut TUPLES (k-th smallest (fluency, doc_id), k = ceil(n/3) and
-    * ceil(2n/3)) land in a one-row `cuts` parquet under `dir` via the
-    * same atomic [[graft.cdc.Compaction.swapDir]] every other artifact
-    * rebuild uses. CCNet computes its perplexity cutoffs OFFLINE on a
-    * held-out sample and applies them statelessly ever after — the cuts
-    * are maintenance-cadence, never on the scoring path.
+    * ceil(2n/3)) land in a `cuts` parquet under `dir` via the same
+    * atomic [[graft.cdc.Compaction.swapDir]] every other artifact
+    * rebuild uses — one row per key of the model (one row for a global
+    * model; per language for a `byLang` one, so minority languages get
+    * their own bar instead of the majority's). CCNet computes its
+    * perplexity cutoffs OFFLINE on a held-out sample and applies them
+    * statelessly ever after — the cuts are maintenance-cadence, never on
+    * the scoring path.
     *
-    * The calibration slice is bounded BY DESIGN (an eval-suite-sized
-    * held-out sample — the `refMod` slice is the harness stand-in, the
-    * recall-gauge discipline), so its probe partition-prunes off the
-    * slice's bucket footprint and the two cut tuples are sort-limits
-    * over a bounded frame. Tuple ties break on doc_id; the fluency
-    * doubles are the probe's value-sorted fold — bit-identical
-    * cross-engine, so an oracle restating the ranks agrees exactly.
+    * The calibration slice is bounded BY DESIGN: the `refMod` sample
+    * capped at `maxPerLang` docs per key ([[lmCalibSlice]]), so both the
+    * scoring pass and the rank window's largest partition are bounded
+    * by the cap, never a corpus fraction, and its probe partition-prunes
+    * off the slice's bucket footprint. Tuple ties break on doc_id; the
+    * fluency doubles are the probe's value-sorted fold — bit-identical
+    * cross-engine, so an oracle restating the ranks agrees exactly; a
+    * cap above the slice size leaves them byte-identical to the
+    * uncapped build.
     */
   def buildLmPartitioner(corpus: DataFrame, modelDir: String, dir: String,
-      refMod: Int = 10, idCol: String = "doc_id",
-      textCol: String = "text"): Unit = {
-    val ref = fluencyStored(
-        corpus.filter(col(idCol) % refMod === 0), modelDir, idCol, textCol)
-      .select(col("doc_id"), col("fluency"))
+      refMod: Int = 10, idCol: String = "doc_id", textCol: String = "text",
+      maxPerLang: Int = LmCalibMaxPerLang): Unit = {
+    val (_, key) = readKeyed(corpus.sparkSession, StoredTable.Bigrams, modelDir)
+    requireKey(corpus, key, modelDir)
+    val ref = fluencyStored(lmCalibSlice(corpus, key, refMod, maxPerLang, idCol),
+        modelDir, idCol, textCol)
+      .select(col("doc_id") +: key.map(col) :+ col("fluency"): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cnt = ref.count()
-    require(cnt > 0, s"empty calibration slice ($idCol % $refMod)")
-    // cutAt's limit(k.toInt) truncates: an over-Int calibration slice
-    // must fail loudly, not produce corrupt tercile cuts (a calibration
-    // SAMPLE this size is itself a configuration error — raise refMod)
-    require(cnt <= Int.MaxValue,
-      s"calibration slice too large ($cnt rows): raise refMod so the " +
-        "sample fits limit()'s Int bound")
-    def cutAt(k: Long, as: String): DataFrame =
-      ref.orderBy(col("fluency"), col("doc_id")).limit(k.toInt)
-        .agg(max(struct(col("fluency"), col("doc_id"))).as(as))
-    graft.cdc.Compaction.swapDir(dir)(StoredTable.Cuts.write(
-      cutAt((cnt + 2) / 3, "c1").crossJoin(cutAt((2 * cnt + 2) / 3, "c2"))
-        .select(col("c1.fluency").as("f1"), col("c1.doc_id").as("d1"),
-          col("c2.fluency").as("f2"), col("c2.doc_id").as("d2")), _))
+    require(ref.limit(1).count() > 0,
+      s"empty calibration slice ($idCol % $refMod)")
+    val w = Window.partitionBy(key.map(col): _*).orderBy(col("fluency"), col("doc_id"))
+    val cnts = ref.groupBy(key.map(col): _*).agg(count(lit(1)).as("cnt"))
+    val cuts = ref.withColumn("rnk", row_number().over(w).cast("bigint"))
+      .join(broadcast(cnts), key)
+      .withColumn("k1", expr("(cnt + 2) div 3"))
+      .withColumn("k2", expr("(2 * cnt + 2) div 3"))
+      .filter(col("rnk") === col("k1") || col("rnk") === col("k2"))
+      .groupBy(key.map(col): _*)
+      .agg(
+        max(when(col("rnk") === col("k1"),
+          struct(col("fluency"), col("doc_id")))).as("c1"),
+        max(when(col("rnk") === col("k2"),
+          struct(col("fluency"), col("doc_id")))).as("c2"))
+      .select(key.map(col) ++ Seq(col("c1.fluency").as("f1"),
+        col("c1.doc_id").as("d1"), col("c2.fluency").as("f2"),
+        col("c2.doc_id").as("d2")): _*)
+    graft.cdc.Compaction.swapDir(dir)(StoredTable.Cuts.write(cuts, _))
     ref.unpersist()
   }
 
-  /** Apply a stored [[buildLmPartitioner]]: every document scores
-    * against the stored reference LM and lands in `tail` (below the
-    * frozen first cut — the least fluent reference-third), `middle`, or
-    * `head` by threshold comparison. Corpus buckets are NOT equal-sized
-    * — that is the point: the thresholds describe the CALIBRATION
-    * distribution, and a corpus cleaner (or dirtier) than the held-out
-    * sample skews toward `head` (or `tail`).
-    *
-    * 100 TB shape: ONE probe pass, stateless ever after. Corpus-wide
-    * scoring visits every model bucket by construction, so no footprint
-    * job runs and no broadcast hint applies (the batch IS the corpus) —
-    * [[probeStored]] scans the full model and AQE picks the join build
-    * side; the cut row is the frozen artifact (two tuples — collected
-    * like the BPE merge table, artifact-sized by definition) and the
-    * bucket CASE is a literal struct comparison fused into the probe's
-    * output projection. No global sort, no window, no second pass.
-    */
-  /** The frozen cut tuples as literal comparison structs — one reader
-    * shared by every surface that applies a [[buildLmPartitioner]]
-    * artifact (field names must mirror the probe side's
+  /** The head/middle/tail label over a scored (doc_id, key…, fluency) row
+    * under the frozen cuts at `cutsDir` — the ONE bucket definition
+    * [[lmPartition]], [[lmPartitionApply]] and the live loop's cuts gate
+    * all fuse (single-sourced so the surfaces can never drift on tie
+    * handling). The cuts table is artifact-sized (one row per key), so
+    * its rows become literal comparison structs in one CASE — no join;
+    * the key columns are the table's columns other than the cut tuples.
+    * A row whose key has no cuts (a language absent from the
+    * calibration slice — a tiny minority under a sparse `refMod`, the
+    * very language the per-language bar protects) lands in `head`, the
+    * keep bucket under [[ccnetKeep]]: an uncalibrated language is
+    * retained, never dropped. Field names mirror the probe side's
     * struct(fluency, doc_id): struct comparison requires same-named
-    * field types).
+    * field types.
     */
-  private def lmCutStructs(spark: SparkSession,
-      cutsDir: String): (Column, Column) = {
-    val c = readStored(spark, StoredTable.Cuts.at(cutsDir)).collect()(0)
-    (struct(lit(c.getDouble(0)).as("fluency"), lit(c.getLong(1)).as("doc_id")),
-      struct(lit(c.getDouble(2)).as("fluency"), lit(c.getLong(3)).as("doc_id")))
+  private def lmBucketCol(spark: SparkSession, cutsDir: String): (Seq[String], Column) = {
+    val cuts = readStored(spark, StoredTable.Cuts.at(cutsDir))
+    val key = cuts.columns.toSeq.filterNot(Set("f1", "d1", "f2", "d2"))
+    val scored = struct(col("fluency"), col("doc_id"))
+    def cut(f: Double, d: Long): Column =
+      struct(lit(f).as("fluency"), lit(d).as("doc_id"))
+    val bucket = cuts.collect().foldRight(lit("head")) { (c, rest) =>
+      val own = key.map(k => col(k) === lit(c.getAs[Any](k))).reduceOption(_ && _)
+        .getOrElse(lit(true))
+      when(own,
+        when(scored <= cut(c.getAs[Double]("f1"), c.getAs[Long]("d1")), lit("tail"))
+          .when(scored <= cut(c.getAs[Double]("f2"), c.getAs[Long]("d2")), lit("middle"))
+          .otherwise(lit("head")))
+        .otherwise(rest)
+    }
+    (key, bucket)
   }
-
-  /** The head/middle/tail label over a scored (doc_id, fluency) row —
-    * the ONE bucket definition [[lmPartition]], [[lmPartitionApply]]
-    * and the live loop's cuts gate all fuse (single-sourced so the
-    * surfaces can never drift on tie handling).
-    */
-  private def lmBucketCol(cut1: Column, cut2: Column): Column =
-    when(struct(col("fluency"), col("doc_id")) <= cut1, lit("tail"))
-      .when(struct(col("fluency"), col("doc_id")) <= cut2, lit("middle"))
-      .otherwise(lit("head"))
 
   /** The CCNet selection predicate over a bucketed row: keep the `head`
     * whole, keep `midPermille`/1000 of the `middle` by salted doc-id
@@ -1722,19 +1833,34 @@ object LlmOps {
       expr(s"${h56("concat('lmsamp|', cast(doc_id as string))")} % 1000")
         < midPermille)
 
+  /** Apply a stored [[buildLmPartitioner]]: every document scores
+    * against the stored reference LM (under its own key's model) and
+    * lands in `tail` (below its key's frozen first cut — the least
+    * fluent reference-third), `middle`, or `head` by threshold
+    * comparison. Corpus buckets are NOT equal-sized — that is the point:
+    * the thresholds describe the CALIBRATION distribution, and a corpus
+    * cleaner (or dirtier) than the held-out sample skews toward `head`
+    * (or `tail`).
+    *
+    * 100 TB shape: ONE probe pass, stateless ever after. Corpus-wide
+    * scoring visits every model directory by construction, so no
+    * footprint job runs and no broadcast hint applies (the batch IS the
+    * corpus) — [[probeStored]] scans the full model and AQE picks the
+    * join build side; the cut rows are the frozen artifact (collected
+    * like the BPE merge table, artifact-sized by definition) and the
+    * bucket CASE is a literal struct comparison fused into the probe's
+    * output projection ([[lmBucketCol]]). No global sort, no window, no
+    * second pass.
+    */
   def lmPartition(corpus: DataFrame, modelDir: String, cutsDir: String,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = corpus.sparkSession
-    val (cut1, cut2) = lmCutStructs(spark, cutsDir)
-    val mass = textCorpus(corpus, idCol, textCol)
-      .withColumn("t", split(col("text"), " "))
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), lit(null).cast("double").as("v"),
-        (size(col("t")) - 1).cast("bigint").as("nn"))
-    probeStored(docBigrams(corpus, idCol, textCol), mass, modelDir,
-        0 until LmBuckets)
-      .select(col("doc_id"), col("fluency"),
-        lmBucketCol(cut1, cut2).as("bucket"))
+    val (model, key) = readKeyed(spark, StoredTable.Bigrams, modelDir)
+    requireKey(corpus, key, modelDir)
+    val (_, bucket) = lmBucketCol(spark, cutsDir)
+    probeStored(docBigrams(corpus, idCol, textCol, key),
+        lmMass(corpus, idCol, textCol, key), model, key)
+      .select(col("doc_id") +: key.map(col) :+ col("fluency") :+ bucket.as("bucket"): _*)
   }
 
   /** Terminal materialization of the stored partition — the CCNet
@@ -1752,22 +1878,22 @@ object LlmOps {
   }
 
   /** The frozen-cuts CCNet selection applied to an ALREADY-SCORED
-    * (doc_id, fluency) frame — the rule [[lmPartitionApply]] fuses onto
-    * its own corpus-wide probe, exposed so the live ingest loop can
+    * (doc_id, key…, fluency) frame — the rule [[lmPartitionApply]] fuses
+    * onto its own corpus-wide probe, exposed so the live ingest loop can
     * apply the SAME artifact (same bucket ties, same salted middle
     * sample) to its per-epoch footprint-pruned score without a second
-    * scoring pass. Returns the kept doc_id frame. Stateless: the cuts
-    * row is a frozen two-tuple artifact, the sample hash is
-    * deterministic in the id — a replayed epoch selects identically,
-    * zero new crash windows.
+    * scoring pass. Returns the kept doc_id frame. Stateless: the cut
+    * rows are a frozen artifact, the sample hash is deterministic in the
+    * id — a replayed epoch selects identically, zero new crash windows.
     */
   def lmSelectIdsFrom(scored: DataFrame, cutsDir: String,
       midPermille: Int = 500): DataFrame = {
     require(midPermille >= 0 && midPermille <= 1000,
       "midPermille is a per-mille keep rate in [0, 1000]")
-    val (cut1, cut2) = lmCutStructs(scored.sparkSession, cutsDir)
+    val (key, bucket) = lmBucketCol(scored.sparkSession, cutsDir)
+    requireKey(scored, key, cutsDir)
     GraftExtensions.register(scored)
-      .withColumn("bucket", lmBucketCol(cut1, cut2))
+      .withColumn("bucket", bucket)
       .filter(ccnetKeep(midPermille))
       .select(col("doc_id"))
   }
@@ -1782,280 +1908,6 @@ object LlmOps {
     * back → per-doc window top-k. Ties break on the token string so both
     * engines agree.
     */
-  // ------------------------------ per-language stored fluency models
-
-  /** [[docBigrams]] with the document's language label riding every
-    * bigram row — the derivation the per-language model family shares.
-    */
-  private[llm] def docBigramsLang(corpus: DataFrame, idCol: String,
-      textCol: String, langCol: String): DataFrame =
-    GraftExtensions.register(corpus.select(col(idCol).as("doc_id"),
-        col(textCol).as("text"), col(langCol).as("lang")))
-      .select(col("doc_id"), col("lang"),
-        explode(expr("bigram_rle(text)")).as("bg"))
-      .select(col("doc_id"), col("lang"), col("bg.w1").as("w1"),
-        col("bg.w2").as("w2"), col("bg.n").as("n"))
-
-  /** PER-LANGUAGE stored bigram LM — CCNet's actual regime (Wenzek et
-    * al. 2019 trains one KenLM per language; a single global bar
-    * systematically mis-scores minority languages because transition
-    * mass concentrates in the majority language's vocabulary): counts
-    * and prefix totals are computed WITHIN each language (c1 = Σ_w2 c2
-    * per (lang, w1)), so a document's score is its probability under
-    * ITS OWN language's model. One `bigrams/` table partitioned by
-    * (lang, wb) — the probe prunes to its batch's (language, bucket)
-    * footprint, so a Swahili batch never opens the English directories.
-    * `langCol` is the corpus' language label (upstream lang-id — compose
-    * [[TextAnalysis.langId]] when the corpus carries none). Same
-    * atomic-swap, rebuild-only generation discipline as
-    * [[buildFluencyModel]] (merging would change c1 denominators).
-    */
-  def buildFluencyModelByLang(corpus: DataFrame, dir: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      langCol: String = "lang", minCount: Long = 1L): Unit = {
-    val bg = docBigramsLang(corpus, idCol, textCol, langCol)
-      .groupBy("lang", "w1", "w2").agg(sum(col("n")).as("c2"))
-      .withColumn("c1",
-        sum(col("c2")).over(Window.partitionBy("lang", "w1")))
-      .filter(col("c2") >= minCount)
-      .withColumn("wb", lmBucket(col("w1")))
-    graft.cdc.Compaction.swapDir(dir)(StoredTable.BigramsByLang.write(bg, _))
-  }
-
-  /** Batch fluency against the stored PER-LANGUAGE LM — each document
-    * scores under its own language's transition model
-    * ([[fluencyStored]]'s arithmetic, language-keyed): the batch's
-    * bounded (lang, wb) footprint (≤ languages × [[LmBuckets]] pairs,
-    * ONE fused single-row aggregate with the token size gate) pins a
-    * STATIC partition filter on the model scan, the probability join
-    * keys on (lang, w1, w2) with the batch side broadcast when small,
-    * and unmatched transitions recover through the same union-mass
-    * value-sorted fold — bit-exact cross-engine, no libm. The model is
-    * streamed, pruned, and never a broadcast build side. Output carries
-    * the language so a per-language bar can apply downstream.
-    */
-  def fluencyStoredByLang(docs: DataFrame, modelDir: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      langCol: String = "lang"): DataFrame = {
-    // Footprint from in-row projections over the corpus scan — the
-    // [[lmFpAgg]] shape, language-keyed — so the bigram frame has
-    // exactly ONE consumer (the probability join) and NOTHING is
-    // cached, matching [[fluencyStored]]'s discipline (the previous
-    // form persisted bg with no release path: an unbounded pin in a
-    // long-lived session). Per language, token buckets are a superset
-    // of prefix buckets (pruning stays sound, at most one extra
-    // directory opens per language) and the token total bounds the
-    // bigram mass from above (the size gate only degrades toward the
-    // safe, unhinted side). Orchestrators that own a shared bigram
-    // cache use [[fluencyStoredByLangFrom]] with their own footprint.
-    val fp = lmLangFpAggDocs(docs, textCol, langCol).collect()(0)
-    fluencyStoredByLangFrom(docs,
-      docBigramsLang(docs, idCol, textCol, langCol),
-      modelDir, idCol, textCol, langCol, Some(fp))
-  }
-
-  /** The per-language footprint derived from the CORPUS scan itself
-    * (no bigram encode): distinct (lang, token-bucket) pairs as `lm_lw`
-    * and the batch token total as `lm_lt` — field-compatible with
-    * [[lmLangFpAgg]] (name-based row access downstream), with the two
-    * documented over-approximations of [[lmFpAgg]]: token buckets ⊇
-    * prefix buckets, token total ≥ bigram mass.
-    */
-  def lmLangFpAggDocs(docs: DataFrame, textCol: String = "text",
-      langCol: String = "lang"): DataFrame =
-    docs.select(col(langCol).as("lang"), col(textCol).as("text"))
-      .select(col("lang"),
-        size(split(col("text"), " ")).cast("bigint").as("k"),
-        expr(s"array_distinct(transform(split(text, ' '), w -> pmod(hash(w), $LmBuckets)))").as("bs"))
-      .select(col("lang"), col("k"), posexplode(col("bs")).as(Seq("p", "b")))
-      .agg(
-        collect_set(struct(col("lang"), col("b").as("wb"))).as("lm_lw"),
-        sum(when(col("p") === 0, col("k"))).as("lm_lt"))
-
-  /** The per-language probe's one-row eager payload over a
-    * [[docBigramsLang]] frame: the distinct (lang, wb) footprint (`lm_lw`,
-    * ≤ languages × [[LmBuckets]] pairs) and the batch transition mass
-    * (`lm_lt`, the size gate) — the [[lmFpAgg]] shape, language-keyed.
-    * Exposed so an orchestrator ([[curateDelta]]'s by-lang path) can
-    * crossJoin it into its ONE fused driver barrier.
-    */
-  def lmLangFpAgg(bg: DataFrame): DataFrame =
-    bg.agg(
-      collect_set(struct(col("lang"), lmBucket(col("w1")).as("wb"))).as("lm_lw"),
-      sum(col("n")).as("lm_lt"))
-
-  /** [[fluencyStoredByLang]] over a caller-derived (caller-persisted,
-    * caller-released) [[docBigramsLang]] frame — the live loop's form
-    * ([[fluencyStoredFrom]]'s per-language twin): the epoch owns the
-    * shared lang-bigram cache, and the footprint job here materializes
-    * it as a side effect.
-    */
-  def fluencyStoredByLangFrom(docs: DataFrame, bg: DataFrame,
-      modelDir: String, idCol: String = "doc_id", textCol: String = "text",
-      langCol: String = "lang",
-      fpRow: Option[org.apache.spark.sql.Row] = None): DataFrame = {
-    val spark = docs.sparkSession
-    val fp = fpRow.getOrElse(lmLangFpAgg(bg).collect()(0))
-    val pairs = Option(fp.getSeq[org.apache.spark.sql.Row](fp.fieldIndex("lm_lw")))
-      .getOrElse(Seq.empty).map(r => (r.getString(0), r.getInt(1)))
-    // the probability join is exact on (lang, w1, w2), so the
-    // cross-product pin is pure pruning
-    val model = pinPartitions(readStored(spark, StoredTable.BigramsByLang.at(modelDir)),
-      "lang" -> pairs.map(_._1), "wb" -> pairs.map(_._2))
-    val matched = model.join(gateBroadcast(bg, fpCount(fp, "lm_lt")),
-        Seq("lang", "w1", "w2"))
-      .select(col("doc_id"), col("lang"),
-        (col("n").cast("double") *
-          (col("c2").cast("double") / col("c1").cast("double"))).as("v"),
-        lit(0L).as("nn"))
-    val mass = docs.select(col(idCol).as("doc_id"),
-        col(langCol).as("lang"), col(textCol).as("text"))
-      .withColumn("t", split(col("text"), " "))
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), col("lang"), lit(null).cast("double").as("v"),
-        (size(col("t")) - 1).cast("bigint").as("nn"))
-    matched.unionByName(mass)
-      .groupBy("doc_id", "lang")
-      .agg(sum(col("nn")).as("n_bigrams"),
-        expr("aggregate(array_sort(collect_list(v)), cast(0.0 as double), (a, x) -> a + x)")
-          .as("f_sum"))
-      .select(col("doc_id"), col("lang"), col("n_bigrams"),
-        (col("f_sum") / col("n_bigrams").cast("double")).as("fluency"))
-  }
-
-  /** Largest per-language calibration sample [[buildLmPartitionerByLang]]
-    * scores: the [[SamplerHeapMaxK]] rationale (a 64k-entry heap ≈ 1 MiB
-    * per language buffer), and 64k docs per language estimate a tercile
-    * bar far inside the noise of the slice itself.
-    */
-  val LmCalibMaxPerLang = 65536
-
-  /** The ABSOLUTE-BOUNDED per-language calibration slice: the `refMod`
-    * sample capped at `maxPerLang` docs per language — bottom-k by a
-    * salted 56-bit id hash via the bounded-buffer
-    * [[graft.functions.MinKAgg]] (heaps combine map-side; nothing larger
-    * than the cap crosses the wire), ids joined back by semi join. At
-    * 100 TB a fraction-only slice puts 10% of the majority language
-    * behind the rank window — the cap bounds both the scoring cost and
-    * the window's largest partition by a CONSTANT, not a corpus
-    * fraction. When the cap exceeds a language's slice the selection is
-    * the identity and the frozen cuts are unchanged (spec'd).
-    */
-  def lmCalibSlice(corpus: DataFrame, refMod: Int = 10,
-      maxPerLang: Int = LmCalibMaxPerLang, idCol: String = "doc_id",
-      langCol: String = "lang"): DataFrame = {
-    val slice = corpus.filter(col(idCol) % refMod === 0)
-    val picked = GraftExtensions.register(slice)
-      .select(col(langCol).as("lang"),
-        col(idCol).cast("bigint").as("did"),
-        expr(h56(s"concat('lmcal|', cast($idCol as string))")).as("pri"))
-      .groupBy("lang")
-      .agg(graft.functions.MinKAgg.udf(maxPerLang)(
-        col("pri"), col("did")).as("mins"))
-      .select(posexplode(col("mins")).as(Seq("i", "pv")))
-      .select(col("pv._2").as("did"))
-    slice.join(picked, col(idCol) === col("did"), "left_semi")
-  }
-
-  /** Calibrate PER-LANGUAGE CCNet tercile cuts against the stored
-    * per-language LM and freeze them — [[buildLmPartitioner]] with one
-    * cut pair PER LANGUAGE (k-th smallest (fluency, doc_id) within each
-    * language, k = ceil(n_l/3), ceil(2·n_l/3)), so minority languages
-    * get their own bar instead of the majority's. The rank window is
-    * partitioned by language over the CALIBRATION SLICE only — the
-    * `refMod` sample ABSOLUTE-BOUNDED at `maxPerLang` docs per language
-    * ([[lmCalibSlice]]: MinKAgg bottom-k by a salted id hash), so both
-    * the scoring pass and the window's largest partition are bounded by
-    * the cap, never a corpus fraction (the offline-calibration budget;
-    * the apply pass below is window-free). Cut tuples are exact scored
-    * rows, bit-identical cross-engine; a cap above the slice size leaves
-    * them byte-identical to the uncapped build.
-    */
-  def buildLmPartitionerByLang(corpus: DataFrame, modelDir: String,
-      dir: String, refMod: Int = 10, idCol: String = "doc_id",
-      textCol: String = "text", langCol: String = "lang",
-      maxPerLang: Int = LmCalibMaxPerLang): Unit = {
-    val ref = fluencyStoredByLang(
-        lmCalibSlice(corpus, refMod, maxPerLang, idCol, langCol), modelDir,
-        idCol, textCol, langCol)
-      .select(col("doc_id"), col("lang"), col("fluency"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    require(ref.limit(1).count() > 0,
-      s"empty calibration slice ($idCol % $refMod)")
-    val w = Window.partitionBy("lang").orderBy(col("fluency"), col("doc_id"))
-    val cnts = ref.groupBy("lang").agg(count(lit(1)).as("cnt"))
-    val cuts = ref.withColumn("rnk", row_number().over(w).cast("bigint"))
-      .join(broadcast(cnts), Seq("lang"))
-      .withColumn("k1", expr("(cnt + 2) div 3"))
-      .withColumn("k2", expr("(2 * cnt + 2) div 3"))
-      .filter(col("rnk") === col("k1") || col("rnk") === col("k2"))
-      .groupBy("lang")
-      .agg(
-        max(when(col("rnk") === col("k1"),
-          struct(col("fluency"), col("doc_id")))).as("c1"),
-        max(when(col("rnk") === col("k2"),
-          struct(col("fluency"), col("doc_id")))).as("c2"))
-      .select(col("lang"), col("c1.fluency").as("f1"), col("c1.doc_id").as("d1"),
-        col("c2.fluency").as("f2"), col("c2.doc_id").as("d2"))
-    graft.cdc.Compaction.swapDir(dir)(StoredTable.Cuts.write(cuts, _))
-    ref.unpersist()
-  }
-
-  /** Apply the per-language partitioner: every document scores under
-    * its own language's stored LM and lands in head/middle/tail by ITS
-    * LANGUAGE's frozen cuts. One probe pass; the cuts table (one row per
-    * language — artifact-sized) joins by language under an explicit
-    * broadcast; the bucket CASE is the same (fluency, doc_id) row-value
-    * comparison as [[lmPartition]], struct-compared in-row. Corpus-wide
-    * scoring visits every (lang, wb) directory by construction, so no
-    * footprint job runs and no broadcast hint applies to the model scan
-    * (the [[lmPartition]] rationale). No window, no global sort.
-    */
-  def lmPartitionByLang(corpus: DataFrame, modelDir: String,
-      cutsDir: String, idCol: String = "doc_id", textCol: String = "text",
-      langCol: String = "lang"): DataFrame = {
-    val spark = corpus.sparkSession
-    val bg = docBigramsLang(corpus, idCol, textCol, langCol)
-    val model = readStored(spark, StoredTable.BigramsByLang.at(modelDir))
-    val matched = model.join(bg, Seq("lang", "w1", "w2"))
-      .select(col("doc_id"), col("lang"),
-        (col("n").cast("double") *
-          (col("c2").cast("double") / col("c1").cast("double"))).as("v"),
-        lit(0L).as("nn"))
-    val mass = corpus.select(col(idCol).as("doc_id"),
-        col(langCol).as("lang"), col(textCol).as("text"))
-      .withColumn("t", split(col("text"), " "))
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), col("lang"), lit(null).cast("double").as("v"),
-        (size(col("t")) - 1).cast("bigint").as("nn"))
-    val scored = matched.unionByName(mass)
-      .groupBy("doc_id", "lang")
-      .agg(sum(col("nn")).as("n_bigrams"),
-        expr("aggregate(array_sort(collect_list(v)), cast(0.0 as double), (a, x) -> a + x)")
-          .as("f_sum"))
-      .select(col("doc_id"), col("lang"),
-        (col("f_sum") / col("n_bigrams").cast("double")).as("fluency"))
-    val cuts = readStored(spark, StoredTable.Cuts.at(cutsDir))
-    // LEFT join — the cut-less-language contract: a language present in
-    // the corpus but absent from the calibration slice (tiny minority +
-    // a sparse refMod slice — precisely who this feature protects) gets
-    // NO cuts row; an inner join would silently drop every one of its
-    // documents. Such languages route whole to 'head' (the keep bucket
-    // under [[lmPartitionApply]]'s selection rule — the conservative
-    // default: an uncalibrated language is retained, never dropped),
-    // stated explicitly rather than through null-comparison fallthrough.
-    scored.join(broadcast(cuts), Seq("lang"), "left_outer")
-      .select(col("doc_id"), col("lang"), col("fluency"),
-        when(col("f1").isNull, lit("head"))
-          .when(struct(col("fluency"), col("doc_id")) <=
-            struct(col("f1").as("fluency"), col("d1").as("doc_id")),
-          lit("tail"))
-          .when(struct(col("fluency"), col("doc_id")) <=
-            struct(col("f2").as("fluency"), col("d2").as("doc_id")),
-            lit("middle"))
-          .otherwise(lit("head")).as("bucket"))
-  }
-
   def keywords(corpus: DataFrame, k: Int = 3, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     // ONE occurrence-level pass, then everything derives from the
@@ -2108,7 +1960,19 @@ object LlmOps {
     * (tok, df, n_docs), hash-clustered into [[IdfBuckets]] `tb` bucket
     * directories so a batch probe opens only its own token buckets;
     * `n_docs` is denormalized into every row (the stored-LM discipline —
-    * joins against a one-value table cost more than 8 bytes/row).
+    * joins against a one-value table cost more than 8 bytes/row). The df
+    * derivation explodes the in-row [[docTokens]] RLE — presence per
+    * (doc, tok) is distinct by construction, so NO (doc, tok) groupBy
+    * shuffle precedes the token count.
+    *
+    * `byLang` keys the frequencies by the corpus' `lang` column: df per
+    * (lang, tok), N per LANGUAGE, the table partitioned (lang, tb) — the
+    * [[buildFluencyModel]] minority-fairness argument: under POOLED df a
+    * minority language's own stopwords look globally rare (few absolute
+    * documents contain them) and rank as "distinctive" keywords for
+    * every one of its documents, drowning the genuinely
+    * document-specific terms; per-language df restores Zipf's head where
+    * the document actually lives.
     *
     * Rebuild-only, like the bigram LM: df counts and N must come from
     * the SAME corpus generation or scores silently mix denominators, so
@@ -2116,169 +1980,85 @@ object LlmOps {
     * through the same atomic swap.
     */
   def buildIdfModel(corpus: DataFrame, dir: String,
-      idCol: String = "doc_id", textCol: String = "text"): Unit =
-    StoredTable.Df.swap(dir) {
-      val base = textCorpus(corpus, idCol, textCol).filter(col("text").isNotNull)
-      val tf = base
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-      val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      val nDocs = base.select(col("doc_id")).distinct()
-        .agg(count(lit(1)).as("n_docs"))
-      dfreq.crossJoin(broadcast(nDocs))
+      idCol: String = "doc_id", textCol: String = "text",
+      byLang: Boolean = false): Unit = {
+    val key = keyOf(byLang)
+    StoredTable.Df.keyed(key).swap(dir) {
+      val base = textCorpus(corpus, idCol, textCol, key).filter(col("text").isNotNull)
+      val dfreq = base
+        .select(key.map(col) :+ explode(expr("token_rle(text)")).as("tk"): _*)
+        .groupBy(key.map(col) :+ col("tk.tok").as("tok"): _*)
+        .agg(count(lit(1)).as("df"))
+      val nDocs = base.groupBy(key.map(col): _*)
+        .agg(countDistinct(col("doc_id")).as("n_docs"))
+      dfreq.join(broadcast(nDocs), key)
         .withColumn("tb", expr(idfTb("tok")))
     }
+  }
 
   /** Top-k keywords for a batch against the STORED IDF model — the
-    * production form of [[keywords]]: the batch derives its (doc, tok,
-    * tf) frame in one pass, its bounded token-bucket footprint (≤
-    * [[IdfBuckets]] values, one single-row aggregate job — the
-    * stored-probe footprint discipline) pins a STATIC partition filter
-    * on the `df/` scan, and the scored join streams the model while the
-    * BATCH side broadcasts — the model is never a broadcast build side
-    * (the PlanQualitySpec rule: corpus-vocabulary-sized artifacts don't
-    * broadcast). Contract: a token the frozen model never saw cannot be
-    * ranked (inner join) — a frozen scorer has no df for it; rebuild the
-    * model to rank new vocabulary. Returned frame is lazy; the batch tf
-    * cache backs it ([[curateDelta]]'s lazy-return contract).
+    * production form of [[keywords]]: each document's terms weigh
+    * against its own key's df/N (the model's key read back from its
+    * partition columns; the output carries it). The batch derives its
+    * (doc, key…, tok, tf) frame in one in-row pass ([[docTokens]], no
+    * reduce shuffle), its bounded (key, token-bucket) footprint (≤
+    * [[IdfBuckets]] values per key) plus its row count collect as ONE
+    * single-row job (the stored-probe footprint discipline), the
+    * footprint pins a STATIC partition filter on the `df/` scan, and the
+    * scored join streams the model while the BATCH side broadcasts —
+    * the model is never a broadcast build side (the PlanQualitySpec
+    * rule: corpus-vocabulary-sized artifacts don't broadcast). Contract:
+    * a token the frozen model never saw cannot be ranked (inner join) —
+    * a frozen scorer has no df for it; rebuild the model to rank new
+    * vocabulary. Returned frame is lazy; the batch tf cache backs it
+    * ([[curateDelta]]'s lazy-return contract).
     */
   def keywordsStored(batch: DataFrame, dir: String, k: Int = 3,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val spark = batch.sparkSession
-    val tf = textCorpus(batch, idCol, textCol).filter(col("text").isNotNull)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
+    val (model, key) = readKeyed(batch.sparkSession, StoredTable.Df, dir)
+    requireKey(batch, key, dir)
+    val tf = docTokens(
+        textCorpus(batch, idCol, textCol, key).filter(col("text").isNotNull),
+        key = key)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the probe's ONE eager job: the batch's token-bucket footprint AND
     // its row count as a single collected row — bounded by IdfBuckets
-    // plus one long, never batch-sized. The count size-gates the
+    // per key plus one long, never batch-sized. The count size-gates the
     // broadcast hint below (the mhFpAgg/qclfFpAgg fused discipline): a
     // corpus-sized backfill batch must degrade to a shuffle join under
-    // AQE instead of dying on the driver's broadcast cap.
+    // AQE instead of dying on the driver's broadcast cap. The scored
+    // join is exact on (key, tok), so the footprint's cross-product pin
+    // is pure pruning.
     val fpRow = tf
-      .agg(collect_set(expr(idfTb("tok"))).as("tbs"), count(lit(1)).as("n"))
-      .head
-    val model = pinPartitions(readStored(spark, StoredTable.Df.at(dir)),
-      "tb" -> fpRow.getSeq[Long](fpRow.fieldIndex("tbs")))
-    val scored = model.join(gateBroadcast(tf, fpCount(fpRow, "n")), "tok")
-      .withColumn("score",
-        col("tf").cast("double") * col("n_docs").cast("double") / col("df").cast("double"))
-    val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("tok"))
-    scored.withColumn("rnk", row_number().over(w).cast("bigint"))
-      .filter(col("rnk") <= k)
-      .select("doc_id", "rnk", "tok", "tf", "df", "score")
-  }
-
-  /** Health gauge over the stored IDF table — per tb bucket: vocabulary
-    * size, the hottest df (a stopword-shaped token), and total rows.
-    * The numbers an operator checks after a rebuild: bucket skew flags a
-    * degenerate tokenizer, and max_df ≈ n_docs in every bucket means the
-    * corpus needs a stopword pass before the model is useful.
-    */
-  def idfModelStats(spark: SparkSession, dir: String): DataFrame =
-    readStored(spark, StoredTable.Df.at(dir))
-      .groupBy(col("tb").cast("bigint").as("tb"))
-      .agg(count(lit(1)).as("n_toks"),
-        max(col("df")).as("max_df"),
-        sum(col("df")).cast("bigint").as("df_rows"))
-
-  // ------------------------------------------ per-language stored IDF
-
-  /** PER-LANGUAGE stored IDF — [[buildIdfModel]] with the document
-    * frequencies keyed by language: df per (lang, tok), doc count N per
-    * LANGUAGE, one `df/` table partitioned (lang, tb). The
-    * [[buildFluencyModelByLang]] minority-fairness argument applied to
-    * the last global-only frozen-statistics artifact: under POOLED df a
-    * minority language's own stopwords look globally rare (few absolute
-    * documents contain them) and rank as "distinctive" keywords for
-    * every one of its documents, drowning the genuinely document-
-    * specific terms; per-language df restores Zipf's head where the
-    * document actually lives. Rebuild-only through the same atomic swap
-    * (per-language denominators make merging wrong the same way the
-    * global N does). The df derivation explodes the in-row
-    * [[docTokens]] RLE — presence per (doc, tok) is distinct by
-    * construction, so NO (doc, tok) groupBy shuffle precedes the
-    * (lang, tok) count.
-    */
-  def buildIdfModelByLang(corpus: DataFrame, dir: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      langCol: String = "lang"): Unit =
-    StoredTable.DfByLang.swap(dir) {
-      val base = GraftExtensions.register(corpus)
-        .select(col(idCol).as("doc_id"), col(textCol).as("text"),
-          col(langCol).as("lang"))
-        .filter(col("text").isNotNull)
-      val dfreq = base
-        .select(col("lang"), explode(expr("token_rle(text)")).as("tk"))
-        .groupBy(col("lang"), col("tk.tok").as("tok"))
-        .agg(count(lit(1)).as("df"))
-      val nDocs = base.groupBy(col("lang"))
-        .agg(countDistinct(col("doc_id")).as("n_docs"))
-      dfreq.join(broadcast(nDocs), Seq("lang"))
-        .withColumn("tb", expr(idfTb("tok")))
-    }
-
-  /** Top-k keywords for a batch against the stored PER-LANGUAGE IDF —
-    * each document's terms weigh against ITS language's df/N: the
-    * batch's bounded (lang, tb) footprint plus its row count collect as
-    * ONE single-row job (the [[qualityScoreStoredByLang]] shape), the
-    * footprint pins a static partition filter on the `df/` scan, the
-    * scored join keys on (lang, tok) with the batch side
-    * size-gate-broadcast — the artifact streamed, pruned, never a
-    * broadcast build side. The batch tf frame is the in-row
-    * [[docTokens]] RLE (no reduce shuffle) and backs the lazy return
-    * (the [[keywordsStored]] cache contract). Same frozen-vocabulary
-    * contract: a (lang, tok) the model never saw cannot be ranked.
-    */
-  def keywordsStoredByLang(batch: DataFrame, dir: String, k: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
-      langCol: String = "lang"): DataFrame = {
-    val spark = batch.sparkSession
-    val base = GraftExtensions.register(batch)
-      .select(col(idCol).as("doc_id"), col(textCol).as("text"),
-        col(langCol).as("lang"))
-      .filter(col("text").isNotNull)
-    val tf = base
-      .select(col("doc_id"), col("lang"),
-        explode(expr("token_rle(text)")).as("tk"))
-      .select(col("doc_id"), col("lang"),
-        col("tk.tok").as("tok"), col("tk.tf").as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val fpRow = tf
-      .agg(collect_set(struct(col("lang"),
-          expr(idfTb("tok")).as("tb"))).as("pairs"),
+      .agg(collect_set(struct(key.map(col) :+ expr(idfTb("tok")).as("tb"): _*)).as("tbs"),
         count(lit(1)).as("n"))
       .head
-    val pairs = Option(fpRow.getSeq[org.apache.spark.sql.Row](
-        fpRow.fieldIndex("pairs"))).getOrElse(Seq.empty)
-      .map(r => (r.getString(0), r.getLong(1)))
-    // the scored join is exact on (lang, tok), so the cross-product pin
-    // is pure pruning
-    val model = pinPartitions(readStored(spark, StoredTable.DfByLang.at(dir)),
-      "lang" -> pairs.map(_._1), "tb" -> pairs.map(_._2))
-    val scored = model
-      .join(gateBroadcast(tf, fpCount(fpRow, "n")), Seq("lang", "tok"))
+    val scored = pinFootprint(model, fpRow, "tbs", key :+ "tb")
+      .join(gateBroadcast(tf, fpCount(fpRow, "n")), key :+ "tok")
       .withColumn("score",
         col("tf").cast("double") * col("n_docs").cast("double") / col("df").cast("double"))
     val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("tok"))
     scored.withColumn("rnk", row_number().over(w).cast("bigint"))
       .filter(col("rnk") <= k)
-      .select("doc_id", "lang", "rnk", "tok", "tf", "df", "score")
+      .select((col("doc_id") +: key.map(col)) ++
+        Seq("rnk", "tok", "tf", "df", "score").map(col): _*)
   }
 
-  /** [[idfModelStats]] grouped by language — the per-language health
-    * read ([[lmStatsLang]]'s IDF twin): a collapsed minority-language
-    * df table (a handful of rows, max_df ≈ its n_docs everywhere)
-    * reads as its own row instead of averaging into the global gauge.
-    * One combinable groupBy on the partition columns; maintenance-
-    * cadence, never in the probe path.
+  /** Health gauge over the stored IDF table — per (key, tb) bucket:
+    * vocabulary size, the hottest df (a stopword-shaped token), and
+    * total rows. The numbers an operator checks after a rebuild: bucket
+    * skew flags a degenerate tokenizer, and max_df ≈ n_docs in every
+    * bucket means the corpus needs a stopword pass before the model is
+    * useful; per language, a collapsed minority-language table reads as
+    * its own rows instead of averaging into the global gauge.
     */
-  def idfModelStatsByLang(spark: SparkSession, dir: String): DataFrame =
-    readStored(spark, StoredTable.DfByLang.at(dir))
-      .groupBy(col("lang"), col("tb").cast("bigint").as("tb"))
+  def idfModelStats(spark: SparkSession, dir: String): DataFrame = {
+    val (model, key) = readKeyed(spark, StoredTable.Df, dir)
+    model.groupBy(key.map(col) :+ col("tb").cast("bigint").as("tb"): _*)
       .agg(count(lit(1)).as("n_toks"),
         max(col("df")).as("max_df"),
         sum(col("df")).cast("bigint").as("df_rows"))
+  }
 
   // ------------------------------------------ stored quality classifier
 
@@ -2296,8 +2076,8 @@ object LlmOps {
     s"${h56(s"concat('qclf|', $tokExpr)")} % $QclfBuckets"
 
   private def qclfBase(corpus: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    textCorpus(corpus, idCol, textCol).filter(col("text").isNotNull)
+      textCol: String, key: Seq[String] = Nil): DataFrame =
+    textCorpus(corpus, idCol, textCol, key).filter(col("text").isNotNull)
 
   /** Harness fixture for the classifier queries: the synthetic corpus
     * passes the heuristic gate wholesale (labels would be one-class and
@@ -2310,10 +2090,11 @@ object LlmOps {
     * discrimination.
     */
   def qclfCorpus(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("text")).unionByName(
+    docs.select(col("doc_id") +: col("text") +: langOf(docs): _*).unionByName(
       docs.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 85000000L).as("doc_id"),
-          lit("zq zq zq zq zq zq zq zq zq zq zq zq").as("text")))
+        .select((col("doc_id") + 85000000L).as("doc_id") +:
+          lit("zq zq zq zq zq zq zq zq zq zq zq zq").as("text") +:
+          langOf(docs): _*))
 
   val QclfCorpusSql: String =
     """SELECT doc_id, text FROM documents
@@ -2340,17 +2121,30 @@ object LlmOps {
     * distinct-token footprint before the shuffle), and the totals ride
     * a single-row aggregate broadcast back over the counts — nothing
     * driver-sized anywhere.
+    *
+    * `byLang` keys every count by the corpus' `lang` column: token
+    * counts per (lang, tok), class totals and vocabulary size per
+    * LANGUAGE, so the likelihood ratios normalize within each language's
+    * own token distribution (the [[buildFluencyModel]] fairness
+    * argument: under a global table a minority language's tokens are
+    * judged against the majority's class mass).
     */
   def qclfCounts(corpus: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val lab = TextAnalysis.qualityFlags(qclfBase(corpus, idCol, textCol))
-      .select(col("keep"), explode(split(col("text"), " ")).as("tok"))
-    val cnt = lab.groupBy("tok")
+      textCol: String = "text", byLang: Boolean = false): DataFrame = {
+    val key = keyOf(byLang)
+    // the key rides the in-row label pass inside the id column
+    // (qualityFlags keeps only the id and the text), so no label frame
+    // joins back to the corpus
+    val lab = TextAnalysis.qualityFlags(qclfBase(corpus, idCol, textCol, key)
+        .select(struct(col("doc_id") +: key.map(col): _*).as("id"), col("text")), "id")
+      .select(key.map(k => col(s"doc_id.$k").as(k)) :+ col("keep") :+
+        explode(split(col("text"), " ")).as("tok"): _*)
+    val cnt = lab.groupBy((key :+ "tok").map(col): _*)
       .agg(sum(when(col("keep"), 1L).otherwise(0L)).as("c_pos"),
         sum(when(col("keep"), 0L).otherwise(1L)).as("c_neg"))
-    val tot = cnt.agg(sum(col("c_pos")).as("t_pos"),
+    val tot = cnt.groupBy(key.map(col): _*).agg(sum(col("c_pos")).as("t_pos"),
       sum(col("c_neg")).as("t_neg"), count(lit(1)).as("vv"))
-    cnt.crossJoin(broadcast(tot))
+    cnt.join(broadcast(tot), key)
   }
 
   /** Freeze the trained quality classifier under `dir` — the learned
@@ -2367,12 +2161,14 @@ object LlmOps {
     * generations' counts would silently mix denominators — the model is
     * retrained per corpus generation through the same atomic
     * [[graft.cdc.Compaction.swapDir]] (old generation serves readers
-    * throughout, every crash window rolls back).
+    * throughout, every crash window rolls back). `byLang` builds one
+    * table per language ([[qclfCounts]]), partitioned (lang, tb).
     */
   def buildQualityClassifier(corpus: DataFrame, dir: String,
-      idCol: String = "doc_id", textCol: String = "text"): Unit =
-    StoredTable.Weights.swap(dir) {
-      qclfCounts(corpus, idCol, textCol).withColumn("tb", expr(qclfTb("tok")))
+      idCol: String = "doc_id", textCol: String = "text",
+      byLang: Boolean = false): Unit =
+    StoredTable.Weights.keyed(keyOf(byLang)).swap(dir) {
+      qclfCounts(corpus, idCol, textCol, byLang).withColumn("tb", expr(qclfTb("tok")))
     }
 
   /** The scorer shared by [[qualityClassify]] and [[qualityScoreStored]]:
@@ -2399,27 +2195,37 @@ object LlmOps {
     * reference corpus never produced is evidence of neither class, and
     * an all-unseen doc scores 0 (below any sane τ), which is the
     * conservative gate decision for alien text. `toks` arrives with the
-    * caller's broadcast decision already applied ([[gateBroadcast]]).
+    * caller's broadcast decision already applied ([[gateBroadcast]]);
+    * every frame carries the weights' `key` columns, which join and
+    * group alongside the token and the doc.
     */
   private def qclfScore(toks: DataFrame, mass: DataFrame,
-      weights: DataFrame, tau: Double): DataFrame = {
-    val matched = weights.join(toks, "tok")
-      .select(col("doc_id"),
+      weights: DataFrame, tau: Double, key: Seq[String]): DataFrame = {
+    val matched = weights.join(toks, key :+ "tok")
+      .select(col("doc_id") +: key.map(col) :+
         (col("tf").cast("double") *
           (((col("c_pos") + 1).cast("double") *
             (col("t_neg") + col("vv")).cast("double")) /
             ((col("c_neg") + 1).cast("double") *
-              (col("t_pos") + col("vv")).cast("double")))).as("v"),
-        lit(0L).as("nn"))
+              (col("t_pos") + col("vv")).cast("double")))).as("v") :+
+        lit(0L).as("nn"): _*)
     matched.unionByName(mass)
-      .groupBy("doc_id")
+      .groupBy(col("doc_id") +: key.map(col): _*)
       .agg(sum(col("nn")).as("n_toks"),
         expr("aggregate(array_sort(collect_list(v)), cast(0.0 as double), (a, x) -> a + x)")
           .as("r_sum"))
-      .select(col("doc_id"), col("n_toks"),
-        (col("r_sum") / col("n_toks").cast("double")).as("q_score"))
+      .select(col("doc_id") +: key.map(col) :+ col("n_toks") :+
+        (col("r_sum") / col("n_toks").cast("double")).as("q_score"): _*)
       .withColumn("pred", col("q_score") >= tau)
   }
+
+  /** The scorer's per-doc mass rows over a [[qclfBase]] frame: each
+    * doc's token-occurrence total and a null term.
+    */
+  private def qclfMass(base: DataFrame, key: Seq[String]): DataFrame =
+    base.select(col("doc_id") +: key.map(col) :+
+      lit(null).cast("double").as("v") :+
+      size(split(col("text"), " ")).cast("bigint").as("nn"): _*)
 
   /** Corpus-as-its-own-model classification — the in-query special case
     * ([[fluencyScore]]'s relationship to [[fluencyStored]]): train the
@@ -2442,34 +2248,33 @@ object LlmOps {
   def qualityClassify(corpus: DataFrame, tau: Double = 1.0,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val base = qclfBase(corpus, idCol, textCol)
-    val mass = base.select(col("doc_id"),
-      lit(null).cast("double").as("v"),
-      size(split(col("text"), " ")).cast("bigint").as("nn"))
-    qclfScore(docTokens(base), mass, qclfCounts(corpus, idCol, textCol), tau)
+    qclfScore(docTokens(base), qclfMass(base, Nil),
+      qclfCounts(corpus, idCol, textCol), tau, Nil)
   }
 
   /** The probe's one-row eager payload over `docs`: total token count
-    * (the broadcast size gate) and the distinct token-bucket footprint
-    * (≤ [[QclfBuckets]] values) — the [[lmFpAgg]] shape: per-doc bucket
-    * sets dedup inside the row, partial aggregation bounds the merge
-    * buffer at 64 values, only a row's pos-0 bucket carries its doc's
-    * token count so the sum counts each doc once. Field names are
+    * (the broadcast size gate) and the distinct (key…, token-bucket)
+    * footprint (≤ [[QclfBuckets]] values per key) — the [[lmFpAgg]]
+    * shape: per-doc bucket sets dedup inside the row, partial
+    * aggregation bounds the merge buffer at 64 values per key, only a
+    * row's pos-0 bucket carries its doc's token count so the sum counts
+    * each doc once. `key` is the probed classifier's key. Field names are
     * qc-prefixed so the row can crossJoin into an orchestrator's fused
     * footprint job alongside [[lmFpAgg]]'s (toks, buckets) without a
     * name collision. (The batch funnel and the nightly delta now run
     * the scorer in its footprint-less churn-scale form — this aggregate
     * serves the micro-batch probe path.)
     */
-  def qclfFpAgg(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    qclfBase(docs, idCol, textCol)
-      .select(size(split(col("text"), " ")).cast("bigint").as("k"),
+  private[graft] def qclfFpAgg(docs: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text", key: Seq[String] = Nil): DataFrame =
+    qclfBase(docs, idCol, textCol, key)
+      .select(key.map(col) :+ size(split(col("text"), " ")).cast("bigint").as("k") :+
         // the lambda restates [[qclfTb]] over the split's tokens — keep
         // the two in lockstep (the lmFpAgg comment's rationale)
-        expr(s"array_distinct(transform(split(text, ' '), w -> ${h56("concat('qclf|', w)")} % $QclfBuckets))").as("bs"))
-      .select(col("k"), posexplode(col("bs")).as(Seq("p", "b")))
+        expr(s"array_distinct(transform(split(text, ' '), w -> ${h56("concat('qclf|', w)")} % $QclfBuckets))").as("bs"): _*)
+      .select(key.map(col) :+ col("k") :+ posexplode(col("bs")).as(Seq("p", "b")): _*)
       .agg(sum(when(col("p") === 0, col("k"))).as("qc_toks"),
-        collect_set(col("b")).as("qc_buckets"))
+        collect_set(struct(key.map(col) :+ col("b").as("tb"): _*)).as("qc_buckets"))
 
   /** Score a batch against a STORED [[buildQualityClassifier]] artifact —
     * the production form: the model is never re-derived, the batch's
@@ -2482,7 +2287,9 @@ object LlmOps {
     * vocabulary-sized artifact is never a broadcast build side (the
     * [[keywordsStored]] PlanQualitySpec rule). Probe cost tracks model
     * size and batch footprint, never the corpus the model was trained
-    * on.
+    * on. The classifier's key (`lang` for a `byLang` build) is read back
+    * from its partition columns: each document's tokens weigh against
+    * its own key's likelihood table, and the output carries the key.
     *
     * `footprint = false` is the CHURN-SCALE form ([[curateDelta]]'s clf
     * gate): a nightly delta's token-bucket footprint saturates all
@@ -2499,39 +2306,37 @@ object LlmOps {
       idCol: String = "doc_id", textCol: String = "text",
       fpRow: Option[org.apache.spark.sql.Row] = None,
       footprint: Boolean = true): DataFrame = {
-    val spark = batch.sparkSession
-    val base = qclfBase(batch, idCol, textCol)
-    val weightsRaw = readStored(spark, StoredTable.Weights.at(dir))
-    val toks = docTokens(base)
+    val (weightsRaw, key) = readKeyed(batch.sparkSession, StoredTable.Weights, dir)
+    requireKey(batch, key, dir)
+    val base = qclfBase(batch, idCol, textCol, key)
+    val toks = docTokens(base, key = key)
     val (weights, probe) =
       if (!footprint) (weightsRaw, toks)
       else {
         // an orchestrator that already fused this aggregate into its own
         // eager job passes the row in — name-based field access, the
-        // [[fluencyStored]] contract
-        val fp = fpRow.getOrElse(qclfFpAgg(batch, idCol, textCol).collect()(0))
-        (pinPartitions(weightsRaw, "tb" ->
-            Option(fp.getSeq[Long](fp.fieldIndex("qc_buckets"))).getOrElse(Seq.empty)),
+        // [[fluencyStored]] contract; the scoring join is exact on
+        // (key, tok), so the footprint's cross-product pin is pure pruning
+        val fp = fpRow.getOrElse(qclfFpAgg(batch, idCol, textCol, key).collect()(0))
+        (pinFootprint(weightsRaw, fp, "qc_buckets", key :+ "tb"),
           gateBroadcast(toks, fpCount(fp, "qc_toks")))
       }
-    val mass = base.select(col("doc_id"),
-      lit(null).cast("double").as("v"),
-      size(split(col("text"), " ")).cast("bigint").as("nn"))
-    qclfScore(probe, mass, weights, tau)
+    qclfScore(probe, qclfMass(base, key), weights, tau, key)
   }
 
-  /** Health gauge over the stored classifier — per tb bucket: vocabulary
-    * size and the two classes' occurrence mass. What an operator checks
-    * after a retrain: bucket skew flags a degenerate tokenizer (the
-    * [[idfModelStats]] reading), and a pos/neg mass ratio far from the
-    * corpus' keep rate means the label pass drifted.
+  /** Health gauge over the stored classifier — per (key, tb) bucket:
+    * vocabulary size and the two classes' occurrence mass. What an
+    * operator checks after a retrain: bucket skew flags a degenerate
+    * tokenizer (the [[idfModelStats]] reading), and a pos/neg mass ratio
+    * far from the corpus' keep rate means the label pass drifted.
     */
-  def qclfStats(spark: SparkSession, dir: String): DataFrame =
-    readStored(spark, StoredTable.Weights.at(dir))
-      .groupBy(col("tb").cast("bigint").as("tb"))
+  def qclfStats(spark: SparkSession, dir: String): DataFrame = {
+    val (weights, key) = readKeyed(spark, StoredTable.Weights, dir)
+    weights.groupBy(key.map(col) :+ col("tb").cast("bigint").as("tb"): _*)
       .agg(count(lit(1)).as("n_toks"),
         sum(col("c_pos")).cast("bigint").as("pos_occ"),
         sum(col("c_neg")).cast("bigint").as("neg_occ"))
+  }
 
   /** Distillation-fidelity gauge: the confusion counts of the trained
     * scorer's τ decision against the heuristic gate it was trained from,
@@ -2560,120 +2365,12 @@ object LlmOps {
       .agg(count(lit(1)).as("n_docs"))
   }
 
-  // --------------------------- per-language stored quality classifier
-
-  /** [[qclfCorpus]] with the language label carried — junk twins inherit
-    * their base doc's language, so every language populates both label
-    * classes and the per-language tables train on real discriminations.
-    */
-  def qclfCorpusLang(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("text"), col("lang")).unionByName(
-      docs.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 85000000L).as("doc_id"),
-          lit("zq zq zq zq zq zq zq zq zq zq zq zq").as("text"),
-          col("lang")))
-
+  /** [[qclfCorpus]] over a corpus that carries `lang`, in DuckDB SQL. */
   val QclfCorpusLangSql: String =
     """SELECT doc_id, text, lang FROM documents
       |UNION ALL
       |SELECT doc_id + 85000000, 'zq zq zq zq zq zq zq zq zq zq zq zq', lang
       |FROM documents WHERE doc_id % 5 = 0""".stripMargin
-
-  /** PER-LANGUAGE trained quality classifier —
-    * [[buildQualityClassifier]] with every count keyed by language:
-    * token counts per (lang, tok), class totals and vocabulary size per
-    * LANGUAGE (the likelihood ratios normalize within each language's
-    * own token distribution — the same minority-language fairness
-    * argument as [[buildFluencyModelByLang]]: under a global table a
-    * minority language's tokens are judged against the majority's class
-    * mass). One `w/` table partitioned by (lang, tb); same rebuild-only
-    * atomic-swap generation discipline (per-language denominators make
-    * merging wrong in the same way).
-    */
-  def buildQualityClassifierByLang(corpus: DataFrame, dir: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      langCol: String = "lang"): Unit =
-    StoredTable.WeightsByLang.swap(dir) {
-      val base = GraftExtensions.register(corpus).select(col(idCol).as("doc_id"),
-          col(textCol).as("text"), col(langCol).as("lang"))
-        .filter(col("text").isNotNull)
-      val keep = TextAnalysis.qualityFilter(base)
-        .filter(col("keep")).select("doc_id")
-      val lab = base
-        .join(keep.withColumn("k", lit(true)), Seq("doc_id"), "left_outer")
-        .select(col("lang"), coalesce(col("k"), lit(false)).as("keep"),
-          explode(split(col("text"), " ")).as("tok"))
-      val cnt = lab.groupBy("lang", "tok")
-        .agg(sum(when(col("keep"), 1L).otherwise(0L)).as("c_pos"),
-          sum(when(col("keep"), 0L).otherwise(1L)).as("c_neg"))
-      val tot = cnt.groupBy("lang").agg(sum(col("c_pos")).as("t_pos"),
-        sum(col("c_neg")).as("t_neg"), count(lit(1)).as("vv"))
-      cnt.join(broadcast(tot), Seq("lang"))
-        .withColumn("tb", expr(qclfTb("tok")))
-    }
-
-  /** Score a batch against the stored PER-LANGUAGE classifier — each
-    * document's tokens weigh against ITS language's likelihood table:
-    * the batch's bounded (lang, tb) footprint (ONE fused single-row
-    * job with the token size gate, the [[fluencyStoredByLang]] shape)
-    * pins a static partition filter on the weight scan, the ratio join
-    * keys on (lang, tok) with the batch side size-gate-broadcast, and
-    * out-of-vocabulary occurrences contribute 0 through the matched-only
-    * union fold ([[qclfScore]]'s semantics, language-keyed). The
-    * artifact is streamed, pruned, never a broadcast build side.
-    */
-  def qualityScoreStoredByLang(batch: DataFrame, dir: String,
-      tau: Double = 1.0, idCol: String = "doc_id",
-      textCol: String = "text", langCol: String = "lang"): DataFrame = {
-    val spark = batch.sparkSession
-    val base = GraftExtensions.register(batch).select(col(idCol).as("doc_id"),
-        col(textCol).as("text"), col(langCol).as("lang"))
-      .filter(col("text").isNotNull)
-    // fused footprint: distinct (lang, tb) pairs (bucket sets dedup
-    // in-row) + the batch token count for the broadcast size gate
-    val fp = base
-      .select(col("lang"),
-        size(split(col("text"), " ")).cast("bigint").as("k"),
-        expr(s"array_distinct(transform(split(text, ' '), w -> ${h56("concat('qclf|', w)")} % $QclfBuckets))").as("bs"))
-      .select(col("lang"), col("k"), posexplode(col("bs")).as(Seq("p", "b")))
-      .agg(sum(when(col("p") === 0, col("k"))).as("toks"),
-        collect_set(struct(col("lang"), col("b"))).as("pairs"))
-      .collect()(0)
-    val pairs = Option(fp.getSeq[org.apache.spark.sql.Row](fp.fieldIndex("pairs")))
-      .getOrElse(Seq.empty).map(r => (r.getString(0), r.getLong(1)))
-    // the scoring join is exact on (lang, tok), so the cross-product
-    // pin is pure pruning
-    val weights = pinPartitions(readStored(spark, StoredTable.WeightsByLang.at(dir)),
-      "lang" -> pairs.map(_._1), "tb" -> pairs.map(_._2))
-    // in-row (doc, tok, tf) reduction with the language label riding —
-    // the [[docTokens]] discipline, language-keyed: join and fold pay
-    // per distinct doc-token
-    val toks = base
-      .select(col("doc_id"), col("lang"),
-        explode(expr("token_rle(text)")).as("tk"))
-      .select(col("doc_id"), col("lang"),
-        col("tk.tok").as("tok"), col("tk.tf").as("tf"))
-    val matched = weights.join(gateBroadcast(toks, fpCount(fp, "toks")),
-        Seq("lang", "tok"))
-      .select(col("doc_id"), col("lang"),
-        (col("tf").cast("double") *
-          (((col("c_pos") + 1).cast("double") *
-            (col("t_neg") + col("vv")).cast("double")) /
-            ((col("c_neg") + 1).cast("double") *
-              (col("t_pos") + col("vv")).cast("double")))).as("v"),
-        lit(0L).as("nn"))
-    val mass = base.select(col("doc_id"), col("lang"),
-      lit(null).cast("double").as("v"),
-      size(split(col("text"), " ")).cast("bigint").as("nn"))
-    matched.unionByName(mass)
-      .groupBy("doc_id", "lang")
-      .agg(sum(col("nn")).as("n_toks"),
-        expr("aggregate(array_sort(collect_list(v)), cast(0.0 as double), (a, x) -> a + x)")
-          .as("r_sum"))
-      .select(col("doc_id"), col("lang"), col("n_toks"),
-        (col("r_sum") / col("n_toks").cast("double")).as("q_score"))
-      .withColumn("pred", col("q_score") >= tau)
-  }
 
   // ------------------------------------------------- deterministic sample
 
@@ -3292,20 +2989,15 @@ object LlmOps {
   private[graft] def fullStages(corpus: DataFrame, lmDir: String,
       decontamDir: String, threshold: Double, maxSharedGrams: Long,
       idCol: String, textCol: String,
-      lmLangDir: Option[String] = None, langCol: String = "lang",
       qualityModelDir: Option[String] = None, qualityTau: Double = 1.0)
       : (DataFrame, DataFrame, Option[DataFrame], DataFrame, DataFrame,
          DataFrame, DataFrame) = {
     val pinStage = stagePin(corpus.sparkSession)
-    // with the PER-LANGUAGE bar on, the corpus carries its language
-    // label through the chain (the deltaGates convention): the stage-5
-    // scorer and its (lang, wb) footprint need it, every earlier gate
-    // ignores the extra column
-    val raw =
-      if (lmLangDir.isDefined)
-        GraftExtensions.register(corpus).select(col(idCol).as("doc_id"),
-          col(textCol).as("text"), col(langCol).as("lang"))
-      else textCorpus(corpus, idCol, textCol)
+    // the corpus carries the stored models' key columns through the
+    // chain (the deltaGates convention): the keyed scorers and their
+    // footprints need them, every other gate ignores them
+    val raw = textCorpus(corpus, idCol, textCol,
+      modelKey(corpus, Some(lmDir), qualityModelDir))
     // ONE corpus pass derives the quality flags AND the exact-dedup
     // content hash (the [[funnelStages]] fused-gate-pass rationale: two
     // independent per-row projections of the same rows fuse into one
@@ -3332,8 +3024,7 @@ object LlmOps {
     // downstream shrinks. The micro-batch serving path
     // (llm_quality_clf_idx) keeps the pruned footprint form.
     val clfIds = qualityModelDir.map { qd =>
-      qualityScoreStored(raw.select(col("doc_id"), col("text")),
-          qd, qualityTau, "doc_id", "text", footprint = false)
+      qualityScoreStored(raw, qd, qualityTau, "doc_id", "text", footprint = false)
         .filter(col("pred")).select("doc_id")
         .join(qIds, Seq("doc_id"), "left_semi").transform(pinStage)
     }
@@ -3369,17 +3060,12 @@ object LlmOps {
       .filter(col("jaccard") >= 0.6)
     val eCorpus = raw.join(eIds, Seq("doc_id"), "left_semi")
     val kept = dedupApply(eCorpus, verified).transform(pinStage)
-    // the LM bar — global model, or each survivor under its OWN
-    // language's stored model (the three-surface parity rule: the live
-    // loop and the nightly delta already accept lmLangDir). The
-    // per-language probe's footprint job and bigram encode both read
-    // the persisted stage-4 cache.
-    val fluent = lmLangDir match {
-      case Some(ld) => fluencyStoredByLang(kept, ld)
-        .filter(col("fluency") >= threshold).select("doc_id")
-      case None => fluencyStored(kept, lmDir)
-        .filter(col("fluency") >= threshold).select("doc_id")
-    }
+    // the LM bar — each survivor under its own key's stored model (the
+    // global one, or its OWN language's for a `byLang` model). The
+    // probe's footprint job and bigram encode both read the persisted
+    // stage-4 cache.
+    val fluent = fluencyStored(kept, lmDir)
+      .filter(col("fluency") >= threshold).select("doc_id")
     (raw, qIds, clfIds, clean, eIds, kept, fluent)
   }
 
@@ -3388,8 +3074,11 @@ object LlmOps {
     * pass and the decontam stage (read-out gains a `1b_clf` row and
     * every later stage counts the shrunken chain) — the last of the
     * three curation surfaces to take the live loop's
-    * qualityModelDir/qualityTau option (gate parity, the round-14
-    * per-language-bar precedent).
+    * qualityModelDir/qualityTau option (gate parity). A `byLang` model
+    * at `lmDir` scores each stage-4 survivor under its OWN language's
+    * transitions, so a minority-language doc is judged against its own
+    * bar instead of being diluted by the majority's transition mass;
+    * the corpus then needs a `lang` column.
     */
   def curationFunnelFull(corpus: DataFrame, lmDir: String,
       decontamDir: String, threshold: Double = 0.0333,
@@ -3405,29 +3094,6 @@ object LlmOps {
       clfIds.map("1b_clf" -> _) ++
       Seq("2_decontam" -> clean, "3_exact_dedup" -> eIds,
         "4_near_dedup" -> kept, "5_fluent" -> fluent))
-  }
-
-  /** [[curationFunnelFull]] with the PER-LANGUAGE fluency bar — the last
-    * of the three curation surfaces to take `lmLangDir` (live ingest
-    * loop and nightly delta already do — the three-surface parity rule):
-    * stage-4 survivors score under their OWN language's stored
-    * [[buildFluencyModelByLang]] transitions, so a minority-language doc
-    * is judged against its own bar instead of being diluted by the
-    * majority's transition mass. Same chain, same one-shingling
-    * discipline, same six stage counts — only the stage-5 scorer
-    * differs ([[fluencyStoredByLang]]: (lang, wb)-pruned model scan,
-    * batch-side size-gated broadcast, never the artifact).
-    */
-  def curationFunnelFullLang(corpus: DataFrame, lmLangDir: String,
-      decontamDir: String, threshold: Double = 0.0333,
-      maxSharedGrams: Long = 0L, idCol: String = "doc_id",
-      textCol: String = "text", langCol: String = "lang"): DataFrame = {
-    val (raw, qIds, _, clean, eIds, kept, fluent) = fullStages(
-      corpus, "", decontamDir, threshold, maxSharedGrams, idCol, textCol,
-      lmLangDir = Some(lmLangDir), langCol = langCol)
-    stageCountsOnePass(("0_raw", raw), Seq(
-      "1_quality" -> qIds, "2_decontam" -> clean, "3_exact_dedup" -> eIds,
-      "4_near_dedup" -> kept, "5_fluent" -> fluent))
   }
 
   /** The full pipeline's terminal materialization — the corpus a training
@@ -3446,24 +3112,6 @@ object LlmOps {
     val (_, _, _, _, _, kept, fluent) = fullStages(
       corpus, lmDir, decontamDir, threshold, maxSharedGrams, idCol, textCol,
       qualityModelDir = qualityModelDir, qualityTau = qualityTau)
-    kept.join(fluent, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), length(col("text")).cast("bigint").as("n_chars"))
-  }
-
-  /** [[curationApplyFull]] under the PER-LANGUAGE bar — the terminal
-    * corpus of [[curationFunnelFullLang]]'s chain, witness-dumped: what
-    * a per-language build actually writes. Same stages, same
-    * one-shingling discipline; the survivor set differs from the global
-    * form exactly where a doc's own-language score and the
-    * globally-diluted one fall on opposite sides of the bar.
-    */
-  def curationApplyFullLang(corpus: DataFrame, lmLangDir: String,
-      decontamDir: String, threshold: Double = 0.0333,
-      maxSharedGrams: Long = 0L, idCol: String = "doc_id",
-      textCol: String = "text", langCol: String = "lang"): DataFrame = {
-    val (_, _, _, _, _, kept, fluent) = fullStages(
-      corpus, "", decontamDir, threshold, maxSharedGrams, idCol, textCol,
-      lmLangDir = Some(lmLangDir), langCol = langCol)
     kept.join(fluent, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), length(col("text")).cast("bigint").as("n_chars"))
   }
@@ -3508,11 +3156,12 @@ object LlmOps {
     */
   def snapshotNext(docs: DataFrame): DataFrame =
     docs.filter(col("doc_id") % 11 =!= 0)
-      .select(col("doc_id"),
+      .select(col("doc_id") +:
         when(col("doc_id") % 7 === 0, concat(col("text"), lit(" rev2")))
-          .otherwise(col("text")).as("text"))
+          .otherwise(col("text")).as("text") +: langOf(docs): _*)
       .unionByName(docs.filter(col("doc_id") % 13 === 0)
-        .select((col("doc_id") + 70000000L).as("doc_id"), col("text")))
+        .select((col("doc_id") + 70000000L).as("doc_id") +: col("text") +:
+          langOf(docs): _*))
 
   val SnapshotNextSql: String =
     """SELECT doc_id,
@@ -3545,30 +3194,15 @@ object LlmOps {
   def snapshotCurate(docs: DataFrame): DataFrame =
     snapshotNext(docs)
       .unionByName(docs.filter(col("doc_id") % 17 === 0)
-        .select((col("doc_id") + 90000000L).as("doc_id"),
-          concat(col("text"), lit(" drift")).as("text")))
+        .select((col("doc_id") + 90000000L).as("doc_id") +:
+          concat(col("text"), lit(" drift")).as("text") +: langOf(docs): _*))
 
   val SnapshotCurateSql: String =
     s"""$SnapshotNextSql
        |UNION ALL
        |SELECT doc_id + 90000000, text || ' drift' FROM documents WHERE doc_id % 17 = 0""".stripMargin
 
-  /** [[snapshotCurate]] with the language label carried — re-crawls and
-    * near-dup arrivals inherit their source doc's language, the fixture
-    * the PER-LANGUAGE nightly bar scores.
-    */
-  def snapshotCurateLang(docs: DataFrame): DataFrame =
-    docs.filter(col("doc_id") % 11 =!= 0)
-      .select(col("doc_id"),
-        when(col("doc_id") % 7 === 0, concat(col("text"), lit(" rev2")))
-          .otherwise(col("text")).as("text"), col("lang"))
-      .unionByName(docs.filter(col("doc_id") % 13 === 0)
-        .select((col("doc_id") + 70000000L).as("doc_id"), col("text"),
-          col("lang")))
-      .unionByName(docs.filter(col("doc_id") % 17 === 0)
-        .select((col("doc_id") + 90000000L).as("doc_id"),
-          concat(col("text"), lit(" drift")).as("text"), col("lang")))
-
+  /** [[snapshotCurate]] over a corpus that carries `lang`, in DuckDB SQL. */
   val SnapshotCurateLangSql: String =
     """SELECT doc_id,
       |       CASE WHEN doc_id % 7 = 0 THEN text || ' rev2' ELSE text END AS text,
@@ -3624,14 +3258,12 @@ object LlmOps {
       fluencyThreshold: Double = 0.0333,
       decontamDir: Option[String] = None,
       maxSharedGrams: Long = 0L,
-      lmLangDir: Option[String] = None,
-      langCol: String = "lang",
       qualityModelDir: Option[String] = None,
       qualityTau: Double = 1.0): DataFrame =
     curateDeltaPinned(oldSnap, newSnap, indexDir, idCol, textCol, threshold,
       lmDir, fluencyThreshold, decontamDir, maxSharedGrams,
       scala.collection.mutable.ArrayBuffer.empty[DataFrame],
-      lmLangDir, langCol, qualityModelDir, qualityTau)
+      qualityModelDir, qualityTau)
 
   /** [[curateDelta]] for a LONG-LIVED service: materializes the stage
     * counts, releases every cache the run pinned, and returns the report
@@ -3649,14 +3281,12 @@ object LlmOps {
       fluencyThreshold: Double = 0.0333,
       decontamDir: Option[String] = None,
       maxSharedGrams: Long = 0L,
-      lmLangDir: Option[String] = None,
-      langCol: String = "lang",
       qualityModelDir: Option[String] = None,
       qualityTau: Double = 1.0): Seq[(String, Long)] = {
     val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val out = curateDeltaPinned(oldSnap, newSnap, indexDir, idCol, textCol,
       threshold, lmDir, fluencyThreshold, decontamDir, maxSharedGrams, pins,
-      lmLangDir, langCol, qualityModelDir, qualityTau)
+      qualityModelDir, qualityTau)
     val rows = out.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     pins.foreach(_.unpersist(false))
     rows
@@ -3714,24 +3344,16 @@ object LlmOps {
       lmDir: Option[String], fluencyThreshold: Double,
       decontamDir: Option[String], maxSharedGrams: Long,
       pins: scala.collection.mutable.ArrayBuffer[DataFrame],
-      lmLangDir: Option[String] = None,
-      langCol: String = "lang",
       qualityModelDir: Option[String] = None,
       qualityTau: Double = 1.0): DeltaGates = {
-    require(lmDir.isEmpty || lmLangDir.isEmpty,
-      "lmDir and lmLangDir are mutually exclusive: one fluency bar per " +
-        "run (the per-language model replaces the global one)")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def pin(df: DataFrame): DataFrame = { pins += df.persist(lvl); df }
     val oldC = textCorpus(oldSnap, idCol, textCol)
-    // with the PER-LANGUAGE bar on, the churn carries its language label
-    // through the chain (the scoring and its (lang, wb) footprint need
-    // it); every other gate ignores the extra column
-    val newC =
-      if (lmLangDir.isDefined)
-        GraftExtensions.register(newSnap).select(col(idCol).as("doc_id"),
-          col(textCol).as("text"), col(langCol).as("lang"))
-      else textCorpus(newSnap, idCol, textCol)
+    // the churn carries the stored models' key columns through the chain
+    // (a keyed scorer and its footprint need them); every other gate
+    // ignores them
+    val key = modelKey(newSnap, lmDir, qualityModelDir)
+    val newC = textCorpus(newSnap, idCol, textCol, key)
     val oldFp = pin(oldC.select(col("doc_id"), md5(col("text")).as("oh")))
     // churn = added ∪ changed: the corpusDiff decision, inlined over the
     // shared fingerprints (removed docs don't ingest, so the left join
@@ -3789,15 +3411,15 @@ object LlmOps {
     // driver barrier instead of two or three sequential ones. Each
     // barrier here is a full stage chain over the churn derivation —
     // fusing them is the difference between this query and its oracle.
-    // The per-language footprint derives from the CORPUS scan
-    // (lmLangFpAggDocs — token buckets ⊇ prefix buckets, token total ≥
-    // bigram mass, both sound over-approximations), NOT from a pinned
-    // docBigramsLang frame: with the footprint off the corpus, the
-    // bigram frame has exactly ONE consumer (the probability join) and
-    // nothing corpus-sized is cached — fluencyStored's measured lesson
-    // (persisted batch bigrams: the cache write dominates), applied to
-    // the nightly lang chain (matched alternating A/B at sf0.1, REPS=7
-    // medians: 6.13/5.94/5.38 → 5.49/5.00/5.12 s — new wins every pair)
+    // The LM footprint derives from the CORPUS scan (lmFpAgg — token
+    // buckets ⊇ prefix buckets, token total ≥ bigram mass, both sound
+    // over-approximations), NOT from a pinned bigram frame: with the
+    // footprint off the corpus, the bigram frame has exactly ONE
+    // consumer (the probability join) and nothing corpus-sized is cached
+    // — fluencyStored's measured lesson (persisted batch bigrams: the
+    // cache write dominates; matched alternating A/B of the per-language
+    // nightly at sf0.1, REPS=7 medians: 6.13/5.94/5.38 → 5.49/5.00/5.12 s
+    // — new wins every pair)
     // the TRAINED-classifier gate (three-surface parity: the live
     // loop's qualityModelDir/qualityTau option on the nightly too) — a
     // per-doc predicate against the frozen artifact, so it commutes:
@@ -3823,7 +3445,7 @@ object LlmOps {
     // already quality-gated); only the 1b_clf literal intersects with
     // qIds, inside the fused barrier below.
     val clfIds = qualityModelDir.map { qd =>
-      pin(qualityScoreStored(delta.select("doc_id", "text"), qd, qualityTau,
+      pin(qualityScoreStored(delta, qd, qualityTau,
           "doc_id", "text", footprint = false)
         .filter(col("pred")).select("doc_id"))
     }
@@ -3834,8 +3456,9 @@ object LlmOps {
       clfIds.fold(c)(ci => c.join(ci, Seq("doc_id"), "left_semi"))
     }
     val aggs = Seq(mhFpAgg(bBands)) ++
-      lmDir.map(_ => lmFpAgg(eC)) ++
-      lmLangDir.map(_ => lmLangFpAggDocs(eC)) ++
+      // keyed by every carried column: the probe pins by its own
+      // partition columns' fields, so a finer footprint prunes the same
+      lmDir.map(_ => lmFpAgg(eC, key = key)) ++
       cleanIds.map(_.agg(count(lit(1)).as("dc_n"))) ++
       // the trained-classifier gate's survivor count — materializes the
       // pinned clfIds cache inside this barrier (concurrent with the
@@ -3887,17 +3510,9 @@ object LlmOps {
     // the optional NIGHTLY LM bar — scores the cached exact survivors
     // (the round-12 restructure: the LM chain runs concurrently with the
     // probe chain inside the final job instead of sitting behind it)
-    val fluentIds = (lmDir, lmLangDir) match {
-      case (Some(lm), _) => Some(
-        fluencyStored(eC, lm, fpRow = Some(fused))
-          .filter(col("fluency") >= fluencyThreshold).select("doc_id"))
-      case (_, Some(ld)) => Some(
-        fluencyStoredByLangFrom(eC,
-            docBigramsLang(eC, "doc_id", "text", "lang"), ld,
-            fpRow = Some(fused))
-          .filter(col("fluency") >= fluencyThreshold).select("doc_id"))
-      case _ => None
-    }
+    val fluentIds = lmDir.map(lm =>
+      fluencyStored(eC, lm, fpRow = Some(fused))
+        .filter(col("fluency") >= fluencyThreshold).select("doc_id"))
     val survivorIds0 = fluentIds match {
       case Some(fl) =>
         kept.join(gateBroadcast(fl, ecCount), Seq("doc_id"), "left_semi")
@@ -3927,13 +3542,11 @@ object LlmOps {
       lmDir: Option[String], fluencyThreshold: Double,
       decontamDir: Option[String], maxSharedGrams: Long,
       pins: scala.collection.mutable.ArrayBuffer[DataFrame],
-      lmLangDir: Option[String] = None,
-      langCol: String = "lang",
       qualityModelDir: Option[String] = None,
       qualityTau: Double = 1.0): DataFrame = {
     val g = deltaGates(oldSnap, newSnap, indexDir, idCol, textCol, threshold,
       lmDir, fluencyThreshold, decontamDir, maxSharedGrams, pins,
-      lmLangDir, langCol, qualityModelDir, qualityTau)
+      qualityModelDir, qualityTau)
     val spark = g.delta.sparkSession
     import spark.implicits._
     // the decontam and trained-classifier filters apply as id
@@ -4057,13 +3670,11 @@ object LlmOps {
       maxSharedGrams: Long = 0L,
       compactAfter: Boolean = true,
       crashHook: String => Unit = _ => (),
-      lmLangDir: Option[String] = None,
-      langCol: String = "lang",
       qualityModelDir: Option[String] = None,
       qualityTau: Double = 1.0): (Long, Boolean) = {
     val spark = newSnap.sparkSession
     StoredArtifact.EpochCorpus.recover(corpusDir)
-    lmLangDir.foreach(StoredArtifact.FluencyModelByLang.recover)
+    lmDir.foreach(StoredArtifact.FluencyModel.recover)
     StoredArtifact.MinHashIndex.recover(indexDir)
     val marker = s"$indexDir/_delta_epoch_$epoch"
     val epochDir = StoredTable.Corpus.partition(corpusDir, epoch)
@@ -4094,7 +3705,7 @@ object LlmOps {
       } else {
         val g = deltaGates(oldSnap, newSnap, indexDir, idCol, textCol,
           threshold, lmDir, fluencyThreshold, decontamDir, maxSharedGrams,
-          pins, lmLangDir, langCol, qualityModelDir, qualityTau)
+          pins, qualityModelDir, qualityTau)
         // survivors persisted: the corpus write, the index append's two
         // derivations, and the returned count all consume it
         val s = g.survivors

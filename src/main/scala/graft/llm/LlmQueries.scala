@@ -151,7 +151,7 @@ object LlmQueries {
       dir
     }
 
-  /** The PER-LANGUAGE stored IDF ([[LlmOps.buildIdfModelByLang]]) over
+  /** The PER-LANGUAGE stored IDF ([[LlmOps.buildIdfModel]], `byLang`) over
     * `d`'s documents — probed by the per-language keyword scorer and
     * read by its health gauge. Built on the FULL corpus (the [[lmDir]]
     * convention) so the stored probe of a slice is bit-identical to the
@@ -160,7 +160,7 @@ object LlmQueries {
   private def idfLangDir(s: SparkSession, d: String): String =
     memo(s"idflang|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-idf-lang")
-      LlmOps.buildIdfModelByLang(Tables.documents(s, d), dir)
+      LlmOps.buildIdfModel(Tables.documents(s, d), dir, byLang = true)
       dir
     }
 
@@ -181,14 +181,15 @@ object LlmQueries {
       dir
     }
 
-  /** The PER-LANGUAGE trained quality classifier over the lang-carrying
-    * label fixture — probed by the per-language classifier query.
+  /** The PER-LANGUAGE trained quality classifier (`byLang`) over the
+    * label fixture, which carries `lang` — probed by the per-language
+    * classifier query.
     */
   private def qclfLangDir(s: SparkSession, d: String): String =
     memo(s"qclflang|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-qclf-lang")
-      LlmOps.buildQualityClassifierByLang(
-        LlmOps.qclfCorpusLang(Tables.documents(s, d)), dir)
+      LlmOps.buildQualityClassifier(
+        LlmOps.qclfCorpus(Tables.documents(s, d)), dir, byLang = true)
       dir
     }
 
@@ -197,12 +198,12 @@ object LlmQueries {
     * tercile cuts (`pt/cuts`), both over `d`'s documents — probed by
     * the per-language fluency and partition queries.
     */
-  private def lmLangDir(s: SparkSession, d: String): String =
+  private def langLmDir(s: SparkSession, d: String): String =
     memo(s"lmlang|$d|${fingerprint(s, d, "documents")}") {
       val dir = tempIndexDir("graft-lm-lang")
       val docs = Tables.documents(s, d)
-      LlmOps.buildFluencyModelByLang(docs, s"$dir/lm")
-      LlmOps.buildLmPartitionerByLang(docs, s"$dir/lm", s"$dir/pt")
+      LlmOps.buildFluencyModel(docs, s"$dir/lm", byLang = true)
+      LlmOps.buildLmPartitioner(docs, s"$dir/lm", s"$dir/pt")
       dir
     }
 
@@ -587,20 +588,19 @@ object LlmQueries {
       LlmOps.nearDupCorpus(Tables.documents(s, d)), lmDir(s, d),
       decontamIndexDir(s, d), maxSharedGrams = 5L,
       qualityModelDir = Some(qclfDir(s, d)))),
-    // the COMPLETE batch pipeline under the PER-LANGUAGE bar — closing
-    // the three-surface parity (live loop and nightly delta already
-    // accept lmLangDir): the same six gates as llm_curate_full, stage 5
-    // scoring each survivor against its OWN language's stored model
-    // (bar 0.034, the llm_curate_delta_lang convention)
-    "llm_curate_full_lang" -> ((s, d) => LlmOps.curationFunnelFullLang(
-      LlmOps.nearDupCorpusLang(Tables.documents(s, d)),
-      s"${lmLangDir(s, d)}/lm", decontamIndexDir(s, d),
+    // the COMPLETE batch pipeline under the PER-LANGUAGE bar: the same
+    // six gates as llm_curate_full, stage 5 scoring each survivor
+    // against its OWN language's stored model (bar 0.034, the
+    // llm_curate_delta_lang convention)
+    "llm_curate_full_lang" -> ((s, d) => LlmOps.curationFunnelFull(
+      LlmOps.nearDupCorpus(Tables.documents(s, d)),
+      s"${langLmDir(s, d)}/lm", decontamIndexDir(s, d),
       threshold = 0.034, maxSharedGrams = 5L)),
     // the per-language pipeline's terminal corpus — the rows a
     // per-language build writes, by the witness convention
-    "llm_curate_full_lang_apply" -> ((s, d) => LlmOps.curationApplyFullLang(
-      LlmOps.nearDupCorpusLang(Tables.documents(s, d)),
-      s"${lmLangDir(s, d)}/lm", decontamIndexDir(s, d),
+    "llm_curate_full_lang_apply" -> ((s, d) => LlmOps.curationApplyFull(
+      LlmOps.nearDupCorpus(Tables.documents(s, d)),
+      s"${langLmDir(s, d)}/lm", decontamIndexDir(s, d),
       threshold = 0.034, maxSharedGrams = 5L)),
     // snapshot-versioning audit: which doc_ids were added / removed /
     // changed between two crawl generations — fingerprints full-outer
@@ -647,13 +647,13 @@ object LlmQueries {
     }),
     // the nightly delta with the PER-LANGUAGE bar: churn-only gates as
     // llm_curate_delta, then survivors score under their OWN language's
-    // stored model — the live loop's lmLangDir deployment, nightly
+    // stored model — the live loop's per-language deployment, nightly
     // (bar 0.034: per-lang scores sit in [0.027, 0.051] across SFs and
     // 0.034 is discriminative at all three — the DeltaApplyBar lesson)
     "llm_curate_delta_lang" -> ((s, d) => {
       val base = Tables.documents(s, d)
-      LlmOps.curateDelta(base, LlmOps.snapshotCurateLang(base),
-        mhIndexDir(s, d), lmLangDir = Some(s"${lmLangDir(s, d)}/lm"),
+      LlmOps.curateDelta(base, LlmOps.snapshotCurate(base),
+        mhIndexDir(s, d), lmDir = Some(s"${langLmDir(s, d)}/lm"),
         fluencyThreshold = 0.034)
     }),
     // the nightly delta's TERMINAL ADMIT: the every-gate delta's
@@ -759,7 +759,7 @@ object LlmQueries {
     // minority-language model reads as its own row instead of being
     // averaged into the global gauge
     "llm_lm_stats_lang" -> ((s, d) =>
-      LlmOps.lmStatsLang(s, s"${lmLangDir(s, d)}/lm")),
+      LlmOps.lmStats(s, s"${langLmDir(s, d)}/lm")),
     // batch keyword scoring off the STORED IDF model (the fluency_idx
     // convention: the %10 batch slice against the full-corpus artifact,
     // df scan pruned to the batch's token buckets, batch broadcast)
@@ -770,15 +770,15 @@ object LlmQueries {
     "llm_idf_stats"     -> ((s, d) => LlmOps.idfModelStats(s, idfDir(s, d))),
     // per-language stored-IDF probe: each doc's terms weigh against ITS
     // language's df/N (the last global-only frozen-statistics artifact
-    // taken per-language — the lmStatsLang round's argument applied to
+    // taken per-language — the llm_lm_stats_lang argument applied to
     // document frequencies); %10 slice vs the full-corpus artifact
-    "llm_keywords_lang" -> ((s, d) => LlmOps.keywordsStoredByLang(
+    "llm_keywords_lang" -> ((s, d) => LlmOps.keywordsStored(
       Tables.documents(s, d).filter(col("doc_id") % 10 === 0),
       idfLangDir(s, d))),
     // per-language IDF health gauge — a collapsed minority language
     // reads as its own rows instead of averaging into the global one
     "llm_idf_stats_lang" -> ((s, d) =>
-      LlmOps.idfModelStatsByLang(s, idfLangDir(s, d))),
+      LlmOps.idfModelStats(s, idfLangDir(s, d))),
     // trained quality classifier, corpus-as-its-own-model: per-token
     // class-conditional likelihood ratios distilled from the heuristic
     // gate's labels, mean-ratio scored with the value-sorted fold —
@@ -811,19 +811,19 @@ object LlmQueries {
     // PER-LANGUAGE stored-LM probe: each %10-slice doc scores under its
     // OWN language's frozen transition model — the (lang, wb) footprint
     // prunes the model scan to the batch's languages and buckets
-    "llm_fluency_lang" -> ((s, d) => LlmOps.fluencyStoredByLang(
+    "llm_fluency_lang" -> ((s, d) => LlmOps.fluencyStored(
       Tables.documents(s, d).filter(col("doc_id") % 10 === 0),
-      s"${lmLangDir(s, d)}/lm")),
+      s"${langLmDir(s, d)}/lm")),
     // CCNet head/middle/tail with PER-LANGUAGE calibrated cuts: every
     // doc buckets by its own language's frozen tercile bar — the
     // minority-language fairness fix over llm_lm_partition's global bar
-    "llm_lm_partition_lang" -> ((s, d) => LlmOps.lmPartitionByLang(
-      Tables.documents(s, d), s"${lmLangDir(s, d)}/lm",
-      s"${lmLangDir(s, d)}/pt")),
+    "llm_lm_partition_lang" -> ((s, d) => LlmOps.lmPartition(
+      Tables.documents(s, d), s"${langLmDir(s, d)}/lm",
+      s"${langLmDir(s, d)}/pt")),
     // PER-LANGUAGE trained quality gate: each %10-slice doc's tokens
     // weigh against its OWN language's likelihood table — (lang, tb)
     // footprint prunes the weight scan, ratios normalize within-language
-    "llm_quality_clf_lang" -> ((s, d) => LlmOps.qualityScoreStoredByLang(
+    "llm_quality_clf_lang" -> ((s, d) => LlmOps.qualityScoreStored(
       Tables.documents(s, d).filter(col("doc_id") % 10 === 0),
       qclfLangDir(s, d))),
     // PII injected deterministically (every 5th doc gets an email + a long

@@ -97,17 +97,16 @@ object StreamingIngest {
     * index and appends nothing, so it adds NO crash window: a replayed
     * epoch scores identically against the generation-frozen model.
     * Short docs (< 2 tokens, no transition evidence) drop with the
-    * disfluent ones. `lmLangDir` swaps the gate's artifact for the
-    * PER-LANGUAGE model family ([[LlmOps.buildFluencyModelByLang]]):
-    * each doc scores under its own language's frozen model (`langCol`
-    * labels the batch), the probe prunes by (lang, wb), and the crash
-    * reasoning is unchanged — mutually exclusive with `lmDir` (it
-    * REPLACES the global bar, it doesn't stack a second one).
+    * disfluent ones. A per-language model (`byLang` build) at `lmDir`
+    * scores each doc under its own language's frozen model (the batch's
+    * `lang` column labels it, checked at start), the probe prunes by
+    * (lang, wb), and the crash reasoning is unchanged.
     *
     * `lmCutsDir` (+ `midPermille`, requires `lmDir`) swaps the absolute
     * bar for the production CCNet SELECTION RULE: each minhash survivor
     * scores against the frozen reference LM and the frozen
-    * [[LlmOps.buildLmPartitioner]] tercile cuts route it — `head` kept
+    * [[LlmOps.buildLmPartitioner]] tercile cuts (calibrated against the
+    * same model, so keyed alike) route it — `head` kept
     * whole, `middle` kept at midPermille/1000 by salted doc-id hash,
     * `tail` dropped ([[LlmOps.lmSelectIdsFrom]], the exact rule
     * [[LlmOps.lmPartitionApply]] states in batch). Composes with
@@ -163,8 +162,6 @@ object StreamingIngest {
       semanticThreshold: Option[Double] = None,
       pqIndexDir: Option[String] = None,
       lmDir: Option[String] = None,
-      lmLangDir: Option[String] = None,
-      langCol: String = "lang",
       fluencyThreshold: Option[Double] = None,
       lmCutsDir: Option[String] = None,
       midPermille: Int = 500,
@@ -176,14 +173,11 @@ object StreamingIngest {
       epochHook: Long => Unit = _ => ()): StreamingQuery = {
     require(semanticThreshold.isEmpty || annIndexDir.nonEmpty,
       "semanticThreshold needs annIndexDir: the semantic gate probes the stored cell table")
-    require(fluencyThreshold.isEmpty || lmDir.nonEmpty || lmLangDir.nonEmpty,
-      "fluencyThreshold needs lmDir or lmLangDir: the fluency gate scores against a stored bigram LM")
-    require(lmDir.isEmpty || lmLangDir.isEmpty,
-      "lmDir and lmLangDir are mutually exclusive: one fluency bar per loop " +
-        "(the per-language model IS the global model's replacement, not a second gate)")
+    require(fluencyThreshold.isEmpty || lmDir.nonEmpty,
+      "fluencyThreshold needs lmDir: the fluency gate scores against a stored bigram LM")
     require(lmCutsDir.isEmpty || lmDir.nonEmpty,
       "lmCutsDir needs lmDir: the frozen cuts were calibrated against the " +
-        "global stored model the selection's scores must come from")
+        "stored model the selection's scores must come from")
     // startup recovery: a previous run may have died INSIDE a swap — a
     // compaction (table level), a rebuild (the artifact parent renamed
     // away mid-generation-change, read-only artifacts included) or a
@@ -198,11 +192,18 @@ object StreamingIngest {
     annIndexDir.foreach(StoredArtifact.AnnIndex.recover)
     pqIndexDir.foreach(StoredArtifact.PqIndex.recover)
     lmDir.foreach(StoredArtifact.FluencyModel.recover)
-    lmLangDir.foreach(StoredArtifact.FluencyModelByLang.recover)
     lmCutsDir.foreach(StoredArtifact.LmCuts.recover)
     decontamIndexDir.foreach(StoredArtifact.DecontamIndex.recover)
     qualityModelDir.foreach(StoredArtifact.QualityModel.recover)
-    val schema = spark.read.parquet(srcDir).schema
+    val src = spark.read.parquet(srcDir)
+    val schema = src.schema
+    // the LM's key (`lang` for a per-language model), read back from the
+    // recovered artifact: the epoch's bigram cache carries it
+    val lmKey = lmDir.toSeq.flatMap { ld =>
+      val (_, key) = LlmOps.readKeyed(spark, StoredTable.Bigrams, ld)
+      LlmOps.requireKey(src, key, ld)
+      key
+    }
     graft.streaming.NioCheckpointFileManager.install(spark)
     spark.readStream
       .schema(schema)
@@ -280,13 +281,13 @@ object StreamingIngest {
         // scores identically. Docs with fewer than two tokens have no
         // transition evidence and drop with the disfluent ones — the
         // short-doc discipline of a production LM filter.
-        // global (lmDir) or PER-LANGUAGE (lmLangDir) reference model:
-        // same gate slot, same frozen-artifact replay reasoning — only
-        // the bigram derivation (language label rides each row) and the
-        // probe's pruning key ((lang, wb) instead of wb) differ. The
-        // per-language form is the CCNet regime: each doc scores under
-        // ITS language's model, so a minority-language batch never pays
-        // (or gets judged by) the majority's transition mass.
+        // a global or a PER-LANGUAGE reference model: same gate slot,
+        // same frozen-artifact replay reasoning — only the bigram rows
+        // (the model's key rides each) and the probe's pruning key
+        // ((lang, wb) instead of wb) differ. The per-language form is the
+        // CCNet regime: each doc scores under ITS language's model, so a
+        // minority-language batch never pays (or gets judged by) the
+        // majority's transition mass.
         // the LM stage scores ONCE per epoch off the shared bigram
         // cache, then applies whichever selections are on: the absolute
         // bar (fluencyThreshold), the frozen-cuts CCNet selection
@@ -297,28 +298,18 @@ object StreamingIngest {
         // and the middle sample is a deterministic id hash — a replayed
         // epoch selects identically, zero new crash windows.
         val lmGateOn = fluencyThreshold.isDefined || lmCutsDir.isDefined
-        val bgF = if (!lmGateOn) None else Some {
-          (if (lmLangDir.isDefined)
-            LlmOps.docBigramsLang(kept0, idCol, textCol, langCol)
-          else LlmOps.docBigrams(kept0, idCol, textCol)).persist(lvl)
-        }
+        val bgF = if (!lmGateOn) None
+          else Some(LlmOps.docBigrams(kept0, idCol, textCol, lmKey).persist(lvl))
         val kept1 = bgF match {
           case Some(bgf) =>
-            val scored = lmLangDir match {
-              case Some(ld) => LlmOps.fluencyStoredByLangFrom(
-                kept0.select(col(idCol).as("doc_id"),
-                  col(textCol).as("text"), col(langCol).as("lang")),
-                bgf, ld)
-              case None => LlmOps.fluencyStoredFrom(bgf, lmDir.get)
-            }
+            val scored = LlmOps.fluencyStoredFrom(bgf, lmDir.get)
             val afterBar = fluencyThreshold match {
               case Some(ft) => scored.filter(col("fluency") >= ft)
               case None     => scored
             }
             val keepIds = lmCutsDir match {
               case Some(cd) =>
-                LlmOps.lmSelectIdsFrom(
-                  afterBar.select("doc_id", "fluency"), cd, midPermille)
+                LlmOps.lmSelectIdsFrom(afterBar, cd, midPermille)
               case None => afterBar.select(col("doc_id"))
             }
             kept0.join(keepIds.select(col("doc_id").as(idCol)),

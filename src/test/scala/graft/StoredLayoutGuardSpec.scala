@@ -33,4 +33,27 @@ class StoredLayoutGuardSpec extends AnyFunSuite {
       })
     assert(found.isEmpty, s"stored-table layout written outside graft.fs.StoredTable:\n${found.mkString("\n")}")
   }
+
+  test("StoredTable declares each table directory once, and no main code keeps a per-language twin") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"$root not found: run from the project root")
+    // a keyed variant derives from its one declaration (`keyed`), so a
+    // directory literal appears in exactly one StoredTable(...) call
+    val layout = new String(Files.readAllBytes(root.resolve("graft/fs/StoredTable.scala")))
+    val dirs = """StoredTable\("([^"]*)"""".r.findAllMatchIn(layout).map(_.group(1)).toSeq
+    assert(dirs.contains("bigrams") && dirs.contains("df") && dirs.contains("w"),
+      s"the scan found no model-table declarations: $dirs")
+    val twice = dirs.groupBy(identity).collect { case (d, ds) if ds.size > 1 => d }
+    assert(twice.isEmpty, s"table directories declared more than once: ${twice.mkString(", ")}")
+    // the language is a key read back from the artifact, not a second
+    // code path: no identifier ends in ByLang or FullLang, and no
+    // lmLangDir remains
+    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val twin = """\b(\w+(?:ByLang|FullLang)|lmLangDir)\b""".r
+    val found = files.flatMap(f =>
+      Files.readAllLines(f).asScala.zipWithIndex.flatMap { case (line, i) =>
+        twin.findAllMatchIn(line).map(m => s"$f:${i + 1}: ${m.group(1)}")
+      })
+    assert(found.isEmpty, s"per-language twins in main code:\n${found.mkString("\n")}")
+  }
 }

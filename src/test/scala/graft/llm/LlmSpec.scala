@@ -23,6 +23,25 @@ class LlmSpec extends SparkSpec {
       fp.toSeq.updated(fp.fieldIndex(field), LlmOps.GateBroadcastMaxRows + 1).toArray,
       fp.schema)
 
+  /** Key invariance of a per-language model family: over a corpus whose
+    * documents all share one `lang` ([[docs]]' "en"), the per-language
+    * artifact's output is the global artifact's rows plus that `lang`
+    * column, bit for bit (doubles compared by their exact decimal form).
+    */
+  private def assertKeyInvariant(what: String,
+      global: org.apache.spark.sql.DataFrame,
+      perLang: org.apache.spark.sql.DataFrame): Unit = {
+    assert(perLang.columns.toSet === global.columns.toSet + "lang",
+      s"$what: the per-language output must be the global columns plus lang")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(global.columns.map(col).toSeq: _*).collect().map(_.toString).toSeq.sorted
+    val g = rows(global)
+    assert(g.nonEmpty, s"$what: the fixture must produce rows")
+    assert(rows(perLang) === g, s"$what: per-language rows must equal the global rows")
+    assert(perLang.select("lang").distinct().collect().map(_.getString(0)).toSeq === Seq("en"),
+      s"$what: every per-language row carries the corpus' one language")
+  }
+
   test("exact dedup groups identical text, keeps min doc_id") {
     val d = docs(0L -> "alpha beta gamma", 3L -> "other text here")
     val out = LlmOps.dedupExact(LlmOps.exactDupCorpus(d)).collect()
@@ -352,6 +371,14 @@ class LlmSpec extends SparkSpec {
     val g = LlmOps.idfModelStats(spark, dir).collect()
     assert(g.map(_.getLong(1)).sum === 4L)
     assert(g.map(_.getLong(3)).sum === 9L)
+    // one language throughout: the per-language artifact is keyed, not
+    // different
+    val lDir = java.nio.file.Files.createTempDirectory("graft-idf-l1").toString
+    LlmOps.buildIdfModel(corpus, lDir, byLang = true)
+    assertKeyInvariant("keywordsStored",
+      LlmOps.keywordsStored(batch, dir), LlmOps.keywordsStored(batch, lDir))
+    assertKeyInvariant("idfModelStats",
+      LlmOps.idfModelStats(spark, dir), LlmOps.idfModelStats(spark, lDir))
   }
 
   test("trained quality classifier: hand-computed likelihood ratios; junk rejected, clean kept") {
@@ -413,6 +440,14 @@ class LlmSpec extends SparkSpec {
     val g = LlmOps.qclfStats(spark, dir).collect()
     assert(g.map(_.getLong(2)).sum === 400L)
     assert(g.map(_.getLong(3)).sum === 96L)
+    // one language throughout: the per-language classifier is keyed, not
+    // different
+    val lDir = java.nio.file.Files.createTempDirectory("graft-qclf-l1").toString
+    LlmOps.buildQualityClassifier(corpus, lDir, byLang = true)
+    assertKeyInvariant("qualityScoreStored",
+      LlmOps.qualityScoreStored(slice, dir), LlmOps.qualityScoreStored(slice, lDir))
+    assertKeyInvariant("qclfStats",
+      LlmOps.qclfStats(spark, dir), LlmOps.qclfStats(spark, lDir))
     // crash windows: a partial tmp write (crash during build) and a
     // crash between the two swap renames both heal at the next
     // rebuild's swapDir entry, and the probe output is unchanged
@@ -1508,8 +1543,7 @@ class LlmSpec extends SparkSpec {
     val lmDir = java.nio.file.Files.createTempDirectory("graft-lm-nohint").toString
     LlmOps.buildFluencyModel(lmDocs, lmDir)
     val lmLangDir = java.nio.file.Files.createTempDirectory("graft-lmlang-nohint").toString
-    LlmOps.buildFluencyModelByLang(lmDocs, lmLangDir)
-    val bgLang = LlmOps.docBigramsLang(lmDocs, "doc_id", "text", "lang").persist(lvl)
+    LlmOps.buildFluencyModel(lmDocs, lmLangDir, byLang = true)
     val qDir = java.nio.file.Files.createTempDirectory("graft-qclf-nohint").toString
     val qCorpus = LlmOps.qclfCorpus(
       docs((0L until 20L).map(i => i -> s"alpha bravo charlie delta tok$i"): _*))
@@ -1524,9 +1558,9 @@ class LlmSpec extends SparkSpec {
         LlmOps.mhFpAgg(bBands).collect()(0), "mh_n"),
       ("fluencyStored", fp => LlmOps.fluencyStored(lmDocs, lmDir, fpRow = fp),
         LlmOps.lmFpAgg(lmDocs).collect()(0), "toks"),
-      ("fluencyStoredByLangFrom",
-        fp => LlmOps.fluencyStoredByLangFrom(lmDocs, bgLang, lmLangDir, fpRow = fp),
-        LlmOps.lmLangFpAgg(bgLang).collect()(0), "lm_lt"),
+      ("fluencyStored per language",
+        fp => LlmOps.fluencyStored(lmDocs, lmLangDir, fpRow = fp),
+        LlmOps.lmFpAgg(lmDocs, key = Seq("lang")).collect()(0), "toks"),
       ("qualityScoreStored", fp => LlmOps.qualityScoreStored(qSlice, qDir, fpRow = fp),
         LlmOps.qclfFpAgg(qSlice).collect()(0), "qc_toks"))
     def sortedRows(df: org.apache.spark.sql.DataFrame) =
@@ -1546,7 +1580,7 @@ class LlmSpec extends SparkSpec {
       assert(sortedRows(unhinted) === hintedRows,
         s"$name: hinted and unhinted probes must agree")
     }
-    bSig.unpersist(); bBands.unpersist(); bgLang.unpersist()
+    bSig.unpersist(); bBands.unpersist()
 
     // the cosine gate takes no footprint row: a batch one row past
     // GateBroadcastMaxVecRows takes the unhinted path itself
@@ -1760,6 +1794,14 @@ class LlmSpec extends SparkSpec {
     assert(out(11L) === ((2L, (0.0 + 2.0 / 3.0) / 2.0)))
     // doc 13: every transition unseen → present with fluency exactly 0
     assert(out(13L) === ((2L, 0.0)))
+    // one language throughout: the per-language model is keyed, not
+    // different
+    val lDir = java.nio.file.Files.createTempDirectory("graft-lm-l1").toString
+    LlmOps.buildFluencyModel(d, lDir, byLang = true)
+    val fresh = docs(11L -> "a b c", 13L -> "z z z", 15L -> "q")
+    assertKeyInvariant("fluencyStored",
+      LlmOps.fluencyStored(fresh, dir), LlmOps.fluencyStored(fresh, lDir))
+    assertKeyInvariant("lmStats", LlmOps.lmStats(spark, dir), LlmOps.lmStats(spark, lDir))
   }
 
   test("fluency model minCount pruning drops rare bigrams but keeps full prefix mass; lmStats reads the stored table") {
@@ -1966,6 +2008,16 @@ class LlmSpec extends SparkSpec {
     // mid- and top-range — slice membership plays no role in assignment
     assert(out(1L)._2 === "tail" && out(3L)._2 === "middle" &&
       out(5L)._2 === "head", s"${out(1L)} ${out(3L)} ${out(5L)}")
+    // one language throughout: the per-language model's cuts and buckets
+    // are the global ones, keyed
+    val lmL = java.nio.file.Files.createTempDirectory("graft-lm-part-l").toString
+    val cutsL = java.nio.file.Files.createTempDirectory("graft-lm-cuts-l").toString
+    LlmOps.buildFluencyModel(d, lmL, byLang = true)
+    LlmOps.buildLmPartitioner(d, lmL, cutsL)
+    assertKeyInvariant("cuts", spark.read.parquet(s"$cutsDir/cuts"),
+      spark.read.parquet(s"$cutsL/cuts"))
+    assertKeyInvariant("lmPartition", LlmOps.lmPartition(d, lmDir, cutsDir),
+      LlmOps.lmPartition(d, lmL, cutsL))
   }
 
   test("LM partition apply: head kept whole, middle sampled by salted hash, tail dropped") {
@@ -2770,7 +2822,7 @@ class LlmSpec extends SparkSpec {
     val lm = java.nio.file.Files.createTempDirectory("graft-cdl-lm").toString
     val lmG = java.nio.file.Files.createTempDirectory("graft-cdl-lmg").toString
     LlmOps.buildMinHashIndex(base, ix)
-    LlmOps.buildFluencyModelByLang(base, lm)
+    LlmOps.buildFluencyModel(base, lm, byLang = true)
     LlmOps.buildFluencyModel(base, lmG)
     // the nightly churn: an xx arrival (shingle-novel under LSH — the
     // kelo filler breaks trigram overlap with both base xx docs at
@@ -2782,7 +2834,7 @@ class LlmSpec extends SparkSpec {
       (200L, "the zub mira dun the zub kelo dun the kelo mira", "xx"),
       (201L, "the bird sings now the dog runs and the cat sleeps", "en"))
     val perLang = LlmOps.curateDelta(base, next, ix,
-        lmLangDir = Some(lm), fluencyThreshold = 0.5).collect()
+        lmDir = Some(lm), fluencyThreshold = 0.5).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(perLang("4_fluent") === 2L,
       s"both updates clear their own language's bar, got $perLang")
@@ -2794,15 +2846,16 @@ class LlmSpec extends SparkSpec {
     // the terminal commit takes the per-language bar too
     val c = java.nio.file.Files.createTempDirectory("graft-cdl-c").toString
     val (n, _) = LlmOps.curateDeltaApply(base, next, c, ix, epoch = 1L,
-      lmLangDir = Some(lm), fluencyThreshold = 0.5)
+      lmDir = Some(lm), fluencyThreshold = 0.5)
     assert(n === 2L, "the apply must commit the per-language survivors")
     assert(spark.read.parquet(c).filter(col("epoch") === 1L)
       .select("doc_id").collect().map(_.getLong(0)).toSet === Set(200L, 201L))
-    // mutual exclusion holds across the nightly surfaces
-    intercept[IllegalArgumentException] {
-      LlmOps.curateDelta(base, next, ix, lmDir = Some(lmG),
-        lmLangDir = Some(lm)).collect()
+    // a per-language model needs the churn's language: a snapshot
+    // without `lang` fails on the column, it is never scored globally
+    val e = intercept[IllegalArgumentException] {
+      LlmOps.curateDelta(base, next.drop("lang"), ix, lmDir = Some(lm)).collect()
     }
+    assert(e.getMessage.contains("`lang`"), e.getMessage)
   }
 
   test("curateDeltaApply: survivors commit once; every crash window replays to convergence") {
@@ -2952,8 +3005,8 @@ class LlmSpec extends SparkSpec {
     val d = (en ++ xx).toDF("doc_id", "text", "lang")
       .withColumn("source", lit("t"))
     val mDir = java.nio.file.Files.createTempDirectory("graft-lmlang").toString
-    LlmOps.buildFluencyModelByLang(d, mDir)
-    val perLang = LlmOps.fluencyStoredByLang(d, mDir).collect()
+    LlmOps.buildFluencyModel(d, mDir, byLang = true)
+    val perLang = LlmOps.fluencyStored(d, mDir).collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getDouble(3))).toMap
     assert(perLang.size === 23)
     // a global model built over the SAME mixed corpus
@@ -2971,8 +3024,8 @@ class LlmSpec extends SparkSpec {
     // — every language gets its own tercile cuts, so the 3-doc minority
     // still lands one doc per bucket instead of being judged on en's bar
     val pDir = java.nio.file.Files.createTempDirectory("graft-lmlang-pt").toString
-    LlmOps.buildLmPartitionerByLang(d, mDir, pDir, refMod = 1)
-    val parts = LlmOps.lmPartitionByLang(d, mDir, pDir).collect()
+    LlmOps.buildLmPartitioner(d, mDir, pDir, refMod = 1)
+    val parts = LlmOps.lmPartition(d, mDir, pDir).collect()
       .map(r => (r.getString(1), r.getString(3)))
     val xxBuckets = parts.filter(_._1 == "xx").map(_._2).sorted.toSeq
     assert(xxBuckets === Seq("head", "middle", "tail"),
@@ -2984,12 +3037,12 @@ class LlmSpec extends SparkSpec {
       s"en terciles off: $enCounts")
     // the CUT-LESS-LANGUAGE contract: calibrate on the %10 slice — en's
     // ids are all multiples of 10, xx's (5, 15, 25) never are, so xx has
-    // NO cuts row. The partition pass must still emit every xx doc
-    // (left join), routed whole to 'head' (uncalibrated languages are
+    // NO cuts row. The partition pass must still emit every xx doc,
+    // routed whole to 'head' (uncalibrated languages are
     // retained, never silently dropped — the minority-protection point)
     val pDir10 = java.nio.file.Files.createTempDirectory("graft-lmlang-p10").toString
-    LlmOps.buildLmPartitionerByLang(d, mDir, pDir10, refMod = 10)
-    val parts10 = LlmOps.lmPartitionByLang(d, mDir, pDir10).collect()
+    LlmOps.buildLmPartitioner(d, mDir, pDir10, refMod = 10)
+    val parts10 = LlmOps.lmPartition(d, mDir, pDir10).collect()
       .map(r => (r.getString(1), r.getString(3)))
     assert(parts10.length === 23, "no document may vanish on a cut-less language")
     assert(parts10.filter(_._1 == "xx").map(_._2).toSeq === Seq("head", "head", "head"),
@@ -3012,26 +3065,26 @@ class LlmSpec extends SparkSpec {
     val gDir = java.nio.file.Files.createTempDirectory("graft-idf-g").toString
     LlmOps.buildIdfModel(d, gDir)
     val lDir = java.nio.file.Files.createTempDirectory("graft-idf-l").toString
-    LlmOps.buildIdfModelByLang(d, lDir)
+    LlmOps.buildIdfModel(d, lDir, byLang = true)
     val batch = d.filter(col("doc_id") === 5L)
     val glob = LlmOps.keywordsStored(batch, gDir).collect()
       .map(r => r.getLong(1) -> r.getString(2)).toMap
     // global: zz/mira/dun all score 23/3, data scores 23/21 — the
     // stopword crowd fills the top-3 and the distinctive term is absent
     assert(glob.values.toSet === Set("dun", "mira", "zz"), s"got $glob")
-    val lang = LlmOps.keywordsStoredByLang(batch, lDir).collect()
+    val lang = LlmOps.keywordsStored(batch, lDir).collect()
       .map(r => r.getLong(2) -> r.getString(3)).toMap
     // per-language: data = 3/1, the yy-ubiquitous tokens = 3/3
     assert(lang(1L) === "data", s"got $lang")
     // per-language gauge: both languages present as their own rows
-    val langs = LlmOps.idfModelStatsByLang(spark, lDir).collect()
+    val langs = LlmOps.idfModelStats(spark, lDir).collect()
       .map(_.getString(0)).toSet
     assert(langs === Set("en", "yy"))
     // frozen-vocabulary contract, language-keyed: 'data' exists in the
     // model only under (en, data)/(yy, data) — a doc of a language the
     // model never saw ranks nothing (inner join, no cross-language leak)
     val alien = Seq((99L, "data zz", "qq")).toDF("doc_id", "text", "lang")
-    assert(LlmOps.keywordsStoredByLang(alien, lDir).count() === 0L)
+    assert(LlmOps.keywordsStored(alien, lDir).count() === 0L)
   }
 
   test("media GC: takedown leaves corpus and index clean; the ghost no longer vetoes a re-encode") {
@@ -3094,13 +3147,13 @@ class LlmSpec extends SparkSpec {
     val lmL = java.nio.file.Files.createTempDirectory("graft-ffl-lml").toString
     val lmG = java.nio.file.Files.createTempDirectory("graft-ffl-lmg").toString
     val dc = java.nio.file.Files.createTempDirectory("graft-ffl-dc").toString
-    LlmOps.buildFluencyModelByLang(d, lmL)
+    LlmOps.buildFluencyModel(d, lmL, byLang = true)
     LlmOps.buildFluencyModel(d, lmG)
     LlmOps.buildDecontamIndex(
       docs(900L -> "totally unrelated benchmark prose sharing no trigram at all"), dc)
     def stages(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val perLang = stages(LlmOps.curationFunnelFullLang(d, lmL, dc, threshold = 0.5))
+    val perLang = stages(LlmOps.curationFunnelFull(d, lmL, dc, threshold = 0.5))
     val glob = stages(LlmOps.curationFunnelFull(d, lmG, dc, threshold = 0.5))
     // gates 0-4 are bar-independent: both funnels agree stage for stage
     for (s <- Seq("0_raw", "1_quality", "2_decontam", "3_exact_dedup", "4_near_dedup"))
@@ -3116,7 +3169,7 @@ class LlmSpec extends SparkSpec {
     assert(glob("5_fluent") < glob("4_near_dedup"),
       s"the global bar must drop the diluted minority survivor, got $glob")
     // the terminal apply writes exactly the funnel's stage-5 survivors
-    val applied = LlmOps.curationApplyFullLang(d, lmL, dc, threshold = 0.5)
+    val applied = LlmOps.curationApplyFull(d, lmL, dc, threshold = 0.5)
       .collect()
     assert(applied.length.toLong === perLang("5_fluent"),
       "the witness dump must carry the per-language survivor set")
@@ -3147,14 +3200,14 @@ class LlmSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet === Set(2L, 7L))
   }
 
-  test("fluencyStoredByLang pins nothing: no persistent RDDs survive the probe") {
+  test("per-language fluencyStored pins nothing: no persistent RDDs survive the probe") {
     val d = Seq((10L, "the dog runs and the cat sleeps", "en"),
         (20L, "the zub mira dun the zub mira", "xx"))
       .toDF("doc_id", "text", "lang")
     val mDir = java.nio.file.Files.createTempDirectory("graft-lmpin").toString
-    LlmOps.buildFluencyModelByLang(d, mDir)
+    LlmOps.buildFluencyModel(d, mDir, byLang = true)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val out = LlmOps.fluencyStoredByLang(d, mDir).collect()
+    val out = LlmOps.fluencyStored(d, mDir).collect()
     assert(out.length === 2)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty,
@@ -3172,10 +3225,10 @@ class LlmSpec extends SparkSpec {
     val d = (en ++ xx).toDF("doc_id", "text", "lang")
       .withColumn("source", lit("t"))
     val mDir = java.nio.file.Files.createTempDirectory("graft-calib-m").toString
-    LlmOps.buildFluencyModelByLang(d, mDir)
+    LlmOps.buildFluencyModel(d, mDir, byLang = true)
     // EXPECTED cuts, derived independently: rank the FULL slice per
     // language by (fluency, doc_id), take the ceil(n/3)/ceil(2n/3) rows
-    val scored = LlmOps.fluencyStoredByLang(d, mDir).collect()
+    val scored = LlmOps.fluencyStored(d, mDir).collect()
       .map(r => (r.getString(1), r.getDouble(3), r.getLong(0)))
     val expected = scored.groupBy(_._1).map { case (lang, g) =>
       val s = g.map(x => (x._2, x._3)).sorted
@@ -3185,7 +3238,7 @@ class LlmSpec extends SparkSpec {
     // cap ABOVE every language's slice: the MinKAgg selection is the
     // identity and the frozen cuts equal the full-rank cuts exactly
     val pA = java.nio.file.Files.createTempDirectory("graft-calib-a").toString
-    LlmOps.buildLmPartitionerByLang(d, mDir, pA, refMod = 1,
+    LlmOps.buildLmPartitioner(d, mDir, pA, refMod = 1,
       maxPerLang = 65536)
     val cutsA = spark.read.parquet(s"$pA/cuts").collect()
       .map(r => r.getString(0) -> ((r.getDouble(1), r.getLong(2)),
@@ -3196,14 +3249,70 @@ class LlmSpec extends SparkSpec {
     // language — the cut rows must come from the slice and the apply
     // pass still buckets EVERY document
     val pB = java.nio.file.Files.createTempDirectory("graft-calib-b").toString
-    LlmOps.buildLmPartitionerByLang(d, mDir, pB, refMod = 1, maxPerLang = 2)
+    LlmOps.buildLmPartitioner(d, mDir, pB, refMod = 1, maxPerLang = 2)
     val cutsB = spark.read.parquet(s"$pB/cuts").collect()
     assert(cutsB.length === 2, "one cuts row per language")
     val ids = (en ++ xx).map(_._1).toSet
     assert(cutsB.forall(r => ids.contains(r.getLong(2)) && ids.contains(r.getLong(4))),
       "capped cuts must be real sampled rows")
-    assert(LlmOps.lmPartitionByLang(d, mDir, pB).count() === 23L,
+    assert(LlmOps.lmPartition(d, mDir, pB).count() === 23L,
       "a binding cap must still bucket the whole corpus")
+  }
+
+  test("per-language artifacts through the one probe: no cross-language sums, and a batch without lang fails on the column") {
+    import org.apache.spark.sql.DataFrame
+    // the bigram "the cat" and the token "the" occur in BOTH languages: a
+    // per-language artifact joined on (w1, w2) or tok alone would sum
+    // both languages' rows into every score
+    val d = Seq(
+        (1L, "the cat sat upon the warm mat today while birds sang", "en"),
+        (2L, "the cat ran across the wide road after dark again now", "en"),
+        (3L, "a dog sat upon the warm rug today while rain fell", "en"),
+        (4L, "el gato the cat duerme sobre la mesa toda la tarde", "es"),
+        (5L, "the cat el perro corre por la calle cada noche fria", "es"),
+        (6L, "la casa grande tiene una puerta roja y tres ventanas", "es"))
+      .toDF("doc_id", "text", "lang")
+    val langs = Seq("en", "es")
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val (lm, idf, qc) = (tmp("graft-xl-lm"), tmp("graft-xl-idf"), tmp("graft-xl-qc"))
+    LlmOps.buildFluencyModel(d, lm, byLang = true)
+    LlmOps.buildIdfModel(d, idf, byLang = true)
+    LlmOps.buildQualityClassifier(LlmOps.qclfCorpus(d), qc, byLang = true)
+    // the expected per-language output, derived independently: each
+    // language's documents through a GLOBAL artifact built on that
+    // language alone, labelled with the language
+    def perLangOracle(build: (DataFrame, String) => Unit,
+        probe: (DataFrame, String) => DataFrame): DataFrame =
+      langs.map { l =>
+        val dir = tmp(s"graft-xl-$l")
+        build(d.filter(col("lang") === l), dir)
+        probe(d.filter(col("lang") === l), dir).withColumn("lang", lit(l))
+      }.reduce(_ unionByName _)
+    def rows(df: DataFrame, cols: Seq[String]) =
+      df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
+    val cases: Seq[(String, DataFrame => DataFrame, DataFrame)] = Seq(
+      ("fluencyStored", LlmOps.fluencyStored(_, lm),
+        perLangOracle(LlmOps.buildFluencyModel(_, _), LlmOps.fluencyStored(_, _))),
+      ("keywordsStored", LlmOps.keywordsStored(_, idf),
+        perLangOracle(LlmOps.buildIdfModel(_, _), LlmOps.keywordsStored(_, _))),
+      ("qualityScoreStored", LlmOps.qualityScoreStored(_, qc),
+        perLangOracle((c, dir) => LlmOps.buildQualityClassifier(LlmOps.qclfCorpus(c), dir),
+          LlmOps.qualityScoreStored(_, _))))
+    cases.foreach { case (name, probe, expected) =>
+      val got = probe(d)
+      assert(got.columns.toSet === expected.columns.toSet,
+        s"$name: a per-language artifact must score per language and carry lang")
+      assert(rows(got, expected.columns.toSeq) === rows(expected, expected.columns.toSeq),
+        s"$name: per-language scores must equal each language's own model")
+      val e = intercept[IllegalArgumentException](probe(d.drop("lang")).collect())
+      assert(e.getMessage.contains("`lang`"),
+        s"$name: the failure must name the missing key column, got: ${e.getMessage}")
+    }
+    // the fixture really shares the bigram and the token across languages
+    assert(LlmOps.lmStats(spark, lm).count() === 2L)
+    assert(spark.read.parquet(s"$lm/bigrams")
+      .filter(col("w1") === "the" && col("w2") === "cat")
+      .select("lang").distinct().count() === 2L)
   }
 
   test("per-language LM gauge: a collapsed minority model is visible as its own (missing) row") {
@@ -3217,14 +3326,17 @@ class LlmSpec extends SparkSpec {
         (3L, "solo", "yy"), (4L, "tok", "yy"))
       .toDF("doc_id", "text", "lang")
     val mDir = java.nio.file.Files.createTempDirectory("graft-lmgauge").toString
-    LlmOps.buildFluencyModelByLang(d, mDir)
-    val rows = LlmOps.lmStatsLang(spark, mDir).collect()
+    LlmOps.buildFluencyModel(d, mDir, byLang = true)
+    val rows = LlmOps.lmStats(spark, mDir).collect()
       .map(r => r.getString(0) -> r.getLong(3)).toMap
     assert(rows.get("en").exists(_ > 0L), s"healthy language must read nonzero mass, got $rows")
     assert(!rows.contains("yy"),
       s"a collapsed language must surface as a missing/zero row, not be averaged away: $rows")
-    // and the global gauge over the same artifact indeed hides it
-    assert(LlmOps.lmStats(spark, mDir).collect()(0).getLong(2) > 0L)
+    // and the gauge over a global model of the same corpus indeed hides it
+    val gDir = java.nio.file.Files.createTempDirectory("graft-lmgauge-g").toString
+    LlmOps.buildFluencyModel(d, gDir)
+    val glob = LlmOps.lmStats(spark, gDir).collect()
+    assert(glob.length === 1 && glob(0).getLong(2) > 0L)
   }
 
   test("per-language classifier resolves h56 on a session without GraftExtensions") {
@@ -3242,8 +3354,8 @@ class LlmSpec extends SparkSpec {
         (3L, "another perfectly reasonable document of normal text", "xx"))
       .toDF("doc_id", "text", "lang")
     val dir = java.nio.file.Files.createTempDirectory("graft-qclf-noext").toString
-    LlmOps.buildQualityClassifierByLang(d, dir)
-    val out = LlmOps.qualityScoreStoredByLang(d, dir).collect()
+    LlmOps.buildQualityClassifier(d, dir, byLang = true)
+    val out = LlmOps.qualityScoreStored(d, dir).collect()
     assert(out.length === 3,
       "builder and probe must run on the extension-less session, which registers the native h56")
   }

@@ -304,7 +304,7 @@ class StreamingIngestSpec extends SparkSpec {
         (5L, "the zub mira the zub mira the zub mira dun", "xx"),
         (15L, "the zub mira dun the zub mira the zub dun", "xx")): _*)
     LlmOps.buildMinHashIndex(trusted, idx)
-    LlmOps.buildFluencyModelByLang(trusted, lm)
+    LlmOps.buildFluencyModel(trusted, lm, byLang = true)
     LlmOps.buildFluencyModel(trusted, lmG)
 
     val batchFile = new java.io.File(src, "b0.parquet")
@@ -322,7 +322,7 @@ class StreamingIngestSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
 
     StreamingIngest.start(spark, src, idx, out, ckp,
-      lmLangDir = Some(lm), fluencyThreshold = Some(0.5))
+      lmDir = Some(lm), fluencyThreshold = Some(0.5))
       .awaitTermination()
     val admitted = spark.read.parquet(out)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -340,12 +340,15 @@ class StreamingIngestSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(admittedG === Set(201L),
       s"the global bar must drop the diluted xx doc, got $admittedG")
-    // mutual-exclusion contract
-    intercept[IllegalArgumentException] {
-      StreamingIngest.start(spark, src, idx, out, ckp,
-        lmDir = Some(lmG), lmLangDir = Some(lm),
-        fluencyThreshold = Some(0.5))
+    // a per-language model needs the batch's language: a source without
+    // `lang` fails at start, it is never scored under a pooled bar
+    val srcNoLang = Files.createTempDirectory("graft-sil-src-nolang").toString
+    spark.read.parquet(src).drop("lang").write.mode("overwrite").parquet(srcNoLang)
+    val e = intercept[IllegalArgumentException] {
+      StreamingIngest.start(spark, srcNoLang, idx, out, ckp,
+        lmDir = Some(lm), fluencyThreshold = Some(0.5))
     }
+    assert(e.getMessage.contains("`lang`"), e.getMessage)
   }
 
   test("ANN index rides the gate: an epoch-0 survivor's vector is probe-visible post-drain") {

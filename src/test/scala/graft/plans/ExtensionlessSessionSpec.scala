@@ -79,8 +79,8 @@ class ExtensionlessSessionSpec extends SparkSpec {
         (3L, "another perfectly reasonable document of normal text", "xx"))
       .toDF("doc_id", "text", "lang")
     val dir = java.nio.file.Files.createTempDirectory("graft-noext-qclf").toString
-    LlmOps.buildQualityClassifierByLang(d, dir)
-    val scored = LlmOps.qualityScoreStoredByLang(d, dir)
+    LlmOps.buildQualityClassifier(d, dir, byLang = true)
+    val scored = LlmOps.qualityScoreStored(d, dir)
     assert(!holds(scored, _.isInstanceOf[ScalaUDF]))
     assert(scored.collect().length === 3)
   }

@@ -105,7 +105,7 @@ class PlanQualitySpec extends SparkSpec {
     // rule): the per-language calibration sample is absolute-bounded via
     // the MinKAgg heap — the plan must carry the ObjectHashAggregate and
     // no window partitioned by lang with pri as the first order key
-    val p = graft.llm.LlmOps.lmCalibSlice(graft.Tables.documents(spark, sf))
+    val p = graft.llm.LlmOps.lmCalibSlice(graft.Tables.documents(spark, sf), Seq("lang"))
       .queryExecution.executedPlan.toString
     assert(p.contains("ObjectHashAggregate"),
       s"calibration cap must plan the bounded-heap aggregator:\n${p.take(1200)}")
