@@ -33,6 +33,8 @@ object LlmQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def memo(key: String)(build: => String): String =
     indexCache.computeIfAbsent(key, _ => build)
+  /** Artifacts built so far: a bench rep that grows it timed a build. */
+  private[graft] def memoSize: Int = indexCache.size
 
   /** Cheap corpus fingerprint (file paths + sizes + mtimes) folded into
     * the memo key, so a harness that REGENERATES the parquet under the
