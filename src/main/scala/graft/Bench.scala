@@ -172,19 +172,32 @@ object Bench {
       else try {
         import org.json4s._
         val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val m = org.json4s.jackson.JsonMethods.parse(txt) \ "queries" match {
-          case JObject(fields) => fields.collect {
-            case (k, JDouble(v)) => k -> v
-            case (k, JInt(v))    => k -> v.toDouble
-            case (k, JDecimal(v)) => k -> v.toDouble
-          }.toMap
-          case _ => Map.empty[String, Double]
+        val prior = org.json4s.jackson.JsonMethods.parse(txt)
+        // medians of another scale factor or session mode are no baseline
+        // for this run's: a restricted sf0.01 run would re-rep against sf0.1
+        val priorSf = prior \ "sf" match { case JString(v) => Some(v); case _ => None }
+        val priorFresh = prior \ "fresh" match { case JBool(v) => Some(v); case _ => None }
+        if (!priorSf.map(canon).contains(canon(sfDir)) || !priorFresh.contains(fresh)) {
+          System.err.println(
+            s"WARN bench: bench_detail.json was measured at sf=${priorSf.getOrElse("?")} " +
+              s"fresh=${priorFresh.getOrElse("?")}, this run is sf=$sfDir fresh=$fresh — " +
+              "cross-round re-rep hygiene skipped this run")
+          Map.empty
+        } else {
+          val m = prior \ "queries" match {
+            case JObject(fields) => fields.collect {
+              case (k, JDouble(v)) => k -> v
+              case (k, JInt(v))    => k -> v.toDouble
+              case (k, JDecimal(v)) => k -> v.toDouble
+            }.toMap
+            case _ => Map.empty[String, Double]
+          }
+          if (m.isEmpty) System.err.println(
+            "WARN bench: bench_detail.json exists but yielded no prior " +
+              "medians — the cross-round re-rep hygiene pass is disabled " +
+              "this run (detail shape changed?)")
+          m
         }
-        if (m.isEmpty) System.err.println(
-          "WARN bench: bench_detail.json exists but yielded no prior " +
-            "medians — the cross-round re-rep hygiene pass is disabled " +
-            "this run (detail shape changed?)")
-        m
       } catch {
         case e: Throwable =>
           System.err.println(

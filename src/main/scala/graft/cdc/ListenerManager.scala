@@ -8,20 +8,19 @@ import scala.collection.mutable
   * `ListenerManager` (`app/services/listener_manager.py:186-224`: a
   * lock-guarded registry of per-client listeners with idempotent `start`,
   * `stop` with a 10 s timeout then force-cancel, `restart` = stop+start)
-  * over `spark.streams`, composing the parts the repo already proves
-  * separately: [[Streaming.start]]-style subscriptions named by
-  * [[StatusBoard.queryName]], the restart-with-backoff policy of
-  * [[Reliability.runWithRestarts]], [[Recovery]]-style invalid-replay
-  * triage (`invalidReplayHeal`: clear the stored offset, resubscribe from
-  * earliest, no backoff/alert), and the idle-watchdog reset
-  * ([[ListenerManager.restartIdle]]).
+  * over `spark.streams`. It is the one place that triages a listener's
+  * failure: a [[ListenerManager.FatalConfigError]] stops it, an
+  * invalid-replay failure ([[ListenerManager.isInvalidReplay]]) heals it
+  * through `invalidReplayHeal` (clear the stored offset, resubscribe from
+  * earliest, no alert), and anything else restarts it with backoff. The
+  * idle-watchdog reset is [[ListenerManager.restartIdle]].
   *
   * Each started client runs a daemon *runner* thread reproducing the
   * reference's `_runner` loop (`listener_manager.py:96-176`): subscribe,
   * await termination; a transient failure marks `error`, backs off
-  * (1 s → ×2 → cap 60 s) and resubscribes until stopped; a
-  * [[Reliability.FatalConfigError]] anywhere in the cause chain stops
-  * immediately with status `error` (restarting cannot fix a bad
+  * (1 s → ×2 → cap 60 s) and resubscribes until stopped, with no bound on
+  * the number of restarts; a fatal failure anywhere in the cause chain
+  * stops immediately with status `error` (restarting cannot fix a bad
   * topic/creds). Statuses move through the reference's state strings:
   * stopped → starting → running → (stopping|error) → stopped.
   *
@@ -50,6 +49,72 @@ object ListenerManager {
 
   /** One alert occurrence (feed to [[EmailAlerts.listenerErrorEmail]]). */
   case class Alert(clientId: String, fatal: Boolean, failCount: Int, message: String)
+
+  /** Non-retryable error class (reference `FatalConfigError`,
+    * `app/services/sf_pubsub.py:33-35`): a bad topic or bad credentials,
+    * which no restart can fix.
+    */
+  final class FatalConfigError(msg: String, cause: Throwable = null)
+      extends RuntimeException(msg, cause)
+
+  /** A failure and its causes, outermost first. The walk stops after 20
+    * links, so a cause cycle (`a.initCause(b)` with `b` caused by `a`)
+    * ends instead of pinning the runner thread.
+    */
+  private def causes(e: Throwable): Iterator[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(20)
+
+  /** True when a [[FatalConfigError]] is anywhere in the cause chain
+    * (the reference's fatal classification, `sf_pubsub.py:462-486`).
+    */
+  def isFatal(e: Throwable): Boolean = causes(e).exists(_.isInstanceOf[FatalConfigError])
+
+  /** True when a failure in the cause chain has the reference's
+    * invalid-replay shape (`sf_pubsub.py:462-486`): INVALID_ARGUMENT
+    * mentioning the replay id.
+    */
+  def isInvalidReplay(e: Throwable): Boolean = causes(e).exists { c =>
+    val m = Option(c.getMessage).getOrElse("")
+    m.contains("INVALID_ARGUMENT") && m.toLowerCase.contains("replay")
+  }
+
+  /** Idle watchdog — the reference resets a stream after 300 s without
+    * messages (`watchdog`, `app/services/sf_pubsub.py:588-596`; heartbeat
+    * re-credits every 60 s `:579-586`). Spark analog: track per-query
+    * *data* progress via StreamingQueryListener (empty micro-batches do
+    * not count as liveness, matching the reference's "messages received"
+    * notion) and report queries idle past the timeout, which
+    * [[ListenerManager.restartIdle]] restarts. The idle timer starts at
+    * query start (the reference initializes `last_rx = loop.time()` at
+    * subscribe, `app/services/sf_pubsub.py:557`), so a stream that never
+    * receives a single row — the most common hang mode — still goes idle
+    * after the timeout. Clock injectable for deterministic tests.
+    */
+  final class IdleWatchdog(idleTimeoutMs: Long = 300000L,
+      clock: () => Long = System.currentTimeMillis)
+      extends org.apache.spark.sql.streaming.StreamingQueryListener {
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    private val lastData = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Long]()
+
+    override def onQueryStarted(e: QueryStartedEvent): Unit =
+      lastData.put(e.id, clock())
+    override def onQueryProgress(e: QueryProgressEvent): Unit =
+      if (e.progress.numInputRows > 0) lastData.put(e.progress.id, clock())
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+      lastData.remove(e.id)
+
+    /** Timestamp of the last liveness event: query start, or the most
+      * recent data-bearing progress.
+      */
+    def lastDataAt(id: java.util.UUID): Option[Long] = Option(lastData.get(id))
+
+    def isIdle(id: java.util.UUID): Boolean =
+      lastDataAt(id).exists(clock() - _ > idleTimeoutMs)
+    def idleQueries(): Seq[java.util.UUID] = {
+      import scala.jdk.CollectionConverters._
+      lastData.keySet().asScala.filter(isIdle).toSeq
+    }
+  }
 }
 
 final class ListenerManager(
@@ -107,6 +172,10 @@ final class ListenerManager(
     var backoff = baseDelayMs
     var healStreak = 0 // consecutive invalid-replay heals with no success between
     var continue = true
+    def backOff(): Unit = {
+      sleep(math.min(backoff, capMs))
+      backoff = math.min(backoff * 2, capMs)
+    }
     try {
       while (continue && !m.stopRequested) {
         try {
@@ -129,7 +198,7 @@ final class ListenerManager(
           case _: InterruptedException =>
             continue = false // force-cancel from stop() timeout
           case e: Throwable
-              if invalidReplayHeal.isDefined && Recovery.isInvalidReplay(e) =>
+              if invalidReplayHeal.isDefined && isInvalidReplay(e) =>
             // K3 self-heal inside the lifecycle loop: clear the stored
             // offset and resubscribe from earliest — not a failure, no
             // alert (the reference clears `_clear_saved_replay` and
@@ -141,32 +210,16 @@ final class ListenerManager(
             // must never kill the runner thread.
             healStreak += 1
             try invalidReplayHeal.get.apply(m.clientId)
-            catch {
-              case he: Throwable =>
-                m.status = "error"
-                m.lastError = Some(he.getMessage)
-                m.failCount += 1
-                if (m.failCount == 1) fireAlert(m, fatal = false, he)
-            }
-            if (healStreak > 1 || m.failCount > 0) {
-              sleep(math.min(backoff, capMs))
-              backoff = math.min(backoff * 2, capMs)
-            }
-          case e: Throwable if Reliability.isFatal(e) =>
-            m.status = "error"
-            m.lastError = Some(e.getMessage)
-            m.failCount += 1
-            fireAlert(m, fatal = true, e)
+            catch { case he: Throwable => failed(m, he, fatal = false) }
+            if (healStreak > 1 || m.failCount > 0) backOff()
+          case e: Throwable if isFatal(e) =>
+            failed(m, e, fatal = true)
             continue = false // never retried (listener_manager.py:122-146)
           case _: Throwable if m.stopRequested =>
             continue = false // failure induced by the stop itself
           case e: Throwable =>
-            m.status = "error"
-            m.lastError = Some(e.getMessage)
-            m.failCount += 1
-            if (m.failCount == 1) fireAlert(m, fatal = false, e)
-            sleep(math.min(backoff, capMs))
-            backoff = math.min(backoff * 2, capMs)
+            failed(m, e, fatal = false)
+            backOff()
         }
       }
     } finally {
@@ -176,6 +229,16 @@ final class ListenerManager(
       // instead of a permanent phantom "running"
       if (m.status != "error") m.status = "stopped"
     }
+  }
+
+  /** Mark the listener `error` and alert on a fatal failure or on the
+    * first failure of a run.
+    */
+  private def failed(m: Managed, e: Throwable, fatal: Boolean): Unit = {
+    m.status = "error"
+    m.lastError = Some(e.getMessage)
+    m.failCount += 1
+    if (fatal || m.failCount == 1) fireAlert(m, fatal, e)
   }
 
   private def fireAlert(m: Managed, fatal: Boolean, e: Throwable): Unit =
@@ -278,12 +341,12 @@ final class ListenerManager(
 
   /** The reference's idle watchdog action (`sf_pubsub.py:588-596`: reset a
     * stream after 300 s without messages): restart every managed listener
-    * whose live query the [[Reliability.IdleWatchdog]] reports idle.
+    * whose live query the [[IdleWatchdog]] reports idle.
     * Returns the restarted client ids. Call this on the operator's sweep
     * cadence; the watchdog listener itself must be registered with
     * `spark.streams.addListener`.
     */
-  def restartIdle(watchdog: Reliability.IdleWatchdog)(
+  def restartIdle(watchdog: IdleWatchdog)(
       subscribe: String => StreamingQuery): Seq[String] = {
     val idle = watchdog.idleQueries().toSet
     val victims = synchronized {

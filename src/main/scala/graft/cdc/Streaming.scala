@@ -1,10 +1,9 @@
 package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
-import java.util.concurrent.ConcurrentLinkedQueue
 import graft.streaming.PlannedRoute
 
 /** The CDC pipeline under Structured Streaming — the reference's listener
@@ -226,17 +225,4 @@ object Streaming {
   def runningCounters(deliveries: DataFrame): DataFrame =
     deliveries.groupBy(col("entity"))
       .agg(count(lit(1)).as("events_received"), max(col("commit_ms")).as("last_commit_ms"))
-
-  /** K4 — alert sink: a StreamingQueryListener recording terminations with
-    * errors (the email-notification analog, reference
-    * `app/services/email_notifications.py:38-119`). Alerts are observable
-    * via [[AlertListener.alerts]].
-    */
-  final class AlertListener extends StreamingQueryListener {
-    val alerts = new ConcurrentLinkedQueue[(String, String)]()
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-      e.exception.foreach(msg => alerts.add(e.id.toString -> msg))
-  }
 }

@@ -28,8 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     `earliest` | `latest` | a numeric replay id. With
   *     `validateReplay=true` a CUSTOM id outside the stream's range fails
   *     subscription with the INVALID_ARGUMENT shape the reference triages
-  *     (`app/services/sf_pubsub.py:462-486`) — see [[graft.cdc.Recovery]]
-  *     for the composed clear-and-restart flow (K3).
+  *     (`app/services/sf_pubsub.py:462-486`) — see
+  *     [[graft.cdc.ListenerManager]]'s `invalidReplayHeal` for the
+  *     clear-and-resubscribe flow (K3).
   *
   * The backing store is a JSON-lines changelog file (one decoded change
   * event per line) readable from any executor — the harness stand-in for

@@ -1,14 +1,18 @@
 package graft.cdc
 
 import graft.SparkSpec
+import graft.sources.ReplayLogSourceProvider
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 /** Listener lifecycle: start/stop/restart per client over spark.streams,
-  * the reference's stop-timeout and restart-loop semantics, and the K4
+  * the reference's stop-timeout and restart-loop semantics with their
+  * backoff, failure triage (fatal, invalid replay, transient) and the K3
+  * replay heal on an offsets table, the idle watchdog, and the K4
   * first-failure-or-fatal alert policy with the SMTP-shaped record.
   */
 class ListenerManagerSpec extends SparkSpec {
@@ -42,6 +46,45 @@ class ListenerManagerSpec extends SparkSpec {
       deliver: (DataFrame, Long) => Unit) = {
     val ckp = java.nio.file.Files.createTempDirectory(s"graft-lm-os-$clientId").toString
     Streaming.start(spark, Streaming.PipelineSpec(clientId, src, ckp))(deliver)
+  }
+
+  private val Topic = "/data/AccountChangeEvent"
+
+  /** A client with one stored offsets row and a replay-log listener: each
+    * subscribe resolves its start replay id from the table through
+    * [[Offsets.latestPerKey]] (the reference's `_load_replay_b64`), and
+    * [[heal]] is [[Offsets.clear]], the manager's `invalidReplayHeal`.
+    */
+  private final class ReplayClient(clientId: String, replay: String, events: Int) {
+    @volatile var offsets: DataFrame = Seq((clientId, Topic, replay, 5L, 100L))
+      .toDF("client_id", "topic_name", "last_replay_b64", "last_commit_ms", "updated_at")
+    val got = new ConcurrentLinkedQueue[Long]()
+    val subscribes = new AtomicInteger(0)
+    private val log = java.nio.file.Files.createTempFile("graft-lm-replay", ".jsonl")
+    java.nio.file.Files.write(log, (0 until events).map { i =>
+      s"""{"entity":"Account","change_type":"UPDATE","record_ids":["R$i"],"commit_raw":${1704067200L + i},"flash_raw":"true"}"""
+    }.mkString("\n").getBytes)
+
+    def storedReplay: Option[String] = Offsets.latestPerKey(offsets)
+      .filter(col("client_id") === clientId && col("topic_name") === Topic)
+      .select("last_replay_b64").collect().headOption.flatMap(r => Option(r.getString(0)))
+
+    def heal(id: String): Unit = offsets = Offsets.clear(offsets, id, Topic)
+
+    def subscribe(id: String): StreamingQuery = {
+      val ckp = java.nio.file.Files.createTempDirectory(
+        s"graft-lm-rckp-$id-${subscribes.incrementAndGet()}").toString
+      spark.readStream.format(classOf[ReplayLogSourceProvider].getName)
+        .option("path", log.toString)
+        .option("startingReplay", storedReplay.getOrElse("earliest"))
+        .option("validateReplay", "true")
+        .load()
+        .writeStream.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckp)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.select("replay_id").collect().foreach(r => got.add(r.getLong(0))); ()
+        }.start()
+    }
   }
 
   test("start two listeners, restart one, stop both; board tracks each transition") {
@@ -108,6 +151,7 @@ class ListenerManagerSpec extends SparkSpec {
       assert(got.length === 1)
       assert(got.head.clientId === "cT")
       assert(!got.head.fatal && got.head.failCount === 1)
+      assert(got.head.message.contains("transient boom"), got.head.message)
     } finally mgr.stopAll()
   }
 
@@ -119,7 +163,7 @@ class ListenerManagerSpec extends SparkSpec {
       mgr.start("cF") { id =>
         oneShotSubscribe(id) { (_, _) =>
           runs.incrementAndGet()
-          throw new Reliability.FatalConfigError("topic not found")
+          throw new ListenerManager.FatalConfigError("topic not found")
         }
       }
       eventually()(mgr.status("cF").status == "error")
@@ -146,7 +190,7 @@ class ListenerManagerSpec extends SparkSpec {
     try {
       val (started, failedSync) = mgr.startActive(clients) {
         case "cBad" => oneShotSubscribe("cBad") { (_, _) =>
-            throw new Reliability.FatalConfigError("topic not found")
+            throw new ListenerManager.FatalConfigError("topic not found")
           }
         case id => healthySubscribe(id)
       }
@@ -176,44 +220,105 @@ class ListenerManagerSpec extends SparkSpec {
 
   test("K3 in the lifecycle loop: poisoned stored replay heals and re-delivers, no alert") {
     val alerts = new ConcurrentLinkedQueue[ListenerManager.Alert]()
-    val stored = new java.util.concurrent.atomic.AtomicReference[Option[String]](Some("99"))
+    val c = new ReplayClient("cR", replay = "99", events = 6) // far past the 6-event log
     val mgr = new ListenerManager(sleep = _ => (), onAlert = alerts.add(_),
-      invalidReplayHeal = Some(_ => stored.set(None))) // the Offsets.clear analog
-    val log = java.nio.file.Files.createTempFile("graft-lm-replay", ".jsonl")
-    java.nio.file.Files.write(log,
-      (0 until 10).map(i => s"""{"entity":"A","change_type":"UPDATE","record_ids":["R$i"],"commit_raw":$i,"flash_raw":"true"}""")
-        .mkString("\n").getBytes)
-    val delivered = new java.util.concurrent.atomic.AtomicLong(0L)
-    val subscribes = new java.util.concurrent.atomic.AtomicInteger(0)
+      invalidReplayHeal = Some(c.heal))
     try {
-      mgr.start("cR") { _ =>
-        subscribes.incrementAndGet()
-        spark.readStream
-          .format(classOf[graft.sources.ReplayLogSourceProvider].getName)
-          .option("path", log.toString)
-          .option("startingReplay", stored.get().getOrElse("earliest"))
-          .option("validateReplay", "true")
-          .load()
-          .writeStream
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory(s"graft-lm-rckp-${subscribes.get()}").toString)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) => delivered.addAndGet(b.count()); () }
-          .start()
-      }
-      // run 1 fails INVALID_ARGUMENT (replay 99 > 10 lines) → heal clears
-      // the stored offset → run 2 subscribes from earliest and delivers all
+      mgr.start("cR")(c.subscribe)
+      // run 1 fails INVALID_ARGUMENT → the heal clears the stored offset →
+      // run 2 subscribes from earliest and delivers the whole log
       eventually()(mgr.status("cR").status == "stopped")
-      assert(subscribes.get() === 2)
-      assert(delivered.get() === 10L)
-      assert(stored.get().isEmpty)
+      assert(c.subscribes.get() === 2)
+      assert(c.got.asScala.toSeq.sorted === (0L until 6L))
+      // the stored offset row survives but its replay id is cleared
+      val rows = c.offsets.collect()
+      assert(rows.length === 1 && rows(0).isNullAt(rows(0).fieldIndex("last_replay_b64")))
       assert(alerts.isEmpty) // self-heal is not a failure
     } finally mgr.stopAll()
   }
 
+  test("K3 in the lifecycle loop: a valid stored replay id resumes mid-stream with no heal") {
+    val c = new ReplayClient("cV", replay = "4", events = 6)
+    val heals = new AtomicInteger(0)
+    val mgr = new ListenerManager(sleep = _ => (),
+      invalidReplayHeal = Some { id => heals.incrementAndGet(); c.heal(id) })
+    try {
+      mgr.start("cV")(c.subscribe)
+      eventually()(mgr.status("cV").status == "stopped")
+      assert(c.subscribes.get() === 1 && heals.get() === 0)
+      assert(c.got.asScala.toSeq.sorted === Seq(4L, 5L))
+      assert(c.storedReplay === Some("4"))
+    } finally mgr.stopAll()
+  }
+
+  test("runner backoff: base, ×2, capped at capMs, and reset by a success") {
+    val sleeps = new ConcurrentLinkedQueue[Long]()
+    val mgr = new ListenerManager(baseDelayMs = 100L, capMs = 500L, sleep = sleeps.add(_))
+    val runs = new AtomicInteger(0)
+    try {
+      mgr.start("cB") { id =>
+        runs.incrementAndGet() match {
+          case n if n <= 5 => throw new RuntimeException(s"subscribe failed $n")
+          // the subscribe succeeds, so its run's failure backs off from the
+          // base delay again
+          case 6 => oneShotSubscribe(id)((_, _) => throw new RuntimeException("run failed"))
+          case _ => oneShotSubscribe(id) { (b, _) => b.count(); () }
+        }
+      }
+      eventually()(mgr.status("cB").status == "stopped")
+      assert(runs.get() === 7)
+      assert(sleeps.asScala.toSeq === Seq(100L, 200L, 400L, 500L, 500L, 100L))
+    } finally mgr.stopAll()
+  }
+
+  test("runner heal: an uncured heal re-enters at once, repeats back off, and a success resets the streak") {
+    val sleeps = new ConcurrentLinkedQueue[Long]()
+    val heals = new AtomicInteger(0)
+    val mgr = new ListenerManager(baseDelayMs = 100L, capMs = 500L, sleep = sleeps.add(_),
+      invalidReplayHeal = Some(_ => { heals.incrementAndGet(); () }))
+    val runs = new AtomicInteger(0)
+    def invalid(n: Int) = new IllegalArgumentException(s"INVALID_ARGUMENT: replay id $n is not valid")
+    try {
+      mgr.start("cH") { id =>
+        runs.incrementAndGet() match {
+          case n if n <= 3 => throw invalid(n) // the heal does not cure it
+          case 4 => oneShotSubscribe(id)((_, _) => throw invalid(4))
+          case _ => oneShotSubscribe(id) { (b, _) => b.count(); () }
+        }
+      }
+      eventually()(mgr.status("cH").status == "stopped")
+      assert(runs.get() === 5 && heals.get() === 4)
+      // heals 2 and 3 back off; heal 1 and heal 4, the first after a
+      // successful subscribe, re-enter at once
+      assert(sleeps.asScala.toSeq === Seq(100L, 200L))
+    } finally mgr.stopAll()
+  }
+
+  test("triage: INVALID_ARGUMENT + replay anywhere in the cause chain") {
+    val inner = new IllegalArgumentException(
+      "INVALID_ARGUMENT: requested replay id 99 is not valid for this stream")
+    assert(ListenerManager.isInvalidReplay(inner))
+    assert(ListenerManager.isInvalidReplay(new RuntimeException("query failed", inner)))
+    assert(!ListenerManager.isInvalidReplay(new RuntimeException("INVALID_ARGUMENT: bad topic")))
+    assert(!ListenerManager.isInvalidReplay(new RuntimeException("replay looks fine but transport died")))
+  }
+
+  test("triage: a cause cycle ends both cause-chain walks") {
+    val a = new RuntimeException("a")
+    val b = new RuntimeException("b", a)
+    a.initCause(b)
+    @volatile var verdicts: Option[(Boolean, Boolean)] = None
+    val t = new Thread(() =>
+      verdicts = Some((ListenerManager.isFatal(a), ListenerManager.isInvalidReplay(a))))
+    t.setDaemon(true)
+    t.start()
+    t.join(10000L)
+    assert(verdicts === Some((false, false)), "a cause-chain walk did not end on a cause cycle")
+  }
+
   test("idle watchdog: listeners idle past the timeout are restarted by the sweep") {
     val offset = new java.util.concurrent.atomic.AtomicLong(0L)
-    val wd = new Reliability.IdleWatchdog(
+    val wd = new ListenerManager.IdleWatchdog(
       idleTimeoutMs = 300000L, clock = () => System.currentTimeMillis() + offset.get())
     spark.streams.addListener(wd)
     val mgr = new ListenerManager(sleep = _ => ())
@@ -241,6 +346,72 @@ class ListenerManagerSpec extends SparkSpec {
     }
   }
 
+  test("idle watchdog flags queries without data progress past the timeout") {
+    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.functions.lit
+    @volatile var now = 1000L
+    val wd = new ListenerManager.IdleWatchdog(idleTimeoutMs = 300000L, clock = () => now)
+    val src = java.nio.file.Files.createTempDirectory("graft-wd-src").toString
+    val ckp = java.nio.file.Files.createTempDirectory("graft-wd-ckp").toString
+    graft.Tables.events(spark, "/root/testdata/sf0.001")
+      .coalesce(1).write.mode("overwrite").parquet(src)
+    spark.streams.addListener(wd)
+    val spec = Streaming.PipelineSpec("c1", src, ckp)
+    // long-running query (ProcessingTime, not AvailableNow) so the entry
+    // stays registered while we advance the fake clock
+    val q = Streaming.routed(spark, spec).withColumn("client_id", lit("c1"))
+      .writeStream.option("checkpointLocation", ckp)
+      .trigger(Trigger.ProcessingTime("500 milliseconds"))
+      .format("noop").start()
+    try {
+      // wait until the listener has seen a data-bearing progress event
+      val deadline = System.currentTimeMillis() + 30000
+      while (wd.lastDataAt(q.id).isEmpty && System.currentTimeMillis() < deadline) {
+        Thread.sleep(200)
+      }
+      assert(wd.lastDataAt(q.id).isDefined, "query never reported data progress")
+      assert(!wd.isIdle(q.id), "data progress observed → not idle")
+      now += 301000L // 301 s of silence (source is exhausted)
+      assert(wd.isIdle(q.id), "no data progress past timeout → idle")
+      assert(wd.idleQueries().contains(q.id))
+    } finally {
+      q.stop()
+      spark.streams.removeListener(wd)
+    }
+  }
+
+  test("idle watchdog flags a dead-from-birth stream that never receives data") {
+    // The reference initializes last_rx at subscribe time
+    // (sf_pubsub.py:557), so a stream that hangs before its first message
+    // is still reset after the timeout — the most common hang mode.
+    import org.apache.spark.sql.streaming.Trigger
+    @volatile var now = 1000L
+    val wd = new ListenerManager.IdleWatchdog(idleTimeoutMs = 300000L, clock = () => now)
+    val src = java.nio.file.Files.createTempDirectory("graft-wd-empty").toString
+    val ckp = java.nio.file.Files.createTempDirectory("graft-wd-empty-ckp").toString
+    spark.streams.addListener(wd)
+    // schema-only stream over an empty directory: starts, never sees a row
+    val empty = spark.readStream
+      .schema(graft.Tables.events(spark, "/root/testdata/sf0.001").schema)
+      .parquet(src)
+    val q = empty.writeStream.option("checkpointLocation", ckp)
+      .trigger(Trigger.ProcessingTime("500 milliseconds"))
+      .format("noop").start()
+    try {
+      val deadline = System.currentTimeMillis() + 30000
+      while (wd.lastDataAt(q.id).isEmpty && System.currentTimeMillis() < deadline) {
+        Thread.sleep(100)
+      }
+      assert(wd.lastDataAt(q.id).isDefined, "start must arm the idle timer")
+      assert(!wd.isIdle(q.id), "just started → not yet idle")
+      now += 301000L
+      assert(wd.isIdle(q.id), "no data since start past timeout → idle")
+    } finally {
+      q.stop()
+      spark.streams.removeListener(wd)
+    }
+  }
+
   test("managed status board: manager's error state wins over the live view") {
     val mgr = new ListenerManager(sleep = _ => ())
     val clients = Seq("cOk", "cBad", "cNone").toDF("client_id")
@@ -248,7 +419,7 @@ class ListenerManagerSpec extends SparkSpec {
       mgr.start("cOk")(healthySubscribe)
       mgr.start("cBad") { id =>
         oneShotSubscribe(id) { (_, _) =>
-          throw new Reliability.FatalConfigError("bad topic")
+          throw new ListenerManager.FatalConfigError("bad topic")
         }
       }
       eventually()(mgr.status("cOk").status == "running" &&

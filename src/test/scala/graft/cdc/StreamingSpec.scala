@@ -177,7 +177,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("each epoch's progress counts its file's events, over a source plan of one leaf") {
-    // numInputRows feeds the idle watchdog (Reliability) and StatusBoard;
+    // numInputRows feeds the idle watchdog (ListenerManager) and StatusBoard;
     // it must stay the events of the epoch's file. The epoch's source plan
     // is one leaf over its rows: no file scan, no codegen stage.
     val src = tmp("graft-src9"); val ckp = tmp("graft-ckp9"); val out = tmp("graft-out9")
@@ -351,24 +351,6 @@ class StreamingSpec extends SparkSpec {
     val dupCount = spark.read.parquet(outDup).count()
     assert(dupCount > batch.count(),
       "fixture invalid: the overlap slice produced no duplicate deliveries")
-  }
-
-  test("K4 alert listener captures terminated-with-error") {
-    val src = tmp("graft-src3"); val ckp = tmp("graft-ckp3")
-    writeSlices(src)
-    val listener = new Streaming.AlertListener
-    spark.streams.addListener(listener)
-    try {
-      val q = Streaming.start(spark, Streaming.PipelineSpec("c1", src, ckp)) {
-        (_, _) => sys.error("fatal config")
-      }
-      intercept[Exception] { q.awaitTermination() }
-      // listener events are async — poll briefly
-      val deadline = System.currentTimeMillis() + 10000
-      while (listener.alerts.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      assert(!listener.alerts.isEmpty)
-      assert(listener.alerts.peek()._2.contains("fatal config"))
-    } finally spark.streams.removeListener(listener)
   }
 
   test("A4 running counters as a live update-mode streaming aggregation") {

@@ -38,12 +38,15 @@ class WebhookSinkSpec extends SparkSpec {
     /** service time of every post. */
     @volatile var delayMs = 0L
     val attempts = new AtomicInteger(0)
+    /** `System.nanoTime` of each attempt's arrival, in arrival order. */
+    val arrivals = new ConcurrentLinkedQueue[Long]()
     val accepted = new ConcurrentLinkedQueue[String]()
     private val inflight = new AtomicInteger(0)
     val maxInflight = new AtomicInteger(0)
     private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/hook", new HttpHandler {
       override def handle(x: HttpExchange): Unit = {
+        arrivals.add(System.nanoTime())
         val n = attempts.incrementAndGet()
         maxInflight.accumulateAndGet(inflight.incrementAndGet(), math.max)
         var counted = true
@@ -97,6 +100,22 @@ class WebhookSinkSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("after 3 attempts"))
       assert(ep.attempts.get() === 3)
+    } finally ep.stop()
+  }
+
+  test("postWithRetry: backoff doubles from the base delay and is capped") {
+    val ep = new Endpoint
+    try {
+      ep.healthy = false
+      val cfg = WebhookSink.Config(ep.url, timeoutMs = 5000L, maxAttempts = 4,
+        baseDelayMs = 200L, capMs = 300L)
+      intercept[RuntimeException] { WebhookSink.postWithRetry(cfg, """{"ping":3}""") }
+      val at = ep.arrivals.asScala.toSeq
+      assert(at.size === 4)
+      val gaps = at.zip(at.tail).map { case (a, b) => (b - a) / 1000000L }
+      // the delays are 200, then 400 and 800 capped at 300
+      assert(gaps(0) >= 200L && gaps(1) >= 300L && gaps(2) >= 300L, gaps)
+      assert(gaps(2) < 700L, s"uncapped, the third delay would be 800 ms: $gaps")
     } finally ep.stop()
   }
 
@@ -316,7 +335,7 @@ class WebhookSinkSpec extends SparkSpec {
         c.getMessage.startsWith("webhook delivery") &&
         c.getMessage.contains("failed after 3 attempts")), chain.mkString("\n"))
       assert(!chain.exists(_.isInstanceOf[java.util.concurrent.ExecutionException]))
-      assert(!Reliability.isFatal(e))
+      assert(!ListenerManager.isFatal(e))
       assert(!new java.io.File(spec.checkpointDir, "commits/0").exists(),
         "the aborted epoch must not be committed")
       assert(!ep.accepted.contains(bad))
@@ -324,6 +343,41 @@ class WebhookSinkSpec extends SparkSpec {
       Streaming.startToWebhook(spark, spec, fastCfg(ep.url)).awaitTermination()
       assert(ep.accepted.asScala.toSet === expected.toSet)
     } finally ep.stop()
+  }
+
+  test("e2e: under ListenerManager, post retries and a restart deliver exactly the route's payloads") {
+    val ep = new Endpoint
+    val alerts = new ConcurrentLinkedQueue[ListenerManager.Alert]()
+    val sleeps = new ConcurrentLinkedQueue[Long]()
+    // the endpoint is down for the first run, whose epoch aborts; it comes
+    // back while the runner backs off, and fails two more attempts, which
+    // postWithRetry retries without aborting the replayed epoch
+    val lm = new ListenerManager(onAlert = alerts.add(_), sleep = { d =>
+      sleeps.add(d)
+      ep.failFirst = ep.attempts.get() + 2
+      ep.healthy = true
+    })
+    val subscribes = new AtomicInteger(0)
+    try {
+      val spec = singleEpochSpec()
+      val expected = expectedPayloads()
+      ep.healthy = false
+      lm.start(spec.clientId) { _ =>
+        subscribes.incrementAndGet()
+        Streaming.startToWebhook(spark, spec, fastCfg(ep.url))
+      }
+      val deadline = System.currentTimeMillis() + 120000L
+      while (lm.status(spec.clientId).status != "stopped" && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(lm.status(spec.clientId).status === "stopped")
+      assert(subscribes.get() === 2)
+      assert(sleeps.asScala.toSeq === Seq(1000L))
+      assert(alerts.size === 1 && !alerts.peek().fatal)
+      assert(ep.accepted.asScala.toSet === expected.toSet)
+    } finally {
+      lm.stopAll()
+      ep.stop()
+    }
   }
 
   test("e2e: a stop during delivery returns in time and no post follows it") {

@@ -183,7 +183,7 @@ class ReplayLogSourceSpec extends SparkSpec {
       .writeStream.trigger(Trigger.AvailableNow())
       .foreachBatch { (_: DataFrame, _: Long) => () }.start()
     val e = intercept[Exception] { q.awaitTermination() }
-    assert(graft.cdc.Recovery.isInvalidReplay(e),
+    assert(graft.cdc.ListenerManager.isInvalidReplay(e),
       s"expected the invalid-replay shape, got: ${e.getMessage}")
   }
 
