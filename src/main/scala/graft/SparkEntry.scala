@@ -15,7 +15,7 @@ import graft.Ord._
   *   - [[graft.rel.Relational]]      — join/agg/window/set-op/subquery capability
   *   - [[graft.llm.LlmQueries]]      — dedup / ANN / text analysis / multimodal
   * Streaming, DSv2-source, reliability, lifecycle, and scale-technique
-  * semantics are spec-verified (339 ScalaTest cases) — see
+  * semantics are spec-verified (342 ScalaTest cases) — see
   * graft.cdc.Streaming, graft.sources.ReplayLogSource,
   * graft.cdc.ListenerManager, graft.cdc.WebhookSink, graft.rel.Scale.
   */

@@ -1,10 +1,9 @@
 package graft.cdc
 
 import graft.SparkSpec
-import graft.sources.ReplayLogSourceProvider
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
@@ -12,8 +11,8 @@ import scala.jdk.CollectionConverters._
 /** Listener lifecycle: start/stop/restart per client over spark.streams,
   * the reference's stop-timeout and restart-loop semantics with their
   * backoff, failure triage (fatal, invalid replay, transient) and the K3
-  * replay heal on an offsets table, the idle watchdog, and the K4
-  * first-failure-or-fatal alert policy with the SMTP-shaped record.
+  * replay heal in the loop, the idle watchdog, and the K4 first-failure-or-
+  * fatal alert policy with the SMTP-shaped record.
   */
 class ListenerManagerSpec extends SparkSpec {
   import spark.implicits._
@@ -46,45 +45,6 @@ class ListenerManagerSpec extends SparkSpec {
       deliver: (DataFrame, Long) => Unit) = {
     val ckp = java.nio.file.Files.createTempDirectory(s"graft-lm-os-$clientId").toString
     Streaming.start(spark, Streaming.PipelineSpec(clientId, src, ckp))(deliver)
-  }
-
-  private val Topic = "/data/AccountChangeEvent"
-
-  /** A client with one stored offsets row and a replay-log listener: each
-    * subscribe resolves its start replay id from the table through
-    * [[Offsets.latestPerKey]] (the reference's `_load_replay_b64`), and
-    * [[heal]] is [[Offsets.clear]], the manager's `invalidReplayHeal`.
-    */
-  private final class ReplayClient(clientId: String, replay: String, events: Int) {
-    @volatile var offsets: DataFrame = Seq((clientId, Topic, replay, 5L, 100L))
-      .toDF("client_id", "topic_name", "last_replay_b64", "last_commit_ms", "updated_at")
-    val got = new ConcurrentLinkedQueue[Long]()
-    val subscribes = new AtomicInteger(0)
-    private val log = java.nio.file.Files.createTempFile("graft-lm-replay", ".jsonl")
-    java.nio.file.Files.write(log, (0 until events).map { i =>
-      s"""{"entity":"Account","change_type":"UPDATE","record_ids":["R$i"],"commit_raw":${1704067200L + i},"flash_raw":"true"}"""
-    }.mkString("\n").getBytes)
-
-    def storedReplay: Option[String] = Offsets.latestPerKey(offsets)
-      .filter(col("client_id") === clientId && col("topic_name") === Topic)
-      .select("last_replay_b64").collect().headOption.flatMap(r => Option(r.getString(0)))
-
-    def heal(id: String): Unit = offsets = Offsets.clear(offsets, id, Topic)
-
-    def subscribe(id: String): StreamingQuery = {
-      val ckp = java.nio.file.Files.createTempDirectory(
-        s"graft-lm-rckp-$id-${subscribes.incrementAndGet()}").toString
-      spark.readStream.format(classOf[ReplayLogSourceProvider].getName)
-        .option("path", log.toString)
-        .option("startingReplay", storedReplay.getOrElse("earliest"))
-        .option("validateReplay", "true")
-        .load()
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckp)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.select("replay_id").collect().foreach(r => got.add(r.getLong(0))); ()
-        }.start()
-    }
   }
 
   test("start two listeners, restart one, stop both; board tracks each transition") {
@@ -220,34 +180,38 @@ class ListenerManagerSpec extends SparkSpec {
 
   test("K3 in the lifecycle loop: poisoned stored replay heals and re-delivers, no alert") {
     val alerts = new ConcurrentLinkedQueue[ListenerManager.Alert]()
-    val c = new ReplayClient("cR", replay = "99", events = 6) // far past the 6-event log
+    val stored = new java.util.concurrent.atomic.AtomicReference[Option[String]](Some("99"))
     val mgr = new ListenerManager(sleep = _ => (), onAlert = alerts.add(_),
-      invalidReplayHeal = Some(c.heal))
+      invalidReplayHeal = Some(_ => stored.set(None))) // the Offsets.clear analog
+    val log = java.nio.file.Files.createTempFile("graft-lm-replay", ".jsonl")
+    java.nio.file.Files.write(log,
+      (0 until 10).map(i => s"""{"entity":"A","change_type":"UPDATE","record_ids":["R$i"],"commit_raw":$i,"flash_raw":"true"}""")
+        .mkString("\n").getBytes)
+    val delivered = new java.util.concurrent.atomic.AtomicLong(0L)
+    val subscribes = new java.util.concurrent.atomic.AtomicInteger(0)
     try {
-      mgr.start("cR")(c.subscribe)
-      // run 1 fails INVALID_ARGUMENT → the heal clears the stored offset →
-      // run 2 subscribes from earliest and delivers the whole log
+      mgr.start("cR") { _ =>
+        subscribes.incrementAndGet()
+        spark.readStream
+          .format(classOf[graft.sources.ReplayLogSourceProvider].getName)
+          .option("path", log.toString)
+          .option("startingReplay", stored.get().getOrElse("earliest"))
+          .option("validateReplay", "true")
+          .load()
+          .writeStream
+          .option("checkpointLocation",
+            java.nio.file.Files.createTempDirectory(s"graft-lm-rckp-${subscribes.get()}").toString)
+          .trigger(Trigger.AvailableNow())
+          .foreachBatch { (b: DataFrame, _: Long) => delivered.addAndGet(b.count()); () }
+          .start()
+      }
+      // run 1 fails INVALID_ARGUMENT (replay 99 > 10 lines) → heal clears
+      // the stored offset → run 2 subscribes from earliest and delivers all
       eventually()(mgr.status("cR").status == "stopped")
-      assert(c.subscribes.get() === 2)
-      assert(c.got.asScala.toSeq.sorted === (0L until 6L))
-      // the stored offset row survives but its replay id is cleared
-      val rows = c.offsets.collect()
-      assert(rows.length === 1 && rows(0).isNullAt(rows(0).fieldIndex("last_replay_b64")))
+      assert(subscribes.get() === 2)
+      assert(delivered.get() === 10L)
+      assert(stored.get().isEmpty)
       assert(alerts.isEmpty) // self-heal is not a failure
-    } finally mgr.stopAll()
-  }
-
-  test("K3 in the lifecycle loop: a valid stored replay id resumes mid-stream with no heal") {
-    val c = new ReplayClient("cV", replay = "4", events = 6)
-    val heals = new AtomicInteger(0)
-    val mgr = new ListenerManager(sleep = _ => (),
-      invalidReplayHeal = Some { id => heals.incrementAndGet(); c.heal(id) })
-    try {
-      mgr.start("cV")(c.subscribe)
-      eventually()(mgr.status("cV").status == "stopped")
-      assert(c.subscribes.get() === 1 && heals.get() === 0)
-      assert(c.got.asScala.toSeq.sorted === Seq(4L, 5L))
-      assert(c.storedReplay === Some("4"))
     } finally mgr.stopAll()
   }
 

@@ -1,150 +1,41 @@
 package graft.cdc
 
-import graft.SparkSpec
-import scala.collection.mutable
+import org.scalatest.funsuite.AnyFunSuite
+import java.net.{InetAddress, ServerSocket}
+import java.util.concurrent.atomic.AtomicInteger
 
-/** K1 retry + §2.9 restart-policy semantics, including composition with a
-  * real streaming query.
+/** K1 retry on the running path, [[WebhookSink.postWithRetry]], when the
+  * transport itself fails: no HTTP status ever comes back.
   */
-class ReliabilitySpec extends SparkSpec {
+class ReliabilitySpec extends AnyFunSuite {
 
-  private def noSleep: mutable.ArrayBuffer[Long] = mutable.ArrayBuffer.empty[Long]
-
-  test("retry: transient failures retried with exponential capped backoff") {
-    val delays = noSleep
-    var calls = 0
-    val sink = Reliability.withRetry(maxAttempts = 4, baseDelayMs = 1000,
-      capMs = 3000, sleep = d => { delays += d; () })( (_, _) =>
-      { calls += 1; if (calls < 4) sys.error("503") })
-    sink(null, 0L)
-    assert(calls === 4)
-    assert(delays.toSeq === Seq(1000L, 2000L, 3000L)) // ×2, capped
+  /** Accepts each connection, counts it and closes it unanswered, so every
+    * post fails with an `IOException` rather than a non-2xx status.
+    */
+  private final class HangUpEndpoint {
+    val connections = new AtomicInteger(0)
+    private val server = new ServerSocket(0, 50, InetAddress.getLoopbackAddress)
+    private val acceptor = new Thread(() => {
+      try while (true) { val s = server.accept(); connections.incrementAndGet(); s.close() }
+      catch { case _: java.io.IOException => () } // closed by stop()
+    }, "hang-up-endpoint")
+    acceptor.setDaemon(true)
+    acceptor.start()
+    val url: String = s"http://127.0.0.1:${server.getLocalPort}/hook"
+    def stop(): Unit = server.close()
   }
 
   test("retry: exhausted attempts rethrow (epoch aborts → gated replay)") {
-    var calls = 0
-    val sink = Reliability.withRetry(maxAttempts = 3, sleep = _ => ())(
-      (_, _) => { calls += 1; sys.error("down") })
-    intercept[Exception] { sink(null, 0L) }
-    assert(calls === 3)
-  }
-
-  test("retry: fatal config error is never retried") {
-    var calls = 0
-    val sink = Reliability.withRetry(maxAttempts = 3, sleep = _ => ())(
-      (_, _) => { calls += 1; throw new Reliability.FatalConfigError("bad topic") })
-    intercept[Reliability.FatalConfigError] { sink(null, 0L) }
-    assert(calls === 1)
-  }
-
-  test("restart policy: transient failures restart, fatal stops, bound enforced") {
-    var runs = 0
-    val n = Reliability.runWithRestarts(maxRestarts = 5, sleep = _ => ())(
-      () => { runs += 1; if (runs < 3) sys.error("net blip") })
-    assert(n === 3)
-    // fatal (even nested as a cause) propagates without restart
-    var fatalRuns = 0
-    intercept[Reliability.FatalConfigError] {
-      Reliability.runWithRestarts(maxRestarts = 5, sleep = _ => ())(() => {
-        fatalRuns += 1
-        throw new Reliability.FatalConfigError("invalid credentials")
-      })
-    }
-    assert(fatalRuns === 1)
-    // bound: persistent transient failure gives up after maxRestarts
-    var always = 0
-    intercept[Exception] {
-      Reliability.runWithRestarts(maxRestarts = 2, sleep = _ => ())(
-        () => { always += 1; sys.error("flaky") })
-    }
-    assert(always === 3) // initial + 2 restarts
-  }
-
-  test("idle watchdog flags queries without data progress past the timeout") {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.functions.lit
-    @volatile var now = 1000L
-    val wd = new Reliability.IdleWatchdog(idleTimeoutMs = 300000L, clock = () => now)
-    val src = java.nio.file.Files.createTempDirectory("graft-wd-src").toString
-    val ckp = java.nio.file.Files.createTempDirectory("graft-wd-ckp").toString
-    graft.Tables.events(spark, "/root/testdata/sf0.001")
-      .coalesce(1).write.mode("overwrite").parquet(src)
-    spark.streams.addListener(wd)
-    val spec = Streaming.PipelineSpec("c1", src, ckp)
-    // long-running query (ProcessingTime, not AvailableNow) so the entry
-    // stays registered while we advance the fake clock
-    val q = Streaming.routed(spark, spec).withColumn("client_id", lit("c1"))
-      .writeStream.option("checkpointLocation", ckp)
-      .trigger(Trigger.ProcessingTime("500 milliseconds"))
-      .format("noop").start()
+    val ep = new HangUpEndpoint
     try {
-      // wait until the listener has seen a data-bearing progress event
-      val deadline = System.currentTimeMillis() + 30000
-      while (wd.lastDataAt(q.id).isEmpty && System.currentTimeMillis() < deadline) {
-        Thread.sleep(200)
-      }
-      assert(wd.lastDataAt(q.id).isDefined, "query never reported data progress")
-      assert(!wd.isIdle(q.id), "data progress observed → not idle")
-      now += 301000L // 301 s of silence (source is exhausted)
-      assert(wd.isIdle(q.id), "no data progress past timeout → idle")
-      assert(wd.idleQueries().contains(q.id))
-    } finally {
-      q.stop()
-      spark.streams.removeListener(wd)
-    }
-  }
-
-  test("idle watchdog flags a dead-from-birth stream that never receives data") {
-    // The reference initializes last_rx at subscribe time
-    // (sf_pubsub.py:557), so a stream that hangs before its first message
-    // is still reset after the timeout — the most common hang mode.
-    import org.apache.spark.sql.streaming.Trigger
-    @volatile var now = 1000L
-    val wd = new Reliability.IdleWatchdog(idleTimeoutMs = 300000L, clock = () => now)
-    val src = java.nio.file.Files.createTempDirectory("graft-wd-empty").toString
-    val ckp = java.nio.file.Files.createTempDirectory("graft-wd-empty-ckp").toString
-    spark.streams.addListener(wd)
-    // schema-only stream over an empty directory: starts, never sees a row
-    val empty = spark.readStream
-      .schema(graft.Tables.events(spark, "/root/testdata/sf0.001").schema)
-      .parquet(src)
-    val q = empty.writeStream.option("checkpointLocation", ckp)
-      .trigger(Trigger.ProcessingTime("500 milliseconds"))
-      .format("noop").start()
-    try {
-      val deadline = System.currentTimeMillis() + 30000
-      while (wd.lastDataAt(q.id).isEmpty && System.currentTimeMillis() < deadline) {
-        Thread.sleep(100)
-      }
-      assert(wd.lastDataAt(q.id).isDefined, "start must arm the idle timer")
-      assert(!wd.isIdle(q.id), "just started → not yet idle")
-      now += 301000L
-      assert(wd.isIdle(q.id), "no data since start past timeout → idle")
-    } finally {
-      q.stop()
-      spark.streams.removeListener(wd)
-    }
-  }
-
-  test("end-to-end: retrying sink + restart policy deliver everything exactly like batch") {
-    import org.apache.spark.sql.functions.col
-    val src = java.nio.file.Files.createTempDirectory("graft-rel-src").toString
-    val ckp = java.nio.file.Files.createTempDirectory("graft-rel-ckp").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-rel-out").toString
-    val ev = graft.Tables.events(spark, "/root/testdata/sf0.001")
-    ev.coalesce(1).write.mode("overwrite").parquet(src)
-    @volatile var flaky = 3 // three transient sink failures across the run
-    val spec = Streaming.PipelineSpec("c1", src, ckp)
-    val runs = Reliability.runWithRestarts(maxRestarts = 5, sleep = _ => ()) { () =>
-      val q = Streaming.start(spark, spec)(
-        Reliability.withRetry(maxAttempts = 2, sleep = _ => ()) { (batch, _) =>
-          if (flaky > 0) { flaky -= 1; sys.error("webhook 503") }
-          batch.write.mode("append").parquet(out)
-        })
-      q.awaitTermination()
-    }
-    assert(runs >= 2) // at least one restart was needed (retry ate one failure)
-    val delivered = spark.read.parquet(out).count()
-    assert(delivered === Pipeline.deliveries(CdcView(spark, "/root/testdata/sf0.001")).count())
+      val cfg = WebhookSink.Config(ep.url, timeoutMs = 5000L, maxAttempts = 3,
+        baseDelayMs = 1L, capMs = 8L)
+      // the throw is what aborts the epoch uncommitted, so the restarted
+      // stream replays it from the checkpoint
+      val e = intercept[RuntimeException] { WebhookSink.postWithRetry(cfg, """{"ping":4}""") }
+      assert(e.getMessage.contains("after 3 attempts"), e.getMessage)
+      assert(e.getMessage.contains("Exception"), s"the transport failure is named: ${e.getMessage}")
+      assert(ep.connections.get() === 3, "each attempt is one connection, and none is retried twice")
+    } finally ep.stop()
   }
 }

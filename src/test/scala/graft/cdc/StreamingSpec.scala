@@ -353,6 +353,35 @@ class StreamingSpec extends SparkSpec {
       "fixture invalid: the overlap slice produced no duplicate deliveries")
   }
 
+  test("K4 alert listener captures terminated-with-error") {
+    // the product's alert path is ListenerManager's onAlert: a stream that
+    // terminates with an error raises one alert carrying that error
+    val src = tmp("graft-src3"); val ckp = tmp("graft-ckp3")
+    writeSlices(src)
+    val alerts = new ConcurrentLinkedQueue[ListenerManager.Alert]()
+    val queries = new ConcurrentLinkedQueue[StreamingQuery]()
+    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
+    val mgr = new ListenerManager(sleep = _ => (), onAlert = alerts.add(_))
+    try {
+      mgr.start("c1") { id =>
+        val q = Streaming.start(spark, Streaming.PipelineSpec(id, src, ckp)) { (_, _) =>
+          if (batches.incrementAndGet() == 1) sys.error("sink boom")
+        }
+        queries.add(q); q
+      }
+      // run 1 terminates with the error; the restarted run replays and ends
+      val deadline = System.currentTimeMillis() + 20000
+      while (mgr.status("c1").status != "stopped" && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      assert(mgr.status("c1").status === "stopped")
+      val failed = queries.peek()
+      assert(failed.exception.isDefined, "the first run must terminate with an error")
+      assert(alerts.size === 1)
+      assert(alerts.peek().message === failed.exception.get.getMessage)
+      assert(alerts.peek().message.contains("sink boom"))
+    } finally mgr.stopAll()
+  }
+
   test("A4 running counters as a live update-mode streaming aggregation") {
     val src = tmp("graft-src5"); val ckp = tmp("graft-ckp5")
     writeSlices(src)
